@@ -1,40 +1,68 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
-/** Batch-vs-stream correctness gates: replay a batch events frame
-  * through the Structured Streaming operators (file source ->
-  * `Trigger.AvailableNow` -> parquet sink) and hand back the result as
-  * an ordinary batch DataFrame. This is what lets the incremental
-  * operators face the same value-checked oracle as everything else —
-  * the stream output must equal the batch twin row-for-row, not just
-  * "look plausible in a spec".
+import graft.operators.{Annotate, AsOfJoin, Blocks, Components, Corpus, Dedup,
+  Eval, Events, Experiment, Maintain, Moments, Multimodal, Observed,
+  Preference, Profile, Quality, Similarity, Stats}
+
+/** Batch-vs-stream correctness gates: replay a batch frame through the
+  * Structured Streaming operators (file source -> AvailableNow trigger
+  * -> sink) and hand back the result as an ordinary batch DataFrame.
+  * This is what lets the incremental operators face the same
+  * value-checked oracle as everything else — the stream output must
+  * equal the batch twin row-for-row, not just "look plausible in a
+  * spec".
   *
   * Flush mechanics: append-mode streaming only emits state the
   * watermark (windows) or a newer event (sessions) has closed, so a
   * finite replay would hold the tail back in the state store. The
-  * replays therefore append one SENTINEL event per key (sessions) or
-  * per stream (windows) far past the real data: every real session and
-  * window closes and is emitted, while the sentinel's own session or
-  * window stays open and is never seen downstream. The sentinel only
+  * event replays therefore append one SENTINEL event per key (sessions)
+  * or per stream (windows) far past the real data: every real session
+  * and window closes and is emitted, while the sentinel's own session
+  * or window stays open and is never seen downstream. The sentinel only
   * exists in the replay's temp source dir — an oracle reading the
   * original table never sees it, which is exactly the point: the
   * stream must reproduce the batch answer over the REAL events.
   *
-  * Everything stays distributed: the sink is parquet (never a driver
-  * collect), and the temp source/checkpoint dirs are per-run unique so
-  * replays are rerunnable and never share state.
+  * ==Replay lifecycle==
+  * Every public `replay*` runs through ONE harness, [[replay]], which
+  * writes the input to a per-run temp source dir, runs the stream
+  * under a replay-scoped `spark.sql.shuffle.partitions`
+  * ([[replayPartitions]]), publishes [[lastReplayObservability]], and
+  * materializes the result (`localCheckpoint`) before deleting every
+  * temp dir — so replays are rerunnable, never share state, and leave
+  * nothing on the temp volume (a bench session would otherwise pile up
+  * runs x replays x 3 dirs of parquet and state-store files, and disk
+  * pressure is what amplifies host-load noise into 10-50x in-suite
+  * timing swings). Everything stays distributed: sinks are parquet or
+  * `foreachBatch` writes, never a driver collect. A gate only supplies
+  * its source shape and its sink: the stream's own parquet sink (the
+  * event replays), a `foreachBatch` append (per-row-independent batch
+  * operators run per micro-batch), or a `foreachBatch` fold into
+  * versioned state (the monitors).
   *
-  * Hygiene: every replay's temp source, sink, and checkpoint+state
-  * dirs are deleted before the replay returns — the result is
-  * materialized into executor blocks (`localCheckpoint`) first, so the
-  * returned frame never reads the deleted files. Without this a bench
-  * session accumulates runs x replays x 3 dirs of parquet and RocksDB
-  * state on the temp volume, and disk pressure is precisely what
-  * amplifies host-load noise into the 10-50x in-suite timing swings a
-  * shared host can produce.
+  * ==One-generation replay contract (all public replay* methods)==
+  * A replay result is valid only until the NEXT replay runs on this
+  * JVM: fully consume it (count, write, compare) first. The superseding
+  * replay unpersists the prior result's checkpoint blocks
+  * SYNCHRONOUSLY, and since its lineage is truncated and its temp dirs
+  * already deleted, any later action on the prior frame fails with
+  * Spark's checkpoint-block-not-found error — a deliberate loud
+  * failure rather than a silent wrong answer (pinned by
+  * StreamBatchEquivalenceSpec's negative-path test). Waiting for the
+  * driver to GC the handle instead would let result blocks pile up
+  * across a bench suite — climbing block counts that the bench's own
+  * `cached_blocks` drift signal would misread as an engine leak.
+  * Replays are mutually serialized on [[replayLock]], so concurrent
+  * callers cannot interleave generations — they queue.
   */
 object StreamGate {
 
@@ -52,7 +80,7 @@ object StreamGate {
     * count (the deployment's deliberate choice). Guide §2: make
     * partitioning scale-adaptive, never a constant tuned for one
     * scale. Unreadable dirs fall back to the session setting. */
-  private def replayPartitions(prev: Int, srcDir: String): Int = {
+  private[graft] def replayPartitions(prev: Int, srcDir: String): Int = {
     val bytes =
       try {
         val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(srcDir))
@@ -100,105 +128,7 @@ object StreamGate {
     implicitly[Encoder[EventStream.Event]].schema
   }
 
-  /** Write `events` (event_id, ts, user_id, event_type, value) to a
-    * fresh dir and open it as a typed file stream. The write is
-    * coalesced so the replay fits ONE micro-batch: the source files
-    * are not time-ordered, and a multi-batch replay would advance the
-    * watermark between batches and drop later files' older rows as
-    * late data — breaking the exact batch equivalence this gate
-    * exists to prove. (A real deployment replays time-ordered files;
-    * see StreamBatchEquivalenceSpec for the multi-batch ordered case.) */
-  private def replayStream(events: DataFrame): (DataFrame, String) = {
-    val spark = events.sparkSession
-    val src = tempDir("graft_stream_src")
-    events.select("event_id", "ts", "user_id", "event_type", "value")
-      .coalesce(16)
-      .write.mode("overwrite").parquet(src)
-    (EventStream.readEventStream(spark, src, eventSchema(spark)), src)
-  }
-
-  /** [[replayStream]] with flush sentinels, in ONE corpus pass plus a
-    * sentinel append: the newest real event time rides the source
-    * WRITE as an observed metric (previously a separate full-scan
-    * aggregate ran before the write could even be planned, because the
-    * sentinel rows were unioned into the written frame), and the
-    * sentinel rows land as an appended parquet file in the same source
-    * dir — the file stream reads real + sentinel files in the same
-    * single AvailableNow batch, so the replay semantics (and the
-    * emitted rows) are identical to the old union write. `perKey`
-    * selects the per-key sentinel shape (one sentinel per user —
-    * closes every per-key session/funnel) vs the single global
-    * watermark-dragging sentinel. */
-  private def replayStreamSentineled(
-      events: DataFrame,
-      horizonUs: Long,
-      perKey: Boolean): (DataFrame, String) = {
-    val spark = events.sparkSession
-    val src = tempDir("graft_stream_src")
-    val proj = events.select("event_id", "ts", "user_id", "event_type", "value")
-    val obs = org.apache.spark.sql.Observation()
-    proj.observe(obs, max(unix_micros(col("ts"))).as("__max"))
-      .coalesce(16)
-      .write.mode("overwrite").parquet(src)
-    // Late metrics delivery degrades to a rescan of the files just
-    // written (already on local disk), never a TimeoutException.
-    val maxRow = graft.operators.Observed.row(obs) {
-      spark.read.parquet(src).agg(max(unix_micros(col("ts")))).head()
-    }
-    val maxUs = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-    val sentinelTs = timestamp_micros(lit(maxUs + horizonUs))
-    val sentinels =
-      if (perKey)
-        proj.select("user_id").distinct()
-          .select(lit(-1L).as("event_id"), sentinelTs.as("ts"),
-            col("user_id"), lit("__sentinel").as("event_type"),
-            lit(0.0).as("value"))
-      else
-        spark.range(1)
-          .select(lit(-1L).as("event_id"), sentinelTs.as("ts"),
-            lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
-            lit(0.0).as("value"))
-    sentinels.coalesce(1).write.mode("append").parquet(src)
-    (EventStream.readEventStream(spark, src, eventSchema(spark)), src)
-  }
-
-  /** Drive a streaming frame to a parquet sink with AvailableNow and
-    * read the result back with the sink's own schema.
-    *
-    * The stream runs with `spark.sql.shuffle.partitions` scoped to
-    * [[replayPartitions]] — derived from the replayed source's bytes
-    * (restored right after): a stateful operator materializes one
-    * state-store instance per shuffle partition per micro-batch, and a
-    * single-node replay carrying KBs of state per partition pays pure
-    * per-store overhead at the session's partition count. The setting
-    * is captured into the query's fresh checkpoint at `start()`, so
-    * only this replay is affected; a production-sized replay keeps the
-    * session's own partition count (the deployment's deliberate
-    * choice) because the byte-derived target exceeds it. Batch queries never see the change (the replay drives
-    * the query to completion before restoring).
-    *
-    * The read-back is eagerly `localCheckpoint`ed — materialized into
-    * executor blocks — so the sink, checkpoint, and `srcDir` temp dirs
-    * can be deleted in the `finally` before the frame is handed back.
-    * ONE replay generation stays live: each replay releases the
-    * PREVIOUS replay's checkpoint blocks (the same superseded-
-    * generation discipline as [[graft.operators.Components]]), because
-    * waiting for the driver to GC the handle lets result blocks pile
-    * up across a bench suite — climbing block counts that the bench's
-    * own `cached_blocks` drift signal would then misread as an engine
-    * leak.
-    *
-    * ==One-generation replay contract (all public replay* methods)==
-    * A replay result is valid only until the NEXT replay runs on this
-    * JVM: fully consume it (count, write, compare) first. The
-    * superseding replay unpersists the prior result's checkpoint
-    * blocks SYNCHRONOUSLY, and since its lineage is truncated and its
-    * sink temp dirs already deleted, any later action on the prior
-    * frame fails with Spark's checkpoint-block-not-found error — a
-    * deliberate loud failure rather than a silent wrong answer
-    * (pinned by StreamBatchEquivalenceSpec's negative-path test).
-    * Replays are mutually serialized on [[replayLock]], so concurrent
-    * callers cannot interleave generations — they queue. */
+  /** The live replay generation (see the one-generation contract). */
   private var lastReplay: Option[DataFrame] = None
 
   /** Serializes whole replays (source write -> stream run -> release):
@@ -223,7 +153,7 @@ object StreamGate {
     * silently undercount both counters — this listener instead folds
     * every progress event into a per-run total as it arrives. One
     * instance serves every session (registered once per session by the
-    * gates, before their query starts). */
+    * harness, before the replay's query starts). */
   private object ProgressLedger
       extends org.apache.spark.sql.streaming.StreamingQueryListener {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -344,8 +274,10 @@ object StreamGate {
   @volatile private var lastObs: Option[ReplayObservability] = None
 
   /** [[ReplayObservability]] of the most recent replay gate run on
-    * this JVM (the gates publish it just before returning; replays are
+    * this JVM (published once its stream finishes; replays are
     * serialized on the replay lock, so the value is unambiguous). A
+    * replay clears it when it starts, so a replay whose stream never
+    * finished reads `None`, never the previous replay's counts. A
     * production caller checks `droppedLateRows == 0` after a replay
     * the same way it would alarm on the live query's progress. */
   def lastReplayObservability: Option[ReplayObservability] = lastObs
@@ -370,186 +302,373 @@ object StreamGate {
     next
   }
 
-  private def runToParquet(df: DataFrame, srcDir: String): DataFrame = {
-    val spark = df.sparkSession
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, srcDir).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val q = df.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(df.schema).parquet(out).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(srcDir, out, ck).foreach(deleteRecursively)
+  /** A replay's input: `write` lays the source files into the replay's
+    * source dir; `open` reads that dir back as the streaming frame the
+    * sink drives. */
+  private[graft] final case class Source(
+      spark: SparkSession,
+      write: String => Unit,
+      open: String => DataFrame)
+
+  /** What a replay's stream drives, and how its result is read back. */
+  private[graft] sealed trait Sink
+
+  /** The stream's own append-mode parquet sink, read back with the
+    * stream's schema: a replay that emits nothing is an empty frame. */
+  private[graft] case object StreamSink extends Sink
+
+  /** `foreachBatch`: each micro-batch's `perBatch` rows append to a
+    * parquet log, read back with `schema` (None: inferred from the log,
+    * so a replay that committed no micro-batch fails by name instead of
+    * by Spark's schema inference) and then mapped by `finish`. */
+  private[graft] final case class AppendSink(
+      perBatch: DataFrame => DataFrame,
+      schema: Option[StructType],
+      finish: DataFrame => DataFrame = identity) extends Sink
+
+  /** `foreachBatch` fold into versioned parquet state: `step(prior,
+    * batch)` is version N+1 given version N (None before the first
+    * batch), written next to — never over — what it read, so the state
+    * is owned OUTSIDE the query (no stream-stateful operator holds it)
+    * and a restart resumes from the last committed version.
+    * `afterCommit(step output, version dir)` runs once a version is
+    * written; `readout` maps the final version to the result. */
+  private[graft] final case class FoldSink(
+      step: (Option[DataFrame], DataFrame) => DataFrame,
+      readout: DataFrame => DataFrame,
+      afterCommit: (DataFrame, String) => Unit = (_, _) => ()) extends Sink
+
+  /** The one replay lifecycle, under [[replayLock]]:
+    *  1. clear [[lastReplayObservability]];
+    *  1. write `source` into a fresh `graft_<gate>_src` dir, under the
+    *     session's own partition count;
+    *  1. run `plan` for the sink. A gate that materializes a frozen
+    *     side once (an index, an anchor table) does it here through the
+    *     `pin` it is handed — still under the session's own partition
+    *     count — so those blocks are released with the gate, whether it
+    *     succeeds or a guard fires inside the materialization;
+    *  1. scope `spark.sql.shuffle.partitions` to [[replayPartitions]]
+    *     of the written source (captured into the query's fresh
+    *     checkpoint at `start()`, so only this replay is affected, and
+    *     batch queries never see it: the replay runs to completion
+    *     before the restore), install the [[ProgressLedger]], and run
+    *     the stream to completion under the AvailableNow trigger;
+    *  1. publish the run's [[ReplayObservability]];
+    *  1. read the result back — a fold, or an append with an inferred
+    *     schema, that committed no micro-batch fails as "<gate> saw no
+    *     micro-batches" — `localCheckpoint` it so it outlives the temp
+    *     dirs, and release the previous replay's blocks
+    *     ([[releaseLastReplay]]);
+    *  1. finally, on success or failure: restore the partition count,
+    *     release the pinned blocks, and delete every temp dir. */
+  private[graft] def replay(gate: String, source: Source)(
+      plan: (DataFrame => DataFrame) => Sink): DataFrame =
+    replayLock.synchronized {
+      lastObs = None
+      val spark = source.spark
+      val sc = spark.sparkContext
+      val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
+      def dir(kind: String): String = {
+        val d = tempDir(s"graft_${gate}_$kind")
+        dirs += d
+        d
+      }
+      val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      def pin(df: DataFrame): DataFrame = {
+        val before = sc.getPersistentRDDs.keySet
+        try {
+          val m = df.localCheckpoint()
+          pinned += m
+          m
+        } catch {
+          case NonFatal(e) =>
+            // a guard raised inside the eager materialization leaves the
+            // half-built checkpoint registered: it goes with the gate
+            (sc.getPersistentRDDs -- before).values
+              .foreach(_.unpersist(blocking = false))
+            throw e
+        }
+      }
+      val key = "spark.sql.shuffle.partitions"
+      val prev = spark.conf.get(key)
+      try {
+        val src = dir("src")
+        source.write(src)
+        val sink = plan(pin)
+        spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
+        ProgressLedger.ensure(spark) // before start: sees every event
+        val out = dir("out")
+        val committed = new AtomicReference[String](null)
+        val stream = source.open(src)
+        val writer = sink match {
+          case StreamSink =>
+            stream.writeStream.format("parquet").option("path", out)
+              .outputMode("append")
+          case AppendSink(perBatch, _, _) =>
+            stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+              perBatch(batch).write.mode("append").parquet(out)
+              committed.set(out)
+            }
+          case FoldSink(step, _, afterCommit) =>
+            val version = new AtomicInteger(0)
+            stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+              val next = step(
+                Option(committed.get()).map(spark.read.parquet(_)), batch)
+              val path = s"$out/v${version.incrementAndGet()}"
+              next.write.mode("overwrite").parquet(path)
+              committed.set(path)
+              afterCommit(next, path)
+            }
+        }
+        val q = writer.option("checkpointLocation", dir("ck"))
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        lastObs = Some(observabilityOf(q))
+        def lastCommit: DataFrame = {
+          require(committed.get() != null, s"$gate saw no micro-batches")
+          spark.read.parquet(committed.get())
+        }
+        val result = sink match {
+          case StreamSink => spark.read.schema(stream.schema).parquet(out)
+          case AppendSink(_, Some(schema), finish) =>
+            finish(spark.read.schema(schema).parquet(out))
+          case AppendSink(_, None, finish) => finish(lastCommit)
+          case FoldSink(_, readout, _) => readout(lastCommit)
+        }
+        releaseLastReplay(result.localCheckpoint())
+      } finally {
+        spark.conf.set(key, prev)
+        pinned.foreach(Blocks.release)
+        dirs.foreach(deleteRecursively)
+      }
     }
+
+  /** Event replay through the stream's own parquet sink. The events
+    * (event_id, ts, user_id, event_type, value) are coalesced so the
+    * replay fits ONE micro-batch: the source files are not time-ordered,
+    * and a multi-batch replay would advance the watermark between
+    * batches and drop later files' older rows as late data — breaking
+    * the exact batch equivalence this gate exists to prove. (A real
+    * deployment replays time-ordered files; see
+    * StreamBatchEquivalenceSpec for the multi-batch ordered case.) The
+    * source opens as a typed event stream, mapped by `op`.
+    *
+    * `flush` = Some((horizonUs, perKey)) adds flush sentinels in ONE
+    * corpus pass plus a sentinel append: the newest real event time
+    * rides the source WRITE as an observed metric, and the sentinel
+    * rows land as an appended parquet file in the same source dir,
+    * read in the same single AvailableNow batch. `perKey` selects one
+    * sentinel per user (closes every per-key session/funnel) vs the
+    * single global watermark-dragging sentinel, `horizonUs` past the
+    * newest real event. */
+  private def replayEvents(
+      gate: String,
+      events: DataFrame,
+      flush: Option[(Long, Boolean)] = None)(
+      op: DataFrame => DataFrame): DataFrame = {
+    val spark = events.sparkSession
+    val proj = events.select("event_id", "ts", "user_id", "event_type", "value")
+    def write(src: String): Unit = flush match {
+      case None => proj.coalesce(16).write.mode("overwrite").parquet(src)
+      case Some((horizonUs, perKey)) =>
+        val obs = org.apache.spark.sql.Observation()
+        proj.observe(obs, max(unix_micros(col("ts"))).as("__max"))
+          .coalesce(16)
+          .write.mode("overwrite").parquet(src)
+        // Late metrics delivery degrades to a rescan of the files just
+        // written (already on local disk), never a TimeoutException.
+        val maxRow = Observed.row(obs) {
+          spark.read.parquet(src).agg(max(unix_micros(col("ts")))).head()
+        }
+        val maxUs = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
+        val sentinelTs = timestamp_micros(lit(maxUs + horizonUs))
+        val sentinels =
+          if (perKey)
+            proj.select("user_id").distinct()
+              .select(lit(-1L).as("event_id"), sentinelTs.as("ts"),
+                col("user_id"), lit("__sentinel").as("event_type"),
+                lit(0.0).as("value"))
+          else
+            spark.range(1)
+              .select(lit(-1L).as("event_id"), sentinelTs.as("ts"),
+                lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
+                lit(0.0).as("value"))
+        sentinels.coalesce(1).write.mode("append").parquet(src)
+    }
+    val open = (src: String) =>
+      op(EventStream.readEventStream(spark, src, eventSchema(spark)))
+    replay(gate, Source(spark, write, open))(_ => StreamSink)
   }
+
+  /** File-feed source of the `foreachBatch` gates: `feed` coalesced to 8
+    * files and read back with its own schema at `filesPerTrigger` files
+    * per micro-batch — the arrival shape whose split every gate must be
+    * invariant to. */
+  private def fileFeed(feed: DataFrame, filesPerTrigger: Int): Source = {
+    val spark = feed.sparkSession
+    Source(spark,
+      src => feed.coalesce(8).write.mode("overwrite").parquet(src),
+      src => spark.readStream.schema(feed.schema)
+        .option("maxFilesPerTrigger", filesPerTrigger)
+        .parquet(src))
+  }
+
+  /** The [[FoldSink]] step of a seed/fold monitor: reduce the batch with
+    * `seed`, then merge it into the prior state with `fold`. */
+  private def foldStep(
+      seed: DataFrame => DataFrame,
+      fold: (DataFrame, DataFrame) => DataFrame)
+      : (Option[DataFrame], DataFrame) => DataFrame =
+    (prior, batch) => {
+      val delta = seed(batch)
+      prior.map(fold(_, delta)).getOrElse(delta)
+    }
+
+  /** Versioned fold-state monitor over `feed`: each micro-batch reduced
+    * with `seed` and merged into the prior state with `fold`, then
+    * `readout` over the final state. Correctness burden on the caller:
+    * `fold` must be associative and commutative over `seed` outputs, so
+    * the micro-batch split cannot change the final state (every monitor
+    * built on this proves it by being held to its batch twin's verbatim
+    * oracle). */
+  private def replayFoldState(
+      gate: String,
+      feed: DataFrame,
+      filesPerTrigger: Int)(
+      seed: DataFrame => DataFrame,
+      fold: (DataFrame, DataFrame) => DataFrame,
+      readout: DataFrame => DataFrame): DataFrame =
+    replay(gate, fileFeed(feed, filesPerTrigger))(
+      _ => FoldSink(foldStep(seed, fold), readout))
 
   /** Replay through [[EventStream.sessionizeStream]]: every real
     * session closes (per-key sentinels) and comes back as a batch
-    * frame of Session rows.
-    * @note one-generation replay contract — see the object doc. */
-  def replaySessionize(events: DataFrame, gapUs: Long): DataFrame = replayLock.synchronized {
+    * frame of Session rows. */
+  def replaySessionize(events: DataFrame, gapUs: Long): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (streamDf, src) = replayStreamSentineled(events, 2 * gapUs, perKey = true)
-    val stream = streamDf.as[EventStream.Event]
-    runToParquet(EventStream.sessionizeStream(stream, gapUs).toDF(), src)
+    replayEvents("replaySessionize", events, Some((2 * gapUs, true)))(s =>
+      EventStream.sessionizeStream(s.as[EventStream.Event], gapUs).toDF())
   }
 
   /** Replay through [[EventStream.funnelStream]]: completed funnels
     * emit on their final step; per-key sentinels flush every partial
-    * funnel, so the replay returns exactly the batch funnel's rows.
-    * @note one-generation replay contract — see the object doc. */
-  def replayFunnel(events: DataFrame, steps: Seq[String]): DataFrame = replayLock.synchronized {
+    * funnel, so the replay returns exactly the batch funnel's rows. */
+  def replayFunnel(events: DataFrame, steps: Seq[String]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val (streamDf, src) = replayStreamSentineled(events,
-      horizonUs = 3600L * 1000000L, perKey = true)
-    val stream = streamDf.as[EventStream.Event]
-    runToParquet(EventStream.funnelStream(stream, steps).toDF(), src)
+    replayEvents("replayFunnel", events, Some((3600L * 1000000L, true)))(s =>
+      EventStream.funnelStream(s.as[EventStream.Event], steps).toDF())
   }
 
   /** Replay through [[EventStream.windowedCounts]]: the global
     * sentinel pushes the watermark past every real window, so append
     * mode emits them all; the sentinel's own row is filtered out of
-    * the result.
-    * @note one-generation replay contract — see the object doc. */
+    * the result. */
   def replayWindowedCounts(
       events: DataFrame,
       windowDur: String,
       slide: String,
       watermark: String,
-      horizonUs: Long): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStreamSentineled(events, horizonUs, perKey = false)
-    runToParquet(EventStream.windowedCounts(stream, windowDur, slide, watermark), src)
+      horizonUs: Long): DataFrame =
+    replayEvents("replayWindowedCounts", events, Some((horizonUs, false)))(
+      EventStream.windowedCounts(_, windowDur, slide, watermark))
       .filter(col("event_type") =!= "__sentinel")
-  }
 
   /** Replay through [[EventStream.intervalJoinStream]]: a stream
     * SELF-join (both sides read the same replayed file source) of
     * `typeA` events against `typeB` events within the gap. Inner join
-    * needs no sentinel: every match emits once both rows are in.
-    * @note one-generation replay contract — see the object doc. */
+    * needs no sentinel: every match emits once both rows are in. */
   def replayIntervalJoin(
       events: DataFrame,
       typeA: String,
       typeB: String,
       maxGap: String,
-      watermark: String): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStream(
-      events.select("event_id", "ts", "user_id", "event_type", "value"))
-    runToParquet(EventStream.intervalJoinStream(
-      stream.filter(col("event_type") === typeA),
-      stream.filter(col("event_type") === typeB),
-      maxGap, watermark), src)
-  }
+      watermark: String): DataFrame =
+    replayEvents("replayIntervalJoin", events)(stream =>
+      EventStream.intervalJoinStream(
+        stream.filter(col("event_type") === typeA),
+        stream.filter(col("event_type") === typeB),
+        maxGap, watermark))
 
   /** Replay through [[EventStream.leftOuterIntervalJoinStream]]: the
     * left-outer twin of [[replayIntervalJoin]]. Outer (null-side)
     * rows only emit once the watermark passes the left window's end,
     * so the global sentinel is routed into BOTH join inputs — the
     * engine's multiple-watermark policy takes the MIN across inputs,
-    * and a sentinel on one side alone would advance nothing. The
-    * sentinel's own (joined-to-nothing) outer row is filtered by its
-    * type before the sink.
-    * @note one-generation replay contract — see the object doc. */
+    * and a sentinel on one side alone would advance nothing. */
   def replayLeftOuterIntervalJoin(
       events: DataFrame,
       typeA: String,
       typeB: String,
       maxGap: String,
       watermark: String,
-      horizonUs: Long): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStreamSentineled(events, horizonUs, perKey = false)
-    val joined = EventStream.leftOuterIntervalJoinStream(
-      stream.filter(col("event_type").isin(typeA, "__sentinel")),
-      stream.filter(col("event_type").isin(typeB, "__sentinel")),
-      maxGap, watermark)
-    // The sentinel's own row is dropped AFTER the sink, batch-side
-    // (the replayWindowedCounts pattern): filtering `left_type` inside
-    // the STREAMING plan would be a left-side predicate on a left
-    // outer join, which Catalyst pushes below the join into the left
-    // input — stripping the sentinel before its watermark node, so
-    // the left watermark (and with min-policy the global one) would
-    // stall at the real data and the newest unmatched rows would
-    // never flush. Found the hard way; pinned by the left-outer
-    // stream==batch spec.
-    runToParquet(joined, src)
+      horizonUs: Long): DataFrame =
+    replayEvents("replayLeftOuterIntervalJoin", events,
+        Some((horizonUs, false)))(stream =>
+      EventStream.leftOuterIntervalJoinStream(
+        stream.filter(col("event_type").isin(typeA, "__sentinel")),
+        stream.filter(col("event_type").isin(typeB, "__sentinel")),
+        maxGap, watermark))
+      // The sentinel's own (joined-to-nothing) outer row is dropped
+      // AFTER the sink, batch-side (the replayWindowedCounts pattern):
+      // filtering `left_type` inside the STREAMING plan would be a
+      // left-side predicate on a left outer join, which Catalyst pushes
+      // below the join into the left input — stripping the sentinel
+      // before its watermark node, so the left watermark (and with
+      // min-policy the global one) would stall at the real data and the
+      // newest unmatched rows would never flush. Found the hard way;
+      // pinned by the left-outer stream==batch spec.
       .filter(col("left_type") =!= "__sentinel")
       .drop("left_type")
-  }
 
   /** Replay through [[EventStream.enrichStream]]: stateless
     * stream-static join, so no sentinel and no watermark — every
-    * event emits as soon as its micro-batch runs.
-    * @note one-generation replay contract — see the object doc. */
+    * event emits as soon as its micro-batch runs. */
   def replayEnrich(
       events: DataFrame,
       dim: DataFrame,
       streamKey: String,
       dimKey: String,
-      dimCols: Seq[(String, String)]): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStream(
-      events.select("event_id", "ts", "user_id", "event_type", "value"))
-    runToParquet(EventStream.enrichStream(stream, dim, streamKey, dimKey, dimCols), src)
-  }
+      dimCols: Seq[(String, String)]): DataFrame =
+    replayEvents("replayEnrich", events)(
+      EventStream.enrichStream(_, dim, streamKey, dimKey, dimCols))
 
   /** Replay through [[EventStream.excludeKnownStream]]: stateless
     * stream-static anti join, so no sentinel and no watermark — every
-    * surviving event emits as soon as its micro-batch runs.
-    * @note one-generation replay contract — see the object doc. */
+    * surviving event emits as soon as its micro-batch runs. */
   def replayExcludeKnown(
       events: DataFrame,
       known: DataFrame,
       streamKey: String,
-      knownKey: String): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStream(
-      events.select("event_id", "ts", "user_id", "event_type", "value"))
-    runToParquet(EventStream.excludeKnownStream(stream, known, streamKey, knownKey), src)
-  }
+      knownKey: String): DataFrame =
+    replayEvents("replayExcludeKnown", events)(
+      EventStream.excludeKnownStream(_, known, streamKey, knownKey))
 
   /** Replay through [[EventStream.dedupStream]]: one surviving row per
     * distinct key (all data lands inside the watermark horizon of a
     * single AvailableNow batch, so the streaming state dedups the
-    * whole replay — the incremental twin of a batch dropDuplicates).
-    * @note one-generation replay contract — see the object doc. */
+    * whole replay — the incremental twin of a batch dropDuplicates). */
   def replayDedup(
       events: DataFrame,
       keyCols: Seq[String],
-      watermark: String): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStream(
-      events.select("event_id", "ts", "user_id", "event_type", "value"))
-    runToParquet(EventStream.dedupStream(stream, keyCols, watermark = watermark), src)
-  }
+      watermark: String): DataFrame =
+    replayEvents("replayDedup", events)(
+      EventStream.dedupStream(_, keyCols, watermark = watermark))
 
   /** Replay through [[EventStream.topUsersPerWindowStream]]: the
     * global sentinel closes every real window through BOTH chained
     * aggregations (the sentinel's own window stays open and is never
     * emitted, so no post-filter is needed — the output carries no
-    * event_type).
-    * @note one-generation replay contract — see the object doc. */
+    * event_type). */
   def replayTopUsersPerWindow(
       events: DataFrame,
       k: Int,
       windowDur: String,
       watermark: String,
-      horizonUs: Long): DataFrame = replayLock.synchronized {
-    val (stream, src) = replayStreamSentineled(events, horizonUs, perKey = false)
-    runToParquet(
-      EventStream.topUsersPerWindowStream(stream, k, windowDur, watermark),
-      src)
-  }
+      horizonUs: Long): DataFrame =
+    replayEvents("replayTopUsersPerWindow", events, Some((horizonUs, false)))(
+      EventStream.topUsersPerWindowStream(_, k, windowDur, watermark))
 
   /** STREAMING near-dup ingestion gate: a document stream is
     * micro-batched into shards (`maxFilesPerTrigger` bounds each
@@ -573,8 +692,7 @@ object StreamGate {
     * bucket-aggregated and capped, the (micro-batch-sized) shard side
     * probing — so state NEVER accumulates in the stream (the ledger IS
     * the state, owned outside the query), and each trigger's cost
-    * tracks its own colliding pairs.
-    * @note one-generation replay contract — see the object doc. */
+    * tracks its own colliding pairs. */
   def replayNearDupGate(
       docs: DataFrame,
       idCol: String,
@@ -585,38 +703,11 @@ object StreamGate {
       bands: Int = 0, // 0 = auto-tune (Dedup.lshPlan) per the batch default
       threshold: Double = 0.5,
       maxBucket: Int = 1000,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = docs.sparkSession
-    val src = tempDir("graft_docs_src")
-    docs.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Dedup.dropNearDupsOfLedger(batch, idCol, textCol,
-              ledger, shingleN, numHashes, bands, threshold, maxBucket)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(docs.schema).parquet(out).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replay("replayNearDupGate", fileFeed(docs, filesPerTrigger))(_ =>
+      AppendSink(batch => Dedup.dropNearDupsOfLedger(batch, idCol, textCol,
+          ledger, shingleN, numHashes, bands, threshold, maxBucket),
+        Some(docs.schema)))
 
   /** Streaming EXACT-substring ingestion firewall — the verbatim-leak
     * twin of [[replayNearDupGate]]: each micro-batch of arriving
@@ -630,8 +721,7 @@ object StreamGate {
     * the micro-batch split provably cannot change any answer and the
     * replay faces the exact batch oracle — the q113 pattern at exact
     * (rather than Jaccard) semantics. State never accumulates: the
-    * benchmark IS the state, owned outside the query.
-    * @note one-generation replay contract — see the object doc. */
+    * benchmark IS the state, owned outside the query. */
   def replayExactSubstringGate(
       docs: DataFrame,
       idCol: String,
@@ -641,55 +731,21 @@ object StreamGate {
       benchTextCol: String,
       minTokens: Int,
       maxPositionsPerGram: Int = 10000,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = docs.sparkSession
-    val src = tempDir("graft_docs_src")
-    docs.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    // The benchmark corpus is FROZEN for this gate's lifetime, so its
-    // tokenized docs and count-first-guarded anchor table are built and
-    // materialized ONCE (under the session's own parallelism, before
-    // the replay-scoped partition override) — the previous per-batch
-    // dropExactSubstringMatches call re-tokenized, re-hashed and
-    // re-guarded the whole benchmark on EVERY trigger for a side that
-    // cannot change. Benchmark suites are the small side of a
-    // decontamination join by construction, so the checkpoint is
-    // eval-corpus-bounded.
-    val (bdocs0, banch0) = graft.operators.Corpus.substringAnchorSide(
-      benchmark, benchIdCol, benchTextCol, "left", minTokens,
-      maxPositionsPerGram)
-    val bdocs = bdocs0.localCheckpoint()
-    val banch = banch0.localCheckpoint()
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Corpus.dropExactSubstringMatchesAgainstIndex(
-              batch, idCol, textCol, bdocs, banch, minTokens,
-              maxPositionsPerGram)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(docs.schema).parquet(out).localCheckpoint())
-    } finally {
-      graft.operators.Blocks.release(bdocs)
-      graft.operators.Blocks.release(banch)
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
+      filesPerTrigger: Int = 2): DataFrame =
+    replay("replayExactSubstringGate", fileFeed(docs, filesPerTrigger)) { pin =>
+      // The benchmark corpus is FROZEN for this gate's lifetime, so its
+      // tokenized docs and count-first-guarded anchor table are built
+      // and pinned ONCE instead of re-tokenized, re-hashed and
+      // re-guarded on every trigger. Benchmark suites are the small side
+      // of a decontamination join by construction, so the pinned blocks
+      // are eval-corpus-bounded.
+      val (bdocs, banch) = Corpus.substringAnchorSide(benchmark, benchIdCol,
+        benchTextCol, "left", minTokens, maxPositionsPerGram)
+      val (docsIdx, anchorIdx) = (pin(bdocs), pin(banch))
+      AppendSink(batch => Corpus.dropExactSubstringMatchesAgainstIndex(batch,
+          idCol, textCol, docsIdx, anchorIdx, minTokens, maxPositionsPerGram),
+        Some(docs.schema))
     }
-  }
 
   /** Streaming shot-boundary detection: the media table (id, binary
     * payload) arriving as a FILE stream — the ingest-time shape of a
@@ -705,59 +761,23 @@ object StreamGate {
     *
     * Output schema matches the batch operator with
     * `boundary_frames` serialized to a comma-joined string (parquet
-    * sink friendliness + the oracle's comparison form).
-    * @note one-generation replay contract — see the object doc. */
+    * sink friendliness + the oracle's comparison form). */
   def replayShotBoundaries(
       media: DataFrame,
       nFrames: Int = 8,
       frameBytes: Int = 16,
       maxHamming: Int = 8,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = media.sparkSession
-    val src = tempDir("graft_media_src")
-    media.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("media_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_frames",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_boundaries",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("boundary_frames",
-        org.apache.spark.sql.types.StringType)))
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(media.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Multimodal
-            .shotBoundaries(batch, nFrames, frameBytes, maxHamming)
-            .select(col("media_id").cast("long"),
-              col("n_frames").cast("long"),
-              col("n_boundaries").cast("long"),
-              array_join(transform(col("boundary_frames"),
-                i => i.cast("string")), ",").as("boundary_frames"))
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(outSchema).parquet(out).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replay("replayShotBoundaries", fileFeed(media, filesPerTrigger))(_ =>
+      AppendSink(batch => Multimodal
+          .shotBoundaries(batch, nFrames, frameBytes, maxHamming)
+          .select(col("media_id").cast("long"),
+            col("n_frames").cast("long"),
+            col("n_boundaries").cast("long"),
+            array_join(transform(col("boundary_frames"),
+              i => i.cast("string")), ",").as("boundary_frames")),
+        Some(StructType.fromDDL("media_id bigint, n_frames bigint, " +
+          "n_boundaries bigint, boundary_frames string"))))
 
   /** Streaming PII monitor: the document feed micro-batched, each
     * batch scanned by the BATCH [[graft.operators.Quality.piiScan]]
@@ -772,55 +792,26 @@ object StreamGate {
     * directory landing), the final row as the corpus answer.
     *
     * Output: one row — (`n_docs`, per-category `<cat>_hits`...,
-    * `pii_total`, `n_flagged`).
-    * @note one-generation replay contract — see the object doc. */
+    * `pii_total`, `n_flagged`). */
   def replayPiiMonitor(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       patterns: Seq[(String, String)] =
         graft.operators.Quality.defaultPiiPatterns,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = docs.sparkSession
-    val src = tempDir("graft_pii_src")
-    docs.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
+      filesPerTrigger: Int = 2): DataFrame = {
     val catCols = patterns.map { case (cat, _) => s"${cat}_hits" }
-    try {
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Quality.piiScan(batch, idCol, textCol, patterns)
-            .agg(count(lit(1)).as("n_docs"),
-              catCols.map(c => sum(col(c)).as(c)) ++ Seq(
-                sum(col("pii_total")).as("pii_total"),
-                sum(when(col("has_pii"), 1L).otherwise(0L))
-                  .as("n_flagged")): _*)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      val perBatch = spark.read.parquet(out)
-      releaseLastReplay(perBatch
-        .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
-          catCols.map(c => coalesce(sum(col(c)), lit(0L)).as(c)) ++ Seq(
-            coalesce(sum(col("pii_total")), lit(0L)).as("pii_total"),
-            coalesce(sum(col("n_flagged")), lit(0L)).as("n_flagged")): _*)
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
+    val totals = ("n_docs" +: catCols :+ "pii_total" :+ "n_flagged")
+      .map(c => coalesce(sum(col(c)), lit(0L)).as(c))
+    replay("replayPiiMonitor", fileFeed(docs, filesPerTrigger))(_ =>
+      AppendSink(batch => Quality.piiScan(batch, idCol, textCol, patterns)
+          .agg(count(lit(1)).as("n_docs"),
+            catCols.map(c => sum(col(c)).as(c)) ++ Seq(
+              sum(col("pii_total")).as("pii_total"),
+              sum(when(col("has_pii"), 1L).otherwise(0L))
+                .as("n_flagged")): _*),
+        None,
+        perBatch => perBatch.agg(totals.head, totals.tail: _*)))
   }
 
   /** Streaming fingerprint monitor — integrity at INGEST: each
@@ -833,112 +824,39 @@ object StreamGate {
     * fingerprint matrix: batch (q213) / incremental CDC (q216) /
     * stream (this). Per-batch rows double as the audit trail (which
     * shard changed the checksum). Output: one row —
-    * (`n_rows`, `fingerprint` DECIMAL(38,0)).
-    * @note one-generation replay contract — see the object doc. */
+    * (`n_rows`, `fingerprint` DECIMAL(38,0)). */
   def replayFingerprintMonitor(
       df: DataFrame,
       cols: Seq[String],
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = df.sparkSession
-    val src = tempDir("graft_fp_src")
-    df.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_stream_out")
-    val ck = tempDir("graft_stream_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Quality.tableFingerprint(batch, cols)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(spark.read.parquet(out)
-        .agg(coalesce(sum(col("n_rows")), lit(0L)).as("n_rows"),
+      filesPerTrigger: Int = 2): DataFrame =
+    replay("replayFingerprintMonitor", fileFeed(df, filesPerTrigger))(_ =>
+      AppendSink(Quality.tableFingerprint(_, cols), None,
+        _.agg(coalesce(sum(col("n_rows")), lit(0L)).as("n_rows"),
           coalesce(sum(col("fingerprint")),
             lit(0).cast("decimal(38,0)")).cast("decimal(38,0)")
-            .as("fingerprint"))
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
-  }
+            .as("fingerprint"))))
 
   /** Streaming incremental aggregate maintenance: the fact feed
     * micro-batched into shards (`maxFilesPerTrigger`), each batch
     * summarized by [[graft.operators.Maintain.summarize]] and FOLDED
-    * into the persisted summary by
-    * [[graft.operators.Maintain.merge]] inside `foreachBatch` — the
-    * q113 bridge again: the summary table IS the state, owned outside
-    * the query as a versioned parquet artifact (each batch reads
-    * version N and writes N+1 — never overwriting what it reads), so
-    * no stream-stateful operator holds key cardinality and a restart
-    * resumes from the last committed version. Because count/sum/min/
-    * max merge associatively AND commutatively
+    * into the persisted summary by [[graft.operators.Maintain.merge]]
+    * — the q113 bridge again: the summary table IS the state, owned
+    * outside the query as a versioned parquet artifact. Because
+    * count/sum/min/max merge associatively AND commutatively
     * (`MaintainSpec`'s generative contract), the micro-batch
     * partitioning provably cannot change the final summary — which is
     * exactly what the replay gate holds it to: q133's oracle is the
     * batch full recompute (q131's formulation, third pattern of the
-    * q92/q101/q102 family).
-    *
-    * Returns the final summary frame (localCheckpoint'ed off the
-    * deleted temp state). */
+    * q92/q101/q102 family). Returns the final summary frame. */
   def replayIncrementalRollup(
       facts: DataFrame,
       keys: Seq[String],
       spec: graft.operators.Maintain.SummarySpec,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = facts.sparkSession
-    val src = tempDir("graft_facts_src")
-    facts.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_rollup_state")
-    val ck = tempDir("graft_rollup_ck")
-    val current = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(facts.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val batchSummary =
-            graft.operators.Maintain.summarize(batch, keys, spec)
-          val merged = Option(current.get()) match {
-            case None => batchSummary
-            case Some(p) => graft.operators.Maintain.merge(
-              spark.read.parquet(p), batchSummary, keys, spec)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          current.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(current.get() != null,
-        "replayIncrementalRollup saw no micro-batches")
-      releaseLastReplay(spark.read.parquet(current.get()).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState("replayIncrementalRollup", facts, filesPerTrigger)(
+      Maintain.summarize(_, keys, spec),
+      Maintain.merge(_, _, keys, spec),
+      identity)
 
   /** Streaming distinct-count maintenance — [[graft.operators
     * .Maintain.distinctSummarize]]'s HLL rollup with the fact feed as
@@ -954,55 +872,16 @@ object StreamGate {
     * never value-cardinality.
     *
     * Returns the final estimated frame (keys, `n`,
-    * `<valueCol>_distinct`), localCheckpoint'ed off the deleted temp
-    * state. */
+    * `<valueCol>_distinct`). */
   def replayDistinctRollup(
       facts: DataFrame,
       keys: Seq[String],
       valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = facts.sparkSession
-    val src = tempDir("graft_dfacts_src")
-    facts.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_distinct_state")
-    val ck = tempDir("graft_distinct_ck")
-    val current = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(facts.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val batchSummary = graft.operators.Maintain
-            .distinctSummarize(batch, keys, valueCol)
-          val merged = Option(current.get()) match {
-            case None => batchSummary
-            case Some(p) => graft.operators.Maintain.distinctMerge(
-              spark.read.parquet(p), batchSummary, keys, valueCol)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          current.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(current.get() != null,
-        "replayDistinctRollup saw no micro-batches")
-      releaseLastReplay(graft.operators.Maintain.distinctEstimate(
-        spark.read.parquet(current.get()), valueCol).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState("replayDistinctRollup", facts, filesPerTrigger)(
+      Maintain.distinctSummarize(_, keys, valueCol),
+      Maintain.distinctMerge(_, _, keys, valueCol),
+      Maintain.distinctEstimate(_, valueCol))
 
   /** Streaming exact-KS drift — [[graft.operators.Profile
     * .ksStatistic]] with the monitored slice as a FILE STREAM: each
@@ -1020,12 +899,12 @@ object StreamGate {
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "ks", filesPerTrigger)(
-      batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cb"),
-      (base, delta) => base.unionByName(delta)
-        .groupBy("v").agg(sum(col("cb")).as("cb")),
-      state => graft.operators.Profile.ksFromCounts(
-        graft.operators.Profile.ksSideCounts(reference, valueCol, "ca"),
+    replayFoldState("replayKsDrift",
+        monitored.select(valueCol), filesPerTrigger)(
+      batch => Profile.ksSideCounts(batch, valueCol, "cb"),
+      sumBy("v", "cb"),
+      state => Profile.ksFromCounts(
+        Profile.ksSideCounts(reference, valueCol, "ca"),
         state))
 
   /** Streaming 1-Wasserstein drift — [[graft.operators.Profile
@@ -1037,19 +916,18 @@ object StreamGate {
     * reference counts — identical arithmetic to the batch operator,
     * so the replay is held to its verbatim oracle. State is
     * distinct-value-bounded. Returns the one-row
-    * (`n_ref`, `n_cur`, `w1_6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * (`n_ref`, `n_cur`, `w1_6`) frame. */
   def replayWassersteinDrift(
       reference: DataFrame,
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "w1", filesPerTrigger)(
-      batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cb"),
-      (base, delta) => base.unionByName(delta)
-        .groupBy("v").agg(sum(col("cb")).as("cb")),
-      state => graft.operators.Profile.wassersteinFromCounts(
-        graft.operators.Profile.ksSideCounts(reference, valueCol, "ca"),
+    replayFoldState("replayWassersteinDrift", monitored.select(valueCol),
+        filesPerTrigger)(
+      batch => Profile.ksSideCounts(batch, valueCol, "cb"),
+      sumBy("v", "cb"),
+      state => Profile.wassersteinFromCounts(
+        Profile.ksSideCounts(reference, valueCol, "ca"),
         state))
 
   /** Streaming quantile-shift drift — [[graft.operators.Profile
@@ -1060,19 +938,19 @@ object StreamGate {
     * .quantileShiftFromCounts]] against the batch-computed reference
     * counts — held to the batch operator's verbatim oracle. Returns
     * the (`p`, `n_ref`, `n_cur`, `q_ref`, `q_cur`, `shift6`) frame
-    * ordered by p.
-    * @note one-generation replay contract — see the object doc. */
+    * ordered by p. */
   def replayQuantileShift(
       reference: DataFrame,
       monitored: DataFrame,
       valueCol: String,
       ps: Seq[Double],
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "qshift", filesPerTrigger)(
-      batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
-      graft.operators.Profile.foldValueCounts,
-      state => graft.operators.Profile.quantileShiftFromCounts(
-        graft.operators.Profile.ksSideCounts(reference, valueCol, "cnt"),
+    replayFoldState("replayQuantileShift", monitored.select(valueCol),
+        filesPerTrigger)(
+      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
+      Profile.foldValueCounts,
+      state => Profile.quantileShiftFromCounts(
+        Profile.ksSideCounts(reference, valueCol, "cnt"),
         state, ps))
 
   /** Streaming PER-GROUP quantile-shift drift — [[graft.operators
@@ -1083,8 +961,7 @@ object StreamGate {
     * .Profile.quantileShiftByGroupFromCounts]] against the
     * batch-computed reference counts — held to the batch operator's
     * verbatim oracle. Returns the (`g`, `p`, `n_ref`, `n_cur`,
-    * `q_ref`, `q_cur`, `shift6`) frame ordered by (g, p).
-    * @note one-generation replay contract — see the object doc. */
+    * `q_ref`, `q_cur`, `shift6`) frame ordered by (g, p). */
   def replayGroupQuantileShift(
       reference: DataFrame,
       monitored: DataFrame,
@@ -1092,14 +969,12 @@ object StreamGate {
       valueCol: String,
       ps: Seq[Double],
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gqshift",
-        filesPerTrigger)(
-      batch => graft.operators.Profile.groupSideCounts(
-        batch, groupCol, valueCol),
-      graft.operators.Profile.foldGroupValueCounts,
-      state => graft.operators.Profile.quantileShiftByGroupFromCounts(
-        graft.operators.Profile.groupSideCounts(
-          reference, groupCol, valueCol),
+    replayFoldState("replayGroupQuantileShift",
+        monitored.select(groupCol, valueCol), filesPerTrigger)(
+      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
+      Profile.foldGroupValueCounts,
+      state => Profile.quantileShiftByGroupFromCounts(
+        Profile.groupSideCounts(reference, groupCol, valueCol),
         state, groupCol, ps))
 
   /** Streaming KEY-keyed dedup monitor — [[graft.operators.Dedup
@@ -1111,17 +986,16 @@ object StreamGate {
     * the split). The canonical-URL registry that stays current as the
     * crawl lands: state is one (key, id) row per distinct key, never
     * the raw rows. Held to the batch operator's verbatim oracle.
-    * Returns the (key, id) winner table ordered by key.
-    * @note one-generation replay contract — see the object doc. */
+    * Returns the (key, id) winner table ordered by key. */
   def replayKeyDedupMonitor(
       monitored: DataFrame,
       keyCol: String,
       idCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(keyCol, idCol), "keydedup",
+    replayFoldState("replayKeyDedupMonitor", monitored.select(keyCol, idCol),
         filesPerTrigger)(
-      batch => graft.operators.Dedup.exactDedupIds(batch, Seq(keyCol), idCol),
-      (base, delta) => graft.operators.Dedup.exactDedupIds(
+      batch => Dedup.exactDedupIds(batch, Seq(keyCol), idCol),
+      (base, delta) => Dedup.exactDedupIds(
         base.unionByName(delta), Seq(keyCol), idCol),
       state => state.orderBy(keyCol))
 
@@ -1136,19 +1010,17 @@ object StreamGate {
     * commutatively per duration cell, so the micro-batch split
     * provably cannot move any risk set or survival value — held to
     * the batch operator's verbatim oracle. Returns the (`t`,
-    * `n_risk`, `n_events`, `n_censored`, `survival6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `n_risk`, `n_events`, `n_censored`, `survival6`) frame. */
   def replayKaplanMeierMonitor(
       monitored: DataFrame,
       durationCol: String,
       observedCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(durationCol, observedCol), "km",
-        filesPerTrigger)(
-      batch => graft.operators.Events.survivalCellsOf(
-        batch, durationCol, observedCol),
-      graft.operators.Events.foldSurvivalCells,
-      state => graft.operators.Events.kaplanMeierFromCells(state))
+    replayFoldState("replayKaplanMeierMonitor",
+        monitored.select(durationCol, observedCol), filesPerTrigger)(
+      batch => Events.survivalCellsOf(batch, durationCol, observedCol),
+      Events.foldSurvivalCells,
+      state => Events.kaplanMeierFromCells(state))
 
   /** Streaming PER-GROUP Jensen–Shannon drift — [[graft.operators
     * .Profile.jsDivergenceByGroup]] with the monitored slice as a
@@ -1157,21 +1029,19 @@ object StreamGate {
     * [[graft.operators.Profile.jsDivergenceByGroupFromCounts]]
     * against the batch-computed reference counts — held to the batch
     * operator's verbatim oracle. Returns the (`g`, `n_ref`, `n_cur`,
-    * `n_categories`, `jsd6`) frame ordered by group.
-    * @note one-generation replay contract — see the object doc. */
+    * `n_categories`, `jsd6`) frame ordered by group. */
   def replayGroupJsDivergence(
       reference: DataFrame,
       monitored: DataFrame,
       groupCol: String,
       c: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, c), "gjsd", filesPerTrigger)(
-      batch => graft.operators.Profile.groupCatCounts(
-        batch, groupCol, c, "cnt"),
-      graft.operators.Profile.foldGroupCatCounts,
-      state => graft.operators.Profile.jsDivergenceByGroupFromCounts(
-        graft.operators.Profile.groupCatCounts(
-          reference, groupCol, c, "ca"),
+    replayFoldState("replayGroupJsDivergence", monitored.select(groupCol, c),
+        filesPerTrigger)(
+      batch => Profile.groupCatCounts(batch, groupCol, c, "cnt"),
+      Profile.foldGroupCatCounts,
+      state => Profile.jsDivergenceByGroupFromCounts(
+        Profile.groupCatCounts(reference, groupCol, c, "ca"),
         state.withColumnRenamed("cnt", "cb")))
 
   /** Streaming PER-GROUP Hellinger drift — [[graft.operators.Profile
@@ -1182,21 +1052,19 @@ object StreamGate {
     * .hellingerByGroupFromCounts]] against the batch-computed
     * reference — held to the batch operator's verbatim oracle.
     * Returns the (`g`, `n_ref`, `n_cur`, `n_categories`, `bc6`,
-    * `hellinger6`) frame ordered by group.
-    * @note one-generation replay contract — see the object doc. */
+    * `hellinger6`) frame ordered by group. */
   def replayGroupHellinger(
       reference: DataFrame,
       monitored: DataFrame,
       groupCol: String,
       c: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, c), "ghell", filesPerTrigger)(
-      batch => graft.operators.Profile.groupCatCounts(
-        batch, groupCol, c, "cnt"),
-      graft.operators.Profile.foldGroupCatCounts,
-      state => graft.operators.Profile.hellingerByGroupFromCounts(
-        graft.operators.Profile.groupCatCounts(
-          reference, groupCol, c, "ca"),
+    replayFoldState("replayGroupHellinger", monitored.select(groupCol, c),
+        filesPerTrigger)(
+      batch => Profile.groupCatCounts(batch, groupCol, c, "cnt"),
+      Profile.foldGroupCatCounts,
+      state => Profile.hellingerByGroupFromCounts(
+        Profile.groupCatCounts(reference, groupCol, c, "ca"),
         state.withColumnRenamed("cnt", "cb")))
 
   /** Streaming Hellinger drift — [[graft.operators.Profile
@@ -1206,19 +1074,17 @@ object StreamGate {
     * .hellingerFromCounts]] against the batch-computed reference
     * counts — held to the batch operator's verbatim oracle. Returns
     * the one-row (`n_ref`, `n_cur`, `n_categories`, `bc6`,
-    * `hellinger6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `hellinger6`) frame. */
   def replayHellinger(
       reference: DataFrame,
       monitored: DataFrame,
       c: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(c), "hell", filesPerTrigger)(
-      batch => graft.operators.Profile.catSideCounts(batch, c, "cb"),
-      (base, delta) => base.unionByName(delta)
-        .groupBy("category").agg(sum(col("cb")).as("cb")),
-      state => graft.operators.Profile.hellingerFromCounts(
-        graft.operators.Profile.catSideCounts(reference, c, "ca"),
+    replayFoldState("replayHellinger", monitored.select(c), filesPerTrigger)(
+      batch => Profile.catSideCounts(batch, c, "cb"),
+      sumBy("category", "cb"),
+      state => Profile.hellingerFromCounts(
+        Profile.catSideCounts(reference, c, "ca"),
         state))
 
   /** Streaming CUSUM change-point monitor — [[graft.operators.Stats
@@ -1232,15 +1098,14 @@ object StreamGate {
     * double cast happens once at readout, so the micro-batch split
     * provably cannot move the series — held to the batch operator's
     * verbatim oracle. Returns the one-row (`n`, `k`, `bucketCol`,
-    * `cusum6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `cusum6`) frame. */
   def replayChangePointMonitor(
       monitored: DataFrame,
       bucketCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(bucketCol, valueCol), "cpt",
-        filesPerTrigger)(
+    replayFoldState("replayChangePointMonitor",
+        monitored.select(bucketCol, valueCol), filesPerTrigger)(
       batch => batch.filter(col(valueCol).isNotNull)
         .groupBy(bucketCol)
         .agg(sum(round(col(valueCol), 12).cast("decimal(38,12)"))
@@ -1248,7 +1113,7 @@ object StreamGate {
       (base, delta) => base.unionByName(delta)
         .groupBy(bucketCol)
         .agg(sum(col("__cps")).cast("decimal(38,12)").as("__cps")),
-      state => graft.operators.Stats.changePointScan(
+      state => Stats.changePointScan(
         state.select(col(bucketCol), col("__cps").cast("double").as("__cpv")),
         Seq(bucketCol), "__cpv"))
 
@@ -1260,21 +1125,19 @@ object StreamGate {
     * .Profile.ksByGroupFromCounts]] against the batch-computed
     * reference counts — held to the batch operator's verbatim oracle.
     * Returns the (`g`, `n_ref`, `n_cur`, `ks6`) frame ordered by
-    * group.
-    * @note one-generation replay contract — see the object doc. */
+    * group. */
   def replayGroupKsDrift(
       reference: DataFrame,
       monitored: DataFrame,
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gks",
+    replayFoldState("replayGroupKsDrift", monitored.select(groupCol, valueCol),
         filesPerTrigger)(
-      batch => graft.operators.Profile.groupSideCounts(
-        batch, groupCol, valueCol),
-      graft.operators.Profile.foldGroupValueCounts,
-      state => graft.operators.Profile.ksByGroupFromCounts(
-        graft.operators.Profile.groupSideCounts(
+      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
+      Profile.foldGroupValueCounts,
+      state => Profile.ksByGroupFromCounts(
+        Profile.groupSideCounts(
           reference, groupCol, valueCol).withColumnRenamed("cnt", "ca"),
         state.withColumnRenamed("cnt", "cb")))
 
@@ -1286,21 +1149,19 @@ object StreamGate {
     * .wassersteinByGroupFromCounts]] against the batch-computed
     * reference counts — held to the batch operator's verbatim oracle.
     * Returns the (`g`, `n_ref`, `n_cur`, `w1_6`) frame ordered by
-    * group.
-    * @note one-generation replay contract — see the object doc. */
+    * group. */
   def replayGroupWassersteinDrift(
       reference: DataFrame,
       monitored: DataFrame,
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gw1",
-        filesPerTrigger)(
-      batch => graft.operators.Profile.groupSideCounts(
-        batch, groupCol, valueCol),
-      graft.operators.Profile.foldGroupValueCounts,
-      state => graft.operators.Profile.wassersteinByGroupFromCounts(
-        graft.operators.Profile.groupSideCounts(
+    replayFoldState("replayGroupWassersteinDrift",
+        monitored.select(groupCol, valueCol), filesPerTrigger)(
+      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
+      Profile.foldGroupValueCounts,
+      state => Profile.wassersteinByGroupFromCounts(
+        Profile.groupSideCounts(
           reference, groupCol, valueCol).withColumnRenamed("cnt", "ca"),
         state.withColumnRenamed("cnt", "cb")))
 
@@ -1310,21 +1171,19 @@ object StreamGate {
     * via [[graft.operators.Profile.mannWhitneyByGroupFromCounts]]
     * against the batch-computed reference counts — held to the batch
     * operator's verbatim oracle. Returns the (`g`, `n_ref`, `n_cur`,
-    * `u_x2`, `cliffs_delta6`, `z6`) frame ordered by group.
-    * @note one-generation replay contract — see the object doc. */
+    * `u_x2`, `cliffs_delta6`, `z6`) frame ordered by group. */
   def replayGroupMannWhitney(
       reference: DataFrame,
       monitored: DataFrame,
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gmwu",
-        filesPerTrigger)(
-      batch => graft.operators.Profile.groupSideCounts(
-        batch, groupCol, valueCol),
-      graft.operators.Profile.foldGroupValueCounts,
-      state => graft.operators.Profile.mannWhitneyByGroupFromCounts(
-        graft.operators.Profile.groupSideCounts(
+    replayFoldState("replayGroupMannWhitney",
+        monitored.select(groupCol, valueCol), filesPerTrigger)(
+      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
+      Profile.foldGroupValueCounts,
+      state => Profile.mannWhitneyByGroupFromCounts(
+        Profile.groupSideCounts(
           reference, groupCol, valueCol).withColumnRenamed("cnt", "ca"),
         state.withColumnRenamed("cnt", "cb")))
 
@@ -1335,21 +1194,19 @@ object StreamGate {
     * held to the batch operator's verbatim oracle. The per-slice
     * drift matrix (KS / W1 / CvM / MWU, each per group) now closes
     * batch + stream on ONE maintained group grid. Returns the (`g`,
-    * `n_ref`, `n_cur`, `cvm6`) frame ordered by group.
-    * @note one-generation replay contract — see the object doc. */
+    * `n_ref`, `n_cur`, `cvm6`) frame ordered by group. */
   def replayGroupCvmDrift(
       reference: DataFrame,
       monitored: DataFrame,
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gcvm",
+    replayFoldState("replayGroupCvmDrift", monitored.select(groupCol, valueCol),
         filesPerTrigger)(
-      batch => graft.operators.Profile.groupSideCounts(
-        batch, groupCol, valueCol),
-      graft.operators.Profile.foldGroupValueCounts,
-      state => graft.operators.Profile.cvmByGroupFromCounts(
-        graft.operators.Profile.groupSideCounts(
+      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
+      Profile.foldGroupValueCounts,
+      state => Profile.cvmByGroupFromCounts(
+        Profile.groupSideCounts(
           reference, groupCol, valueCol).withColumnRenamed("cnt", "ca"),
         state.withColumnRenamed("cnt", "cb")))
 
@@ -1360,19 +1217,18 @@ object StreamGate {
     * running [[graft.operators.Profile.mannWhitneyFromCounts]]
     * against the batch-computed reference counts — held to the batch
     * operator's verbatim oracle. Returns the one-row (`n_ref`,
-    * `n_cur`, `u_x2`, `cliffs_delta6`, `z6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `n_cur`, `u_x2`, `cliffs_delta6`, `z6`) frame. */
   def replayMannWhitney(
       reference: DataFrame,
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "mwu", filesPerTrigger)(
-      batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cb"),
-      (base, delta) => base.unionByName(delta)
-        .groupBy("v").agg(sum(col("cb")).as("cb")),
-      state => graft.operators.Profile.mannWhitneyFromCounts(
-        graft.operators.Profile.ksSideCounts(reference, valueCol, "ca"),
+    replayFoldState("replayMannWhitney", monitored.select(valueCol),
+        filesPerTrigger)(
+      batch => Profile.ksSideCounts(batch, valueCol, "cb"),
+      sumBy("v", "cb"),
+      state => Profile.mannWhitneyFromCounts(
+        Profile.ksSideCounts(reference, valueCol, "ca"),
         state))
 
   /** Streaming Cramér–von Mises drift — [[graft.operators.Profile
@@ -1382,19 +1238,18 @@ object StreamGate {
     * batch-computed reference counts — held to the batch operator's
     * verbatim oracle. One foldable grid now serves KS (sup), W1
     * (∫|gap|), CvM (∫gap²), Mann–Whitney, quantiles, Gini, and HHI.
-    * Returns the one-row (`n_ref`, `n_cur`, `cvm6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * Returns the one-row (`n_ref`, `n_cur`, `cvm6`) frame. */
   def replayCvmDrift(
       reference: DataFrame,
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "cvm", filesPerTrigger)(
-      batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cb"),
-      (base, delta) => base.unionByName(delta)
-        .groupBy("v").agg(sum(col("cb")).as("cb")),
-      state => graft.operators.Profile.cvmFromCounts(
-        graft.operators.Profile.ksSideCounts(reference, valueCol, "ca"),
+    replayFoldState("replayCvmDrift",
+        monitored.select(valueCol), filesPerTrigger)(
+      batch => Profile.ksSideCounts(batch, valueCol, "cb"),
+      sumBy("v", "cb"),
+      state => Profile.cvmFromCounts(
+        Profile.ksSideCounts(reference, valueCol, "ca"),
         state))
 
   /** Streaming Jensen–Shannon drift — [[graft.operators.Profile
@@ -1405,82 +1260,18 @@ object StreamGate {
     * [[graft.operators.Profile.jsDivergenceFromCounts]] against the
     * batch-computed reference counts — the batch operator's verbatim
     * arithmetic. Returns the one-row (`n_ref`, `n_cur`,
-    * `n_categories`, `jsd6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `n_categories`, `jsd6`) frame. */
   def replayJsDivergence(
       reference: DataFrame,
       monitored: DataFrame,
       c: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(c), "jsd", filesPerTrigger)(
-      batch => graft.operators.Profile.catSideCounts(batch, c, "cb"),
-      (base, delta) => base.unionByName(delta)
-        .groupBy("category").agg(sum(col("cb")).as("cb")),
-      state => graft.operators.Profile.jsDivergenceFromCounts(
-        graft.operators.Profile.catSideCounts(reference, c, "ca"),
+    replayFoldState("replayJsDivergence", monitored.select(c), filesPerTrigger)(
+      batch => Profile.catSideCounts(batch, c, "cb"),
+      sumBy("category", "cb"),
+      state => Profile.jsDivergenceFromCounts(
+        Profile.catSideCounts(reference, c, "ca"),
         state))
-
-  /** Shared skeleton of the versioned fold-state monitors (quantile /
-    * association / bootstrap-CI): write the projected feed as a file
-    * source, stream it micro-batched, reduce each batch with `seed`,
-    * merge into the prior state with `fold` (state version N → N+1 as
-    * parquet artifacts — the q133 discipline: the state is owned
-    * OUTSIDE the query, no stream-stateful operator holds it), then
-    * run `readout` over the final state. Correctness burden on the
-    * caller: `fold` must be associative and commutative over `seed`
-    * outputs (every monitor built on this proves it by being held to
-    * its batch twin's verbatim oracle).
-    * @note one-generation replay contract — see the object doc. */
-  private def replayFoldState(
-      source: DataFrame,
-      sourceCols: Seq[String],
-      tag: String,
-      filesPerTrigger: Int)(
-      seed: DataFrame => DataFrame,
-      fold: (DataFrame, DataFrame) => DataFrame,
-      readout: DataFrame => DataFrame): DataFrame = replayLock.synchronized {
-    val spark = source.sparkSession
-    val src = tempDir(s"graft_${tag}_src")
-    val projected = source.select(sourceCols.map(col): _*)
-    projected.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir(s"graft_${tag}_state")
-    val ck = tempDir(s"graft_${tag}_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream
-        .schema(projected.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = seed(batch)
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => fold(spark.read.parquet(p), bh)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        s"fold-state monitor '$tag' saw no micro-batches")
-      releaseLastReplay(readout(spark.read.parquet(state.get()))
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
 
   /** Streaming exact quantiles — [[graft.operators.Profile
     * .exactQuantilesFromCounts]] with the monitored column as a FILE
@@ -1498,10 +1289,11 @@ object StreamGate {
       valueCol: String,
       ps: Seq[Double],
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "qtl", filesPerTrigger)(
-      batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
-      graft.operators.Profile.foldValueCounts,
-      state => graft.operators.Profile.exactQuantilesFromCounts(state, ps))
+    replayFoldState("replayQuantileMonitor", monitored.select(valueCol),
+        filesPerTrigger)(
+      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
+      Profile.foldValueCounts,
+      state => Profile.exactQuantilesFromCounts(state, ps))
 
   /** Streaming PER-GROUP quantile monitor — [[graft.operators.Profile
     * .exactQuantilesByGroup]] with the (group, value) feed as a FILE
@@ -1513,21 +1305,18 @@ object StreamGate {
     * as the crawl lands. Counts merge associatively and commutatively
     * per (group, value) cell, so the micro-batch split provably
     * cannot move any group's quantile — held to the batch operator's
-    * verbatim oracle. Returns the (`groupCol`, `p`, `n`, `q`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * verbatim oracle. Returns the (`groupCol`, `p`, `n`, `q`) frame. */
   def replayGroupQuantileMonitor(
       monitored: DataFrame,
       groupCol: String,
       valueCol: String,
       ps: Seq[Double],
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gqtl",
-        filesPerTrigger)(
-      batch => graft.operators.Profile.groupSideCounts(
-        batch, groupCol, valueCol),
-      graft.operators.Profile.foldGroupValueCounts,
-      state => graft.operators.Profile.groupQuantilesFromCounts(
-        state, groupCol, ps))
+    replayFoldState("replayGroupQuantileMonitor",
+        monitored.select(groupCol, valueCol), filesPerTrigger)(
+      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
+      Profile.foldGroupValueCounts,
+      state => Profile.groupQuantilesFromCounts(state, groupCol, ps))
 
   /** Streaming PER-GROUP Gini monitor — [[graft.operators.Stats
     * .giniIndexByGroup]] with the (group, mass) feed as a FILE
@@ -1539,19 +1328,17 @@ object StreamGate {
     * identity is tie-order-invariant per group, so the split provably
     * cannot move any group's G — held to the batch rank-path
     * operator's verbatim oracle. Returns the (`groupCol`, `n`,
-    * `total`, `gini6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `total`, `gini6`) frame. */
   def replayGroupGiniMonitor(
       monitored: DataFrame,
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "ggini",
-        filesPerTrigger)(
-      batch => graft.operators.Profile.groupSideCounts(
-        batch, groupCol, valueCol),
-      graft.operators.Profile.foldGroupValueCounts,
-      state => graft.operators.Stats.giniByGroupFromCounts(state, groupCol))
+    replayFoldState("replayGroupGiniMonitor",
+        monitored.select(groupCol, valueCol), filesPerTrigger)(
+      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
+      Profile.foldGroupValueCounts,
+      state => Stats.giniByGroupFromCounts(state, groupCol))
 
   /** Streaming Gini-concentration monitor — [[graft.operators.Stats
     * .giniFromCounts]] with the mass column as a FILE STREAM: each
@@ -1565,16 +1352,16 @@ object StreamGate {
     * split provably cannot move G — the stream readout is held to the
     * batch rank-path operator's verbatim oracle. State is
     * distinct-mass-bounded. Returns the one-row (`n`, `total`,
-    * `gini6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `gini6`) frame. */
   def replayGiniMonitor(
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "gini", filesPerTrigger)(
-      batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
-      graft.operators.Profile.foldValueCounts,
-      state => graft.operators.Stats.giniFromCounts(state))
+    replayFoldState("replayGiniMonitor", monitored.select(valueCol),
+        filesPerTrigger)(
+      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
+      Profile.foldValueCounts,
+      state => Stats.giniFromCounts(state))
 
   /** Streaming HHI concentration monitor — [[graft.operators.Stats
     * .hhiIndex]] with the mass feed as a FILE STREAM: each
@@ -1585,16 +1372,16 @@ object StreamGate {
     * (Σcnt, Σv·cnt, Σv²·cnt) is a SUM over that state, so the split
     * provably cannot move the index. One maintained grid serves the
     * whole quantile/KS/Gini/HHI family. Returns the one-row
-    * (`n`, `total`, `hhi6`, `hhi_norm6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * (`n`, `total`, `hhi6`, `hhi_norm6`) frame. */
   def replayHhiMonitor(
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "hhi", filesPerTrigger)(
-      batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
-      graft.operators.Profile.foldValueCounts,
-      state => graft.operators.Stats.hhiFromCounts(state))
+    replayFoldState("replayHhiMonitor", monitored.select(valueCol),
+        filesPerTrigger)(
+      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
+      Profile.foldValueCounts,
+      state => Stats.hhiFromCounts(state))
 
   /** Streaming categorical-association monitor — [[graft.operators
     * .Profile.categoricalAssociation]] with the row feed as a FILE
@@ -1606,17 +1393,17 @@ object StreamGate {
     * from independent-of-source as the crawl lands?"), provably equal
     * to the batch audit of the same feed (q232 is held to q226's
     * verbatim oracle). Returns the one-row
-    * (`n`, `dof`, `chi2_6`, `cramers_v6`, `mi6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * (`n`, `dof`, `chi2_6`, `cramers_v6`, `mi6`) frame. */
   def replayAssociationMonitor(
       rows: DataFrame,
       colA: String,
       colB: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(rows, Seq(colA, colB), "assoc", filesPerTrigger)(
-      batch => graft.operators.Profile.jointCountsOf(batch, colA, colB),
-      graft.operators.Profile.foldJointCounts,
-      state => graft.operators.Profile.associationFromJoint(state))
+    replayFoldState("replayAssociationMonitor", rows.select(colA, colB),
+        filesPerTrigger)(
+      batch => Profile.jointCountsOf(batch, colA, colB),
+      Profile.foldJointCounts,
+      state => Profile.associationFromJoint(state))
 
   /** Streaming Pearson/OLS monitor — [[graft.operators.Moments
     * .pearsonOls]] with the (x, y) feed as a FILE STREAM: each
@@ -1629,17 +1416,17 @@ object StreamGate {
     * commutatively, so the micro-batch split provably cannot move a
     * digit of the state — held to the batch operator's verbatim
     * oracle. State is O(1). Returns the one-row (`n`, `mean_x6`,
-    * `mean_y6`, `pearson_r6`, `slope6`, `intercept6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `mean_y6`, `pearson_r6`, `slope6`, `intercept6`) frame. */
   def replayMomentsMonitor(
       monitored: DataFrame,
       xCol: String,
       yCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(xCol, yCol), "mom", filesPerTrigger)(
-      batch => graft.operators.Moments.momentState(batch, xCol, yCol),
-      graft.operators.Moments.foldMomentState,
-      state => graft.operators.Moments.bivariateFromMoments(state))
+    replayFoldState("replayMomentsMonitor", monitored.select(xCol, yCol),
+        filesPerTrigger)(
+      batch => Moments.momentState(batch, xCol, yCol),
+      Moments.foldMomentState,
+      state => Moments.bivariateFromMoments(state))
 
   /** Streaming PER-GROUP Pearson/OLS monitor — [[graft.operators
     * .Moments.pearsonOlsByGroup]] with the (group, x, y) feed as a
@@ -1648,20 +1435,18 @@ object StreamGate {
     * smallest state in the monitor family), readout = the per-group
     * in-plan closed forms. Held to the batch operator's verbatim
     * oracle. Returns the (`g`, `n`, `mean_x6`, `mean_y6`,
-    * `pearson_r6`, `slope6`, `intercept6`) frame ordered by group.
-    * @note one-generation replay contract — see the object doc. */
+    * `pearson_r6`, `slope6`, `intercept6`) frame ordered by group. */
   def replayGroupMomentsMonitor(
       monitored: DataFrame,
       groupCol: String,
       xCol: String,
       yCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, xCol, yCol), "gmom",
-        filesPerTrigger)(
-      batch => graft.operators.Moments.groupMomentState(
-        batch, groupCol, xCol, yCol),
-      graft.operators.Moments.foldGroupMomentState,
-      state => graft.operators.Moments.bivariateByGroupFromMoments(state))
+    replayFoldState("replayGroupMomentsMonitor",
+        monitored.select(groupCol, xCol, yCol), filesPerTrigger)(
+      batch => Moments.groupMomentState(batch, groupCol, xCol, yCol),
+      Moments.foldGroupMomentState,
+      state => Moments.bivariateByGroupFromMoments(state))
 
   /** Streaming inter-rater agreement monitor — [[graft.operators
     * .Annotate.fleissKappa]] with the ratings feed as a FILE STREAM:
@@ -1671,21 +1456,19 @@ object StreamGate {
     * panel precondition applies to the ACCUMULATED state — the
     * AvailableNow replay reads out at the end, when it holds).
     * Returns the one-row (`n_items`, `n_raters`, `n_labels`,
-    * `kappa6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `kappa6`) frame. */
   def replayFleissMonitor(
       ratings: DataFrame,
       itemCol: String,
       raterCol: String,
       labelCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(ratings, Seq(itemCol, raterCol, labelCol), "fleiss",
-        filesPerTrigger)(
-      batch => graft.operators.Annotate.annotationCellsOf(
+    replayFoldState("replayFleissMonitor",
+        ratings.select(itemCol, raterCol, labelCol), filesPerTrigger)(
+      batch => Annotate.annotationCellsOf(
         batch, itemCol, raterCol, labelCol, "replayFleissMonitor"),
-      graft.operators.Annotate.foldAnnotationCells,
-      state => graft.operators.Annotate.fleissKappaFromCells(
-        state.localCheckpoint()))
+      Annotate.foldAnnotationCells,
+      state => Annotate.fleissKappaFromCells(state.localCheckpoint()))
 
   /** Streaming Krippendorff-alpha monitor — the SAME maintained
     * (item, label) cell state as [[replayFleissMonitor]], read out
@@ -1693,21 +1476,19 @@ object StreamGate {
     * — and because alpha TOLERATES varying participation, its
     * readout is meaningful at any point of the feed, not only at
     * panel completion. Returns the one-row (`n_items`, `n_ratings`,
-    * `n_labels`, `alpha6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `n_labels`, `alpha6`) frame. */
   def replayAlphaMonitor(
       ratings: DataFrame,
       itemCol: String,
       raterCol: String,
       labelCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(ratings, Seq(itemCol, raterCol, labelCol), "alpha",
-        filesPerTrigger)(
-      batch => graft.operators.Annotate.annotationCellsOf(
+    replayFoldState("replayAlphaMonitor",
+        ratings.select(itemCol, raterCol, labelCol), filesPerTrigger)(
+      batch => Annotate.annotationCellsOf(
         batch, itemCol, raterCol, labelCol, "replayAlphaMonitor"),
-      graft.operators.Annotate.foldAnnotationCells,
-      state => graft.operators.Annotate.krippendorffAlphaFromCells(
-        state.localCheckpoint()))
+      Annotate.foldAnnotationCells,
+      state => Annotate.krippendorffAlphaFromCells(state.localCheckpoint()))
 
   /** Streaming vocabulary-saturation monitor — [[graft.operators
     * .Corpus.vocabRichness]] with the document feed as a FILE STREAM:
@@ -1716,34 +1497,31 @@ object StreamGate {
     * Chao1/Good–Turing arithmetic — the live "is more crawl still
     * buying new vocabulary?" dashboard. Returns the one-row
     * (`n_tokens`, `vocab`, `f1`, `f2`, `chao1_6`, `unseen_mass6`)
-    * frame.
-    * @note one-generation replay contract — see the object doc. */
+    * frame. */
   def replayVocabRichnessMonitor(
       docs: DataFrame,
       textCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(docs, Seq(textCol), "vocabrich", filesPerTrigger)(
-      batch => graft.operators.Corpus.tokenFrequencies(batch, textCol),
-      graft.operators.Corpus.foldTokenFrequencies,
-      state => graft.operators.Corpus.vocabRichnessFromFrequencies(state))
+    replayFoldState("replayVocabRichnessMonitor", docs.select(textCol),
+        filesPerTrigger)(
+      batch => Corpus.tokenFrequencies(batch, textCol),
+      Corpus.foldTokenFrequencies,
+      state => Corpus.vocabRichnessFromFrequencies(state))
 
   /** Streaming PER-GROUP vocabulary-saturation monitor — [[graft
     * .operators.Corpus.vocabRichnessByGroup]] over group-keyed
     * versioned frequency state: the live per-language saturation
-    * dashboard.
-    * @note one-generation replay contract — see the object doc. */
+    * dashboard. */
   def replayGroupVocabMonitor(
       docs: DataFrame,
       groupCol: String,
       textCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(docs, Seq(groupCol, textCol), "gvocab",
+    replayFoldState("replayGroupVocabMonitor", docs.select(groupCol, textCol),
         filesPerTrigger)(
-      batch => graft.operators.Corpus.groupTokenFrequencies(
-        batch, groupCol, textCol),
-      graft.operators.Corpus.foldGroupTokenFrequencies,
-      state => graft.operators.Corpus.vocabRichnessByGroupFromFrequencies(
-        state, groupCol))
+      batch => Corpus.groupTokenFrequencies(batch, groupCol, textCol),
+      Corpus.foldGroupTokenFrequencies,
+      state => Corpus.vocabRichnessByGroupFromFrequencies(state, groupCol))
 
   /** Streaming label-consolidation monitor — [[graft.operators
     * .Annotate.consolidateLabels]] over the SAME maintained (item,
@@ -1752,27 +1530,24 @@ object StreamGate {
     * rescanning a single rating (ties stay deterministic — the
     * argmin reads the accumulated cells). Returns the per-item
     * (`itemCol`, `consensus_label`, `n_ratings`, `n_consensus`,
-    * `confidence6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `confidence6`) frame. */
   def replayConsensusMonitor(
       ratings: DataFrame,
       itemCol: String,
       raterCol: String,
       labelCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(ratings, Seq(itemCol, raterCol, labelCol), "consensus",
-        filesPerTrigger)(
-      batch => graft.operators.Annotate.annotationCellsOf(
+    replayFoldState("replayConsensusMonitor",
+        ratings.select(itemCol, raterCol, labelCol), filesPerTrigger)(
+      batch => Annotate.annotationCellsOf(
         batch, itemCol, raterCol, labelCol, "replayConsensusMonitor"),
-      graft.operators.Annotate.foldAnnotationCells,
-      state => graft.operators.Annotate.consolidateLabelsFromCells(
-        state, itemCol))
+      Annotate.foldAnnotationCells,
+      state => Annotate.consolidateLabelsFromCells(state, itemCol))
 
   /** Streaming PER-GROUP calibration monitor — [[graft.operators.Eval
     * .brierEceByGroup]] with the scored feed as a FILE STREAM over
     * group-keyed bins-bounded state: the live per-slice
-    * confidence-honesty dashboard.
-    * @note one-generation replay contract — see the object doc. */
+    * confidence-honesty dashboard. */
   def replayGroupCalibrationMonitor(
       scored: DataFrame,
       groupCol: String,
@@ -1782,34 +1557,31 @@ object StreamGate {
       lo: Double = 0.0,
       hi: Double = 1.0,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(scored, Seq(groupCol, labelCol, scoreCol), "gcalib",
-        filesPerTrigger)(
-      batch => graft.operators.Eval.groupCalibStateOf(
+    replayFoldState("replayGroupCalibrationMonitor",
+        scored.select(groupCol, labelCol, scoreCol), filesPerTrigger)(
+      batch => Eval.groupCalibStateOf(
         batch, groupCol, labelCol, scoreCol, bins, lo, hi),
-      graft.operators.Eval.foldGroupCalibState,
-      state => graft.operators.Eval.brierEceByGroupFromState(
-        state.localCheckpoint(), groupCol))
+      Eval.foldGroupCalibState,
+      state => Eval.brierEceByGroupFromState(state.localCheckpoint(), groupCol))
 
   /** Streaming pairwise-win-matrix monitor — [[graft.operators
     * .Preference.pairwiseWinMatrix]] over the SAME maintained
     * directed win-count state as the BT leaderboard: the live
     * head-to-head table with honest Wilson intervals, kept current as
     * judgments land. Returns the per-pair (`model_a`, `model_b`, `n`,
-    * `n_pass`, `rate6`, `lo6`, `hi6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `n_pass`, `rate6`, `lo6`, `hi6`) frame. */
   def replayWinMatrixMonitor(
       comparisons: DataFrame,
       winnerCol: String,
       loserCol: String,
       z: Double = 1.96,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(comparisons, Seq(winnerCol, loserCol), "winmat",
-        filesPerTrigger)(
-      batch => graft.operators.Preference.winCountsOf(
+    replayFoldState("replayWinMatrixMonitor",
+        comparisons.select(winnerCol, loserCol), filesPerTrigger)(
+      batch => Preference.winCountsOf(
         batch, winnerCol, loserCol, "replayWinMatrixMonitor"),
-      graft.operators.Preference.foldWinCounts,
-      state => graft.operators.Preference.pairwiseWinMatrixFromCounts(
-        state, z))
+      Preference.foldWinCounts,
+      state => Preference.pairwiseWinMatrixFromCounts(state, z))
 
   /** Streaming Bradley–Terry leaderboard — [[graft.operators
     * .Preference.bradleyTerry]] with the comparison feed as a FILE
@@ -1818,20 +1590,19 @@ object StreamGate {
     * through them), readout = the shared deterministic MM — the live
     * arena leaderboard, provably equal to the batch fit of the same
     * feed. Returns the (`model`, `n_wins`, `n_comparisons`,
-    * `rating6`, `rnk`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `rating6`, `rnk`) frame. */
   def replayLeaderboardMonitor(
       comparisons: DataFrame,
       winnerCol: String,
       loserCol: String,
       iters: Int = 25,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(comparisons, Seq(winnerCol, loserCol), "btlead",
-        filesPerTrigger)(
-      batch => graft.operators.Preference.winCountsOf(
+    replayFoldState("replayLeaderboardMonitor",
+        comparisons.select(winnerCol, loserCol), filesPerTrigger)(
+      batch => Preference.winCountsOf(
         batch, winnerCol, loserCol, "replayLeaderboardMonitor"),
-      graft.operators.Preference.foldWinCounts,
-      state => graft.operators.Preference.bradleyTerryFromCounts(
+      Preference.foldWinCounts,
+      state => Preference.bradleyTerryFromCounts(
         state.localCheckpoint(), iters))
 
   /** Streaming calibration monitor — [[graft.operators.Eval
@@ -1840,8 +1611,7 @@ object StreamGate {
     * into bins-bounded versioned state, readout = the shared
     * Brier/ECE arithmetic — the live "is the model's confidence still
     * honest?" dashboard, provably equal to the batch audit. Returns
-    * the one-row (`n`, `brier6`, `ece6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * the one-row (`n`, `brier6`, `ece6`) frame. */
   def replayCalibrationMonitor(
       scored: DataFrame,
       labelCol: String,
@@ -1850,51 +1620,45 @@ object StreamGate {
       lo: Double = 0.0,
       hi: Double = 1.0,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(scored, Seq(labelCol, scoreCol), "calib",
-        filesPerTrigger)(
-      batch => graft.operators.Eval.calibStateOf(
-        batch, labelCol, scoreCol, bins, lo, hi),
-      graft.operators.Eval.foldCalibState,
-      state => graft.operators.Eval.brierEceFromState(state))
+    replayFoldState("replayCalibrationMonitor",
+        scored.select(labelCol, scoreCol), filesPerTrigger)(
+      batch => Eval.calibStateOf(batch, labelCol, scoreCol, bins, lo, hi),
+      Eval.foldCalibState,
+      state => Eval.brierEceFromState(state))
 
   /** Streaming PER-GROUP HHI monitor — [[graft.operators.Stats
     * .hhiIndexByGroup]] off the SAME versioned per-group value-count
     * state as the group quantile/Gini monitors; readout =
     * [[graft.operators.Stats.hhiByGroupFromCounts]] (every per-group
     * sufficient statistic is a SUM over the grid). Returns the
-    * per-group (`groupCol`, `n`, `total`, `hhi6`, `hhi_norm6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * per-group (`groupCol`, `n`, `total`, `hhi6`, `hhi_norm6`) frame. */
   def replayGroupHhiMonitor(
       monitored: DataFrame,
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "ghhi",
-        filesPerTrigger)(
-      batch => graft.operators.Profile.groupSideCounts(
-        batch, groupCol, valueCol),
-      graft.operators.Profile.foldGroupValueCounts,
-      state => graft.operators.Stats.hhiByGroupFromCounts(state, groupCol))
+    replayFoldState("replayGroupHhiMonitor",
+        monitored.select(groupCol, valueCol), filesPerTrigger)(
+      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
+      Profile.foldGroupValueCounts,
+      state => Stats.hhiByGroupFromCounts(state, groupCol))
 
   /** Streaming PER-GROUP Theil monitor — [[graft.operators.Stats
     * .theilIndexByGroup]] off the shared per-group grid; readout =
     * [[graft.operators.Stats.theilByGroupFromCounts]] (an integer
     * multiple of a 12dp-rounded decimal term is exact). Returns the
     * per-group (`groupCol`, `n`, `total`, `theil6`, `theil_norm6`)
-    * frame.
-    * @note one-generation replay contract — see the object doc. */
+    * frame. */
   def replayGroupTheilMonitor(
       monitored: DataFrame,
       groupCol: String,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(groupCol, valueCol), "gtheil",
-        filesPerTrigger)(
-      batch => graft.operators.Profile.groupSideCounts(
-        batch, groupCol, valueCol),
-      graft.operators.Profile.foldGroupValueCounts,
-      state => graft.operators.Stats.theilByGroupFromCounts(
-        state, groupCol))
+    replayFoldState("replayGroupTheilMonitor",
+        monitored.select(groupCol, valueCol), filesPerTrigger)(
+      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
+      Profile.foldGroupValueCounts,
+      state => Stats.theilByGroupFromCounts(state, groupCol))
 
   /** Streaming Theil concentration monitor — [[graft.operators.Stats
     * .theilIndex]] with the mass feed as a FILE STREAM over the SAME
@@ -1902,16 +1666,16 @@ object StreamGate {
     * monitors; readout = [[graft.operators.Stats.theilFromCounts]]
     * (an integer multiple of a 12dp-rounded decimal term is exact, so
     * the counts readout provably equals the per-row one). Returns the
-    * one-row (`n`, `total`, `theil6`, `theil_norm6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * one-row (`n`, `total`, `theil6`, `theil_norm6`) frame. */
   def replayTheilMonitor(
       monitored: DataFrame,
       valueCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(monitored, Seq(valueCol), "theil", filesPerTrigger)(
-      batch => graft.operators.Profile.ksSideCounts(batch, valueCol, "cnt"),
-      graft.operators.Profile.foldValueCounts,
-      state => graft.operators.Stats.theilFromCounts(state))
+    replayFoldState("replayTheilMonitor", monitored.select(valueCol),
+        filesPerTrigger)(
+      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
+      Profile.foldValueCounts,
+      state => Stats.theilFromCounts(state))
 
   /** Streaming PER-GROUP association monitor — [[graft.operators
     * .Profile.categoricalAssociationByGroup]] with the row feed as a
@@ -1923,20 +1687,18 @@ object StreamGate {
     * feed. Closes the association matrix's per-group column: corpus
     * AND per-group each have batch / incremental / stream. Returns
     * the per-group (`groupCol`, `n`, `dof`, `chi2_6`, `cramers_v6`,
-    * `mi6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `mi6`) frame. */
   def replayGroupAssociationMonitor(
       rows: DataFrame,
       groupCol: String,
       colA: String,
       colB: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(rows, Seq(groupCol, colA, colB), "gassoc",
-        filesPerTrigger)(
-      batch => graft.operators.Profile.groupJointCountsOf(
-        batch, groupCol, colA, colB),
-      graft.operators.Profile.foldGroupJointCounts,
-      state => graft.operators.Profile.associationByGroupFromJoint(
+    replayFoldState("replayGroupAssociationMonitor",
+        rows.select(groupCol, colA, colB), filesPerTrigger)(
+      batch => Profile.groupJointCountsOf(batch, groupCol, colA, colB),
+      Profile.foldGroupJointCounts,
+      state => Profile.associationByGroupFromJoint(
         state.localCheckpoint(), groupCol))
 
   /** Streaming bootstrap-CI monitor — [[graft.operators.Stats
@@ -1953,8 +1715,7 @@ object StreamGate {
     * feed, and q225 is held to q217's verbatim oracle — closing the
     * CI matrix whole-corpus (q217) / per-group (q220) / stream
     * (this). Returns the one-row (`n`, `n_boot`, `mean6`, `lo6`,
-    * `hi6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `hi6`) frame. */
   def replayBootstrapMonitor(
       outcomes: DataFrame,
       valueCol: String,
@@ -1963,11 +1724,11 @@ object StreamGate {
       alpha: Double = 0.05,
       salt: String = "boot",
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(outcomes, Seq(valueCol, idCol), "boot", filesPerTrigger)(
-      batch => graft.operators.Stats.bootPartialsOf(
-        batch, valueCol, idCol, nBoot, salt),
-      graft.operators.Stats.foldBootPartials,
-      state => graft.operators.Stats.ciFromBootPartials(state, alpha))
+    replayFoldState("replayBootstrapMonitor", outcomes.select(valueCol, idCol),
+        filesPerTrigger)(
+      batch => Stats.bootPartialsOf(batch, valueCol, idCol, nBoot, salt),
+      Stats.foldBootPartials,
+      state => Stats.ciFromBootPartials(state, alpha))
 
   /** Streaming PER-GROUP bootstrap-CI monitor — [[graft.operators
     * .Stats.bootstrapMeanCIByGroup]] with the (group, outcome, id)
@@ -1980,8 +1741,7 @@ object StreamGate {
     * the split provably cannot move any group's CI — held to the
     * batch operator's verbatim oracle, closing the CI matrix's last
     * cell (per-group stream). Returns the (`groupCol`, `n`,
-    * `n_boot`, `mean6`, `lo6`, `hi6`) frame.
-    * @note one-generation replay contract — see the object doc. */
+    * `n_boot`, `mean6`, `lo6`, `hi6`) frame. */
   def replayGroupBootstrapMonitor(
       outcomes: DataFrame,
       groupCol: String,
@@ -1991,13 +1751,18 @@ object StreamGate {
       alpha: Double = 0.05,
       salt: String = "boot",
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState(outcomes, Seq(groupCol, valueCol, idCol), "gboot",
-        filesPerTrigger)(
-      batch => graft.operators.Stats.groupBootPartialsOf(
+    replayFoldState("replayGroupBootstrapMonitor",
+        outcomes.select(groupCol, valueCol, idCol), filesPerTrigger)(
+      batch => Stats.groupBootPartialsOf(
         batch, groupCol, valueCol, idCol, nBoot, salt),
-      graft.operators.Stats.foldBootPartials,
-      state => graft.operators.Stats.groupCiFromBootPartials(
-        state, groupCol, alpha))
+      Stats.foldBootPartials,
+      state => Stats.groupCiFromBootPartials(state, groupCol, alpha))
+
+  /** Fold of count-like state: `delta` unioned into `base`, `c` summed
+    * per `key` — associative and commutative, the q133 bridge. */
+  private def sumBy(key: String, c: String)(
+      base: DataFrame, delta: DataFrame): DataFrame =
+    base.unionByName(delta).groupBy(key).agg(sum(col(c)).as(c))
 
   /** Streaming SCD-2 enrichment — the FACT feed as a file stream,
     * each micro-batch point-in-time joined against the STATIC
@@ -2013,8 +1778,7 @@ object StreamGate {
     * q113/q211 argument). The dimension overlap audit runs per batch
     * (`checkNonOverlap` semantics unchanged); a production monitor
     * would cache the dim snapshot, the replay keeps its lineage
-    * visible instead.
-    * @note one-generation replay contract — see the object doc. */
+    * visible instead. */
   def replayScdEnrichment(
       facts: DataFrame,
       factKey: String,
@@ -2023,41 +1787,35 @@ object StreamGate {
       dimKey: String,
       validFrom: String,
       validTo: String,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = facts.sparkSession
-    val src = tempDir("graft_scd_src")
-    facts.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_scd_out")
-    val ck = tempDir("graft_scd_ck")
-    // the enriched schema, read off the batch plan without executing it
-    val outSchema = graft.operators.AsOfJoin.scdJoin(
-      facts.limit(0), factKey, factTime, dim, dimKey, validFrom, validTo).schema
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(facts.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.AsOfJoin.scdJoin(batch, factKey, factTime,
-              dim, dimKey, validFrom, validTo)
-            .write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      releaseLastReplay(
-        spark.read.schema(outSchema).parquet(out).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
-    }
+      filesPerTrigger: Int = 2): DataFrame = {
+    def enrich(f: DataFrame) =
+      AsOfJoin.scdJoin(f, factKey, factTime, dim, dimKey, validFrom, validTo)
+    replay("replayScdEnrichment", fileFeed(facts, filesPerTrigger))(_ =>
+      // the enriched schema, read off the batch plan without executing it
+      AppendSink(enrich, Some(enrich(facts.limit(0)).schema)))
   }
+
+  /** (arm, flag) feed of the A/B monitors: NULL arms and flags are
+    * excluded as the batch operators exclude them, and the arm is cast
+    * to string so a typed arm column cannot break stream==batch
+    * parity. */
+  private def armFeed(outcomes: DataFrame, armCol: String, flagCol: String) =
+    outcomes
+      .filter(col(armCol).isNotNull && col(flagCol).isNotNull)
+      .select(col(armCol).cast("string").as("arm"),
+        col(flagCol).cast("boolean").as("flag"))
+
+  /** Per-arm (n, n_pass) counts of an [[armFeed]] batch. */
+  private def armCounts(batch: DataFrame): DataFrame =
+    batch.groupBy("arm")
+      .agg(count(col("flag")).as("n"),
+        sum(when(col("flag") === true, 1L).otherwise(0L)).as("n_pass"))
+
+  private def foldArmCounts(base: DataFrame, delta: DataFrame): DataFrame =
+    base.unionByName(delta)
+      .groupBy("arm")
+      .agg(sum(col("n")).cast("long").as("n"),
+        sum(col("n_pass")).cast("long").as("n_pass"))
 
   /** Streaming experiment monitor — [[graft.operators.Experiment
     * .abReport]] with the OUTCOME feed as a file stream: each
@@ -2076,66 +1834,13 @@ object StreamGate {
       flagCol: String,
       controlArm: String,
       zThreshold: Double = 1.96,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = outcomes.sparkSession
-    val src = tempDir("graft_ab_src")
-    // mirror the batch operator's input contract: NULL arms/flags are
-    // excluded there, and the replay's fixed read schema is
-    // (string, boolean) — cast explicitly so a typed arm column
-    // cannot silently break stream==batch parity
-    outcomes
-      .filter(col(armCol).isNotNull && col(flagCol).isNotNull)
-      .select(col(armCol).cast("string").as("arm"),
-        col(flagCol).cast("boolean").as("flag"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_ab_state")
-    val ck = tempDir("graft_ab_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("arm",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("flag",
-          org.apache.spark.sql.types.BooleanType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = batch.groupBy("arm")
-            .agg(count(col("flag")).as("n"),
-              sum(when(col("flag") === true, 1L).otherwise(0L)).as("n_pass"))
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => spark.read.parquet(p).unionByName(bh)
-              .groupBy("arm")
-              .agg(sum(col("n")).cast("long").as("n"),
-                sum(col("n_pass")).cast("long").as("n_pass"))
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null, "replayAbMonitor saw no micro-batches")
-      val ci = graft.operators.Quality.passRateCIFromCounts(
-        spark.read.parquet(state.get()), Seq("arm"), zThreshold)
-      releaseLastReplay(graft.operators.Experiment
-        .abReportFromCI(ci, controlArm, zThreshold).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState("replayAbMonitor",
+        armFeed(outcomes, armCol, flagCol), filesPerTrigger)(
+      armCounts, foldArmCounts,
+      state => Experiment.abReportFromCI(
+        Quality.passRateCIFromCounts(state, Seq("arm"), zThreshold),
+        controlArm, zThreshold))
 
   /** Streaming SEQUENTIAL experiment monitor — the always-valid
     * (mSPRT) p-value LOOKED AT after every micro-batch, which is safe
@@ -2164,91 +1869,44 @@ object StreamGate {
       controlArm: String,
       tau: Double = 0.1,
       alpha: Double = 0.05,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
+      filesPerTrigger: Int = 2): DataFrame = {
     val spark = outcomes.sparkSession
-    val src = tempDir("graft_seqab_src")
-    // the batch sequentialAbReport filters NULL arms/flags before
-    // counting — mirror it here (a NULL arm would reach
-    // sequentialAbFromCounts and break the stream==batch parity) and
-    // cast to the replay's fixed (string, boolean) read schema
-    outcomes
-      .filter(col(armCol).isNotNull && col(flagCol).isNotNull)
-      .select(col(armCol).cast("string").as("arm"),
-        col(flagCol).cast("boolean").as("flag"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_seqab_state")
-    val ck = tempDir("graft_seqab_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
     // AvailableNow foreachBatch runs looks sequentially; a plain map
     // under its own lock is enough
     val minP = scala.collection.mutable.Map.empty[String, Double]
-    val looks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark)
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("arm",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("flag",
-          org.apache.spark.sql.types.BooleanType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = batch.groupBy("arm")
-            .agg(count(col("flag")).as("n"),
-              sum(when(col("flag") === true, 1L).otherwise(0L)).as("n_pass"))
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => spark.read.parquet(p).unionByName(bh)
-              .groupBy("arm")
-              .agg(sum(col("n")).cast("long").as("n"),
-                sum(col("n_pass")).cast("long").as("n_pass"))
+    val looks = new AtomicInteger(0)
+    // THE LOOK: always-valid p off the cumulative counts, folded into
+    // the running per-arm minimum
+    def look(committed: String): Unit = {
+      looks.incrementAndGet()
+      Experiment.sequentialAbFromCounts(
+          spark.read.parquet(committed), controlArm, tau, alpha)
+        .collect().foreach { r =>
+          if (!r.isNullAt(4)) minP.synchronized {
+            val arm = r.getString(0)
+            val p = r.getDouble(4)
+            minP(arm) = math.min(minP.getOrElse(arm, p), p)
           }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-          // THE LOOK: always-valid p off the cumulative counts,
-          // folded into the running per-arm minimum
-          looks.incrementAndGet()
-          graft.operators.Experiment.sequentialAbFromCounts(
-              spark.read.parquet(next), controlArm, tau, alpha)
-            .collect().foreach { r =>
-              if (!r.isNullAt(4)) minP.synchronized {
-                val arm = r.getString(0)
-                val p = r.getDouble(4)
-                minP(arm) = math.min(minP.getOrElse(arm, p), p)
-              }
-            }
         }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replaySequentialAbMonitor saw no micro-batches")
-      val fin = graft.operators.Experiment.sequentialAbFromCounts(
-        spark.read.parquet(state.get()), controlArm, tau, alpha)
+    }
+    def readout(state: DataFrame): DataFrame = {
+      val fin = Experiment.sequentialAbFromCounts(state, controlArm, tau, alpha)
       val minExpr = minP.synchronized {
         minP.toSeq.sortBy(_._1)
           .foldLeft(lit(null).cast("double")) { case (e, (a, p)) =>
             when(col("arm") === a, lit(p)).otherwise(e)
           }
       }
-      val withMin = fin.withColumn("min_av_p6", minExpr)
+      fin.withColumn("min_av_p6", minExpr)
         .withColumn("ever_crossed",
           when(col("min_av_p6").isNotNull, col("min_av_p6") <= alpha))
         .withColumn("n_looks", lit(looks.get().toLong))
-      releaseLastReplay(withMin.orderBy("arm").localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
+        .orderBy("arm")
     }
+    replay("replaySequentialAbMonitor",
+        fileFeed(armFeed(outcomes, armCol, flagCol), filesPerTrigger))(_ =>
+      FoldSink(foldStep(armCounts, foldArmCounts), readout,
+        (_, committed) => look(committed)))
   }
 
   /** Streaming mergeable-quantile-sketch monitor — [[graft.operators
@@ -2268,57 +1926,13 @@ object StreamGate {
       ps: Seq[Double],
       k: Int = 1024,
       salt: String = "qsk",
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = df.sparkSession
-    val src = tempDir("graft_qsk_src")
-    df.select(col(idCol).cast("long").as("id"),
-        col(valueCol).cast("double").as("v"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_qsk_state")
-    val ck = tempDir("graft_qsk_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark)
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.DoubleType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = graft.operators.Profile.sketchStateOf(
-            batch, "v", "id", k, salt)
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => graft.operators.Profile.foldSketchState(
-              spark.read.parquet(p), bh, k)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replaySketchQuantileMonitor saw no micro-batches")
-      releaseLastReplay(graft.operators.Profile.sketchQuantileReport(
-          spark.read.parquet(state.get()), df, valueCol, ps, k)
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState("replaySketchQuantileMonitor",
+        df.select(col(idCol).cast("long").as("id"),
+          col(valueCol).cast("double").as("v")), filesPerTrigger)(
+      Profile.sketchStateOf(_, "v", "id", k, salt),
+      Profile.foldSketchState(_, _, k),
+      Profile.sketchQuantileReport(_, df, valueCol, ps, k))
 
   /** Streaming PER-GROUP mergeable-quantile-sketch monitor —
     * [[graft.operators.Profile.sketchStateByGroup]] maintained over a
@@ -2340,60 +1954,14 @@ object StreamGate {
       ps: Seq[Double],
       k: Int = 1024,
       salt: String = "qsk",
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = df.sparkSession
-    val src = tempDir("graft_gqsk_src")
-    df.select(col(groupCol).cast("string").as("g"),
-        col(idCol).cast("string").as("id"),
-        col(valueCol).cast("double").as("v"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_gqsk_state")
-    val ck = tempDir("graft_gqsk_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark)
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("g",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.DoubleType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = graft.operators.Profile.sketchStateByGroup(
-            batch, "g", "v", "id", k, salt)
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => graft.operators.Profile.foldSketchStateByGroup(
-              spark.read.parquet(p), bh, k)
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replayGroupSketchQuantileMonitor saw no micro-batches")
-      releaseLastReplay(graft.operators.Profile.sketchQuantileReportByGroup(
-          spark.read.parquet(state.get()), df, groupCol, valueCol, ps, k)
-        .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState("replayGroupSketchQuantileMonitor",
+        df.select(col(groupCol).cast("string").as("g"),
+          col(idCol).cast("string").as("id"),
+          col(valueCol).cast("double").as("v")), filesPerTrigger)(
+      Profile.sketchStateByGroup(_, "g", "v", "id", k, salt),
+      Profile.foldSketchStateByGroup(_, _, k),
+      Profile.sketchQuantileReportByGroup(_, df, groupCol, valueCol, ps, k))
 
   /** Streaming incremental connected components — [[graft.operators
     * .Components.incrementalComponents]] with the EDGE feed as a file
@@ -2410,63 +1978,20 @@ object StreamGate {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
+      filesPerTrigger: Int = 2): DataFrame = {
     val spark = edges.sparkSession
-    val src = tempDir("graft_edges_src")
-    edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
-      .coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_cc_state")
-    val ck = tempDir("graft_cc_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("a",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("b",
-          org.apache.spark.sql.types.LongType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val prevLabels = Option(state.get()) match {
-            case None => spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("node",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("comp",
-                  org.apache.spark.sql.types.LongType))))
-            case Some(p) => spark.read.parquet(p)
-          }
-          val folded = graft.operators.Components
-            .incrementalComponents(prevLabels, batch, "a", "b")
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          folded.write.mode("overwrite").parquet(next)
-          // the write consumed the fold; free the contracted-CC label
-          // checkpoint before the next batch (else blocks accumulate
-          // one generation per micro-batch)
-          graft.operators.Blocks.release(folded)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replayIncrementalComponents saw no micro-batches")
-      releaseLastReplay(spark.read.parquet(state.get()).localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
+    val noLabels = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType.fromDDL("node bigint, comp bigint"))
+    replay("replayIncrementalComponents", fileFeed(
+        edges.select(col(srcCol).cast("long").as("a"),
+          col(dstCol).cast("long").as("b")), filesPerTrigger))(_ =>
+      FoldSink((prior, batch) => Components.incrementalComponents(
+          prior.getOrElse(noLabels), batch, "a", "b"),
+        identity,
+        // the write consumed the fold; free the contracted-CC label
+        // checkpoint before the next batch (else blocks accumulate one
+        // generation per micro-batch)
+        (folded, _) => Blocks.release(folded)))
   }
 
   /** Streaming drift monitor — [[graft.operators.Profile.drift]]'s PSI
@@ -2481,14 +2006,10 @@ object StreamGate {
     * counts against the batch-computed reference histogram — the SAME
     * arithmetic the batch operator runs, so the replay gate can hold
     * this to q128's verbatim oracle (batch fold and stream fold, two
-    * formulations of one ground truth).
+    * formulations of one ground truth). State is bins-bounded (never
+    * key- or corpus-cardinality).
     *
-    * State is bins-bounded (never key- or corpus-cardinality), owned
-    * outside the query as version N → N+1 artifacts — a restart
-    * resumes from the last committed version.
-    *
-    * Returns the per-bucket (`bucket`, `n_ref`, `n_cur`, `psi`) frame
-    * (localCheckpoint'ed off the deleted temp state). */
+    * Returns the per-bucket (`bucket`, `n_ref`, `n_cur`, `psi`) frame. */
   def replayStreamingDrift(
       reference: DataFrame,
       current: DataFrame,
@@ -2497,53 +2018,15 @@ object StreamGate {
       lo: Double,
       hi: Double,
       eps: Double = 1e-6,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = current.sparkSession
-    val src = tempDir("graft_drift_src")
-    current.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_drift_state")
-    val ck = tempDir("graft_drift_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(current.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = graft.operators.Profile.histogram(batch, c, bins, lo, hi)
-            .select(col("bucket"), col("n"))
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => spark.read.parquet(p).unionByName(bh)
-              .groupBy("bucket").agg(sum(col("n")).as("n"))
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null, "replayStreamingDrift saw no micro-batches")
-      val refH = graft.operators.Profile.histogram(reference, c, bins, lo, hi)
-        .select(col("bucket"), col("n").as("n_ref"))
-      val curH = spark.read.parquet(state.get())
-        .select(col("bucket"), col("n").as("n_cur"))
-      releaseLastReplay(
-        graft.operators.Profile.psiFromCounts(refH.join(curH, "bucket"), eps)
-          .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState("replayStreamingDrift", current, filesPerTrigger)(
+      Profile.histogram(_, c, bins, lo, hi).select(col("bucket"), col("n")),
+      sumBy("bucket", "n"),
+      state => Profile.psiFromCounts(
+        Profile.histogram(reference, c, bins, lo, hi)
+          .select(col("bucket"), col("n").as("n_ref"))
+          .join(state.select(col("bucket"), col("n").as("n_cur")), "bucket"),
+        eps))
 
   /** Streaming CATEGORICAL drift monitor —
     * [[graft.operators.Profile.categoricalDrift]]'s PSI kept current
@@ -2558,65 +2041,24 @@ object StreamGate {
     * [[graft.operators.Profile.categoricalDriftFromCounts]] over the
     * accumulated counts vs the batch-computed reference — the SAME
     * arithmetic the batch operator runs, so the replay gate holds this
-    * to q180's verbatim oracle. State is category-vocabulary-bounded,
-    * owned outside the query as version N → N+1 artifacts.
+    * to q180's verbatim oracle. State is category-vocabulary-bounded.
     *
-    * Returns the (`category`, `n_ref`, `n_cur`, `psi`) frame
-    * (localCheckpoint'ed off the deleted temp state). */
+    * Returns the (`category`, `n_ref`, `n_cur`, `psi`) frame. */
   def replayCategoricalDrift(
       reference: DataFrame,
       current: DataFrame,
       c: String,
       eps: Double = 1e-6,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = current.sparkSession
-    val src = tempDir("graft_catdrift_src")
-    current.coalesce(8).write.mode("overwrite").parquet(src)
-    val stateRoot = tempDir("graft_catdrift_state")
-    val ck = tempDir("graft_catdrift_ck")
-    val state = new java.util.concurrent.atomic.AtomicReference[String](null)
-    val version = new java.util.concurrent.atomic.AtomicInteger(0)
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(current.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bh = batch.groupBy(col(c).cast("string").as("category"))
-            .agg(count(lit(1)).as("n"))
-          val merged = Option(state.get()) match {
-            case None => bh
-            case Some(p) => spark.read.parquet(p).unionByName(bh)
-              .groupBy("category").agg(sum(col("n")).as("n"))
-          }
-          val next = s"$stateRoot/v${version.incrementAndGet()}"
-          merged.write.mode("overwrite").parquet(next)
-          state.set(next)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      require(state.get() != null,
-        "replayCategoricalDrift saw no micro-batches")
-      val refC = reference
-        .groupBy(col(c).cast("string").as("category"))
-        .agg(count(lit(1)).as("n_ref"))
-      val curC = spark.read.parquet(state.get())
-        .select(col("category"), col("n").as("n_cur"))
-      releaseLastReplay(
-        graft.operators.Profile.categoricalDriftFromCounts(refC, curC, eps)
-          .localCheckpoint())
-    } finally {
-      spark.conf.set(key, prev)
-      Seq(src, stateRoot, ck).foreach(deleteRecursively)
-    }
-  }
+      filesPerTrigger: Int = 2): DataFrame =
+    replayFoldState("replayCategoricalDrift", current, filesPerTrigger)(
+      _.groupBy(col(c).cast("string").as("category"))
+        .agg(count(lit(1)).as("n")),
+      sumBy("category", "n"),
+      state => Profile.categoricalDriftFromCounts(
+        reference.groupBy(col(c).cast("string").as("category"))
+          .agg(count(lit(1)).as("n_ref")),
+        state.select(col("category"), col("n").as("n_cur")),
+        eps))
 
   /** Streaming semantic decontamination gate —
     * [[graft.operators.Similarity.semanticDecontaminate]] with the
@@ -2635,8 +2077,7 @@ object StreamGate {
     * owned outside the query ([[graft.operators.Ivf.save]]/`load` is
     * the production artifact path).
     *
-    * Returns the flagged eval frame (localCheckpoint'ed off the
-    * deleted temp output). */
+    * Returns the flagged eval frame. */
   def replaySemanticGate(
       eval: DataFrame,
       train: DataFrame,
@@ -2646,57 +2087,18 @@ object StreamGate {
       threshold: Double,
       nprobe: Int = 2,
       maxCell: Int = 10000,
-      filesPerTrigger: Int = 2): DataFrame = replayLock.synchronized {
-    val spark = eval.sparkSession
-    val src = tempDir("graft_eval_src")
-    eval.coalesce(8).write.mode("overwrite").parquet(src)
-    val out = tempDir("graft_semgate_out")
-    val ck = tempDir("graft_semgate_ck")
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    // The train corpus and model are FROZEN for this gate's lifetime,
-    // so the probe-assigned + guarded train cell table is built and
-    // materialized ONCE — before the replay-scoped partition override,
-    // under the session's own parallelism — and every micro-batch
-    // joins the blocks. The previous per-batch semanticDecontaminate
-    // call re-planned (and therefore re-assigned and re-guarded) the
-    // whole train side on every trigger: k cosine scorings of every
-    // train vector per batch for an index that cannot change. A
-    // growing ledger would invalidate this and belongs to the
-    // re-plan-per-batch shape of replayNearDupGate.
-    val np = math.min(nprobe, model.k)
-    val index = graft.operators.Similarity.decontaminationIndex(
-      train, idCol, vecCol, model, np, maxCell).localCheckpoint()
-    spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
-    ProgressLedger.ensure(spark) // before start: the ledger must see every event
-    try {
-      val stream = spark.readStream.schema(eval.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger)
-        .parquet(src)
-      val sawBatch = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Similarity.decontaminateAgainstIndex(batch,
-              index, idCol, vecCol, model, threshold, np)
-            .write.mode("append").parquet(out)
-          sawBatch.set(true)
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      lastObs = Some(observabilityOf(q))
-      // Same guard as replayCategoricalDrift: an empty eval source fires
-      // zero micro-batches, so nothing is written under `out` and the
-      // read below would die with an obscure schema-inference error
-      // instead of naming the cause.
-      require(sawBatch.get(),
-        "replaySemanticGate saw no micro-batches — empty eval source")
-      releaseLastReplay(spark.read.parquet(out).localCheckpoint())
-    } finally {
-      graft.operators.Blocks.release(index) // the index dies with the gate
-      spark.conf.set(key, prev)
-      Seq(src, out, ck).foreach(deleteRecursively)
+      filesPerTrigger: Int = 2): DataFrame =
+    replay("replaySemanticGate", fileFeed(eval, filesPerTrigger)) { pin =>
+      // The train corpus and model are FROZEN for this gate's lifetime,
+      // so the probe-assigned + guarded train cell table is built and
+      // pinned ONCE and every micro-batch joins the blocks, instead of
+      // k cosine scorings of every train vector per batch for an index
+      // that cannot change. A growing ledger would invalidate this and
+      // belongs to the re-plan-per-batch shape of replayNearDupGate.
+      val np = math.min(nprobe, model.k)
+      val index = pin(Similarity.decontaminationIndex(
+        train, idCol, vecCol, model, np, maxCell))
+      AppendSink(Similarity.decontaminateAgainstIndex(_,
+        index, idCol, vecCol, model, threshold, np), None)
     }
-  }
 }

@@ -690,6 +690,11 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     StreamGate.replayDedup(events, Seq("user_id"), "1 hour").count()
     StreamGate.replayDedup(events, Seq("event_type"), "1 hour").count()
+    // one fold monitor and one foreachBatch gate ride the same contract
+    StreamGate.replayQuantileMonitor(events.repartition(4), "value",
+      Seq(0.5), filesPerTrigger = 1).count()
+    StreamGate.replayFingerprintMonitor(events.repartition(4),
+      Seq("event_id", "event_type"), filesPerTrigger = 1).count()
     val out = StreamGate.replayDedup(events, Seq("user_id", "event_type"), "1 hour")
     assert(out.count() > 0)
     // each replay releases the previous one's checkpoint, so three
@@ -716,22 +721,127 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       s"expected a block/checkpoint-loss failure, got: $thrown")
   }
 
-  test("replay gates leave no temp dirs behind and the result outlives them") {
+  private def replayDirs(): Set[String] = {
     val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    def replayDirs(): Set[String] = {
-      val s = java.nio.file.Files.list(tmp)
-      try {
-        val b = Set.newBuilder[String]
-        s.forEach(p => b += p.getFileName.toString)
-        b.result().filter(_.startsWith("graft_stream_"))
-      } finally s.close()
-    }
+    val s = java.nio.file.Files.list(tmp)
+    try {
+      val b = Set.newBuilder[String]
+      s.forEach(p => b += p.getFileName.toString)
+      b.result().filter(_.startsWith("graft_"))
+    } finally s.close()
+  }
+
+  test("replay gates leave no temp dirs behind and the result outlives them") {
     val before = replayDirs()
+    // result must be readable AFTER the sink files are gone — for the
+    // stream's own sink, a fold monitor, and a foreachBatch append
     val out = StreamGate.replayDedup(events, Seq("user_id"), "1 hour")
-    // result must be readable AFTER the sink files are gone
     assert(out.count() > 0)
+    val fold = StreamGate.replayQuantileMonitor(events.repartition(4),
+      "value", Seq(0.5), filesPerTrigger = 1)
+    assert(fold.count() == 1)
+    val append = StreamGate.replayFingerprintMonitor(events.repartition(4),
+      Seq("event_id", "event_type"), filesPerTrigger = 1)
+    assert(append.head().getLong(0) == events.count())
     val leaked = replayDirs() -- before
     assert(leaked.isEmpty, s"replay left temp dirs behind: $leaked")
+  }
+
+  private def guardTrips: Seq[(String, () => Unit)] = {
+    import graft.operators.Ivf
+    def vec(ang: Double) = Seq(math.cos(ang).toFloat, math.sin(ang).toFloat)
+    val train = table("vec_id bigint, v array<float>",
+      (0L until 8L).map(i => row(i, vec(i * math.Pi / 4))))
+    val model = Ivf.train(train, "vec_id", "v", k = 2, iters = 3, sampleMod = 1)
+    // the same 4-gram at two benchmark positions vs a budget of one
+    val bench = table("id bigint, text string", Seq(
+      row(100L, "alpha beta gamma delta epsilon"),
+      row(101L, "alpha beta gamma delta zeta")))
+    val docs = table("id bigint, text string",
+      Seq(row(1L, "x alpha beta gamma delta y")))
+    Seq(
+      "semantic gate maxCell" -> (() => StreamGate.replaySemanticGate(train,
+        train, "vec_id", "v", model, threshold = 0.999, maxCell = 1)),
+      "exact-substring maxPositionsPerGram" -> (() =>
+        StreamGate.replayExactSubstringGate(docs, "id", "text", bench, "id",
+          "text", minTokens = 4, maxPositionsPerGram = 1)))
+  }
+
+  test("a gate whose up-front guard fires leaks no temp dirs and no blocks") {
+    guardTrips.foreach { case (label, trip) =>
+      val dirsBefore = replayDirs()
+      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[Exception](trip())
+      assert(e.toString.contains("exceed"), s"$label: $e")
+      val leakedDirs = replayDirs() -- dirsBefore
+      assert(leakedDirs.isEmpty, s"$label left temp dirs: $leakedDirs")
+      val leakedRdds = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+      assert(leakedRdds.isEmpty, s"$label left persisted RDDs: $leakedRdds")
+    }
+  }
+
+  test("a failing replay clears the previous replay's observability") {
+    StreamGate.replayDedup(events, Seq("user_id"), "1 hour").count()
+    assert(StreamGate.lastReplayObservability.exists(_.microBatches >= 1))
+    intercept[Exception](guardTrips.head._2())
+    assert(StreamGate.lastReplayObservability.isEmpty,
+      StreamGate.lastReplayObservability.toString)
+  }
+
+  test("a replay leaves spark.sql.shuffle.partitions as it found it") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    // 7, not the suite's 4: a KB-scale replay scopes itself to 4, so
+    // only a different session value shows a missed restore
+    spark.conf.set(key, "7")
+    try {
+      assert(StreamGate.replayDedup(events, Seq("user_id"), "1 hour")
+        .count() > 0)
+      assert(spark.conf.get(key) == "7", "after a successful replay")
+      guardTrips.foreach { case (label, trip) =>
+        intercept[Exception](trip())
+        assert(spark.conf.get(key) == "7", s"after a failed $label replay")
+      }
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("replayPartitions: empty, unreadable, and multi-GB sources") {
+    val empty = java.nio.file.Files.createTempDirectory("graft-rp-empty")
+    val big = java.nio.file.Files.createTempDirectory("graft-rp-big")
+    try {
+      assert(StreamGate.replayPartitions(8, empty.toString) == 4)
+      assert(StreamGate.replayPartitions(2, empty.toString) == 2)
+      assert(StreamGate.replayPartitions(8, s"$empty/missing") == 8)
+      assert(StreamGate.replayPartitions(0, s"$empty/missing") == 1)
+      // a sparse 5 GB file: 161 target partitions, clamped to the session
+      val f = new java.io.RandomAccessFile(big.resolve("part.parquet").toFile, "rw")
+      try f.setLength(5L << 30) finally f.close()
+      assert(StreamGate.replayPartitions(8, big.toString) == 8)
+      assert(StreamGate.replayPartitions(200, big.toString) == 161)
+    } finally Seq(empty, big).foreach(d =>
+      StreamGate.deleteRecursively(d.toString))
+  }
+
+  test("empty sources: empty frames, zero summaries, and a named no-batch error") {
+    // an empty frame still writes one schema-only source file, which
+    // fires one empty micro-batch: a per-row gate returns an empty frame
+    // with its schema, a summary monitor its zero row
+    val media = table("media_id bigint, payload binary", Seq.empty)
+    val shots = StreamGate.replayShotBoundaries(media)
+    assert(shots.count() == 0)
+    assert(shots.columns.toSeq ==
+      Seq("media_id", "n_frames", "n_boundaries", "boundary_frames"))
+    val docs = table("id bigint, t string", Seq.empty)
+    val pii = StreamGate.replayPiiMonitor(docs, "id", "t").head()
+    assert(pii.toSeq.forall(_ == 0L), pii.toString)
+    // a file-less source fires no micro-batch at all: an inferred-schema
+    // append names the gate instead of failing schema inference
+    val fileless = StreamGate.Source(spark, _ => (),
+      src => spark.readStream.schema(docs.schema).parquet(src))
+    val e = intercept[IllegalArgumentException](
+      StreamGate.replay("probeGate", fileless)(_ =>
+        StreamGate.AppendSink(identity, None)))
+    assert(e.getMessage.contains("probeGate saw no micro-batches"), e.getMessage)
   }
 
   test("stream dedup == batch distinct on the key columns") {
