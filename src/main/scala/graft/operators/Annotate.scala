@@ -75,13 +75,10 @@ object Annotate {
   def fleissKappa(
       df: DataFrame, itemCol: String, raterCol: String,
       labelCol: String): DataFrame = {
-    val cells = annotationCellsOf(df, itemCol, raterCol, labelCol,
-      "fleissKappa").localCheckpoint()
-    // eager readout — release here; the fromCells readers never
-    // release state they do not own (one maintained cell table serves
-    // kappa, alpha, AND consolidation)
-    try fleissKappaFromCells(cells)
-    finally Blocks.release(cells)
+    Blocks.scoped { s =>
+      fleissKappaFromCells(s.checkpoint(annotationCellsOf(
+        df, itemCol, raterCol, labelCol, "fleissKappa")))
+    }
   }
 
   /** One shard's (item, label) rating-cell state — `(__it, __l, __c)`
@@ -175,11 +172,9 @@ object Annotate {
     // checkpoint the CELLS (items × labels — the duplicate-guard pass
     // over the raw assignments runs once); the per-item rollup is a
     // cells-bounded re-aggregation wherever it recurs
-    {
-      val cells = annotationCellsOf(df, itemCol, raterCol, labelCol,
-        "krippendorffAlpha").localCheckpoint()
-      try krippendorffAlphaFromCells(cells)
-      finally Blocks.release(cells)
+    Blocks.scoped { s =>
+      krippendorffAlphaFromCells(s.checkpoint(annotationCellsOf(
+        df, itemCol, raterCol, labelCol, "krippendorffAlpha")))
     }
 
   /** [[krippendorffAlpha]]'s readout over accumulated
@@ -282,10 +277,10 @@ object Annotate {
       s"krippendorffAlphaMetric: label column '$labelCol' must be " +
         s"numeric for metric distances (got ${dt.simpleString}); use " +
         "krippendorffAlpha for nominal labels")
-    val cells = annotationCellsOf(df, itemCol, raterCol, labelCol,
-      "krippendorffAlphaMetric").localCheckpoint()
-    try krippendorffAlphaMetricFromCells(cells, metric)
-    finally Blocks.release(cells)
+    Blocks.scoped { s =>
+      krippendorffAlphaMetricFromCells(s.checkpoint(annotationCellsOf(
+        df, itemCol, raterCol, labelCol, "krippendorffAlphaMetric")), metric)
+    }
   }
 
   /** [[krippendorffAlphaMetric]]'s readout over accumulated

@@ -46,8 +46,7 @@ object Apss {
     * materialized once (localCheckpoint) with the corpus size N riding
     * the same scan as an `observe()` metric — construction runs ONE
     * job over the corpus, and every downstream branch reads the
-    * checkpointed tf instead of re-tokenizing (checkpoint blocks
-    * follow the [[graft.operators.Blocks]] release discipline); df,
+    * checkpointed tf instead of re-tokenizing; df,
     * max-weight, and the global feature ranking are vocabulary-bounded
     * ([[General.withContiguousRowIds]] for the ranking — never a
     * single-partition window); the per-document cumulative bound is a
@@ -84,7 +83,7 @@ object Apss {
       n: Int,
       threshold: Double,
       maxPosting: Int = 100000,
-      dropOversize: Boolean = false): DataFrame = {
+      dropOversize: Boolean = false): DataFrame = Blocks.scoped { s =>
     require(n >= 1, s"n ($n) must be >= 1")
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold ($threshold) must be in (0, 1] — the prefix bound is " +
@@ -109,9 +108,8 @@ object Apss {
     // yields both N and tf, and the checkpointed tf is what every
     // downstream branch (df, weights, vectors) reads — replacing the
     // separate eager df.count() full scan this used to pay.
-    val tf = grams
-      .groupBy("__id", "__gram").agg(count(lit(1)).as("__tf"))
-      .localCheckpoint()
+    val tf = s.checkpoint(grams
+      .groupBy("__id", "__gram").agg(count(lit(1)).as("__tf")))
     // Late metrics delivery degrades to a one-column recount (the
     // Observed discipline) instead of `nObs.get`'s unbounded block.
     val nRow = Observed.row(nObs) { df.agg(count(lit(1))).head() }
@@ -129,12 +127,10 @@ object Apss {
     // vectors), and without the checkpoint each re-runs the idf join +
     // norm aggregation + normalize join from tf — three redundant
     // shuffle rounds over the corpus-length weight table (measured in
-    // the r19 plan audit: 4 identical Exchange subtrees). Same block
-    // release discipline as tf above.
-    val nw = w.join(norms, "__id")
+    // the r19 plan audit: 4 identical Exchange subtrees).
+    val nw = s.checkpoint(w.join(norms, "__id")
       .filter(col("__norm") > 0.0)
-      .select(col("__id"), col("__gram"), (col("__w") / col("__norm")).as("__nw"))
-      .localCheckpoint()
+      .select(col("__id"), col("__gram"), (col("__w") / col("__norm")).as("__nw")))
 
     // Global feature order, hottest first: rank over (df desc, gram) via
     // the range-partitioned contiguous-id machinery.

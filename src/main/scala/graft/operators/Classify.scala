@@ -169,14 +169,13 @@ object Classify {
     require(iters >= 1 && iters <= 16,
       s"trainLogistic: iters ($iters) must be in [1, 16]")
     val m = featureCols.size + 1
-    val base = df.filter(col(labelCol).isNotNull &&
-        featureCols.map(col(_).isNotNull).reduce(_ && _))
-      .select((col(labelCol).cast("boolean").as("__y") +:
-        featureCols.zipWithIndex.map { case (c, i) =>
-          col(c).cast("double").as(s"__x${i + 1}")
-        }): _*)
-      .localCheckpoint()
-    try {
+    Blocks.scoped { s =>
+      val base = s.checkpoint(df.filter(col(labelCol).isNotNull &&
+          featureCols.map(col(_).isNotNull).reduce(_ && _))
+        .select((col(labelCol).cast("boolean").as("__y") +:
+          featureCols.zipWithIndex.map { case (c, i) =>
+            col(c).cast("double").as(s"__x${i + 1}")
+          }): _*))
       val classes = base.agg(
         sum(when(col("__y"), 1L).otherwise(0L)), count(lit(1))).head()
       require(classes.getLong(0) > 0L && classes.getLong(0) < classes.getLong(1),
@@ -219,7 +218,7 @@ object Classify {
         iter += 1
       }
       LogisticModel(beta)
-    } finally Blocks.release(base)
+    }
   }
 
   /** Persist a trained [[LogisticModel]] — one (idx, beta) row per
@@ -330,7 +329,7 @@ object Classify {
       df: DataFrame,
       textCol: String,
       labelCol: String,
-      alpha: Double = 1.0): NbMultiModel = {
+      alpha: Double = 1.0): NbMultiModel = Blocks.scoped { s =>
     require(alpha > 0.0, s"alpha ($alpha) must be positive")
     val docs = df.select(col(labelCol).cast("string").as("cls"),
       col(textCol).as("__text"))
@@ -343,12 +342,11 @@ object Classify {
     // checkpoint is VOCABULARY-bounded (≤ v·k rows), never corpus-
     // sized, so materializing it is safe at any corpus scale.
     val obs = org.apache.spark.sql.Observation()
-    val tokCounts = docs
+    val tokCounts = s.checkpoint(docs
       .observe(obs, count(lit(1)).as("__n"),
         count(when(col("cls").isNull, lit(1))).as("__nulls"))
       .select(col("cls"), explode(TextFunctions.tokens(col("__text"))).as("token"))
-      .groupBy("token", "cls").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy("token", "cls").agg(count(lit(1)).as("cnt")))
     // Late metrics delivery degrades to a label-only recount (no
     // tokenize), never a hard TimeoutException failure.
     val totRow = Observed.row(obs) {
@@ -394,11 +392,10 @@ object Classify {
     // Checkpointed like tokCounts (same v·k bound): scoring reads the
     // vocabulary twice (seen-token join + the unseen anti-join's
     // distinct), and without this each read re-ran the grid join.
-    val vocab = grid.join(tokCounts, Seq("token", "cls"), "left")
+    val vocab = s.checkpoint(grid.join(tokCounts, Seq("token", "cls"), "left")
       .select(col("token"), col("cls"),
         log((coalesce(col("cnt"), lit(0L)) + alpha) /
-          (col("tot") + lit(alpha) * v)).as("lp"))
-      .localCheckpoint()
+          (col("tot") + lit(alpha) * v)).as("lp")))
     val classes = classCounts.join(classTotals, "cls")
       .select(col("cls"),
         log(col("n_docs").cast("double") / lit(nTot.toDouble))

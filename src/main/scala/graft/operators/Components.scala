@@ -37,18 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Unpersist the block-manager copy behind an (eagerly)
-    * `localCheckpoint`ed frame. Checkpoint blocks are NOT freed when
-    * the `DataFrame` goes out of scope — only when the driver GCs the
-    * RDD handle and the context cleaner notices — so an iterative
-    * operator that checkpoints per round leaks O(iterations) block
-    * sets per CALL until some later GC. In a long-lived session (a
-    * service, a bench harness, a notebook) those dead blocks compound
-    * into block-manager/disk pressure that slows everything AFTER this
-    * operator. Superseded checkpoints are therefore released
-    * explicitly the moment no live plan can reference them. Lineage
-    * caveat: an unpersisted local checkpoint CANNOT recompute, so this
-    * must only ever run on frames the returned plan does not read. */
   /** Read a one-long observed metric off a frame that was just
     * eagerly `localCheckpoint`ed: the checkpoint materialization runs
     * the plan's `CollectMetrics` node, so the metric arrives with the
@@ -63,36 +51,21 @@ object Components {
       org.apache.spark.sql.Row(fallback)
     }.getLong(0)
 
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => () // not a checkpoint frame — nothing to release
-    }
-
   /** (node, comp) for every node appearing in `edges`, where `comp` is
     * the minimum node id reachable from the node. Deterministic.
     * Fails loudly if `maxIters` is hit before the fixpoint (raise
     * `maxIters` for graphs with diameter > 25 — or switch to star
     * contraction; silent partial clustering would merge/split dedup
-    * groups unpredictably). The only checkpoint blocks that outlive
-    * the call are the returned frame's own — the edge frame and every
-    * superseded label generation are released as the iteration
-    * advances, and EVERY live checkpoint is released when the call
-    * throws (a job failure mid-iteration, the non-convergence
-    * require): the failure paths must not be the one place the
-    * long-lived-session block leak survives. */
+    * groups unpredictably). Superseded label generations are released
+    * as the iteration advances. */
   def connectedComponents(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       maxIters: Int = 25): DataFrame = {
     require(maxIters > 0)
-    val live = scala.collection.mutable.Set.empty[DataFrame]
-    def ckpt(df: DataFrame): DataFrame = { val c = df.localCheckpoint(); live += c; c }
-    def release(df: DataFrame): Unit = { releaseCheckpoint(df); live -= df }
-    try {
-      val sym = ckpt(
+    Blocks.scoped { s =>
+      val sym = s.checkpoint(
         edges.select(col(srcCol).as("node"), col(dstCol).as("nb"))
           .unionByName(edges.select(col(dstCol).as("node"), col(srcCol).as("nb")))
           .distinct()) // materialize edges ONCE; iterations read blocks
@@ -110,13 +83,12 @@ object Components {
         val nbMin = sym
           .join(labels.select(col("node").as("nb"), col("comp").as("nb_comp")), "nb")
           .groupBy("node").agg(min("nb_comp").as("nb_min"))
-        // eager checkpoint: materialized before the old gen dies. The
-        // changed-label count rides the checkpoint job as an observed
-        // metric, so the fixpoint test is free — previously a separate
-        // per-iteration pass over the labels (at corpus scale, one
-        // full label scan per iteration saved).
+        // The changed-label count rides the checkpoint job as an
+        // observed metric, so the fixpoint test is free — previously a
+        // separate per-iteration pass over the labels (at corpus scale,
+        // one full label scan per iteration saved).
         val obs = org.apache.spark.sql.Observation()
-        val joined = ckpt(labels
+        val joined = s.checkpoint(labels
           .join(nbMin, Seq("node"), "left")
           .select(col("node"), col("comp").as("__old"),
             least(col("comp"), coalesce(col("nb_min"), col("comp"))).as("comp"))
@@ -124,7 +96,7 @@ object Components {
             count(when(col("comp") < col("__old"), lit(1))).as("__changed")))
         converged = observedLong(obs,
           joined.filter(col("comp") < col("__old")).count()) == 0L
-        if (checkpoint != null) release(checkpoint) // superseded generation
+        if (checkpoint != null) s.release(checkpoint)
         checkpoint = joined
         labels = joined.select("node", "comp") // reads the checkpoint, plan stays 1-node
         it += 1
@@ -132,12 +104,7 @@ object Components {
       require(converged,
         s"connectedComponents did not converge within $maxIters iterations " +
           "(graph diameter exceeds the bound); raise maxIters")
-      release(sym) // result reads only the final label checkpoint
       labels
-    } catch {
-      case t: Throwable =>
-        live.foreach(releaseCheckpoint)
-        throw t
     }
   }
 
@@ -254,25 +221,20 @@ object Components {
     * frame is localCheckpoint'ed (sparse — at most one out-edge per
     * node after the first small-star), keeping lineage flat and the
     * upstream pair pipeline executed exactly once; superseded rounds
-    * are released as contraction advances, so only the final star
-    * forest and the node set outlive the call (the returned plan reads
-    * both). */
+    * are released as contraction advances. */
   def connectedComponentsStar(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       maxRounds: Int = 50): DataFrame = {
     require(maxRounds > 0)
-    val live = scala.collection.mutable.Set.empty[DataFrame]
-    def ckpt(df: DataFrame): DataFrame = { val c = df.localCheckpoint(); live += c; c }
-    def release(df: DataFrame): Unit = { releaseCheckpoint(df); live -= df }
-    try {
-      val nodes = ckpt(edges.select(col(srcCol).as("node"))
+    Blocks.scoped { s =>
+      val nodes = s.checkpoint(edges.select(col(srcCol).as("node"))
         .unionByName(edges.select(col(dstCol).as("node")))
         .distinct())
       // Orient larger -> smaller; self-loops carry no connectivity (their
       // nodes still get labeled via `nodes`).
-      var cur = ckpt(edges
+      var cur = s.checkpoint(edges
         .select(greatest(col(srcCol), col(dstCol)).as("u"),
           least(col(srcCol), col(dstCol)).as("v"))
         .filter(col("u") =!= col("v"))
@@ -298,7 +260,7 @@ object Components {
         // small-star on the larger->smaller orientation:
         // emit (x, min(N(u))) for every x in N(u) ∪ {u}
         val ssMin = ls.groupBy("u").agg(min("v").as("m"))
-        val next = ckpt(ls.join(ssMin, "u")
+        val next = s.checkpoint(ls.join(ssMin, "u")
           .select(col("v").as("u"), col("m").as("v"))
           .unionByName(ssMin.select(col("u"), col("m").as("v")))
           .filter(col("u") =!= col("v"))
@@ -312,7 +274,7 @@ object Components {
         val nextCount = next.count()
         converged = nextCount == curCount &&
           next.join(cur, Seq("u", "v"), "left_anti").isEmpty
-        release(cur) // superseded round (next is already material)
+        s.release(cur)
         cur = next
         curCount = nextCount
         round += 1
@@ -323,10 +285,6 @@ object Components {
       nodes
         .join(cur.select(col("u").as("node"), col("v").as("comp")), Seq("node"), "left")
         .select(col("node"), coalesce(col("comp"), col("node")).as("comp"))
-    } catch {
-      case t: Throwable =>
-        live.foreach(releaseCheckpoint)
-        throw t
     }
   }
 

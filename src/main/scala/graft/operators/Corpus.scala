@@ -1575,15 +1575,14 @@ object Corpus {
       df: DataFrame,
       sourceCol: String,
       textCol: String,
-      temperature: Double): DataFrame = {
+      temperature: Double): DataFrame = Blocks.scoped { s =>
     require(temperature > 0.0 && temperature <= 1.0,
       s"temperature ($temperature) must be in (0, 1] — above 1 would " +
         "upsample the HEAD, which is never the recipe")
-    val counts = df.groupBy(col(sourceCol).as("source"))
+    val counts = s.checkpoint(df.groupBy(col(sourceCol).as("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(coalesce(TextFunctions.tokenCount(col(textCol)), lit(0)))
-          .as("n_tokens"))
-      .localCheckpoint() // the one corpus scan; totals below reuse it
+          .as("n_tokens"))) // the one corpus scan; totals below reuse it
     // two bounded driver scalars over the SOURCE-BOUNDED count table
     // ([[compositionReport]]'s normalization pattern — never a
     // single-partition window)
@@ -1605,13 +1604,9 @@ object Corpus {
         round(col("__w"), 6).as("w6"),
         round(col("__w") / col("__p"), 6).as("oversample6"))
     // the output is source-bounded: materialize it locally so the
-    // checkpoint blocks release NOW (deterministically), not whenever
-    // the driver GCs the handle — the climbing-block-count discipline
-    val rows = result.collect()
-    val schema = result.schema
-    Blocks.release(counts)
+    // result holds no checkpoint blocks
     df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
+      java.util.Arrays.asList(result.collect(): _*), result.schema)
   }
 
   /** Budget-capped temperature allocation — the full data-recipe
@@ -1983,7 +1978,7 @@ object Corpus {
   def pmiCollocations(
       df: DataFrame,
       textCol: String,
-      minPairCount: Long): DataFrame = {
+      minPairCount: Long): DataFrame = Blocks.scoped { s =>
     require(minPairCount >= 1, s"minPairCount ($minPairCount) must be >= 1")
     val toks = TextFunctions.tokens(col(textCol))
     val docs = df.select(toks.as("__toks"))
@@ -1992,10 +1987,9 @@ object Corpus {
     // both the materialized unigram table and N, replacing the
     // separate aggregate-over-checkpoint pass this used to pay.
     val nObs = org.apache.spark.sql.Observation()
-    val unigrams = docs.select(explode(col("__toks")).as("w"))
+    val unigrams = s.checkpoint(docs.select(explode(col("__toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("__c"))
-      .observe(nObs, sum(col("__c")).as("__n"))
-      .localCheckpoint() // read 2x below: w1 join, w2 join
+      .observe(nObs, sum(col("__c")).as("__n"))) // read 2x below: w1 join, w2 join
     // Late metrics delivery degrades to a sum over the checkpointed
     // unigram blocks, never a hard TimeoutException failure.
     val nRow = Observed.row(nObs) { unigrams.agg(sum(col("__c"))).head() }
@@ -2272,86 +2266,85 @@ object Corpus {
       return (spark.createDataFrame(driverTrainBpe(table, numMerges))
         .toDF("merge_rank", "lhs", "rhs", "merged", "pair_freq"), 1)
     }
-    // Distributed tier
-    // " c1  c2  ...  cn " — each char wrapped in its own spaces
-    var vocab = words
-      .select(col("freq"),
-        concat(lit(" "),
-          array_join(transform(sequence(lit(1), length(col("w"))),
-            i => col("w").substr(i, lit(1))), "  "),
-          lit(" ")).as("repr"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(Int, String, String, String, Long)]
-    var priorMerged = Set.empty[String] // merged symbols of ALL prior passes
-    var rank = 1
-    var passes = 0
-    var exhausted = false
-    while (rank <= numMerges && !exhausted) {
-      val want = math.min(batchK, numMerges - rank + 1)
-      // collect comfortably past the batch so members' neighbors are
-      // usually in view (anything outside is ≤ cutoff)
-      val m = math.max(4 * want, want + 64)
-      val syms = split(trim(col("repr")), "  ")
-      val top = vocab
-        .filter(size(syms) >= 2) // sequence(1, 0) would run DESCENDING
+    Blocks.scoped { s =>
+      // Distributed tier
+      // " c1  c2  ...  cn " — each char wrapped in its own spaces
+      var vocab = s.checkpoint(words
         .select(col("freq"),
-          explode(transform(sequence(lit(1), size(syms) - 1),
-            i => struct(element_at(syms, i).as("a"),
-              element_at(syms, i + 1).as("b")))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(m).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      passes += 1
-      if (top.isEmpty) exhausted = true
-      else {
-        val cutoff = if (top.length < m) 0L else top.last._3
-        val rMkey = if (top.length < m) None else Some((top.last._1, top.last._2))
-        // triple counts restricted to the collected pairs (skipped for
-        // sequential passes; count-guarded — an overflow just disables
-        // simulation, every member past the first becomes terminal)
-        val maxT = 200000
-        val tri =
-          if (want == 1) Array.empty[(String, String, String, Long)]
-          else {
-            val keys = top.map { case (a, b, _) => a + " " + b }.toSeq
-            vocab.filter(size(syms) >= 3)
-              .select(col("freq"),
-                explode(transform(sequence(lit(1), size(syms) - 2),
-                  i => struct(element_at(syms, i).as("a"),
-                    element_at(syms, i + 1).as("b"),
-                    element_at(syms, i + 2).as("c")))).as("t"))
-              .filter(concat_ws(" ", col("t.a"), col("t.b")).isin(keys: _*) ||
-                concat_ws(" ", col("t.b"), col("t.c")).isin(keys: _*))
-              .groupBy(col("t.a").as("a"), col("t.b").as("b"), col("t.c").as("c"))
-              .agg(sum(col("freq")).as("cnt"))
-              .limit(maxT + 1).collect()
-              .map(r => (r.getString(0), r.getString(1), r.getString(2),
-                r.getLong(3)))
+          concat(lit(" "),
+            array_join(transform(sequence(lit(1), length(col("w"))),
+              i => col("w").substr(i, lit(1))), "  "),
+            lit(" ")).as("repr")))
+      val merges = Seq.newBuilder[(Int, String, String, String, Long)]
+      var priorMerged = Set.empty[String] // merged symbols of ALL prior passes
+      var rank = 1
+      var passes = 0
+      var exhausted = false
+      while (rank <= numMerges && !exhausted) {
+        val want = math.min(batchK, numMerges - rank + 1)
+        // collect comfortably past the batch so members' neighbors are
+        // usually in view (anything outside is ≤ cutoff)
+        val m = math.max(4 * want, want + 64)
+        val syms = split(trim(col("repr")), "  ")
+        val top = vocab
+          .filter(size(syms) >= 2) // sequence(1, 0) would run DESCENDING
+          .select(col("freq"),
+            explode(transform(sequence(lit(1), size(syms) - 1),
+              i => struct(element_at(syms, i).as("a"),
+                element_at(syms, i + 1).as("b")))).as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("freq")).as("cnt"))
+          .orderBy(col("cnt").desc, col("a"), col("b"))
+          .limit(m).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        passes += 1
+        if (top.isEmpty) exhausted = true
+        else {
+          val cutoff = if (top.length < m) 0L else top.last._3
+          val rMkey = if (top.length < m) None else Some((top.last._1, top.last._2))
+          // triple counts restricted to the collected pairs (skipped for
+          // sequential passes; count-guarded — an overflow just disables
+          // simulation, every member past the first becomes terminal)
+          val maxT = 200000
+          val tri =
+            if (want == 1) Array.empty[(String, String, String, Long)]
+            else {
+              val keys = top.map { case (a, b, _) => a + " " + b }.toSeq
+              vocab.filter(size(syms) >= 3)
+                .select(col("freq"),
+                  explode(transform(sequence(lit(1), size(syms) - 2),
+                    i => struct(element_at(syms, i).as("a"),
+                      element_at(syms, i + 1).as("b"),
+                      element_at(syms, i + 2).as("c")))).as("t"))
+                .filter(concat_ws(" ", col("t.a"), col("t.b")).isin(keys: _*) ||
+                  concat_ws(" ", col("t.b"), col("t.c")).isin(keys: _*))
+                .groupBy(col("t.a").as("a"), col("t.b").as("b"), col("t.c").as("c"))
+                .agg(sum(col("freq")).as("cnt"))
+                .limit(maxT + 1).collect()
+                .map(r => (r.getString(0), r.getString(1), r.getString(2),
+                  r.getLong(3)))
+            }
+          val triplesComplete = want > 1 && tri.length <= maxT
+          val accepted = simulateBpeBatch(top, tri, triplesComplete,
+            cutoff, rMkey, priorMerged, want)
+          // one map pass: the replace CHAIN applies the batch in order
+          val next = s.checkpoint(vocab.withColumn("repr",
+              accepted.foldLeft(col("repr")) { case (c, (a, b, _)) =>
+                replace(c, lit(s" $a  $b "), lit(s" $a$b "))
+              }))
+          s.release(vocab)
+          vocab = next
+          accepted.foreach { case (a, b, cnt) =>
+            merges += ((rank, a, b, a + b, cnt))
+            priorMerged += (a + b)
+            rank += 1
           }
-        val triplesComplete = want > 1 && tri.length <= maxT
-        val accepted = simulateBpeBatch(top, tri, triplesComplete,
-          cutoff, rMkey, priorMerged, want)
-        // one map pass: the replace CHAIN applies the batch in order
-        val next = vocab.withColumn("repr",
-            accepted.foldLeft(col("repr")) { case (c, (a, b, _)) =>
-              replace(c, lit(s" $a  $b "), lit(s" $a$b "))
-            })
-          .localCheckpoint()
-        Blocks.release(vocab)
-        vocab = next
-        accepted.foreach { case (a, b, cnt) =>
-          merges += ((rank, a, b, a + b, cnt))
-          priorMerged += (a + b)
-          rank += 1
+          if (accepted.isEmpty) exhausted = true // defensive: cannot progress
         }
-        if (accepted.isEmpty) exhausted = true // defensive: cannot progress
       }
+      (spark.createDataFrame(merges.result())
+        .toDF("merge_rank", "lhs", "rhs", "merged", "pair_freq"), passes)
     }
-    Blocks.release(vocab)
-    (spark.createDataFrame(merges.result())
-      .toDF("merge_rank", "lhs", "rhs", "merged", "pair_freq"), passes)
   }
 
   /** Spark/DuckDB string order: unsigned byte-wise UTF-8 comparison
@@ -2923,36 +2916,34 @@ object Corpus {
       s"iters ($iters) must be in [1, 8]")
     require(maxWordLen >= maxTokenLen && maxWordLen <= 64,
       s"maxWordLen ($maxWordLen) must be in [$maxTokenLen, 64]")
-    val words = df
-      .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
-      .filter(length(col("w")).between(1, maxWordLen))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
-    try {
-      val subs = words.select(col("freq"),
+    Blocks.scoped { scope =>
+      val words = scope.checkpoint(df
+        .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
+        .filter(length(col("w")).between(1, maxWordLen))
+        .groupBy("w").agg(count(lit(1)).as("freq")))
+      val subs = scope.checkpoint(words.select(col("freq"),
           explode(flatten(transform(
             sequence(lit(1), length(col("w"))), i =>
               transform(sequence(lit(1),
                 least(lit(maxTokenLen), length(col("w")) - i + lit(1))),
                 l => col("w").substr(i, l))))).as("token"))
-        .groupBy("token").agg(sum(col("freq")).as("cnt"))
-        .localCheckpoint()
-      val singles =
-        try {
-          val s = subs.filter(length(col("token")) === 1)
-            .limit(seedSize).collect()
-            .map(r => (r.getString(0), r.getLong(1)))
-          require(s.nonEmpty, "unigramTrain: empty corpus")
-          require(s.length < seedSize,
-            s"unigramTrain: alphabet (${s.length}+) does not fit " +
-              s"seedSize ($seedSize) — raise seedSize")
-          val nMulti = seedSize - s.length
-          val m = subs.filter(length(col("token")) > 1)
-            .orderBy((col("cnt") * length(col("token"))).desc, col("token"))
-            .limit(nMulti).collect()
-            .map(r => (r.getString(0), r.getLong(1)))
-          (s, m)
-        } finally Blocks.release(subs)
+        .groupBy("token").agg(sum(col("freq")).as("cnt")))
+      val singles = {
+        val s = subs.filter(length(col("token")) === 1)
+          .limit(seedSize).collect()
+          .map(r => (r.getString(0), r.getLong(1)))
+        require(s.nonEmpty, "unigramTrain: empty corpus")
+        require(s.length < seedSize,
+          s"unigramTrain: alphabet (${s.length}+) does not fit " +
+            s"seedSize ($seedSize) — raise seedSize")
+        val nMulti = seedSize - s.length
+        val m = subs.filter(length(col("token")) > 1)
+          .orderBy((col("cnt") * length(col("token"))).desc, col("token"))
+          .limit(nMulti).collect()
+          .map(r => (r.getString(0), r.getLong(1)))
+        (s, m)
+      }
+      scope.release(subs)
       val (sing0, mult0) = singles
       val singleSet = sing0.map(_._1).toSet
       var kept: Vector[(String, Long)] = (sing0 ++ mult0).toVector
@@ -2980,7 +2971,7 @@ object Corpus {
       }.take(math.max(0, vocabSize - sing.length))
       UnigramModel((sing ++ keepMulti)
         .sortWith((a, b) => utf8Compare(a._1, b._1) < 0))
-    } finally Blocks.release(words)
+    }
   }
 
   /** [[unigramTrainModel]] as a readout frame: one row per kept

@@ -455,7 +455,7 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 0,
       threshold: Double = 0.5,
-      maxBucket: Int = 1000): NearDupIngest = {
+      maxBucket: Int = 1000): NearDupIngest = Blocks.scoped { s =>
     val b = resolveBands(bands, numHashes, threshold)
     val rows = numHashes / b
     // Materialized ONCE per ingested shard: the signature table is
@@ -467,8 +467,8 @@ object Dedup {
     // signatures (hashed shingles + minhash, a fraction of the text
     // bytes) is the honest model of that contract, not a cache of the
     // corpus.
-    val sigs = signatureLedger(shard, idCol, textCol, shingleN, numHashes)
-      .localCheckpoint()
+    val sigs = s.checkpoint(
+      signatureLedger(shard, idCol, textCol, shingleN, numHashes))
     def banded(d: DataFrame): DataFrame = bandedSigs(d, b, rows)
     // 1) ledger contamination
     val contaminated =
@@ -1054,14 +1054,11 @@ object Dedup {
     require(thresholds == thresholds.sorted && thresholds.distinct == thresholds,
       s"thresholds must be strictly ascending, got ${thresholds.mkString(", ")}")
     val spark = df.sparkSession
-    val pairs = minHashNearDupPairs(df, idCol, textCol, shingleN,
-        numHashes, bands, threshold = thresholds.head)
-      .localCheckpoint() // ONE detection pass feeds every threshold
-    // loan-pattern CC per threshold + an explicit release of the
-    // detection checkpoint: everything is consumed inside this call,
-    // so no block survives into the returned driver-literal report
-    val rows =
-      try thresholds.map { t =>
+    val rows = Blocks.scoped { s =>
+      // ONE detection pass feeds every threshold
+      val pairs = s.checkpoint(minHashNearDupPairs(df, idCol, textCol,
+        shingleN, numHashes, bands, threshold = thresholds.head))
+      thresholds.map { t =>
         val sub = pairs.filter(col("jaccard") >= t)
         val stats = Components.withConnectedComponents(sub, "id_a", "id_b") {
           labels => labels
@@ -1070,7 +1067,8 @@ object Dedup {
         }
         val (n, c) = (stats.getLong(0), stats.getLong(1))
         (t, n, c, n - c)
-      } finally Blocks.release(pairs)
+      }
+    }
     import spark.implicits._
     rows.toDF("threshold", "n_docs_in_pairs", "n_clusters", "removable_docs")
   }

@@ -661,9 +661,10 @@ object Eval {
       bins: Int = 10,
       lo: Double = 0.0,
       hi: Double = 1.0): DataFrame =
-    brierEceFromState(
-      calibStateOf(scored, labelCol, scoreCol, bins, lo, hi)
-        .localCheckpoint())
+    Blocks.scoped { s =>
+      brierEceFromState(
+        s.checkpoint(calibStateOf(scored, labelCol, scoreCol, bins, lo, hi)))
+    }
 
   /** One shard's calibration state — per occupied bucket the count,
     * positive count, exact DECIMAL(28,6) sum of 6dp-rounded scores
@@ -725,10 +726,11 @@ object Eval {
       bins: Int = 10,
       lo: Double = 0.0,
       hi: Double = 1.0): DataFrame =
-    brierEceByGroupFromState(
-      groupCalibStateOf(scored, groupCol, labelCol, scoreCol, bins, lo, hi)
-        .localCheckpoint(),
-      groupCol)
+    Blocks.scoped { s =>
+      brierEceByGroupFromState(s.checkpoint(
+        groupCalibStateOf(scored, groupCol, labelCol, scoreCol, bins, lo, hi)),
+        groupCol)
+    }
 
   /** One shard's GROUP-KEYED calibration state — [[calibStateOf]]
     * with the group riding in the key; folds with
@@ -1056,13 +1058,12 @@ object Eval {
     * group. */
   def cohenKappaByGroup(
       df: DataFrame, groupCol: String, colA: String,
-      colB: String): DataFrame = {
-    val cells = df.select(col(groupCol).cast("string").as("__g"),
+      colB: String): DataFrame = Blocks.scoped { s =>
+    val cells = s.checkpoint(df.select(col(groupCol).cast("string").as("__g"),
         col(colA).cast("string").as("__a"),
         col(colB).cast("string").as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .groupBy("__g", "__a", "__b").agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .groupBy("__g", "__a", "__b").agg(count(lit(1)).as("__c")))
     val ra = cells.groupBy("__g", "__a").agg(sum(col("__c")).as("__ra"))
     val cb = cells.groupBy("__g", "__b").agg(sum(col("__c")).as("__cb"))
     val t = cells.groupBy("__g").agg(
@@ -1123,12 +1124,11 @@ object Eval {
         .otherwise(raise_error(concat(
           lit(s"weightedKappa: $side level must be a non-negative " +
             "integer, got "), col(c).cast("string")))).as(side)
-    val cells = df
-      .filter(col(colA).isNotNull && col(colB).isNotNull)
-      .select(lvl(colA, "a"), lvl(colB, "b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
-    try {
+    Blocks.scoped { s =>
+      val cells = s.checkpoint(df
+        .filter(col(colA).isNotNull && col(colB).isNotNull)
+        .select(lvl(colA, "a"), lvl(colB, "b"))
+        .groupBy("a", "b").agg(count(lit(1)).as("c")))
       def wLin(x: Column, y: Column) =
         abs(x - y).cast("decimal(38,0)")
       def wQuad(x: Column, y: Column) =
@@ -1164,7 +1164,7 @@ object Eval {
           k6(top.getDecimal(1), e.getDecimal(0)),
           k6(top.getDecimal(2), e.getDecimal(1))))
         .toDF("n", "n_levels", "kappa_linear6", "kappa_quadratic6")
-    } finally Blocks.release(cells)
+    }
   }
 
   /** Kendall's W (coefficient of concordance) — agreement among m
@@ -1205,11 +1205,10 @@ object Eval {
             lit(" scored item "), col("__it"),
             lit(" "), col("__c").cast("string"),
             lit(" times — one score per (item, rater)")))).as("__s"))
-    val ranked = General.withContiguousRowIdsPerGroup(
-        guarded, Seq("__r"), Seq("__s", "__it"), "__rk")
-      .withColumn("__rk", col("__rk") + 1L)
-      .localCheckpoint()
-    try {
+    Blocks.scoped { s =>
+      val ranked = s.checkpoint(General.withContiguousRowIdsPerGroup(
+          guarded, Seq("__r"), Seq("__s", "__it"), "__rk")
+        .withColumn("__rk", col("__rk") + 1L))
       val dims = ranked.agg(
         countDistinct(col("__it")).as("n"),
         countDistinct(col("__r")).as("m"),
@@ -1232,7 +1231,7 @@ object Eval {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       import spark.implicits._
       Seq((n, m, w6)).toDF("n_items", "n_raters", "w6")
-    } finally Blocks.release(ranked)
+    }
   }
 
   /** Rank-biased overlap at bounded depth — how much two rankers
@@ -1253,7 +1252,7 @@ object Eval {
     * row — (`n`, `depth`, `p`, `overlap_at_k`, `rbo6`). */
   def rankBiasedOverlap(
       df: DataFrame, idCol: String, scoreColA: String, scoreColB: String,
-      depth: Int = 50, p: Double = 0.9): DataFrame = {
+      depth: Int = 50, p: Double = 0.9): DataFrame = Blocks.scoped { s =>
     require(depth >= 1 && depth <= 100000,
       s"rankBiasedOverlap: depth ($depth) must be in [1, 100000]")
     require(p > 0.0 && p < 1.0,
@@ -1263,12 +1262,11 @@ object Eval {
     // top-k slot both sides yet vanish from the id join); duplicate
     // ids fail loudly below — a duplicated id would cross-multiply in
     // the join and push X_d past d
-    val base = df.select(col(idCol).cast("string").as("__id"),
+    val base = s.checkpoint(df.select(col(idCol).cast("string").as("__id"),
         col(scoreColA).cast("double").as("__a"),
         col(scoreColB).cast("double").as("__b"))
       .filter(col("__id").isNotNull &&
-        col("__a").isNotNull && col("__b").isNotNull)
-      .localCheckpoint()
+        col("__a").isNotNull && col("__b").isNotNull))
     val dims = base.agg(count(lit(1)).as("n"),
       countDistinct(col("__id")).as("d")).head()
     require(dims.getLong(0) == dims.getLong(1),
@@ -1289,7 +1287,6 @@ object Eval {
     val counts = worse.filter(col("__m") <= depth.toLong)
       .groupBy("__m").agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    Blocks.release(base)
     var x = 0L
     var acc = BigDecimal(0)
     var d = 1
@@ -1404,12 +1401,11 @@ object Eval {
       s"kendallTauB needs two distinct columns (got $colA twice)")
     require(maxCells >= 1L, s"maxCells ($maxCells) must be positive")
     val spark = df.sparkSession
-    val joint = df.select(col(colA).cast("double").as("__a"),
-        col(colB).cast("double").as("__b"))
-      .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .groupBy("__a", "__b").agg(count(lit(1)).as("__n"))
-      .localCheckpoint()
-    try {
+    Blocks.scoped { s =>
+      val joint = s.checkpoint(df.select(col(colA).cast("double").as("__a"),
+          col(colB).cast("double").as("__b"))
+        .filter(col("__a").isNotNull && col("__b").isNotNull)
+        .groupBy("__a", "__b").agg(count(lit(1)).as("__n")))
       val dims = joint.agg(
         coalesce(sum(col("__n")), lit(0L)).as("n"),
         countDistinct(col("__a")).as("da"),
@@ -1472,7 +1468,7 @@ object Eval {
       import spark.implicits._
       Seq((n, (c2 / 2).toLongExact, dMass.toLongExact, tau))
         .toDF("n", "n_concordant", "n_discordant", "tau_b6")
-    } finally Blocks.release(joint)
+    }
   }
 
   /** Benjamini–Hochberg FDR control — the multiple-comparison step an

@@ -39,7 +39,7 @@ object Graph {
       srcCol: String,
       dstCol: String,
       iterations: Int,
-      damping: Double = 0.85): DataFrame = {
+      damping: Double = 0.85): DataFrame = Blocks.scoped { s =>
     require(iterations >= 1, s"iterations ($iterations) must be >= 1")
     require(damping > 0 && damping < 1, s"damping ($damping) must be in (0, 1)")
     // Checkpoint the RAW edges first: deg and the degree-carrying join
@@ -47,33 +47,29 @@ object Graph {
     // upstream pipeline (q96: the full MinHash pair verify) would
     // execute once per plan occurrence in the ew job instead of once
     // total.
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
+    val e = s.checkpoint(
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("od"))
     // Edges carry the out-degree from here on: one join now instead of
     // one per iteration. Checkpointed — every iteration reads these
-    // blocks; the raw-edge blocks are released right after.
-    val ew = e.join(deg, "src").localCheckpoint()
-    Blocks.release(e)
+    // blocks.
+    val ew = s.checkpoint(e.join(deg, "src"))
+    s.release(e)
     val n = ew.select(col("src")).distinct().count().toDouble
     require(n > 0, "pageRank needs at least one edge")
     val teleport = (1.0 - damping) / n
-    var ranks = ew.select(col("src").as("v")).distinct()
-      .withColumn("r", lit(1.0 / n)).localCheckpoint()
+    var ranks = s.checkpoint(ew.select(col("src").as("v")).distinct()
+      .withColumn("r", lit(1.0 / n)))
     var i = 0
     while (i < iterations) {
-      val stepped = ew.join(ranks, col("src") === col("v"))
+      val stepped = s.checkpoint(ew.join(ranks, col("src") === col("v"))
         .groupBy(col("dst").as("dest"))
         .agg((lit(teleport) + lit(damping) * sum(col("r") / col("od"))).as("r2"))
-        .select(col("dest").as("v"), col("r2").as("r"))
-        .localCheckpoint() // eager: materialized before the old blocks go
-      Blocks.release(ranks)
+        .select(col("dest").as("v"), col("r2").as("r")))
+      s.release(ranks)
       ranks = stepped
       i += 1
     }
-    // The final ranks checkpoint is self-contained; the edge frame's
-    // blocks are dead weight from here.
-    Blocks.release(ew)
     ranks
   }
 
@@ -190,43 +186,38 @@ object Graph {
       srcCol: String,
       dstCol: String,
       k: Int,
-      maxRounds: Int = 64): DataFrame = {
+      maxRounds: Int = 64): DataFrame = Blocks.scoped { s =>
     require(k >= 1, s"k ($k) must be >= 1")
     require(maxRounds >= 1, s"maxRounds ($maxRounds) must be >= 1")
-    var e = edges.select(
+    var e = s.checkpoint(edges.select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     var round = 0
     var done = false
     while (!done) {
       val deg = e.select(col("a").as("v"))
         .unionAll(e.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("__d"))
-      val dead = deg.filter(col("__d") < k).select("v").localCheckpoint()
+      val dead = s.checkpoint(deg.filter(col("__d") < k).select("v"))
       if (dead.isEmpty) done = true
       else {
         round += 1
         require(round <= maxRounds,
           s"kCore did not converge in $maxRounds rounds (k=$k) — raise " +
             "maxRounds; a long peel chain means O(diameter) rounds")
-        val next = e
+        val next = s.checkpoint(e
           .join(dead.select(col("v").as("a")), Seq("a"), "left_anti")
           .join(dead.select(col("v").as("b")), Seq("b"), "left_anti")
-          .select("a", "b")
-          .localCheckpoint() // eager: materialized before old blocks go
-        Blocks.release(e)
+          .select("a", "b"))
+        s.release(e)
         e = next
       }
-      Blocks.release(dead)
+      s.release(dead)
     }
-    val core = e.select(col("a").as("node"))
+    s.checkpoint(e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("core_degree"))
-      .localCheckpoint()
-    Blocks.release(e)
-    core
+      .groupBy("node").agg(count(lit(1)).as("core_degree")))
   }
 }

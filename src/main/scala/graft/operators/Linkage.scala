@@ -513,28 +513,24 @@ object Linkage {
     require(nLeft > 0L && nRight > 0L,
       s"record counts must be positive (got $nLeft, $nRight)")
     val spark = candidates.sparkSession
-    val cand = candidates
-      .select(col(idACol).as("id_a"), col(idBCol).as("id_b")).distinct()
-      .localCheckpoint()
-    try {
-      val truth = truePairs
-        .select(col(idACol).as("id_a"), col(idBCol).as("id_b")).distinct()
-        .localCheckpoint()
-      try {
-        val nCand = cand.count()
-        val nTruth = truth.count()
-        val nFound = truth.join(cand, Seq("id_a", "id_b")).count()
-        def r6(v: Double) = BigDecimal(v)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        val reduction =
-          1.0 - nCand.toDouble / (nLeft.toDouble * nRight.toDouble)
-        val completeness =
-          if (nTruth == 0L) None else Some(r6(nFound.toDouble / nTruth.toDouble))
-        import spark.implicits._
-        Seq((nLeft, nRight, nCand, nTruth, nFound, r6(reduction), completeness))
-          .toDF("n_left", "n_right", "n_candidates", "n_truth", "n_found",
-            "reduction6", "completeness6")
-      } finally Blocks.release(truth)
-    } finally Blocks.release(cand)
+    Blocks.scoped { s =>
+      val cand = s.checkpoint(candidates
+        .select(col(idACol).as("id_a"), col(idBCol).as("id_b")).distinct())
+      val truth = s.checkpoint(truePairs
+        .select(col(idACol).as("id_a"), col(idBCol).as("id_b")).distinct())
+      val nCand = cand.count()
+      val nTruth = truth.count()
+      val nFound = truth.join(cand, Seq("id_a", "id_b")).count()
+      def r6(v: Double) = BigDecimal(v)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val reduction =
+        1.0 - nCand.toDouble / (nLeft.toDouble * nRight.toDouble)
+      val completeness =
+        if (nTruth == 0L) None else Some(r6(nFound.toDouble / nTruth.toDouble))
+      import spark.implicits._
+      Seq((nLeft, nRight, nCand, nTruth, nFound, r6(reduction), completeness))
+        .toDF("n_left", "n_right", "n_candidates", "n_truth", "n_found",
+          "reduction6", "completeness6")
+    }
   }
 }

@@ -387,12 +387,11 @@ object Moments {
     numericGuard(df, "spearmanRho", xCol, yCol)
     TempCols.reserve(df, "spearmanRho",
       "__x", "__y", "__cnt", "__pre", "__rx", "__ry", "__ra", "__rb")
-    val rows = df
-      .select(col(xCol).cast("double").as("__x"),
-        col(yCol).cast("double").as("__y"))
-      .filter(col("__x").isNotNull && col("__y").isNotNull)
-      .localCheckpoint()
-    try {
+    Blocks.scoped { s =>
+      val rows = s.checkpoint(df
+        .select(col(xCol).cast("double").as("__x"),
+          col(yCol).cast("double").as("__y"))
+        .filter(col("__x").isNotNull && col("__y").isNotNull))
       def rankGrid(c: String, out: String): DataFrame = {
         val g = rows.groupBy(col(c)).agg(count(lit(1)).as("__cnt"))
         General.withRunningTotal(g, Seq(c), "__cnt", "__pre")
@@ -406,7 +405,7 @@ object Moments {
         .select(col("__rx").as("__ra"), col("__ry").as("__rb"))
       bivariateFromMoments(momentState(ranked, "__ra", "__rb"))
         .select(col("n"), col("pearson_r6").as("spearman_rho6"))
-    } finally Blocks.release(rows)
+    }
   }
 
   /** PER-GROUP Spearman — [[spearmanRho]] keyed by a slice column

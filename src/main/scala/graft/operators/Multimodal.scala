@@ -271,7 +271,7 @@ object Multimodal {
       maxFrameBucket: Int = 1000,
       dropOversize: Boolean = false,
       idCol: String = "media_id",
-      payloadCol: String = "payload"): DataFrame = {
+      payloadCol: String = "payload"): DataFrame = Blocks.scoped { s =>
     // below ~2 bytes per 9-cell grid row the gradient is flat and every
     // frame dHashes to 0, collapsing all sets to {0} (pinned by spec)
     require(nFrames > 0 && frameBytes >= 16,
@@ -289,13 +289,12 @@ object Multimodal {
     // hot-frame count and the guard join consume it — without the
     // checkpoint each consumer re-scanned every payload and re-ran
     // frame sampling + dHash (the query's most expensive map work).
-    val fh = sampleFrames(prepared.filter(col("payload").isNotNull),
+    val fh = s.checkpoint(sampleFrames(prepared.filter(col("payload").isNotNull),
         nFrames, frameBytes)
       .select(col("media_id"), explode(col("frames")).as("__f"))
       .select(col("media_id"),
         graft.expressions.GraftFunctions.dhash64(prepared, col("__f")).as("fh"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val hot = fh.groupBy("fh").agg(count(lit(1)).as("__n"))
     val guarded = fh.join(
       if (dropOversize) hot.filter(col("__n") <= maxFrameBucket)
@@ -316,14 +315,13 @@ object Multimodal {
     // consumed FOUR times (both prefix-join sides, both verification
     // set sides) — checkpointed so the guard join + per-media
     // aggregation run once instead of per consumer.
-    val perMedia = guarded.groupBy("media_id").agg(
+    val perMedia = s.checkpoint(guarded.groupBy("media_id").agg(
         sort_array(collect_list(struct(col("__n"), col("fh")))).as("__byrank"),
         sort_array(collect_list(col("fh"))).as("__sigs"))
       .withColumn("__sz", size(col("__sigs")))
       .withColumn("__plen",
         col("__sz") -
-          ceil(lit(threshold) * col("__sz") - lit(1e-9)).cast("int") + 1)
-      .localCheckpoint()
+          ceil(lit(threshold) * col("__sz") - lit(1e-9)).cast("int") + 1))
     val prefixes = perMedia.select(col("media_id"),
       explode(slice(transform(col("__byrank"), s => s.getField("fh")),
         lit(1), col("__plen"))).as("fh"))

@@ -96,13 +96,11 @@ object Preference {
       df: DataFrame, winnerCol: String, loserCol: String,
       iters: Int = 25, maxModels: Int = 4096,
       maxPairs: Long = 2097152L): DataFrame = {
-    val c = winCountsOf(df, winnerCol, loserCol, "bradleyTerry")
-      .localCheckpoint()
-    // the readout is eager (driver MM), so the checkpoint releases
-    // here; fromCounts itself never releases state it does not own —
-    // callers fold ONE state table into several readers
-    try bradleyTerryFromCounts(c, iters, maxModels, maxPairs)
-    finally Blocks.release(c)
+    Blocks.scoped { s =>
+      bradleyTerryFromCounts(
+        s.checkpoint(winCountsOf(df, winnerCol, loserCol, "bradleyTerry")),
+        iters, maxModels, maxPairs)
+    }
   }
 
   /** One shard's directed win-count state — `(__w, __l, __c)`, the
@@ -251,14 +249,13 @@ object Preference {
   def intransitivityAudit(
       df: DataFrame, winnerCol: String, loserCol: String): DataFrame = {
     val spark = df.sparkSession
-    val c = comparisons(df, winnerCol, loserCol, "intransitivityAudit")
-      .select(least(col("__w"), col("__l")).as("a"),
-        greatest(col("__w"), col("__l")).as("b"),
-        when(col("__w") < col("__l"), 1L).otherwise(0L).as("aw"))
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("n"), sum(col("aw")).as("wa"))
-      .localCheckpoint()
-    try {
+    Blocks.scoped { s =>
+      val c = s.checkpoint(comparisons(df, winnerCol, loserCol, "intransitivityAudit")
+        .select(least(col("__w"), col("__l")).as("a"),
+          greatest(col("__w"), col("__l")).as("b"),
+          when(col("__w") < col("__l"), 1L).otherwise(0L).as("aw"))
+        .groupBy("a", "b")
+        .agg(count(lit(1)).as("n"), sum(col("aw")).as("wa")))
       val nModels = c.select(explode(array(col("a"), col("b"))).as("m"))
         .distinct().count()
       val pairRow = c.agg(count(lit(1)).as("np"),
@@ -266,47 +263,44 @@ object Preference {
           .as("ties")).head()
       val (nPairs, nTies) = (pairRow.getLong(0), pairRow.getLong(1))
       // directed majority edges (tied pairs contribute none)
-      val e = c.filter(col("wa") * 2L =!= col("n"))
+      val e = s.checkpoint(c.filter(col("wa") * 2L =!= col("n"))
         .select(
           when(col("wa") * 2L > col("n"), col("a")).otherwise(col("b"))
             .as("src"),
           when(col("wa") * 2L > col("n"), col("b")).otherwise(col("a"))
-            .as("dst"))
-        .localCheckpoint()
-      try {
-        val nEdges = e.count()
-        // closed triples: all three edges exist in SOME direction;
-        // canonical rotation: x is the smallest model of the triple
-        val und = e.select(col("src").as("x"), col("dst").as("y"))
-          .unionByName(e.select(col("dst").as("x"), col("src").as("y")))
-        val closed = und.as("e1")
-          .join(und.as("e2"), col("e1.y") === col("e2.x"))
-          .join(und.as("e3"),
-            col("e2.y") === col("e3.x") && col("e3.y") === col("e1.x"))
-          // canonical labeling x < y < z counts each triangle once
-          // (und holds both directions, so every triangle appears
-          // under every vertex ordering)
-          .filter(col("e1.x") < col("e1.y") && col("e1.y") < col("e2.y"))
-          .select(col("e1.x").as("m1"), col("e1.y").as("m2"),
-            col("e2.y").as("m3"))
-        val nClosed = closed.count()
-        val cyc = e.as("e1")
-          .join(e.as("e2"), col("e1.dst") === col("e2.src"))
-          .join(e.as("e3"),
-            col("e2.dst") === col("e3.src") &&
-              col("e3.dst") === col("e1.src"))
-          .filter(col("e1.src") < col("e1.dst") &&
-            col("e1.src") < col("e2.dst"))
-        val nCycles = cyc.count()
-        val rate6: Option[Double] =
-          if (nClosed == 0L) None
-          else Some(BigDecimal(nCycles.toDouble / nClosed.toDouble)
-            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        import spark.implicits._
-        Seq((nModels, nPairs, nEdges, nTies, nClosed, nCycles, rate6))
-          .toDF("n_models", "n_pairs", "n_edges", "n_tied_pairs",
-            "n_closed_triples", "n_cycles", "cycle_rate6")
-      } finally Blocks.release(e)
-    } finally Blocks.release(c)
+            .as("dst")))
+      val nEdges = e.count()
+      // closed triples: all three edges exist in SOME direction;
+      // canonical rotation: x is the smallest model of the triple
+      val und = e.select(col("src").as("x"), col("dst").as("y"))
+        .unionByName(e.select(col("dst").as("x"), col("src").as("y")))
+      val closed = und.as("e1")
+        .join(und.as("e2"), col("e1.y") === col("e2.x"))
+        .join(und.as("e3"),
+          col("e2.y") === col("e3.x") && col("e3.y") === col("e1.x"))
+        // canonical labeling x < y < z counts each triangle once
+        // (und holds both directions, so every triangle appears
+        // under every vertex ordering)
+        .filter(col("e1.x") < col("e1.y") && col("e1.y") < col("e2.y"))
+        .select(col("e1.x").as("m1"), col("e1.y").as("m2"),
+          col("e2.y").as("m3"))
+      val nClosed = closed.count()
+      val cyc = e.as("e1")
+        .join(e.as("e2"), col("e1.dst") === col("e2.src"))
+        .join(e.as("e3"),
+          col("e2.dst") === col("e3.src") &&
+            col("e3.dst") === col("e1.src"))
+        .filter(col("e1.src") < col("e1.dst") &&
+          col("e1.src") < col("e2.dst"))
+      val nCycles = cyc.count()
+      val rate6: Option[Double] =
+        if (nClosed == 0L) None
+        else Some(BigDecimal(nCycles.toDouble / nClosed.toDouble)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      import spark.implicits._
+      Seq((nModels, nPairs, nEdges, nTies, nClosed, nCycles, rate6))
+        .toDF("n_models", "n_pairs", "n_edges", "n_tied_pairs",
+          "n_closed_triples", "n_cycles", "cycle_rate6")
+    }
   }
 }

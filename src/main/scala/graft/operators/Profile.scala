@@ -417,14 +417,14 @@ object Profile {
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
     val spark = refCounts.sparkSession
-    val joined = refCounts
-      .withColumnRenamed("category", "__jref")
-      .join(curCounts.withColumnRenamed("category", "__jcur"),
-        col("__jref") <=> col("__jcur"), "full_outer")
-      .select(coalesce(col("ca"), lit(0L)).as("ca"),
-        coalesce(col("cb"), lit(0L)).as("cb"))
-      .localCheckpoint() // vocabulary-bounded; scalars + terms read it
-    try {
+    Blocks.scoped { s =>
+      // vocabulary-bounded; scalars + terms read it
+      val joined = s.checkpoint(refCounts
+        .withColumnRenamed("category", "__jref")
+        .join(curCounts.withColumnRenamed("category", "__jcur"),
+          col("__jref") <=> col("__jcur"), "full_outer")
+        .select(coalesce(col("ca"), lit(0L)).as("ca"),
+          coalesce(col("cb"), lit(0L)).as("cb")))
       val t = joined.agg(coalesce(sum(col("ca")), lit(0L)),
         coalesce(sum(col("cb")), lit(0L)), count(lit(1))).head()
       val (na, nb, k) = (t.getLong(0), t.getLong(1), t.getLong(2))
@@ -446,7 +446,7 @@ object Profile {
       Seq((na, nb, k, BigDecimal(jsd.doubleValue)
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
         .toDF("n_ref", "n_cur", "n_categories", "jsd6")
-    } finally Blocks.release(joined)
+    }
   }
 
   /** Exact Mann–Whitney U rank-sum test with Cliff's delta — the
@@ -862,14 +862,13 @@ object Profile {
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
     val spark = refCounts.sparkSession
-    val joined = refCounts
-      .withColumnRenamed("category", "__href")
-      .join(curCounts.withColumnRenamed("category", "__hcur"),
-        col("__href") <=> col("__hcur"), "full_outer")
-      .select(coalesce(col("ca"), lit(0L)).as("ca"),
-        coalesce(col("cb"), lit(0L)).as("cb"))
-      .localCheckpoint()
-    try {
+    Blocks.scoped { s =>
+      val joined = s.checkpoint(refCounts
+        .withColumnRenamed("category", "__href")
+        .join(curCounts.withColumnRenamed("category", "__hcur"),
+          col("__href") <=> col("__hcur"), "full_outer")
+        .select(coalesce(col("ca"), lit(0L)).as("ca"),
+          coalesce(col("cb"), lit(0L)).as("cb")))
       val t = joined.agg(coalesce(sum(col("ca")), lit(0L)),
         coalesce(sum(col("cb")), lit(0L)), count(lit(1))).head()
       val (na, nb, k) = (t.getLong(0), t.getLong(1), t.getLong(2))
@@ -886,7 +885,7 @@ object Profile {
       import spark.implicits._
       Seq((na, nb, k, r6(bc), r6(math.sqrt(math.max(1.0 - bc, 0.0)))))
         .toDF("n_ref", "n_cur", "n_categories", "bc6", "hellinger6")
-    } finally Blocks.release(joined)
+    }
   }
 
   /** PER-GROUP Hellinger distance — [[hellingerDistance]] keyed by a
@@ -1749,13 +1748,11 @@ object Profile {
     * .replayAssociationMonitor]]), the ksFromCounts discipline: joint
     * counts fold by SUM, so whoever accumulated the table reads the
     * identical statistics off it. Checkpoints the (cells-bounded)
-    * input so the marginal/grid/term passes never recompute it, and
-    * releases the blocks before returning (the result is a literal
-    * one-row frame). */
+    * input so the marginal/grid/term passes never recompute it. */
   private[graft] def associationFromJoint(jointCounts: DataFrame): DataFrame = {
     val spark = jointCounts.sparkSession
-    val joint = jointCounts.localCheckpoint()
-    try {
+    Blocks.scoped { scope =>
+      val joint = scope.checkpoint(jointCounts)
       val dims = joint.agg(coalesce(sum(col("__c")), lit(0L)).as("n"),
         countDistinct(struct(col("__a"))).as("r"),
         countDistinct(struct(col("__b"))).as("c")).head()
@@ -1781,7 +1778,7 @@ object Profile {
       import spark.implicits._
       Seq((n, (r - 1L) * (c - 1L), r6(chi2), v, r6(mi)))
         .toDF("n", "dof", "chi2_6", "cramers_v6", "mi6")
-    } finally Blocks.release(joint)
+    }
   }
 
   /** The full r×c observed/expected grid behind
@@ -1834,9 +1831,10 @@ object Profile {
   def categoricalAssociationByGroup(
       df: DataFrame, groupCol: String, colA: String,
       colB: String): DataFrame =
-    associationByGroupFromJoint(
-      groupJointCountsOf(df, groupCol, colA, colB).localCheckpoint(),
-      groupCol)
+    Blocks.scoped { s =>
+      associationByGroupFromJoint(
+        s.checkpoint(groupJointCountsOf(df, groupCol, colA, colB)), groupCol)
+    }
 
   /** One batch's GROUP-KEYED joint count table —
     * `(__g, __a, __b, __c)`, [[jointCountsOf]] with the group riding

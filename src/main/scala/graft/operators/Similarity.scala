@@ -785,15 +785,13 @@ object Similarity {
   def embeddingHealthReport(
       df: DataFrame,
       idCol: String,
-      vecCol: String): DataFrame = {
+      vecCol: String): DataFrame = Blocks.scoped { scope =>
     val spark = df.sparkSession
     // ONE corpus scan: the three actions below (dim stats, centroid,
     // norm/cos moments) reuse this checkpoint instead of re-scanning
-    // the embedding table per action; released before returning — the
-    // report itself is a one-row driver-local frame
-    val vecs = df.select(col(vecCol).as("__v")).filter(col("__v").isNotNull)
-      .localCheckpoint()
-    try {
+    // the embedding table per action
+    val vecs = scope.checkpoint(
+      df.select(col(vecCol).as("__v")).filter(col("__v").isNotNull))
     val dimStats = vecs.agg(
       count(lit(1)).as("n"),
       min(size(col("__v"))).as("dmin"),
@@ -841,6 +839,5 @@ object Similarity {
       if (nonZero == 0L) 0.0 else r6(s.getDouble(4) / nonZero)))
       .toDF("n", "dims", "n_zero_norm", "mean_norm6", "min_norm6",
         "max_norm6", "mean_cos_centroid6")
-    } finally graft.operators.Blocks.release(vecs)
   }
 }

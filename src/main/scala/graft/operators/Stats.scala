@@ -261,17 +261,16 @@ object Stats {
       idCol: String,
       nBoot: Int = 100,
       alpha: Double = 0.05,
-      salt: String = "boot"): DataFrame = {
+      salt: String = "boot"): DataFrame = Blocks.scoped { s =>
     require(nBoot >= 10, s"nBoot ($nBoot) must be >= 10 for a usable CI")
     require(alpha > 0.0 && alpha < 0.5, s"alpha ($alpha) must be in (0, 0.5)")
-    // eager checkpoint of the (nBoot+1)-row aggregated state: the
-    // readout reads it from THREE branches (means, base, percentile),
-    // and a MapPartitions lambda defeats exchange reuse — without this
-    // the corpus fold would run once per branch. The returned frame
-    // reads the checkpoint ([[Blocks.release]] once consumed).
+    // checkpoint of the (nBoot+1)-row aggregated state: the readout
+    // reads it from THREE branches (means, base, percentile), and a
+    // MapPartitions lambda defeats exchange reuse — without this the
+    // corpus fold would run once per branch
     ciFromBootPartials(
-      bootPartials(df, None, valueCol, idCol, nBoot, salt)
-        .localCheckpoint(), alpha)
+      s.checkpoint(bootPartials(df, None, valueCol, idCol, nBoot, salt)),
+      alpha)
   }
 
   /** The one-row CI readout over an accumulated (ungrouped)
@@ -354,14 +353,13 @@ object Stats {
       idCol: String,
       nBoot: Int = 100,
       alpha: Double = 0.05,
-      salt: String = "boot"): DataFrame = {
+      salt: String = "boot"): DataFrame = Blocks.scoped { s =>
     require(nBoot >= 10, s"nBoot ($nBoot) must be >= 10 for a usable CI")
     require(alpha > 0.0 && alpha < 0.5, s"alpha ($alpha) must be in (0, 0.5)")
-    // eager checkpoint — same three-branch reuse as the ungrouped CI
-    // (groups×(nBoot+1) rows); [[Blocks.release]] once consumed
-    groupCiFromBootPartials(
-      bootPartials(df, Some(groupCol), valueCol, idCol, nBoot, salt)
-        .localCheckpoint(), groupCol, alpha)
+    // same three-branch reuse as the ungrouped CI (groups×(nBoot+1) rows)
+    groupCiFromBootPartials(s.checkpoint(
+      bootPartials(df, Some(groupCol), valueCol, idCol, nBoot, salt)),
+      groupCol, alpha)
   }
 
   /** The per-group CI readout over accumulated GROUPED
@@ -1378,56 +1376,53 @@ object Stats {
   def theilDecomposition(
       df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
     val spark = df.sparkSession
-    val masses = guardedGroupMasses(df, groupCol, valueCol,
-      "theilDecomposition").localCheckpoint()
-    try {
-      val groups = masses.groupBy("__g").agg(
+    Blocks.scoped { s =>
+      val masses = s.checkpoint(guardedGroupMasses(df, groupCol, valueCol,
+        "theilDecomposition"))
+      val groups = s.checkpoint(masses.groupBy("__g").agg(
           count(lit(1)).as("__ng"),
-          sum(col("__x").cast("decimal(38,0)")).as("__tg"))
-        .localCheckpoint()
-      try {
-        val top = groups.agg(count(lit(1)).as("gs"),
-          coalesce(sum(col("__ng")), lit(0L)).as("n"),
-          coalesce(sum(col("__tg")), lit(0).cast("decimal(38,0)"))
-            .as("t")).head()
-        val (nGroups, n) = (top.getLong(0), top.getLong(1))
-        require(n > 0L, "theilDecomposition: no non-null masses")
-        val t = BigDecimal(top.getDecimal(2))
-        require(t > BigDecimal(0),
-          "theilDecomposition: total mass is zero — T is 0/0")
-        val m = t.toDouble
-        def dsum(c: org.apache.spark.sql.Column) =
-          sum(round(c, 12).cast("decimal(38,12)")).cast("double")
-        // total: the theilIndex term pass over the checkpointed masses
-        val shareAll = col("__x").cast("double") / lit(m)
-        val theil = masses.agg(dsum(when(col("__x") > 0L,
-            shareAll * log(lit(n.toDouble) * shareAll))
-          .otherwise(lit(0.0)))).head().getDouble(0)
-        // between: s_g · ln(s_g · n / n_g) over the group table
-        val sg = col("__tg").cast("double") / lit(m)
-        val between = groups.agg(dsum(when(col("__tg") > 0,
-            sg * log(sg * lit(n.toDouble) / col("__ng").cast("double")))
-          .otherwise(lit(0.0)))).head().getDouble(0)
-        // within: s_g · T_g — the per-group term pass weighted in one go:
-        // Σ_g s_g Σ_i (x/M_g)·ln(n_g·x/M_g) = Σ_i (x/M)·ln(n_g·x/M_g)
-        val withinTerm = when(col("__x") > 0L,
-            (col("__x").cast("double") / lit(m)) *
-              log(col("__ng").cast("double") *
-                col("__x").cast("double") / col("__tg").cast("double")))
-          .otherwise(lit(0.0))
-        // null-safe: the NULL group's s_g·T_g term must stay in the
-        // within sum or the spec-pinned between+within==total identity
-        // breaks on NULL-group corpora
-        val within = masses.alias("__l")
-          .join(groups.alias("__r"), col("__l.__g") <=> col("__r.__g"))
-          .agg(dsum(withinTerm)).head().getDouble(0)
-        def r6(x: Double) = BigDecimal(x)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        import spark.implicits._
-        Seq((n, nGroups, t.toLongExact, r6(theil), r6(between), r6(within)))
-          .toDF("n", "n_groups", "total", "theil6", "between6", "within6")
-      } finally Blocks.release(groups)
-    } finally Blocks.release(masses)
+          sum(col("__x").cast("decimal(38,0)")).as("__tg")))
+      val top = groups.agg(count(lit(1)).as("gs"),
+        coalesce(sum(col("__ng")), lit(0L)).as("n"),
+        coalesce(sum(col("__tg")), lit(0).cast("decimal(38,0)"))
+          .as("t")).head()
+      val (nGroups, n) = (top.getLong(0), top.getLong(1))
+      require(n > 0L, "theilDecomposition: no non-null masses")
+      val t = BigDecimal(top.getDecimal(2))
+      require(t > BigDecimal(0),
+        "theilDecomposition: total mass is zero — T is 0/0")
+      val m = t.toDouble
+      def dsum(c: org.apache.spark.sql.Column) =
+        sum(round(c, 12).cast("decimal(38,12)")).cast("double")
+      // total: the theilIndex term pass over the checkpointed masses
+      val shareAll = col("__x").cast("double") / lit(m)
+      val theil = masses.agg(dsum(when(col("__x") > 0L,
+          shareAll * log(lit(n.toDouble) * shareAll))
+        .otherwise(lit(0.0)))).head().getDouble(0)
+      // between: s_g · ln(s_g · n / n_g) over the group table
+      val sg = col("__tg").cast("double") / lit(m)
+      val between = groups.agg(dsum(when(col("__tg") > 0,
+          sg * log(sg * lit(n.toDouble) / col("__ng").cast("double")))
+        .otherwise(lit(0.0)))).head().getDouble(0)
+      // within: s_g · T_g — the per-group term pass weighted in one go:
+      // Σ_g s_g Σ_i (x/M_g)·ln(n_g·x/M_g) = Σ_i (x/M)·ln(n_g·x/M_g)
+      val withinTerm = when(col("__x") > 0L,
+          (col("__x").cast("double") / lit(m)) *
+            log(col("__ng").cast("double") *
+              col("__x").cast("double") / col("__tg").cast("double")))
+        .otherwise(lit(0.0))
+      // null-safe: the NULL group's s_g·T_g term must stay in the
+      // within sum or the spec-pinned between+within==total identity
+      // breaks on NULL-group corpora
+      val within = masses.alias("__l")
+        .join(groups.alias("__r"), col("__l.__g") <=> col("__r.__g"))
+        .agg(dsum(withinTerm)).head().getDouble(0)
+      def r6(x: Double) = BigDecimal(x)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      import spark.implicits._
+      Seq((n, nGroups, t.toLongExact, r6(theil), r6(between), r6(within)))
+        .toDF("n", "n_groups", "total", "theil6", "between6", "within6")
+    }
   }
 
   /** [[theilIndex]] off the SUM-foldable (v, cnt) value-count state:
@@ -1442,8 +1437,8 @@ object Stats {
   def theilFromCounts(counts: DataFrame): DataFrame = {
     val spark = counts.sparkSession
     val (gv, gc) = guardedMassCols("theilFromCounts")
-    val guarded = counts.select(gv, gc).localCheckpoint()
-    try {
+    Blocks.scoped { s =>
+      val guarded = s.checkpoint(counts.select(gv, gc))
       val top = guarded.agg(
         coalesce(sum(col("cnt")), lit(0L)).as("n"),
         coalesce(sum(col("v").cast("long").cast("decimal(38,0)") *
@@ -1475,6 +1470,6 @@ object Stats {
       import spark.implicits._
       Seq((n, t.toLongExact, r6(theil), norm))
         .toDF("n", "total", "theil6", "theil_norm6")
-    } finally Blocks.release(guarded)
+    }
   }
 }

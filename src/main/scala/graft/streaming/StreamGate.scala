@@ -2,8 +2,6 @@ package graft.streaming
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -344,9 +342,8 @@ object StreamGate {
     *     session's own partition count;
     *  1. run `plan` for the sink. A gate that materializes a frozen
     *     side once (an index, an anchor table) does it here through the
-    *     `pin` it is handed — still under the session's own partition
-    *     count — so those blocks are released with the gate, whether it
-    *     succeeds or a guard fires inside the materialization;
+    *     `pin` it is handed (the replay's [[Blocks.scoped]] checkpoint),
+    *     still under the session's own partition count;
     *  1. scope `spark.sql.shuffle.partitions` to [[replayPartitions]]
     *     of the written source (captured into the query's fresh
     *     checkpoint at `start()`, so only this replay is affected, and
@@ -356,45 +353,29 @@ object StreamGate {
     *  1. publish the run's [[ReplayObservability]];
     *  1. read the result back — a fold, or an append with an inferred
     *     schema, that committed no micro-batch fails as "<gate> saw no
-    *     micro-batches" — `localCheckpoint` it so it outlives the temp
-    *     dirs, and release the previous replay's blocks
-    *     ([[releaseLastReplay]]);
-    *  1. finally, on success or failure: restore the partition count,
-    *     release the pinned blocks, and delete every temp dir. */
+    *     micro-batches" — checkpoint it so it outlives the temp dirs,
+    *     free the blocks this replay persisted behind it, and release
+    *     the previous replay's blocks ([[releaseLastReplay]]);
+    *  1. finally, on success or failure: restore the partition count
+    *     and delete every temp dir. */
   private[graft] def replay(gate: String, source: Source)(
       plan: (DataFrame => DataFrame) => Sink): DataFrame =
     replayLock.synchronized {
       lastObs = None
       val spark = source.spark
-      val sc = spark.sparkContext
       val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
       def dir(kind: String): String = {
         val d = tempDir(s"graft_${gate}_$kind")
         dirs += d
         d
       }
-      val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def pin(df: DataFrame): DataFrame = {
-        val before = sc.getPersistentRDDs.keySet
-        try {
-          val m = df.localCheckpoint()
-          pinned += m
-          m
-        } catch {
-          case NonFatal(e) =>
-            // a guard raised inside the eager materialization leaves the
-            // half-built checkpoint registered: it goes with the gate
-            (sc.getPersistentRDDs -- before).values
-              .foreach(_.unpersist(blocking = false))
-            throw e
-        }
-      }
       val key = "spark.sql.shuffle.partitions"
       val prev = spark.conf.get(key)
-      try {
+      val mark = Blocks.rddIdMark(spark.sparkContext)
+      try Blocks.scoped { s =>
         val src = dir("src")
         source.write(src)
-        val sink = plan(pin)
+        val sink = plan(s.checkpoint)
         spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
         ProgressLedger.ensure(spark) // before start: sees every event
         val out = dir("out")
@@ -435,10 +416,14 @@ object StreamGate {
           case AppendSink(_, None, finish) => finish(lastCommit)
           case FoldSink(_, readout, _) => readout(lastCommit)
         }
-        releaseLastReplay(result.localCheckpoint())
+        val readBack = s.checkpoint(result)
+        // what the sink or readout persisted behind the result (a
+        // readout's prefix-sum checkpoint, say) is dead once it is read
+        // back, and would otherwise wait for the driver GC
+        Blocks.releaseSince(result, mark)
+        releaseLastReplay(readBack)
       } finally {
         spark.conf.set(key, prev)
-        pinned.foreach(Blocks.release)
         dirs.foreach(deleteRecursively)
       }
     }
@@ -540,6 +525,19 @@ object StreamGate {
       readout: DataFrame => DataFrame): DataFrame =
     replay(gate, fileFeed(feed, filesPerTrigger))(
       _ => FoldSink(foldStep(seed, fold), readout))
+
+  /** [[replayFoldState]] for a readout that scans the final state more
+    * than once: the readout gets the state checkpointed, and the
+    * replay frees that checkpoint once its result is read back. */
+  private def replayFoldStateCheckpointed(
+      gate: String,
+      feed: DataFrame,
+      filesPerTrigger: Int)(
+      seed: DataFrame => DataFrame,
+      fold: (DataFrame, DataFrame) => DataFrame,
+      readout: DataFrame => DataFrame): DataFrame =
+    replay(gate, fileFeed(feed, filesPerTrigger))(
+      pin => FoldSink(foldStep(seed, fold), state => readout(pin(state))))
 
   /** Replay through [[EventStream.sessionizeStream]]: every real
     * session closes (per-key sentinels) and comes back as a batch
@@ -1463,12 +1461,12 @@ object StreamGate {
       raterCol: String,
       labelCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayFleissMonitor",
+    replayFoldStateCheckpointed("replayFleissMonitor",
         ratings.select(itemCol, raterCol, labelCol), filesPerTrigger)(
       batch => Annotate.annotationCellsOf(
         batch, itemCol, raterCol, labelCol, "replayFleissMonitor"),
       Annotate.foldAnnotationCells,
-      state => Annotate.fleissKappaFromCells(state.localCheckpoint()))
+      Annotate.fleissKappaFromCells)
 
   /** Streaming Krippendorff-alpha monitor — the SAME maintained
     * (item, label) cell state as [[replayFleissMonitor]], read out
@@ -1483,12 +1481,12 @@ object StreamGate {
       raterCol: String,
       labelCol: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayAlphaMonitor",
+    replayFoldStateCheckpointed("replayAlphaMonitor",
         ratings.select(itemCol, raterCol, labelCol), filesPerTrigger)(
       batch => Annotate.annotationCellsOf(
         batch, itemCol, raterCol, labelCol, "replayAlphaMonitor"),
       Annotate.foldAnnotationCells,
-      state => Annotate.krippendorffAlphaFromCells(state.localCheckpoint()))
+      Annotate.krippendorffAlphaFromCells)
 
   /** Streaming vocabulary-saturation monitor — [[graft.operators
     * .Corpus.vocabRichness]] with the document feed as a FILE STREAM:
@@ -1557,12 +1555,12 @@ object StreamGate {
       lo: Double = 0.0,
       hi: Double = 1.0,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupCalibrationMonitor",
+    replayFoldStateCheckpointed("replayGroupCalibrationMonitor",
         scored.select(groupCol, labelCol, scoreCol), filesPerTrigger)(
       batch => Eval.groupCalibStateOf(
         batch, groupCol, labelCol, scoreCol, bins, lo, hi),
       Eval.foldGroupCalibState,
-      state => Eval.brierEceByGroupFromState(state.localCheckpoint(), groupCol))
+      Eval.brierEceByGroupFromState(_, groupCol))
 
   /** Streaming pairwise-win-matrix monitor — [[graft.operators
     * .Preference.pairwiseWinMatrix]] over the SAME maintained
@@ -1597,13 +1595,12 @@ object StreamGate {
       loserCol: String,
       iters: Int = 25,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayLeaderboardMonitor",
+    replayFoldStateCheckpointed("replayLeaderboardMonitor",
         comparisons.select(winnerCol, loserCol), filesPerTrigger)(
       batch => Preference.winCountsOf(
         batch, winnerCol, loserCol, "replayLeaderboardMonitor"),
       Preference.foldWinCounts,
-      state => Preference.bradleyTerryFromCounts(
-        state.localCheckpoint(), iters))
+      Preference.bradleyTerryFromCounts(_, iters))
 
   /** Streaming calibration monitor — [[graft.operators.Eval
     * .brierEce]] with the scored feed as a FILE STREAM: per-bucket
@@ -1694,12 +1691,11 @@ object StreamGate {
       colA: String,
       colB: String,
       filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupAssociationMonitor",
+    replayFoldStateCheckpointed("replayGroupAssociationMonitor",
         rows.select(groupCol, colA, colB), filesPerTrigger)(
       batch => Profile.groupJointCountsOf(batch, groupCol, colA, colB),
       Profile.foldGroupJointCounts,
-      state => Profile.associationByGroupFromJoint(
-        state.localCheckpoint(), groupCol))
+      Profile.associationByGroupFromJoint(_, groupCol))
 
   /** Streaming bootstrap-CI monitor — [[graft.operators.Stats
     * .bootstrapMeanCI]] with the outcome feed as a FILE STREAM: each

@@ -8,20 +8,10 @@ import org.apache.spark.sql.types.StructType
   * session-scoped pytest fixture (`/root/reference/tests/conftest.py:28-41`).
   */
 object SparkTestKit {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
+  lazy val spark: SparkSession = graft.Session.local("4")(
+    _.appName("graft-tests")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 
   /** Tuple-table builder: DDL schema + rows, the ScalaTest analogue of
     * the reference's `create_dataframe` (`ons_utils/testing.py:14-16`). */

@@ -823,6 +823,48 @@ class ExtensionsSpec extends AnyFunSuite {
       "final release should return the store to its starting set")
   }
 
+  test("Blocks.scoped: keeps what the result reads, frees the rest, owns only its own") {
+    import graft.operators.Blocks
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    def rddIds(df: DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+    def added(before: Set[Int]): Set[Int] = sc.getPersistentRDDs.keySet.toSet -- before
+    val base = table("k bigint", (0L until 20L).map(row(_)))
+    val before = sc.getPersistentRDDs.keySet.toSet
+    // a block the result reads is kept; one it does not read is freed
+    var unread: DataFrame = null
+    val out = Blocks.scoped { s =>
+      unread = s.checkpoint(base.filter(col("k") % 2 === 0))
+      s.checkpoint(base.filter(col("k") % 2 === 1)).select((col("k") * 2).as("k2"))
+    }
+    assert(added(before) == rddIds(out), "only the result's own checkpoint survives")
+    assert(!added(before).exists(rddIds(unread)))
+    assert(out.count() == 10L)
+    Blocks.release(out)
+    // the frame fields of a tuple result count as the result's frames
+    val (kept, n) = Blocks.scoped { s => (s.checkpoint(base), 1) }
+    assert(added(before) == rddIds(kept) && kept.count() == 20L && n == 1)
+    Blocks.release(kept)
+    // a result that is not a frame frees everything
+    assert(Blocks.scoped(s => s.checkpoint(base).count()) == 20L)
+    assert(added(before).isEmpty)
+    // release rejects frames the scope did not checkpoint, and the
+    // throw still frees what the scope owns
+    intercept[IllegalArgumentException] {
+      Blocks.scoped(s => s.release(s.checkpoint(base).filter(col("k") > 3)))
+    }
+    intercept[IllegalArgumentException](Blocks.scoped(_.release(base)))
+    intercept[IllegalArgumentException] {
+      Blocks.scoped { outer =>
+        val c = outer.checkpoint(base)
+        Blocks.scoped(inner => inner.release(c))
+      }
+    }
+    assert(added(before).isEmpty)
+  }
+
   test("keepBestPerCluster: max-score survivor, ties by id, singletons kept") {
     val docs = table("doc_id bigint, score int", Seq(
       row(1L, 5), row(2L, 9), row(3L, 9),   // cluster A: 2 wins (tie -> lower id)
@@ -857,28 +899,45 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("connected components: failure paths release every checkpoint") {
-    import graft.operators.Components
-    // Non-convergence is the deterministic failure path: a diameter-7
-    // chain cannot fixpoint in one min-label iteration, so the require
-    // fires — and must leave ZERO persisted RDDs behind (there is no
-    // returned frame to keep alive).
+  test("operator failure paths release every checkpoint") {
+    import graft.operators.{Classify, Components, Graph, Stats}
+    // Each call throws after (or while) it materializes a checkpoint.
+    // With no returned frame to keep alive, it must leave ZERO new
+    // persisted RDDs behind.
     val chain = table("a bigint, b bigint",
-      (0L until 7L).map(i => row(i, i + 1)))
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    intercept[IllegalArgumentException] {
-      Components.connectedComponents(chain, "a", "b", maxIters = 1)
+      (0L until 7L).map(i => row(i, i + 1))) // diameter 7
+    val nbDocs = table("text string, cls string", Seq(
+      row("red apple", "fruit"), row("green leaf", "plant"),
+      row("ripe pear", null)))
+    val negMass = table("g string, x bigint", Seq(row("a", 3L), row("b", -1L)))
+    val cases: Seq[(String, Class[_ <: Throwable], String, () => Any)] = Seq(
+      ("min-label components, maxIters = 1", classOf[IllegalArgumentException],
+        "did not converge",
+        () => Components.connectedComponents(chain, "a", "b", maxIters = 1)),
+      ("star components, maxRounds = 1", classOf[IllegalArgumentException],
+        "did not converge",
+        () => Components.connectedComponentsStar(chain, "a", "b", maxRounds = 1)),
+      ("pageRank on zero edges", classOf[IllegalArgumentException],
+        "at least one edge",
+        () => Graph.pageRank(chain.filter(lit(false)), "a", "b", iterations = 2)),
+      ("kCore, maxRounds = 1", classOf[IllegalArgumentException],
+        "did not converge",
+        () => Graph.kCore(chain, "a", "b", k = 2, maxRounds = 1)),
+      ("multinomial NB with a NULL label", classOf[IllegalArgumentException],
+        "NULL label",
+        () => Classify.trainMultinomialNB(nbDocs, "text", "cls")),
+      // the raise_error guard fires inside the eager checkpoint job
+      ("theilDecomposition with a negative mass", classOf[Exception],
+        "non-negative integer",
+        () => Stats.theilDecomposition(negMass, "g", "x")))
+    cases.foreach { case (label, expected, fragment, call) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[Throwable](call())
+      assert(expected.isInstance(e) && e.getMessage.contains(fragment),
+        s"$label: unexpected $e")
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$label leaked ${leaked.size} persisted RDDs")
     }
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty,
-      s"non-converged min-label components leaked ${leaked.size} persisted RDDs")
-    val beforeStar = spark.sparkContext.getPersistentRDDs.keySet
-    intercept[IllegalArgumentException] {
-      Components.connectedComponentsStar(chain, "a", "b", maxRounds = 1)
-    }
-    val leakedStar = spark.sparkContext.getPersistentRDDs.keySet -- beforeStar
-    assert(leakedStar.isEmpty,
-      s"non-converged star components leaked ${leakedStar.size} persisted RDDs")
   }
 
   test("multimodal: stub decode populates features; null payload survives") {

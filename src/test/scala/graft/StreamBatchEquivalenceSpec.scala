@@ -375,13 +375,7 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
 
   test("stream agreement monitors == batch kappa/alpha across cell folds") {
     import graft.operators.Annotate
-    // a complete 5-rater panel derived from events: one rating per
-    // (item, rater) by construction
-    val ratings = events.select(
-      (col("event_id") % 200L).as("item"),
-      concat(lit("r"), (col("event_id") / 200L).cast("int").cast("string"))
-        .as("rater"),
-      col("event_type").as("label"))
+    val ratings = ratingsPanel
     val sf = StreamGate.replayFleissMonitor(
       ratings.repartition(8), "item", "rater", "label",
       filesPerTrigger = 1).head()
@@ -686,8 +680,26 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
   }
 
+  /** A complete 5-rater panel derived from events: one rating per
+    * (item, rater) by construction. */
+  private def ratingsPanel = events.select(
+    (col("event_id") % 200L).as("item"),
+    concat(lit("r"), (col("event_id") / 200L).cast("int").cast("string"))
+      .as("rater"),
+    col("event_type").as("label"))
+
   test("replay gates keep at most one checkpointed result generation live") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
+    // a fold monitor whose readout checkpoints the final state: the
+    // returned frame's own checkpoint is the only block left behind
+    val fleiss = StreamGate.replayFleissMonitor(ratingsPanel.repartition(8),
+      "item", "rater", "label", filesPerTrigger = 1)
+    assert(fleiss.count() == 1L)
+    val own = fleiss.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+    val afterFleiss = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(afterFleiss == own, s"fleiss monitor left $afterFleiss, own $own")
     StreamGate.replayDedup(events, Seq("user_id"), "1 hour").count()
     StreamGate.replayDedup(events, Seq("event_type"), "1 hour").count()
     // one fold monitor and one foreachBatch gate ride the same contract
