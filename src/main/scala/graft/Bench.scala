@@ -112,6 +112,10 @@ object Bench {
       .asScala.filter(_.getType == java.lang.management.MemoryType.HEAP)
     def resetHeapPeaks(): Unit = heapPools.foreach(_.resetPeakUsage())
     def heapPeakMb(): Long = heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
+    // Blocking: the release work finishes before the next timed region
+    // (see the between-query reset below).
+    def releaseAll(): Unit = spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
     final case class Probe(calSec: Double, gcDeltaMs: Long, heapPeakMb: Long)
     // One UNTIMED calibration before the loop: the first Spark job of a
     // fresh JVM pays one-time session/codegen warmup, which would
@@ -139,6 +143,10 @@ object Bench {
         var err: Option[String] = None
         var r = 0
         while (r < runs && err.isEmpty) {
+          // untimed: free the previous run's residue, so the
+          // `cached_blocks` read after the last run counts that run's
+          // own blocks, not earlier runs' blocks awaiting the driver GC
+          if (r > 0) releaseAll()
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count(); times += (System.nanoTime() - t0) / 1e9 }
           catch {
@@ -166,8 +174,7 @@ object Bench {
         // async release lets block-removal work race into the NEXT
         // query's timed region across 32 scheduler threads. Waiting
         // here puts the cleanup in the untimed gap where it belongs.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        releaseAll()
         (name, median, mn, mx, err, sig, Probe(calSec, gcMs() - gc0, heapPeakMb()))
       }
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)

@@ -1269,24 +1269,26 @@ object Eval {
         col("__a").isNotNull && col("__b").isNotNull))
     val dims = base.agg(count(lit(1)).as("n"),
       countDistinct(col("__id")).as("d")).head()
-    require(dims.getLong(0) == dims.getLong(1),
-      s"rankBiasedOverlap: ${dims.getLong(0) - dims.getLong(1)} " +
+    val nTotal = dims.getLong(0)
+    require(nTotal == dims.getLong(1),
+      s"rankBiasedOverlap: ${nTotal - dims.getLong(1)} " +
         "duplicate id(s) — one row per ranked item")
+    require(nTotal > 0L, "rankBiasedOverlap: no doubly-scored rows")
     val ra = General.withContiguousRowIds(
       base.select(col("__id"), (-col("__a")).as("__na")),
       Seq("__na", "__id"), "__ra")
     val rb = General.withContiguousRowIds(
       base.select(col("__id"), (-col("__b")).as("__nb")),
       Seq("__nb", "__id"), "__rb")
-    val worse = ra.join(rb, Seq("__id"))
-      .select(greatest(col("__ra") + 1L, col("__rb") + 1L).as("__m"))
-    val nTotal = base.count()
-    require(nTotal > 0L, "rankBiasedOverlap: no doubly-scored rows")
     // X_d = #items with max(rankA, rankB) <= d: k-bounded counts, the
     // cumulative readout is driver arithmetic over <= k rows
-    val counts = worse.filter(col("__m") <= depth.toLong)
-      .groupBy("__m").agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val counts =
+      try ra.join(rb, Seq("__id"))
+        .select(greatest(col("__ra") + 1L, col("__rb") + 1L).as("__m"))
+        .filter(col("__m") <= depth.toLong)
+        .groupBy("__m").agg(count(lit(1)).as("c"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      finally Seq(ra, rb).foreach(Blocks.release)
     var x = 0L
     var acc = BigDecimal(0)
     var d = 1

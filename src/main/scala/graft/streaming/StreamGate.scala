@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -33,8 +34,8 @@ import graft.operators.{Annotate, AsOfJoin, Blocks, Components, Corpus, Dedup,
   * ==Replay lifecycle==
   * Every public `replay*` runs through ONE harness, [[replay]], which
   * writes the input to a per-run temp source dir, runs the stream
-  * under a replay-scoped `spark.sql.shuffle.partitions`
-  * ([[replayPartitions]]), publishes [[lastReplayObservability]], and
+  * under replay-scoped settings ([[replayConf]]), publishes
+  * [[lastReplayObservability]], and
   * materializes the result (`localCheckpoint`) before deleting every
   * temp dir — so replays are rerunnable, never share state, and leave
   * nothing on the temp volume (a bench session would otherwise pile up
@@ -46,6 +47,16 @@ import graft.operators.{Annotate, AsOfJoin, Blocks, Components, Corpus, Dedup,
   * event replays), a `foreachBatch` append (per-row-independent batch
   * operators run per micro-batch), or a `foreachBatch` fold into
   * versioned state (the monitors).
+  *
+  * A replay's checkpoint is scratch: it lives in a fresh local temp dir
+  * that is deleted when the replay returns, and no query ever restarts
+  * from it. So the replay runs without the durability a restart needs
+  * (FileContext renames, checksum files, and, where no flush sentinel
+  * needs it, the no-data micro-batch; see [[replayConf]]). Without
+  * libhadoop that durability made a KB-scale replay fork about 400
+  * processes (four `readlink` per FileContext rename, one `chmod` per
+  * created file) of the 476 it forked in all, and wait on them for
+  * most of its wall time.
   *
   * ==One-generation replay contract (all public replay* methods)==
   * A replay result is valid only until the NEXT replay runs on this
@@ -105,6 +116,27 @@ object StreamGate {
     val floor = math.min(4, math.max(1, prev))
     math.max(floor.toLong, math.min(math.max(1, prev).toLong, target)).toInt
   }
+
+  private val partitionsKey = "spark.sql.shuffle.partitions"
+
+  /** The settings [[replay]] scopes to a replay's stream, by key: the
+    * state partition count ([[replayPartitions]]) and the settings of a
+    * scratch checkpoint (see "Replay lifecycle" above):
+    *  - the FileSystem checkpoint manager renames with one
+    *    `File.renameTo`, atomic on the local temp dir; the FileContext
+    *    one first asks `getFileLinkStatus`, which the local filesystem
+    *    answers by forking `readlink` when libhadoop is not loaded;
+    *  - no checksum file next to each state and log file;
+    *  - the no-data micro-batch only where a flush sentinel's rows emit
+    *    in it ([[Source]]), and there even under a session that turned
+    *    it off. */
+  private[graft] def replayConf(
+      partitions: Int, flushBatch: Boolean): Map[String, String] = Map(
+    partitionsKey -> partitions.toString,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[FileSystemBasedCheckpointFileManager].getName,
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> flushBatch.toString)
 
   /** Best-effort recursive delete (replay hygiene must never turn a
     * green query into a failure — a locked file just stays behind).
@@ -302,11 +334,17 @@ object StreamGate {
 
   /** A replay's input: `write` lays the source files into the replay's
     * source dir; `open` reads that dir back as the streaming frame the
-    * sink drives. */
+    * sink drives. `flushBatch`: whether the stream needs Spark's no-data
+    * micro-batch, the one that runs after the data batch to advance the
+    * watermark and emit what it closed. Only a flush sentinel's rows
+    * emit there; without a sentinel the data batch already emits every
+    * row and that batch would only evict state of a query about to be
+    * deleted. */
   private[graft] final case class Source(
       spark: SparkSession,
       write: String => Unit,
-      open: String => DataFrame)
+      open: String => DataFrame,
+      flushBatch: Boolean = true)
 
   /** What a replay's stream drives, and how its result is read back. */
   private[graft] sealed trait Sink
@@ -344,20 +382,21 @@ object StreamGate {
     *     side once (an index, an anchor table) does it here through the
     *     `pin` it is handed (the replay's [[Blocks.scoped]] checkpoint),
     *     still under the session's own partition count;
-    *  1. scope `spark.sql.shuffle.partitions` to [[replayPartitions]]
-    *     of the written source (captured into the query's fresh
-    *     checkpoint at `start()`, so only this replay is affected, and
-    *     batch queries never see it: the replay runs to completion
-    *     before the restore), install the [[ProgressLedger]], and run
-    *     the stream to completion under the AvailableNow trigger;
+    *  1. scope the [[replayConf]] settings: [[replayPartitions]] of
+    *     the written source and a scratch checkpoint (captured by the
+    *     query at `start()`, so only this replay is affected, and batch
+    *     queries never see them: the replay runs to completion before
+    *     the restore), install the [[ProgressLedger]], and run the
+    *     stream to completion under the AvailableNow trigger;
     *  1. publish the run's [[ReplayObservability]];
     *  1. read the result back — a fold, or an append with an inferred
     *     schema, that committed no micro-batch fails as "<gate> saw no
     *     micro-batches" — checkpoint it so it outlives the temp dirs,
     *     free the blocks this replay persisted behind it, and release
     *     the previous replay's blocks ([[releaseLastReplay]]);
-    *  1. finally, on success or failure: restore the partition count
-    *     and delete every temp dir. */
+    *  1. finally, on success or failure: restore each scoped key to
+    *     its prior value (unset if it was unset) and delete every temp
+    *     dir, the scratch checkpoint among them. */
   private[graft] def replay(gate: String, source: Source)(
       plan: (DataFrame => DataFrame) => Sink): DataFrame =
     replayLock.synchronized {
@@ -369,14 +408,19 @@ object StreamGate {
         dirs += d
         d
       }
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.get(key)
+      val prior = scala.collection.mutable.Map.empty[String, Option[String]]
       val mark = Blocks.rddIdMark(spark.sparkContext)
       try Blocks.scoped { s =>
         val src = dir("src")
         source.write(src)
         val sink = plan(s.checkpoint)
-        spark.conf.set(key, replayPartitions(prev.toInt, src).toString)
+        val callerConf = spark.conf.getAll // the keys set, not defaults
+        replayConf(
+          replayPartitions(spark.conf.get(partitionsKey).toInt, src),
+          source.flushBatch).foreach { case (k, v) =>
+          prior(k) = callerConf.get(k)
+          spark.conf.set(k, v)
+        }
         ProgressLedger.ensure(spark) // before start: sees every event
         val out = dir("out")
         val committed = new AtomicReference[String](null)
@@ -423,7 +467,10 @@ object StreamGate {
         Blocks.releaseSince(result, mark)
         releaseLastReplay(readBack)
       } finally {
-        spark.conf.set(key, prev)
+        prior.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
         dirs.foreach(deleteRecursively)
       }
     }
@@ -482,7 +529,8 @@ object StreamGate {
     }
     val open = (src: String) =>
       op(EventStream.readEventStream(spark, src, eventSchema(spark)))
-    replay(gate, Source(spark, write, open))(_ => StreamSink)
+    replay(gate, Source(spark, write, open, flushBatch = flush.isDefined))(
+      _ => StreamSink)
   }
 
   /** File-feed source of the `foreachBatch` gates: `feed` coalesced to 8

@@ -113,6 +113,16 @@ class OrdinalAgreementSpec extends AnyFunSuite {
     }
   }
 
+  test("rankBiasedOverlap: leaves no checkpoint registered") {
+    val df = table("id bigint, sa double, sb double",
+      (0 until 20).map(i => row(i.toLong, i.toDouble, (i % 7).toDouble)))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val got = Eval.rankBiasedOverlap(df, "id", "sa", "sb", depth = 5).head()
+    assert(got.getLong(0) == 20L)
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"rankBiasedOverlap left persisted RDDs $left")
+  }
+
   test("cohenKappaByGroup == filtered ungrouped; NULL group kept") {
     val df = table("g string, a string, b string", Seq(
       row("x", "l1", "l1"), row("x", "l1", "l2"), row("x", "l2", "l2"),

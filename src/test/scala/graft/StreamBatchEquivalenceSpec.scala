@@ -801,20 +801,55 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
   }
 
   test("a replay leaves spark.sql.shuffle.partitions as it found it") {
+    // ... and every other replay-scoped key: set ones keep their value,
+    // unset ones stay unset
+    val keys = StreamGate.replayConf(1, flushBatch = false).keySet
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val fileManager = "spark.sql.streaming.checkpointFileManagerClass"
+    val prior = spark.conf.getAll
+    def scoped() = spark.conf.getAll.filter { case (k, _) => keys(k) }
     // 7, not the suite's 4: a KB-scale replay scopes itself to 4, so
-    // only a different session value shows a missed restore
+    // only a different session value shows a missed restore; likewise
+    // the no-data batch, which replayDedup turns off
     spark.conf.set(key, "7")
+    spark.conf.set(noData, "true")
+    val before = scoped()
+    assert(before == Map(key -> "7", noData -> "true"), before.toString)
+    def check(when: String): Unit = {
+      assert(scoped() == before, when)
+      assert(spark.conf.getOption(fileManager).isEmpty, when)
+    }
     try {
       assert(StreamGate.replayDedup(events, Seq("user_id"), "1 hour")
         .count() > 0)
-      assert(spark.conf.get(key) == "7", "after a successful replay")
+      check("after a successful replay")
       guardTrips.foreach { case (label, trip) =>
         intercept[Exception](trip())
-        assert(spark.conf.get(key) == "7", s"after a failed $label replay")
+        check(s"after a failed $label replay")
       }
-    } finally spark.conf.set(key, prev)
+    } finally Seq(key, noData).foreach(k =>
+      prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+  }
+
+  test("the no-data micro-batch runs only where a flush sentinel needs it") {
+    def batches = StreamGate.lastReplayObservability.map(_.microBatches)
+    // no sentinel: the data batch emits every row
+    assert(StreamGate.replayDedup(events, Seq("user_id"), "1 hour")
+      .count() > 0)
+    assert(batches.contains(1L), s"dedup: $batches")
+    assert(StreamGate.replayIntervalJoin(events, "click", "purchase",
+      maxGap = "2 hours", watermark = "4 hours").count() > 0)
+    assert(batches.contains(1L), s"interval join: $batches")
+    // a sentinel's rows emit only in the batch after the data batch
+    val h = 3600L * 1000000
+    assert(StreamGate.replayWindowedCounts(events, "5 minutes", "5 minutes",
+      "10 minutes", horizonUs = h).count() > 0)
+    assert(batches.exists(_ >= 2L), s"windowed counts: $batches")
+    assert(StreamGate.replayLeftOuterIntervalJoin(events, "view", "purchase",
+      maxGap = "2 hours", watermark = "4 hours", horizonUs = 8L * h)
+      .count() > 0)
+    assert(batches.exists(_ >= 2L), s"left-outer interval join: $batches")
   }
 
   test("replayPartitions: empty, unreadable, and multi-GB sources") {
