@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.functions.{ArrayFunctions, TextFunctions}
-import graft.operators.{AsOfJoin, Concat, Dedup, Events, Fuzzy, General, Grouped, Multimodal, Profile, Reshape, Sessionize, Similarity, Stats}
+import graft.operators.{AsOfJoin, Blocks, Concat, Dedup, Events, Fuzzy, General, Grouped, Multimodal, Profile, Reshape, Sessionize, Similarity, Stats}
 import graft.sources.{Sinks, Tables}
 
 /** Driver contract — one `queries` entry (+ DuckDB `oracleSql`) per
@@ -2801,8 +2801,8 @@ object SparkEntry {
     // localCheckpoint severs the scan so the quarantine branch may
     // reference only the corrupt column (Spark disallows that straight
     // off a raw CSV scan)
-    val raw = Tables.readCsvWithQuarantine(s, dirPath, schema)
-      .localCheckpoint()
+    val raw = Blocks.checkpoint(
+      Tables.readCsvWithQuarantine(s, dirPath, schema))
     val g = raw.filter(col("_corrupt_record").isNull)
       .agg(count(lit(1)).as("n"), min(col("n_name")).as("sample"))
       .select(lit("good").as("kind"), col("n"), col("sample"))
@@ -3921,11 +3921,11 @@ object SparkEntry {
     * full recompute's exactly, merges and chain extensions included. */
   private def q194IncrementalComponents(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Components
-    val pairs = Dedup.minHashNearDupPairs(Tables.documents(s, dir),
-        "doc_id", "text", shingleN = 3, numHashes = 64, bands = 16,
-        threshold = 0.5)
-      .select("id_a", "id_b")
-      .localCheckpoint() // one detection run feeds both halves
+    // one detection run feeds both halves
+    val pairs = Blocks.checkpoint(Dedup.minHashNearDupPairs(
+        Tables.documents(s, dir), "doc_id", "text", shingleN = 3,
+        numHashes = 64, bands = 16, threshold = 0.5)
+      .select("id_a", "id_b"))
     val old = pairs.filter((col("id_a") + col("id_b")) % 2 === 0)
     val fresh = pairs.filter((col("id_a") + col("id_b")) % 2 =!= 0)
     val prev = Components.connectedComponents(old, "id_a", "id_b")
@@ -4718,18 +4718,17 @@ object SparkEntry {
   private def q235IncrementalEntities(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Components, Linkage}
     val (leftR, rightR, cands) = fsLinkageFixture(s, dir)
-    val matches = Linkage.fellegiSunterScores(cands, "id_a", "id_b",
-        leftR, "cid", rightR, "cid",
+    // materialized ONCE (match-bounded — two ids per matched pair,
+    // never the candidate table): BOTH the base-shard CC and the
+    // delta fold consume the match table, and each otherwise re-runs
+    // the full Fellegi–Sunter candidate join + field scoring
+    val matches = Blocks.checkpoint(Linkage.fellegiSunterScores(cands,
+        "id_a", "id_b", leftR, "cid", rightR, "cid",
         Seq(Linkage.FsField("c_mktsegment", 0.9, 0.2),
           Linkage.FsField("c_nationkey", 0.95, 0.04),
           Linkage.FsField("c_name", 0.99, 0.001)),
         matchThreshold = 5.0)
-      .filter(col("is_match")).select("id_a", "id_b")
-      // materialized ONCE (match-bounded — two ids per matched pair,
-      // never the candidate table): BOTH the base-shard CC and the
-      // delta fold consume the match table, and each otherwise re-runs
-      // the full Fellegi–Sunter candidate join + field scoring
-      .localCheckpoint()
+      .filter(col("is_match")).select("id_a", "id_b"))
     val prev = Components.connectedComponents(
       matches.filter(col("id_a") % 2 === 0), "id_a", "id_b")
     val records = leftR.select(col("cid"))
@@ -5027,7 +5026,7 @@ object SparkEntry {
     // state, not re-run the two corpus folds per branch (the
     // bootstrapMeanCI argument)
     Stats.ciFromBootPartials(
-      Stats.foldBootPartials(base, delta).localCheckpoint(), 0.05)
+      Blocks.checkpoint(Stats.foldBootPartials(base, delta)), 0.05)
   }
 
   // ---------------------------------------------------------------- q251
@@ -5044,7 +5043,7 @@ object SparkEntry {
       ev.filter(col("event_id") % 10 >= 8), "event_type", "value",
       "event_id", 100, "boot2")
     Stats.groupCiFromBootPartials(
-      Stats.foldBootPartials(base, delta).localCheckpoint(),
+      Blocks.checkpoint(Stats.foldBootPartials(base, delta)),
       "event_type", 0.05)
   }
 
@@ -5293,10 +5292,9 @@ object SparkEntry {
       snapshotAssociationSlice(s, dir, pred),
       "snapshot", "event_type", "user_bucket")
     Profile.associationByGroupFromJoint(
-      Profile.foldGroupJointCounts(
-          slice(col("event_id") % 10 < 8),
-          slice(col("event_id") % 10 >= 8))
-        .localCheckpoint(),
+      Blocks.checkpoint(Profile.foldGroupJointCounts(
+        slice(col("event_id") % 10 < 8),
+        slice(col("event_id") % 10 >= 8))),
       "snapshot")
   }
 
@@ -5475,9 +5473,8 @@ object SparkEntry {
     def cells(pred: Column): DataFrame = Annotate.annotationCellsOf(
       r.filter(pred), "doc_id", "rater", "label", "q280")
     Annotate.fleissKappaFromCells(
-      Annotate.foldAnnotationCells(
-          cells(col("rater") < "r3"), cells(col("rater") >= "r3"))
-        .localCheckpoint())
+      Blocks.checkpoint(Annotate.foldAnnotationCells(
+        cells(col("rater") < "r3"), cells(col("rater") >= "r3"))))
   }
 
   // ---------------------------------------------------------------- q281
@@ -5508,10 +5505,9 @@ object SparkEntry {
     def cells(pred: Column): DataFrame = Annotate.annotationCellsOf(
       r.filter(pred), "doc_id", "rater", "label", "q282")
     Annotate.krippendorffAlphaFromCells(
-      Annotate.foldAnnotationCells(
-          cells(pmod(col("doc_id"), lit(2L)) === 0L),
-          cells(pmod(col("doc_id"), lit(2L)) === 1L))
-        .localCheckpoint())
+      Blocks.checkpoint(Annotate.foldAnnotationCells(
+        cells(pmod(col("doc_id"), lit(2L)) === 0L),
+        cells(pmod(col("doc_id"), lit(2L)) === 1L))))
   }
 
   // ---------------------------------------------------------------- q283
@@ -5537,10 +5533,9 @@ object SparkEntry {
     def counts(pred: Column): DataFrame = Preference.winCountsOf(
       preferencePairsSlice(s, dir, pred), "winner", "loser", "q284")
     Preference.bradleyTerryFromCounts(
-      Preference.foldWinCounts(
-          counts(pmod(col("a.event_id"), lit(20L)) < 16L),
-          counts(pmod(col("a.event_id"), lit(20L)) >= 16L))
-        .localCheckpoint())
+      Blocks.checkpoint(Preference.foldWinCounts(
+        counts(pmod(col("a.event_id"), lit(20L)) < 16L),
+        counts(pmod(col("a.event_id"), lit(20L)) >= 16L))))
   }
 
   // ---------------------------------------------------------------- q285
@@ -5565,10 +5560,9 @@ object SparkEntry {
     def state(pred: Column): DataFrame = Eval.calibStateOf(
       scored.filter(pred), "label", "s")
     Eval.brierEceFromState(
-      Eval.foldCalibState(
-          state(pmod(col("doc_id"), lit(2L)) === 0L),
-          state(pmod(col("doc_id"), lit(2L)) === 1L))
-        .localCheckpoint())
+      Blocks.checkpoint(Eval.foldCalibState(
+        state(pmod(col("doc_id"), lit(2L)) === 0L),
+        state(pmod(col("doc_id"), lit(2L)) === 1L))))
   }
 
   // ---------------------------------------------------------------- q287
@@ -5647,10 +5641,9 @@ object SparkEntry {
     def state(pred: Column): DataFrame = Eval.groupCalibStateOf(
       scored.filter(pred), "source", "label", "s")
     Eval.brierEceByGroupFromState(
-      Eval.foldGroupCalibState(
-          state(pmod(col("doc_id"), lit(2L)) === 0L),
-          state(pmod(col("doc_id"), lit(2L)) === 1L))
-        .localCheckpoint(),
+      Blocks.checkpoint(Eval.foldGroupCalibState(
+        state(pmod(col("doc_id"), lit(2L)) === 0L),
+        state(pmod(col("doc_id"), lit(2L)) === 1L))),
       "source")
   }
 

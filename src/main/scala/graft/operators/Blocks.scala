@@ -1,18 +1,21 @@
 package graft.operators
 
-import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
-/** The one owner of the executor blocks operators materialize.
+/** The one owner of the executor blocks the library materializes.
   *
-  * Ownership rule: a block an operator call materializes belongs to
-  * that call. Operator-level checkpoints go through [[scoped]], which
-  * frees every block the call made when it returns, except the blocks
-  * its returned frame still reads, and frees all of them when it
-  * throws. A returned frame that reads its own blocks hands them to the
+  * Ownership rule: this object is the only caller of Spark's
+  * `localCheckpoint`, and every checkpoint made through it belongs to
+  * the innermost [[scoped]] call open on the calling thread. That scope
+  * frees every block it owns when it returns, except the blocks its
+  * returned frame still reads, and frees all of them when it throws. A
+  * nested scope hands the blocks its result reads up to the enclosing
+  * scope, so a chain of operators and primitives frees everything it
+  * made when the outermost scope returns. With no scope open a
+  * checkpoint has no owner: the returned frame hands its blocks to the
   * caller, who frees them with [[release]] (or [[consuming]]) once the
   * frame is fully consumed.
   *
@@ -22,35 +25,22 @@ import org.apache.spark.storage.StorageLevel
   * minutes-to-never. Dead blocks compound into block-manager and disk
   * pressure that slows every job AFTER the one that made them.
   *
-  * Primitives whose returned frames read their blocks by design
-  * ([[General.withContiguousRowIds]], [[General.withRunningTotal]] and
-  * their siblings) and `persist` in [[Ivf]]/[[Pq]] training manage
-  * their own blocks; the caller releases those frames explicitly.
+  * `persist` in [[Ivf]]/[[Pq]] training still manages its own blocks.
   */
 object Blocks {
 
+  /** The innermost open [[scoped]] call on this thread, or null. Not
+    * inherited: a thread a scope's body starts (a stream's
+    * `foreachBatch` thread) never writes into that scope. */
+  private val current = new ThreadLocal[Scope]
+
   /** The checkpoints one [[scoped]] call owns. Driver-side bookkeeping
     * only: it launches no Spark job of its own. */
-  final class Scope private[Blocks] () {
+  final class Scope private[Blocks] (private[Blocks] val parent: Scope) {
     private val owned = scala.collection.mutable.Map.empty[Int, RDD[_]]
 
-    /** `df.localCheckpoint()` (eager), owned by this scope. If the
-      * materialization throws (a `raise_error` guard inside the plan, a
-      * failed task), the half-built RDD Spark already registered is
-      * freed before the error propagates. That RDD is found as a
-      * persisted RDD newer than the call, so an RDD another driver
-      * thread persists during a failing call is freed too. */
-    def checkpoint(df: DataFrame): DataFrame = {
-      val sc = df.sparkSession.sparkContext
-      val mark = rddIdMark(sc)
-      val c = try df.localCheckpoint() catch {
-        case t: Throwable =>
-          sc.getPersistentRDDs.filter(_._1 > mark).values.foreach(free)
-          throw t
-      }
-      leafRdds(c).foreach(r => owned(r.id) = r)
-      c
-    }
+    /** [[Blocks.checkpoint]], owned by this scope. */
+    def checkpoint(df: DataFrame): DataFrame = eager(this, df)
 
     /** Free a checkpoint this scope made and the caller no longer
       * needs (a superseded loop generation). Any other frame is
@@ -63,32 +53,82 @@ object Blocks {
         "Blocks.Scope.release: the frame is not a checkpoint of this scope")
     }
 
-    private[Blocks] def freeAllBut(keep: Seq[Dataset[_]]): Unit = {
+    private[Blocks] def own(rdds: Iterable[RDD[_]]): Unit =
+      rdds.foreach(r => owned(r.id) = r)
+
+    /** Free every owned block `keep` does not read; hand the rest to
+      * the enclosing scope, if any. */
+    private[Blocks] def close(keep: Seq[Dataset[_]]): Unit = {
       val kept = reachable(keep)
-      owned.values.filterNot(r => kept.contains(r.id)).foreach(free)
+      val (live, dead) = owned.values.partition(r => kept.contains(r.id))
+      dead.foreach(free)
+      if (parent != null) parent.own(live)
     }
   }
 
-  /** Run `body` with a fresh [[Scope]] and apply the ownership rule
-    * when it exits. On a normal return, the scope frees every block it
-    * owns that the result does not read. The result's frames are the
-    * result itself when it is a `Dataset`, or the `Dataset` fields of a
-    * tuple or case class (not of a collection); any other result frees
-    * every block. On a throw, the scope frees every block it owns. */
+  /** Run `body` with a fresh [[Scope]], the current one on this thread
+    * until `body` exits, and apply the ownership rule when it exits.
+    * On a normal return, the scope frees every block it owns that the
+    * result does not read. The result's frames are the result itself
+    * when it is a `Dataset`, or the `Dataset` fields of a tuple or case
+    * class (not of a collection); any other result frees every block.
+    * On a throw, the scope frees every block it owns. */
   def scoped[T](body: Scope => T): T = {
-    val scope = new Scope
+    val scope = new Scope(current.get)
+    current.set(scope)
     val result = try body(scope) catch {
       case t: Throwable =>
-        scope.freeAllBut(Nil)
+        scope.close(Nil)
         throw t
-    }
-    scope.freeAllBut(result match {
+    } finally current.set(scope.parent)
+    scope.close(result match {
       case ds: Dataset[_] => Seq(ds)
       case p: Product if !p.isInstanceOf[Iterable[_]] =>
         p.productIterator.collect { case ds: Dataset[_] => ds }.toSeq
       case _ => Nil
     })
     result
+  }
+
+  /** `df.localCheckpoint()` (eager), owned by the innermost open
+    * [[scoped]] call on this thread, if any. If the materialization
+    * throws (a `raise_error` guard inside the plan, a failed task), the
+    * half-built RDD Spark already registered is freed before the error
+    * propagates. That RDD is found as a persisted RDD newer than the
+    * call, so an RDD another driver thread persists during a failing
+    * call is freed too. The eager form stays Spark's `Dataset` one:
+    * observed metrics ride its SQL execution. */
+  private[graft] def checkpoint(df: DataFrame): DataFrame =
+    eager(current.get, df)
+
+  /** `df.localCheckpoint(eager = false)`, owned as [[checkpoint]]'s:
+    * the first action that reads the frame materializes it. */
+  private[graft] def lazyCheckpoint(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint(eager = false)
+    Option(current.get).foreach(_.own(leafRdds(c)))
+    c
+  }
+
+  /** `rdd.localCheckpoint()`, owned as [[checkpoint]]'s: the first
+    * job over `rdd` materializes it. */
+  private[graft] def lazyCheckpoint[T](rdd: RDD[T]): RDD[T] = {
+    rdd.localCheckpoint()
+    Option(current.get).foreach(_.own(Seq(rdd)))
+    rdd
+  }
+
+  private def eager(owner: Scope, df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    // RDD ids only grow; reading no registry here keeps weakly held
+    // garbage RDDs collectable
+    val mark = sc.emptyRDD[Unit].id
+    val c = try df.localCheckpoint() catch {
+      case t: Throwable =>
+        sc.getPersistentRDDs.filter(_._1 > mark).values.foreach(free)
+        throw t
+    }
+    Option(owner).foreach(_.own(leafRdds(c)))
+    c
   }
 
   /** Unpersist every persisted RDD reachable from `df`'s RDD-backed
@@ -112,41 +152,9 @@ object Blocks {
     * checkpoint, and releasing either breaks the other with Spark's
     * cannot-recompute error. Release only after ALL frames descending
     * from the shared intermediate are consumed, not just this one — or
-    * use [[releaseExcept]] to free a consumed sibling while explicitly
-    * keeping every block the survivors still reach. */
-  def release(df: DataFrame): Unit = releaseExcept(df, Nil)
-
-  /** [[release]] minus the blocks any `live` frame still needs: frees
-    * every persisted RDD reachable from `df` EXCEPT those also
-    * reachable from a frame in `live` — the API form of the
-    * shared-lineage hazard documented on [[release]]. Two frames built
-    * over one [[General.withContiguousRowIds]] intermediate share its
-    * checkpoint; `release(first)` would kill the second with Spark's
-    * cannot-recompute error, while `releaseExcept(first, Seq(second))`
-    * frees only what the first owns outright and leaves every shared
-    * block for the survivors. When the last sibling is consumed, a
-    * plain [[release]] on it frees the shared remainder.
-    *
-    * The ownership computation is driver-side plan/RDD-graph walking
-    * only (no jobs, no data movement), so calling it per consumed frame
-    * in a long pipeline costs microseconds. */
-  def releaseExcept(df: DataFrame, live: Seq[DataFrame]): Unit =
-    (reachable(Seq(df)) -- reachable(live).keys).values
-      .filter(_.getStorageLevel != StorageLevel.NONE)
-      .foreach(free)
-
-  /** An id every RDD made after this call exceeds (RDD ids only grow).
-    * It reads no registry: walking `getPersistentRDDs` on every call
-    * keeps weakly held garbage RDDs alive, so their blocks would wait
-    * longer for the driver GC. */
-  private[graft] def rddIdMark(sc: SparkContext): Int = sc.emptyRDD[Unit].id
-
-  /** [[release]] limited to the RDDs made after `mark` ([[rddIdMark]]):
-    * frees what a call built behind a frame it has since materialized
-    * (a nested primitive's checkpoint, say), never a block its caller
-    * already held. */
-  private[graft] def releaseSince(df: DataFrame, mark: Int): Unit =
-    reachable(Seq(df)).filter(_._1 > mark).values
+    * build them inside one [[scoped]] call that returns the survivor. */
+  def release(df: DataFrame): Unit =
+    reachable(Seq(df)).values
       .filter(_.getStorageLevel != StorageLevel.NONE)
       .foreach(free)
 

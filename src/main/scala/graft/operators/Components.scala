@@ -287,16 +287,4 @@ object Components {
         .select(col("node"), coalesce(col("comp"), col("node")).as("comp"))
     }
   }
-
-  /** Loan-pattern [[connectedComponentsStar]] — the star-contraction
-    * twin of [[withConnectedComponents]], releasing BOTH block sets the
-    * returned plan reads (the node set and the final star forest) once
-    * `use` has consumed the labels. Same execute-before-return
-    * contract. */
-  def withConnectedComponentsStar[T](
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      maxRounds: Int = 50)(use: DataFrame => T): T =
-    Blocks.consuming(connectedComponentsStar(edges, srcCol, dstCol, maxRounds))(use)
 }

@@ -1282,13 +1282,11 @@ object Eval {
       Seq("__nb", "__id"), "__rb")
     // X_d = #items with max(rankA, rankB) <= d: k-bounded counts, the
     // cumulative readout is driver arithmetic over <= k rows
-    val counts =
-      try ra.join(rb, Seq("__id"))
-        .select(greatest(col("__ra") + 1L, col("__rb") + 1L).as("__m"))
-        .filter(col("__m") <= depth.toLong)
-        .groupBy("__m").agg(count(lit(1)).as("c"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      finally Seq(ra, rb).foreach(Blocks.release)
+    val counts = ra.join(rb, Seq("__id"))
+      .select(greatest(col("__ra") + 1L, col("__rb") + 1L).as("__m"))
+      .filter(col("__m") <= depth.toLong)
+      .groupBy("__m").agg(count(lit(1)).as("c"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     var x = 0L
     var acc = BigDecimal(0)
     var d = 1

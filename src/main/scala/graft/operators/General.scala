@@ -93,10 +93,11 @@ object General {
     * deserializes every row to external objects and re-converts them
     * back one field at a time (guide §1.4's `.rdd` trap) — per-row
     * boxing on a corpus-length frame, for arithmetic a projection can
-    * do. The checkpointed blocks outlive the call (the returned plan
-    * reads them) and are freed by the ContextCleaner after driver GC —
-    * a long-lived session that wants them gone the moment the result is
-    * consumed calls [[Blocks.release]] on the returned frame.
+    * do. The checkpoint outlives the call (the returned plan reads it)
+    * and belongs to the enclosing [[Blocks.scoped]] call, which frees it
+    * once nothing that call returns reads it. Outside any scope the
+    * caller frees it with [[Blocks.release]] once the result is
+    * consumed. The other primitives here own their checkpoints alike.
     *
     * Deterministic when `sortCols` is a total order (unique keys). */
   def withContiguousRowIds(
@@ -118,7 +119,7 @@ object General {
     // the sort materializes INSIDE it — one job where eager paid a
     // materialization job plus a separate counts job (two full
     // scheduler round-trips per call, ~95 query paths deep).
-    val sorted = df.sort(sortCols.map(col): _*).localCheckpoint(eager = false)
+    val sorted = Blocks.lazyCheckpoint(df.sort(sortCols.map(col): _*))
     // mid = (pid << 33) + 0-based record number within the partition
     // (monotonically_increasing_id's documented-as-implementation-note
     // layout). The per-partition max(mid) rides the counts pass as one
@@ -172,7 +173,7 @@ object General {
     *
     * Deterministic when (groups ++ orderCols) is a total order — the
     * [[withContiguousRowIds]] condition. The returned frame reads the
-    * sort checkpoint ([[Blocks.release]] once consumed). */
+    * sort checkpoint, owned as in [[withContiguousRowIds]]. */
   def withContiguousRowIdsPerGroup(
       df: DataFrame,
       groupCols: Seq[String],
@@ -218,7 +219,7 @@ object General {
       .withColumn(valueCol, col(valueCol).cast(LongType))
     val schema = StructType(
       sorted.schema.fields :+ StructField(outCol, LongType, nullable = false))
-    val rdd = sorted.rdd.localCheckpoint()
+    val rdd = Blocks.lazyCheckpoint(sorted.rdd)
     val partTotals = rdd
       .mapPartitionsWithIndex((i, it) =>
         Iterator((i, it.foldLeft(0L)((acc, r) => acc + r.getLong(vIdx)))))
@@ -260,7 +261,7 @@ object General {
     val m = vIdxs.length
     val schema = StructType(casted.schema.fields ++
       outCols.map(c => StructField(c, LongType, nullable = false)))
-    val rdd = casted.rdd.localCheckpoint()
+    val rdd = Blocks.lazyCheckpoint(casted.rdd)
     val partTotals = rdd
       .mapPartitionsWithIndex { (i, it) =>
         val acc = new Array[Long](m)
@@ -311,7 +312,7 @@ object General {
     val sorted = df.sort(sortCols.map(col): _*)
     val schema = StructType(sorted.schema.fields :+
       StructField(outCol, df.schema(valueCol).dataType, nullable = true))
-    val rdd = sorted.rdd.localCheckpoint()
+    val rdd = Blocks.lazyCheckpoint(sorted.rdd)
     val lasts = rdd
       .mapPartitionsWithIndex { (i, it) =>
         var last: Any = null

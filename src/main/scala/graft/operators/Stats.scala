@@ -722,16 +722,15 @@ object Stats {
     * Negative masses fail loudly at scan time; NULL masses are
     * excluded. Output: one row — (`n`, `total`, `gini6`). */
   def giniIndex(
-      df: DataFrame, valueCol: String, idCol: String): DataFrame = {
-    val ranked = giniRankedMasses(df, valueCol, idCol)
-    val row = giniSumsPlan(ranked).head()
-    Blocks.release(ranked)
-    val n = row.getLong(0)
-    require(n > 0L, "giniIndex: no non-null masses")
-    giniScalarReadout(df.sparkSession, n, row.getDecimal(1),
-      row.getDecimal(2).multiply(java.math.BigDecimal.valueOf(2L)),
-      "giniIndex")
-  }
+      df: DataFrame, valueCol: String, idCol: String): DataFrame =
+    Blocks.scoped { _ =>
+      val row = giniSumsPlan(giniRankedMasses(df, valueCol, idCol)).head()
+      val n = row.getLong(0)
+      require(n > 0L, "giniIndex: no non-null masses")
+      giniScalarReadout(df.sparkSession, n, row.getDecimal(1),
+        row.getDecimal(2).multiply(java.math.BigDecimal.valueOf(2L)),
+        "giniIndex")
+    }
 
   /** The ONE scalar Gini readout every ungrouped path runs —
     * `(2Σi·xᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ)` over exact decimals, one double
@@ -822,7 +821,7 @@ object Stats {
     * contract): negative or fractional grid values and non-positive
     * counts fail LOUDLY at scan time. Output: (`n`, `total`,
     * `gini6`) — [[giniIndex]]'s schema verbatim. */
-  def giniFromCounts(counts: DataFrame): DataFrame = {
+  def giniFromCounts(counts: DataFrame): DataFrame = Blocks.scoped { _ =>
     val (gv, gc) = guardedMassCols("giniFromCounts")
     val guarded = counts.select(gv, gc)
     val cum = General.withRunningTotal(guarded, Seq("v"), "cnt", "__pre")
@@ -836,7 +835,6 @@ object Stats {
       sum(vDec * cDec *
         (lit(2).cast("decimal(38,0)") * col("__pre").cast("decimal(38,0)") +
           cDec + lit(1).cast("decimal(38,0)"))).as("s2")).head()
-    Blocks.release(cum)
     val n = row.getLong(0)
     require(n > 0L, "giniFromCounts: empty count state")
     giniScalarReadout(counts.sparkSession, n, row.getDecimal(1),

@@ -378,10 +378,10 @@ object StreamGate {
     *  1. clear [[lastReplayObservability]];
     *  1. write `source` into a fresh `graft_<gate>_src` dir, under the
     *     session's own partition count;
-    *  1. run `plan` for the sink. A gate that materializes a frozen
-    *     side once (an index, an anchor table) does it here through the
-    *     `pin` it is handed (the replay's [[Blocks.scoped]] checkpoint),
-    *     still under the session's own partition count;
+    *  1. evaluate `plan` for the sink. A gate that materializes a
+    *     frozen side once (an index, an anchor table) does it here with
+    *     [[Blocks.checkpoint]], still under the session's own partition
+    *     count;
     *  1. scope the [[replayConf]] settings: [[replayPartitions]] of
     *     the written source and a scratch checkpoint (captured by the
     *     query at `start()`, so only this replay is affected, and batch
@@ -392,13 +392,16 @@ object StreamGate {
     *  1. read the result back — a fold, or an append with an inferred
     *     schema, that committed no micro-batch fails as "<gate> saw no
     *     micro-batches" — checkpoint it so it outlives the temp dirs,
-    *     free the blocks this replay persisted behind it, and release
-    *     the previous replay's blocks ([[releaseLastReplay]]);
+    *     and release the previous replay's blocks
+    *     ([[releaseLastReplay]]). The replay's scope owns every
+    *     checkpoint made on this thread while it runs (a frozen side, a
+    *     readout's prefix sums, the read-back), so on return it frees
+    *     all of them but the read-back's own blocks;
     *  1. finally, on success or failure: restore each scoped key to
     *     its prior value (unset if it was unset) and delete every temp
     *     dir, the scratch checkpoint among them. */
   private[graft] def replay(gate: String, source: Source)(
-      plan: (DataFrame => DataFrame) => Sink): DataFrame =
+      plan: => Sink): DataFrame =
     replayLock.synchronized {
       lastObs = None
       val spark = source.spark
@@ -409,11 +412,10 @@ object StreamGate {
         d
       }
       val prior = scala.collection.mutable.Map.empty[String, Option[String]]
-      val mark = Blocks.rddIdMark(spark.sparkContext)
       try Blocks.scoped { s =>
         val src = dir("src")
         source.write(src)
-        val sink = plan(s.checkpoint)
+        val sink = plan
         val callerConf = spark.conf.getAll // the keys set, not defaults
         replayConf(
           replayPartitions(spark.conf.get(partitionsKey).toInt, src),
@@ -460,12 +462,7 @@ object StreamGate {
           case AppendSink(_, None, finish) => finish(lastCommit)
           case FoldSink(_, readout, _) => readout(lastCommit)
         }
-        val readBack = s.checkpoint(result)
-        // what the sink or readout persisted behind the result (a
-        // readout's prefix-sum checkpoint, say) is dead once it is read
-        // back, and would otherwise wait for the driver GC
-        Blocks.releaseSince(result, mark)
-        releaseLastReplay(readBack)
+        releaseLastReplay(s.checkpoint(result))
       } finally {
         prior.foreach {
           case (k, Some(v)) => spark.conf.set(k, v)
@@ -530,7 +527,7 @@ object StreamGate {
     val open = (src: String) =>
       op(EventStream.readEventStream(spark, src, eventSchema(spark)))
     replay(gate, Source(spark, write, open, flushBatch = flush.isDefined))(
-      _ => StreamSink)
+      StreamSink)
   }
 
   /** File-feed source of the `foreachBatch` gates: `feed` coalesced to 8
@@ -572,7 +569,7 @@ object StreamGate {
       fold: (DataFrame, DataFrame) => DataFrame,
       readout: DataFrame => DataFrame): DataFrame =
     replay(gate, fileFeed(feed, filesPerTrigger))(
-      _ => FoldSink(foldStep(seed, fold), readout))
+      FoldSink(foldStep(seed, fold), readout))
 
   /** [[replayFoldState]] for a readout that scans the final state more
     * than once: the readout gets the state checkpointed, and the
@@ -584,8 +581,8 @@ object StreamGate {
       seed: DataFrame => DataFrame,
       fold: (DataFrame, DataFrame) => DataFrame,
       readout: DataFrame => DataFrame): DataFrame =
-    replay(gate, fileFeed(feed, filesPerTrigger))(
-      pin => FoldSink(foldStep(seed, fold), state => readout(pin(state))))
+    replay(gate, fileFeed(feed, filesPerTrigger))(FoldSink(
+      foldStep(seed, fold), state => readout(Blocks.checkpoint(state))))
 
   /** Replay through [[EventStream.sessionizeStream]]: every real
     * session closes (per-key sentinels) and comes back as a batch
@@ -750,7 +747,7 @@ object StreamGate {
       threshold: Double = 0.5,
       maxBucket: Int = 1000,
       filesPerTrigger: Int = 2): DataFrame =
-    replay("replayNearDupGate", fileFeed(docs, filesPerTrigger))(_ =>
+    replay("replayNearDupGate", fileFeed(docs, filesPerTrigger))(
       AppendSink(batch => Dedup.dropNearDupsOfLedger(batch, idCol, textCol,
           ledger, shingleN, numHashes, bands, threshold, maxBucket),
         Some(docs.schema)))
@@ -778,7 +775,7 @@ object StreamGate {
       minTokens: Int,
       maxPositionsPerGram: Int = 10000,
       filesPerTrigger: Int = 2): DataFrame =
-    replay("replayExactSubstringGate", fileFeed(docs, filesPerTrigger)) { pin =>
+    replay("replayExactSubstringGate", fileFeed(docs, filesPerTrigger)) {
       // The benchmark corpus is FROZEN for this gate's lifetime, so its
       // tokenized docs and count-first-guarded anchor table are built
       // and pinned ONCE instead of re-tokenized, re-hashed and
@@ -787,7 +784,8 @@ object StreamGate {
       // are eval-corpus-bounded.
       val (bdocs, banch) = Corpus.substringAnchorSide(benchmark, benchIdCol,
         benchTextCol, "left", minTokens, maxPositionsPerGram)
-      val (docsIdx, anchorIdx) = (pin(bdocs), pin(banch))
+      val (docsIdx, anchorIdx) =
+        (Blocks.checkpoint(bdocs), Blocks.checkpoint(banch))
       AppendSink(batch => Corpus.dropExactSubstringMatchesAgainstIndex(batch,
           idCol, textCol, docsIdx, anchorIdx, minTokens, maxPositionsPerGram),
         Some(docs.schema))
@@ -814,7 +812,7 @@ object StreamGate {
       frameBytes: Int = 16,
       maxHamming: Int = 8,
       filesPerTrigger: Int = 2): DataFrame =
-    replay("replayShotBoundaries", fileFeed(media, filesPerTrigger))(_ =>
+    replay("replayShotBoundaries", fileFeed(media, filesPerTrigger))(
       AppendSink(batch => Multimodal
           .shotBoundaries(batch, nFrames, frameBytes, maxHamming)
           .select(col("media_id").cast("long"),
@@ -849,7 +847,7 @@ object StreamGate {
     val catCols = patterns.map { case (cat, _) => s"${cat}_hits" }
     val totals = ("n_docs" +: catCols :+ "pii_total" :+ "n_flagged")
       .map(c => coalesce(sum(col(c)), lit(0L)).as(c))
-    replay("replayPiiMonitor", fileFeed(docs, filesPerTrigger))(_ =>
+    replay("replayPiiMonitor", fileFeed(docs, filesPerTrigger))(
       AppendSink(batch => Quality.piiScan(batch, idCol, textCol, patterns)
           .agg(count(lit(1)).as("n_docs"),
             catCols.map(c => sum(col(c)).as(c)) ++ Seq(
@@ -875,7 +873,7 @@ object StreamGate {
       df: DataFrame,
       cols: Seq[String],
       filesPerTrigger: Int = 2): DataFrame =
-    replay("replayFingerprintMonitor", fileFeed(df, filesPerTrigger))(_ =>
+    replay("replayFingerprintMonitor", fileFeed(df, filesPerTrigger))(
       AppendSink(Quality.tableFingerprint(_, cols), None,
         _.agg(coalesce(sum(col("n_rows")), lit(0L)).as("n_rows"),
           coalesce(sum(col("fingerprint")),
@@ -1834,7 +1832,7 @@ object StreamGate {
       filesPerTrigger: Int = 2): DataFrame = {
     def enrich(f: DataFrame) =
       AsOfJoin.scdJoin(f, factKey, factTime, dim, dimKey, validFrom, validTo)
-    replay("replayScdEnrichment", fileFeed(facts, filesPerTrigger))(_ =>
+    replay("replayScdEnrichment", fileFeed(facts, filesPerTrigger))(
       // the enriched schema, read off the batch plan without executing it
       AppendSink(enrich, Some(enrich(facts.limit(0)).schema)))
   }
@@ -1948,7 +1946,7 @@ object StreamGate {
         .orderBy("arm")
     }
     replay("replaySequentialAbMonitor",
-        fileFeed(armFeed(outcomes, armCol, flagCol), filesPerTrigger))(_ =>
+        fileFeed(armFeed(outcomes, armCol, flagCol), filesPerTrigger))(
       FoldSink(foldStep(armCounts, foldArmCounts), readout,
         (_, committed) => look(committed)))
   }
@@ -2028,7 +2026,7 @@ object StreamGate {
       StructType.fromDDL("node bigint, comp bigint"))
     replay("replayIncrementalComponents", fileFeed(
         edges.select(col(srcCol).cast("long").as("a"),
-          col(dstCol).cast("long").as("b")), filesPerTrigger))(_ =>
+          col(dstCol).cast("long").as("b")), filesPerTrigger))(
       FoldSink((prior, batch) => Components.incrementalComponents(
           prior.getOrElse(noLabels), batch, "a", "b"),
         identity,
@@ -2132,7 +2130,7 @@ object StreamGate {
       nprobe: Int = 2,
       maxCell: Int = 10000,
       filesPerTrigger: Int = 2): DataFrame =
-    replay("replaySemanticGate", fileFeed(eval, filesPerTrigger)) { pin =>
+    replay("replaySemanticGate", fileFeed(eval, filesPerTrigger)) {
       // The train corpus and model are FROZEN for this gate's lifetime,
       // so the probe-assigned + guarded train cell table is built and
       // pinned ONCE and every micro-batch joins the blocks, instead of
@@ -2140,7 +2138,7 @@ object StreamGate {
       // that cannot change. A growing ledger would invalidate this and
       // belongs to the re-plan-per-batch shape of replayNearDupGate.
       val np = math.min(nprobe, model.k)
-      val index = pin(Similarity.decontaminationIndex(
+      val index = Blocks.checkpoint(Similarity.decontaminationIndex(
         train, idCol, vecCol, model, np, maxCell))
       AppendSink(Similarity.decontaminateAgainstIndex(_,
         index, idCol, vecCol, model, threshold, np), None)

@@ -755,10 +755,10 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("loan components: final label blocks released after use, even on throw") {
     import graft.operators.{Blocks, Components}
-    // The loan variants close the one gap the plain methods must leave:
+    // The loan variant closes the one gap the plain method must leave:
     // the returned plan's own checkpoint blocks. After the loan, ZERO
-    // persisted RDDs may remain — for both formulations, and also when
-    // `use` throws (the finally path).
+    // persisted RDDs may remain — also when `use` throws (the finally
+    // path).
     val chain = table("a bigint, b bigint",
       (0L until 7L).map(i => row(i, i + 1)))
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -766,10 +766,6 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(n == 8L)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "min-label loan left persisted RDDs behind")
-    val nStar = Components.withConnectedComponentsStar(chain, "a", "b")(_.count())
-    assert(nStar == 8L)
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "star loan left persisted RDDs behind")
     val boom = intercept[RuntimeException] {
       Components.withConnectedComponents(chain, "a", "b") { labels =>
         labels.count(); throw new RuntimeException("consumer failed")
@@ -790,37 +786,6 @@ class ExtensionsSpec extends AnyFunSuite {
     Blocks.release(ids)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "Blocks.release missed the checkpoint behind the derived leaf")
-  }
-
-  test("releaseExcept: frees the consumed frame's own blocks, keeps shared-lineage survivors") {
-    import graft.operators.{Blocks, General}
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    // one shared checkpointed intermediate, two descendants
-    val ids = General.withContiguousRowIds(
-      table("k bigint", (0L until 50L).map(row(_))), Seq("k"))
-    val evens = ids.filter(col("k") % 2 === 0)
-    val odds = ids.filter(col("k") % 2 === 1)
-    assert(evens.count() == 25L)
-    // every block evens reaches is shared with odds -> nothing freed,
-    // and odds stays computable (release() here would kill it)
-    Blocks.releaseExcept(evens, Seq(odds))
-    assert(odds.count() == 25L,
-      "releaseExcept freed a checkpoint the live sibling still needed")
-    // a second, UNshared intermediate: union reaches both, the live
-    // list only covers the shared one -> exactly the unshared blocks go
-    val other = General.withContiguousRowIds(
-      table("k bigint", (100L until 150L).map(row(_))), Seq("k"))
-    val un = odds.unionByName(other)
-    assert(un.count() == 75L)
-    val preFree = sc.getPersistentRDDs.keySet
-    Blocks.releaseExcept(un, Seq(odds))
-    assert((preFree -- sc.getPersistentRDDs.keySet).nonEmpty,
-      "releaseExcept freed nothing although `other`'s checkpoint was unshared")
-    assert(odds.count() == 25L, "the kept sibling must survive the partial free")
-    Blocks.release(odds)
-    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
-      "final release should return the store to its starting set")
   }
 
   test("Blocks.scoped: keeps what the result reads, frees the rest, owns only its own") {
@@ -863,6 +828,89 @@ class ExtensionsSpec extends AnyFunSuite {
       }
     }
     assert(added(before).isEmpty)
+  }
+
+  /** The persisted RDDs `df`'s plan reaches: its RDD-backed leaves and
+    * their dependency graphs. */
+  private def persistedReach(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.LogicalRDD
+    def walk(r: RDD[_]): Set[Int] = r.dependencies.map(d => walk(d.rdd)).toSet.flatten + r.id
+    val all = df.queryExecution.analyzed.collect { case lr: LogicalRDD => walk(lr.rdd) }.flatten.toSet
+    all.intersect(spark.sparkContext.getPersistentRDDs.keySet.toSet)
+  }
+
+  private def prefixFixture = table("k bigint, v bigint", (0L until 20L).map(i => row(i, i)))
+
+  test("Blocks.scoped: nested primitives inside a scope returning a value leave no checkpoint") {
+    import graft.operators.{Blocks, General}
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val n = Blocks.scoped { _ =>
+      General.withPrevValue(
+        General.withRunningTotal(prefixFixture, Seq("k"), "v", "rt"),
+        Seq("k"), "rt", "prev_rt").count()
+    }
+    assert(n == 20L)
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"nested primitives left $left registered")
+  }
+
+  test("Blocks.scoped: a scope returning the outer primitive's frame keeps only what it reaches") {
+    import graft.operators.{Blocks, General}
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = Blocks.scoped { _ =>
+      General.withPrevValue(
+        General.withRunningTotal(prefixFixture, Seq("k"), "v", "rt"),
+        Seq("k"), "rt", "prev_rt")
+    }
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.nonEmpty && left == persistedReach(out),
+      s"left $left registered, the frame reaches ${persistedReach(out)}")
+    assert(out.count() == 20L)
+    // rt(k) = 0 + 1 + ... + (k-1); prev_rt(k) = rt(k-1)
+    val got = out.select("k", "prev_rt").collect()
+      .map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(got(0L).isEmpty && got(1L).contains(0L) && got(19L).contains(153L))
+    Blocks.release(out)
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty)
+    // outside any scope the checkpoint is still made, and is the caller's
+    val bare = General.withRunningTotal(prefixFixture, Seq("k"), "v", "rt")
+    assert(bare.count() == 20L && persistedReach(bare).nonEmpty)
+    Blocks.release(bare)
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty)
+  }
+
+  test("Blocks.scoped: a nested scope hands its result's blocks to the enclosing scope") {
+    import graft.operators.Blocks
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val n = Blocks.scoped { _ =>
+      Blocks.scoped(s => s.checkpoint(prefixFixture)).count()
+    }
+    assert(n == 20L)
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"the inner scope's result left $left registered")
+  }
+
+  test("localCheckpoint is called only in Blocks") {
+    import scala.jdk.CollectionConverters._
+    // every checkpoint has one owner only while Blocks makes them all
+    // (and a reliable-checkpoint mode stays a change to Blocks alone)
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val offenders = for {
+      f <- files if f.getFileName.toString != "Blocks.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim if !code.startsWith("//") && !code.startsWith("*") &&
+        !code.startsWith("/*") && code.contains("localCheckpoint(")
+    } yield s"$f:${i + 1}"
+    assert(files.size > 10 && offenders.isEmpty,
+      s"localCheckpoint( outside Blocks: ${offenders.mkString(", ")}")
   }
 
   test("keepBestPerCluster: max-score survivor, ties by id, singletons kept") {

@@ -716,6 +716,22 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       s"replays accumulated ${live.size} checkpointed result generations")
   }
 
+  test("nested readout primitives leave only the last replay result's blocks") {
+    // the per-group Wasserstein readout chains two running totals into
+    // two lags; the replay's scope owns all four checkpoints
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val split = events.filter(col("event_id") % 2 === 0)
+    val rest = events.filter(col("event_id") % 2 === 1)
+    val out = (1 to 3).map(_ => StreamGate.replayGroupWassersteinDrift(
+      split, rest, "event_type", "value", filesPerTrigger = 1)).last
+    assert(out.count() > 0)
+    val own = out.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+    val live = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(live == own, s"three replays left $live, the last result's own $own")
+  }
+
   test("negative path: a superseded replay result fails LOUDLY, never silently") {
     // One-generation contract (StreamGate object doc): replay N's frame
     // is valid only until replay N+1 runs. Supersession unpersists the
@@ -886,7 +902,7 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     val fileless = StreamGate.Source(spark, _ => (),
       src => spark.readStream.schema(docs.schema).parquet(src))
     val e = intercept[IllegalArgumentException](
-      StreamGate.replay("probeGate", fileless)(_ =>
+      StreamGate.replay("probeGate", fileless)(
         StreamGate.AppendSink(identity, None)))
     assert(e.getMessage.contains("probeGate saw no micro-batches"), e.getMessage)
   }
