@@ -8,6 +8,24 @@ import org.apache.spark.sql.SparkSession
   * and no UI. */
 object Session {
 
+  /** This JVM's scratch root, `graft_scratch_<pid>` in
+    * `java.io.tmpdir`: made on first use and deleted, best-effort, by
+    * one shutdown hook when the JVM exits. Files a returned frame still
+    * reads lazily live here, so they outlive the call that wrote them
+    * but not the process. */
+  private[graft] lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir"),
+      s"graft_scratch_${ProcessHandle.current().pid()}"))
+    sys.addShutdownHook(
+      graft.streaming.StreamGate.deleteRecursively(root.toString))
+    root
+  }
+
+  /** The path `name` under [[scratchRoot]]: one per name and JVM, so a
+    * concurrent process never overwrites it. */
+  def scratch(name: String): String = scratchRoot.resolve(name).toString
+
   /** `SPARK_GRAFT_CPUS`, default 4: the core count of the mains. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 

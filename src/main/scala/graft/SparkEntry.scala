@@ -1430,8 +1430,7 @@ object SparkEntry {
     import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
     // Per-process path, like q95: the returned frame re-reads it
     // lazily, so a concurrent harness process must not overwrite it.
-    val csvDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_csv_nation_${ProcessHandle.current().pid()}").getAbsolutePath
+    val csvDir = Session.scratch("csv_nation")
     Tables.nation(s, dir).coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(csvDir)
     val schema = StructType(Seq(
@@ -1611,8 +1610,7 @@ object SparkEntry {
     // Per-process path: a concurrent harness (Verify at one SF, Bench
     // at another) must not overwrite the directory this frame re-reads
     // lazily on every action.
-    val jsonDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_json_documents_${ProcessHandle.current().pid()}").getAbsolutePath
+    val jsonDir = Session.scratch("json_documents")
     // coalesce(1) is the GATE's determinism device (one file, one
     // writer, stable bytes to hash) — the operator's read path stays
     // splittable; a production JSON write keeps its natural
@@ -2624,8 +2622,7 @@ object SparkEntry {
     * both sides (the q01 discipline). */
   private def q136OrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
-    val orcDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_orc_part_${ProcessHandle.current().pid()}").getAbsolutePath
+    val orcDir = Session.scratch("orc_part")
     Tables.part(s, dir).coalesce(2)
       .write.mode("overwrite").orc(orcDir)
     val schema = StructType(Seq(
@@ -2660,8 +2657,7 @@ object SparkEntry {
     * or mangled anywhere in the write-read hop fails the hash;
     * everything is integer arithmetic, hash-exact. */
   private def q137ExportManifest(s: SparkSession, dir: String): DataFrame = {
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_export_docs_${ProcessHandle.current().pid()}").getAbsolutePath
+    val path = Session.scratch("export_docs")
     Sinks.exportShardsWithManifest(
         Tables.documents(s, dir).select("doc_id", "text"),
         "doc_id", "text", nShards = 8, path)
@@ -2784,8 +2780,7 @@ object SparkEntry {
     * hash. */
   private def q143CsvQuarantine(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-    val dirPath = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_csv_quarantine_${ProcessHandle.current().pid()}").getAbsolutePath
+    val dirPath = Session.scratch("csv_quarantine")
     Tables.nation(s, dir).coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(dirPath)
     import s.implicits._
@@ -2965,11 +2960,8 @@ object SparkEntry {
     * rollup; all integers, hash-exact. */
   private def q151FederatedConcat(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-    val pid = ProcessHandle.current().pid()
-    val csvDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_fed_csv_$pid").getAbsolutePath
-    val orcDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_fed_orc_$pid").getAbsolutePath
+    val csvDir = Session.scratch("fed_csv")
+    val orcDir = Session.scratch("fed_orc")
     val base = Tables.nation(s, dir)
     base.coalesce(1).write.mode("overwrite")
       .option("header", "true").csv(csvDir)

@@ -2,11 +2,14 @@ package graft.streaming
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
-import org.apache.spark.sql.{DataFrame, Encoder, Row, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.slf4j.LoggerFactory
 
 import graft.operators.{Annotate, AsOfJoin, Blocks, Components, Corpus, Dedup,
   Eval, Events, Experiment, Maintain, Moments, Multimodal, Observed,
@@ -33,9 +36,9 @@ import graft.operators.{Annotate, AsOfJoin, Blocks, Components, Corpus, Dedup,
   *
   * ==Replay lifecycle==
   * Every public `replay*` runs through ONE harness, [[replay]], which
-  * writes the input to a per-run temp source dir, runs the stream
-  * under replay-scoped settings ([[replayConf]]), publishes
-  * [[lastReplayObservability]], and
+  * writes the input to a per-run temp source dir, runs the stream in a
+  * child session of the caller's under replay-scoped settings
+  * ([[replayConf]]), publishes [[lastReplayObservability]], and
   * materializes the result (`localCheckpoint`) before deleting every
   * temp dir — so replays are rerunnable, never share state, and leave
   * nothing on the temp volume (a bench session would otherwise pile up
@@ -58,20 +61,15 @@ import graft.operators.{Annotate, AsOfJoin, Blocks, Components, Corpus, Dedup,
   * created file) of the 476 it forked in all, and wait on them for
   * most of its wall time.
   *
-  * ==One-generation replay contract (all public replay* methods)==
-  * A replay result is valid only until the NEXT replay runs on this
-  * JVM: fully consume it (count, write, compare) first. The superseding
-  * replay unpersists the prior result's checkpoint blocks
-  * SYNCHRONOUSLY, and since its lineage is truncated and its temp dirs
-  * already deleted, any later action on the prior frame fails with
-  * Spark's checkpoint-block-not-found error — a deliberate loud
-  * failure rather than a silent wrong answer (pinned by
-  * StreamBatchEquivalenceSpec's negative-path test). Waiting for the
-  * driver to GC the handle instead would let result blocks pile up
-  * across a bench suite — climbing block counts that the bench's own
-  * `cached_blocks` drift signal would misread as an engine leak.
-  * Replays are mutually serialized on [[replayLock]], so concurrent
-  * callers cannot interleave generations — they queue.
+  * ==Replay results follow the [[Blocks]] rule==
+  * A replay result is a checkpoint like any other: it belongs to the
+  * innermost `Blocks.scoped` call open on the calling thread, which
+  * frees it once nothing the scope returns reads it. With no scope
+  * open, the caller frees it with `Blocks.release` (or
+  * `Blocks.consuming`) once it is fully consumed; until then it stays
+  * readable, whatever replays run after it. A replay changes no state
+  * of the caller's session, so replays on different threads of one
+  * session run at the same time.
   */
 object StreamGate {
 
@@ -119,7 +117,9 @@ object StreamGate {
 
   private val partitionsKey = "spark.sql.shuffle.partitions"
 
-  /** The settings [[replay]] scopes to a replay's stream, by key: the
+  /** The settings [[replay]] applies to the child session a replay's
+    * stream runs in, by key, on top of the caller's own runtime
+    * settings; the caller's session never sees them. They are the
     * state partition count ([[replayPartitions]]) and the settings of a
     * scratch checkpoint (see "Replay lifecycle" above):
     *  - the FileSystem checkpoint manager renames with one
@@ -153,17 +153,7 @@ object StreamGate {
       }
     } catch { case _: Exception => () }
 
-  private def eventSchema(spark: SparkSession) = {
-    import spark.implicits._
-    implicitly[Encoder[EventStream.Event]].schema
-  }
-
-  /** The live replay generation (see the one-generation contract). */
-  private var lastReplay: Option[DataFrame] = None
-
-  /** Serializes whole replays (source write -> stream run -> release):
-    * generation tracking is only sound when replays never overlap. */
-  private val replayLock = new Object
+  private def eventSchema = Encoders.product[EventStream.Event].schema
 
   /** Late-data observability: micro-batch count and rows silently
     * dropped past the watermark, harvested from a finished query's
@@ -184,9 +174,8 @@ object StreamGate {
     * every progress event into a per-run total as it arrives. One
     * instance serves every session (registered once per session by the
     * harness, before the replay's query starts). */
-  private object ProgressLedger
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
+  private object ProgressLedger extends StreamingQueryListener {
+    import StreamingQueryListener._
     private final class Acc {
       var batches = 0L; var dropped = 0L; var terminated = false
     }
@@ -216,9 +205,11 @@ object StreamGate {
     private[streaming] val MaxUnterminatedRetained = 256
     private val startedOrder =
       scala.collection.mutable.Queue.empty[java.util.UUID]
-    /** Weak keys: a ledger registration must not pin a SparkSession —
-      * when a session is collected its listener bus (and this
-      * registration) goes with it, so no explicit unregister exists. */
+    /** Weak keys: this set must not pin a SparkSession. The
+      * registration itself outlives the session: Spark (4.1) never
+      * removes a session's streaming listener bus from its context's
+      * listener bus, so that bus, and this listener in its list, stay
+      * reachable from the context after the session is collected. */
     private val sessions = java.util.Collections.synchronizedSet(
       java.util.Collections.newSetFromMap(
         new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
@@ -301,49 +292,30 @@ object StreamGate {
             ps.map(_.stateOperators.map(_.numRowsDroppedByWatermark).sum).sum)
     }
 
-  @volatile private var lastObs: Option[ReplayObservability] = None
+  private val lastObs = ThreadLocal.withInitial[Option[ReplayObservability]](
+    () => None)
 
-  /** [[ReplayObservability]] of the most recent replay gate run on
-    * this JVM (published once its stream finishes; replays are
-    * serialized on the replay lock, so the value is unambiguous). A
-    * replay clears it when it starts, so a replay whose stream never
-    * finished reads `None`, never the previous replay's counts. A
-    * production caller checks `droppedLateRows == 0` after a replay
-    * the same way it would alarm on the live query's progress. */
-  def lastReplayObservability: Option[ReplayObservability] = lastObs
-
-  private def releaseLastReplay(next: DataFrame): DataFrame = {
-    lastReplay.foreach { df =>
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          // blocking: supersession is deterministic — the prior frame
-          // is invalid the moment this replay returns, not "eventually".
-          // A prior replay whose CONTEXT has since been stopped (the
-          // bench's fresh-session mode rebuilds the session between
-          // queries) has nothing left to release — its blocks died
-          // with the context, and unpersisting through the dead
-          // BlockManagerMaster would NPE and fail the NEXT query.
-          if (!lr.rdd.sparkContext.isStopped)
-            lr.rdd.unpersist(blocking = true)
-        case _ => ()
-      }
-    }
-    lastReplay = Some(next)
-    next
-  }
+  /** [[ReplayObservability]] of the most recent replay gate run on the
+    * calling thread (published once its stream finishes), so replays
+    * on other threads never change it. A replay clears it when it
+    * starts, so a replay whose stream never finished reads `None`,
+    * never the previous replay's counts. A production caller checks
+    * `droppedLateRows == 0` after a replay the same way it would alarm
+    * on the live query's progress. */
+  def lastReplayObservability: Option[ReplayObservability] = lastObs.get
 
   /** A replay's input: `write` lays the source files into the replay's
-    * source dir; `open` reads that dir back as the streaming frame the
-    * sink drives. `flushBatch`: whether the stream needs Spark's no-data
-    * micro-batch, the one that runs after the data batch to advance the
-    * watermark and emit what it closed. Only a flush sentinel's rows
-    * emit there; without a sentinel the data batch already emits every
-    * row and that batch would only evict state of a query about to be
-    * deleted. */
+    * source dir; `open` reads that dir back, on the session it is
+    * given, as the streaming frame the sink drives. `flushBatch`:
+    * whether the stream needs Spark's no-data micro-batch, the one that
+    * runs after the data batch to advance the watermark and emit what
+    * it closed. Only a flush sentinel's rows emit there; without a
+    * sentinel the data batch already emits every row and that batch
+    * would only evict state of a query about to be deleted. */
   private[graft] final case class Source(
       spark: SparkSession,
       write: String => Unit,
-      open: String => DataFrame,
+      open: (SparkSession, String) => DataFrame,
       flushBatch: Boolean = true)
 
   /** What a replay's stream drives, and how its result is read back. */
@@ -374,59 +346,90 @@ object StreamGate {
       readout: DataFrame => DataFrame,
       afterCommit: (DataFrame, String) => Unit = (_, _) => ()) extends Sink
 
-  /** The one replay lifecycle, under [[replayLock]]:
-    *  1. clear [[lastReplayObservability]];
-    *  1. write `source` into a fresh `graft_<gate>_src` dir, under the
-    *     session's own partition count;
+  /** Hands every event of a child session's streams to the listeners
+    * registered on `caller` when the event arrives: a listener sees
+    * only the queries of its own session. One listener that throws
+    * does not keep the event from the others, as on Spark's own bus. */
+  private final class Forwarder(caller: SparkSession)
+      extends StreamingQueryListener {
+    import StreamingQueryListener._
+    private def each(deliver: StreamingQueryListener => Unit): Unit =
+      caller.streams.listListeners().foreach(l => try deliver(l) catch {
+        case NonFatal(e) => LoggerFactory.getLogger(getClass)
+          .warn(s"stream listener $l failed", e)
+      })
+    override def onQueryStarted(e: QueryStartedEvent): Unit =
+      each(_.onQueryStarted(e))
+    override def onQueryProgress(e: QueryProgressEvent): Unit =
+      each(_.onQueryProgress(e))
+    override def onQueryIdle(e: QueryIdleEvent): Unit = each(_.onQueryIdle(e))
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      each(_.onQueryTerminated(e))
+  }
+
+  /** Run `body` on a new child session of `caller` that carries the
+    * caller's runtime settings overlaid with `conf`, and whose stream
+    * events reach the caller's listeners ([[Forwarder]]) until `body`
+    * exits. The caller's session is left as it was. */
+  private def inChildSession[T](caller: SparkSession, conf: Map[String, String])(
+      body: SparkSession => T): T = {
+    val child = caller.newSession()
+    (caller.conf.getAll.filter { case (k, _) => caller.conf.isModifiable(k) }
+      ++ conf).foreach { case (k, v) => child.conf.set(k, v) }
+    val forwarder = new Forwarder(caller)
+    child.streams.addListener(forwarder)
+    // removed even though Spark keeps the child's listener bus
+    // registered on the context for good: the leaked bus then holds
+    // nothing of ours
+    try body(child) finally child.streams.removeListener(forwarder)
+  }
+
+  /** The one replay lifecycle:
+    *  1. clear [[lastReplayObservability]] on the calling thread;
+    *  1. write `source` into a fresh `graft_<gate>_src` dir, on the
+    *     caller's session under its own settings;
     *  1. evaluate `plan` for the sink. A gate that materializes a
     *     frozen side once (an index, an anchor table) does it here with
-    *     [[Blocks.checkpoint]], still under the session's own partition
-    *     count;
-    *  1. scope the [[replayConf]] settings: [[replayPartitions]] of
-    *     the written source and a scratch checkpoint (captured by the
-    *     query at `start()`, so only this replay is affected, and batch
-    *     queries never see them: the replay runs to completion before
-    *     the restore), install the [[ProgressLedger]], and run the
-    *     stream to completion under the AvailableNow trigger;
+    *     [[Blocks.checkpoint]], still under the caller's own settings;
+    *  1. open the source and run the stream to completion under the
+    *     AvailableNow trigger in a child session ([[inChildSession]])
+    *     that carries the [[replayConf]] settings: [[replayPartitions]]
+    *     of the written source and a scratch checkpoint. The caller's
+    *     [[ProgressLedger]] and any other listener of the caller's see
+    *     the stream's events;
     *  1. publish the run's [[ReplayObservability]];
-    *  1. read the result back — a fold, or an append with an inferred
-    *     schema, that committed no micro-batch fails as "<gate> saw no
-    *     micro-batches" — checkpoint it so it outlives the temp dirs,
-    *     and release the previous replay's blocks
-    *     ([[releaseLastReplay]]). The replay's scope owns every
+    *  1. read the result back on the caller's session — a fold, or an
+    *     append with an inferred schema, that committed no micro-batch
+    *     fails as "<gate> saw no micro-batches" — and checkpoint it so
+    *     it outlives the temp dirs. The replay's scope owns every
     *     checkpoint made on this thread while it runs (a frozen side, a
     *     readout's prefix sums, the read-back), so on return it frees
-    *     all of them but the read-back's own blocks;
-    *  1. finally, on success or failure: restore each scoped key to
-    *     its prior value (unset if it was unset) and delete every temp
-    *     dir, the scratch checkpoint among them. */
+    *     all of them but the read-back's own blocks, which go to the
+    *     enclosing `Blocks.scoped` call, or to the caller when none is
+    *     open (see "Replay results follow the Blocks rule" above);
+    *  1. finally, on success or failure: delete every temp dir, the
+    *     scratch checkpoint among them. */
   private[graft] def replay(gate: String, source: Source)(
-      plan: => Sink): DataFrame =
-    replayLock.synchronized {
-      lastObs = None
-      val spark = source.spark
-      val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-      def dir(kind: String): String = {
-        val d = tempDir(s"graft_${gate}_$kind")
-        dirs += d
-        d
-      }
-      val prior = scala.collection.mutable.Map.empty[String, Option[String]]
-      try Blocks.scoped { s =>
-        val src = dir("src")
-        source.write(src)
-        val sink = plan
-        val callerConf = spark.conf.getAll // the keys set, not defaults
-        replayConf(
+      plan: => Sink): DataFrame = {
+    lastObs.set(None)
+    val spark = source.spark
+    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
+    def dir(kind: String): String = {
+      val d = tempDir(s"graft_${gate}_$kind")
+      dirs += d
+      d
+    }
+    try Blocks.scoped { s =>
+      val src = dir("src")
+      source.write(src)
+      val sink = plan
+      ProgressLedger.ensure(spark) // before start: sees every event
+      val out = dir("out")
+      val committed = new AtomicReference[String](null)
+      val stream = inChildSession(spark, replayConf(
           replayPartitions(spark.conf.get(partitionsKey).toInt, src),
-          source.flushBatch).foreach { case (k, v) =>
-          prior(k) = callerConf.get(k)
-          spark.conf.set(k, v)
-        }
-        ProgressLedger.ensure(spark) // before start: sees every event
-        val out = dir("out")
-        val committed = new AtomicReference[String](null)
-        val stream = source.open(src)
+          source.flushBatch)) { child =>
+        val stream = source.open(child, src)
         val writer = sink match {
           case StreamSink =>
             stream.writeStream.format("parquet").option("path", out)
@@ -440,7 +443,7 @@ object StreamGate {
             val version = new AtomicInteger(0)
             stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
               val next = step(
-                Option(committed.get()).map(spark.read.parquet(_)), batch)
+                Option(committed.get()).map(child.read.parquet(_)), batch)
               val path = s"$out/v${version.incrementAndGet()}"
               next.write.mode("overwrite").parquet(path)
               committed.set(path)
@@ -450,27 +453,23 @@ object StreamGate {
         val q = writer.option("checkpointLocation", dir("ck"))
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
-        lastObs = Some(observabilityOf(q))
-        def lastCommit: DataFrame = {
-          require(committed.get() != null, s"$gate saw no micro-batches")
-          spark.read.parquet(committed.get())
-        }
-        val result = sink match {
-          case StreamSink => spark.read.schema(stream.schema).parquet(out)
-          case AppendSink(_, Some(schema), finish) =>
-            finish(spark.read.schema(schema).parquet(out))
-          case AppendSink(_, None, finish) => finish(lastCommit)
-          case FoldSink(_, readout, _) => readout(lastCommit)
-        }
-        releaseLastReplay(s.checkpoint(result))
-      } finally {
-        prior.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
-        dirs.foreach(deleteRecursively)
+        lastObs.set(Some(observabilityOf(q)))
+        stream
       }
-    }
+      def lastCommit: DataFrame = {
+        require(committed.get() != null, s"$gate saw no micro-batches")
+        spark.read.parquet(committed.get())
+      }
+      val result = sink match {
+        case StreamSink => spark.read.schema(stream.schema).parquet(out)
+        case AppendSink(_, Some(schema), finish) =>
+          finish(spark.read.schema(schema).parquet(out))
+        case AppendSink(_, None, finish) => finish(lastCommit)
+        case FoldSink(_, readout, _) => readout(lastCommit)
+      }
+      s.checkpoint(result)
+    } finally dirs.foreach(deleteRecursively)
+  }
 
   /** Event replay through the stream's own parquet sink. The events
     * (event_id, ts, user_id, event_type, value) are coalesced so the
@@ -524,8 +523,8 @@ object StreamGate {
                 lit(0.0).as("value"))
         sentinels.coalesce(1).write.mode("append").parquet(src)
     }
-    val open = (src: String) =>
-      op(EventStream.readEventStream(spark, src, eventSchema(spark)))
+    val open = (session: SparkSession, src: String) =>
+      op(EventStream.readEventStream(session, src, eventSchema))
     replay(gate, Source(spark, write, open, flushBatch = flush.isDefined))(
       StreamSink)
   }
@@ -538,7 +537,7 @@ object StreamGate {
     val spark = feed.sparkSession
     Source(spark,
       src => feed.coalesce(8).write.mode("overwrite").parquet(src),
-      src => spark.readStream.schema(feed.schema)
+      (session, src) => session.readStream.schema(feed.schema)
         .option("maxFilesPerTrigger", filesPerTrigger)
         .parquet(src))
   }

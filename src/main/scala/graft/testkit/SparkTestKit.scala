@@ -8,15 +8,16 @@ import org.apache.spark.sql.types.StructType
   * session-scoped pytest fixture (`/root/reference/tests/conftest.py:28-41`).
   */
 object SparkTestKit {
-  lazy val spark: SparkSession = {
-    val warehouse =
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    // best-effort, like a replay's temp dirs: the test JVM's exit
-    // must not leave one warehouse dir per run in java.io.tmpdir
-    sys.addShutdownHook(graft.streaming.StreamGate.deleteRecursively(warehouse))
-    graft.Session.local("4")(
-      _.appName("graft-tests").config("spark.sql.warehouse.dir", warehouse))
-  }
+  lazy val spark: SparkSession = graft.Session.local("4")(
+    _.appName("graft-tests")
+      .config("spark.sql.warehouse.dir", graft.Session.scratch("warehouse")))
+
+  /** A fresh dir whose name starts with `prefix`, under the JVM's
+    * scratch root ([[graft.Session.scratchRoot]]), so the test JVM's
+    * exit deletes it with the root. */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(graft.Session.scratchRoot, prefix)
+      .toString
 
   /** Tuple-table builder: DDL schema + rows, the ScalaTest analogue of
     * the reference's `create_dataframe` (`ons_utils/testing.py:14-16`). */

@@ -13,9 +13,6 @@ import graft.testkit.SparkTestKit._
   * `/root/reference/ons_utils/config/config.py:100-136`). */
 class ArtifactsSpec extends AnyFunSuite {
 
-  private def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   test("BPE merges: train -> save -> load encodes bit-identically to the in-JVM table") {
     val corpus = table("id bigint, text string", Seq(
       row(1L, "hug pug hug hugs"), row(2L, "hug pug bun")))

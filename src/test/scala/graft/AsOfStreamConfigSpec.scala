@@ -254,7 +254,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
 
   test("streaming: windowed counts over a file stream reach memory sink") {
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tempDir("graft-stream")
     graft.sources.Tables.events(s, "/root/testdata/sf0.001")
       .limit(200).write.mode("overwrite").parquet(dir)
     val schema = s.read.parquet(dir).schema
@@ -272,7 +272,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
   test("streaming: watermarked dedup drops repeat keys within the horizon") {
     val s = spark
     import graft.testkit.SparkTestKit.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-dd").toString
+    val dir = tempDir("graft-stream-dd")
     Seq(
       EventStream.Event(1L, ts("2024-01-01 10:00:00"), 1L, "click", 1.0),
       EventStream.Event(1L, ts("2024-01-01 10:01:00"), 1L, "click", 1.0), // dup id
@@ -289,7 +289,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
   }
 
   test("csv source reads with explicit schema, no inference scan (conftest.py:180-195)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv")
+    val dir = java.nio.file.Paths.get(tempDir("graft-csv"))
     val f = dir.resolve("t.csv")
     java.nio.file.Files.writeString(f, "id,name,score\n1,ann,2.5\n2,bob,3.5\n")
     val df = graft.sources.Tables.readCsv(spark, f.toString,
@@ -300,7 +300,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
   }
 
   test("csv quarantine: malformed rows land raw in the corrupt column, good rows parse") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv-q")
+    val dir = java.nio.file.Paths.get(tempDir("graft-csv-q"))
     java.nio.file.Files.writeString(dir.resolve("t.csv"),
       "id,name,score\n1,ann,2\nBAD,bob,3\n2,cat,4,EXTRA\n3,dan,5\n")
     val df = graft.sources.Tables.readCsvWithQuarantine(spark, dir.toString,
@@ -317,7 +317,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
   }
 
   test("orc source roundtrips values bit-exactly with an explicit schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString
+    val dir = tempDir("graft-orc")
     val src = table("id bigint, name string, score double", Seq(
       row(1L, "ann", 2.5), row(2L, "böb é", -0.125), row(3L, null, null)))
     src.write.mode("overwrite").orc(dir)
@@ -332,7 +332,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
   test("exportShardsWithManifest: manifest matches a driver-side recompute; rerun-stable") {
     val docs = table("doc_id bigint, text string",
       (0L until 40L).map(i => row(i, s"doc $i body ${"x" * (i % 7).toInt}")))
-    val path = java.nio.file.Files.createTempDirectory("graft-export").toString
+    val path = tempDir("graft-export")
     val m1 = graft.sources.Sinks.exportShardsWithManifest(
         docs, "doc_id", "text", 4, path)
       .orderBy("shard").collect().map(_.toSeq).toSeq
@@ -342,7 +342,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
     // shards partition the permutation: round-robin means each shard's
     // positions cover pos % 4 == shard
     // rerun over the same corpus reproduces the manifest bit-for-bit
-    val path2 = java.nio.file.Files.createTempDirectory("graft-export2").toString
+    val path2 = tempDir("graft-export2")
     val m2 = graft.sources.Sinks.exportShardsWithManifest(
         docs, "doc_id", "text", 4, path2)
       .orderBy("shard").collect().map(_.toSeq).toSeq
@@ -350,7 +350,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
     // a corrupted export (one text flipped) changes that shard's xor
     val bent = docs.withColumn("text",
       when(col("doc_id") === 7L, lit("CORRUPTED")).otherwise(col("text")))
-    val path3 = java.nio.file.Files.createTempDirectory("graft-export3").toString
+    val path3 = tempDir("graft-export3")
     val m3 = graft.sources.Sinks.exportShardsWithManifest(
         bent, "doc_id", "text", 4, path3)
       .orderBy("shard").collect().map(_.toSeq).toSeq
@@ -380,7 +380,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
   test("streaming: stream-static enrichment join reaches the sink") {
     val s = spark
     import graft.testkit.SparkTestKit.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-enrich").toString
+    val dir = tempDir("graft-stream-enrich")
     Seq(
       EventStream.Event(1L, ts("2024-01-01 10:00:00"), 1L, "click", 1.0),
       EventStream.Event(2L, ts("2024-01-01 10:01:00"), 2L, "view", 2.0),
@@ -410,7 +410,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
   test("streaming: stream-static exclusion join drops known keys on both paths") {
     val s = spark
     import graft.testkit.SparkTestKit.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-excl").toString
+    val dir = tempDir("graft-stream-excl")
     Seq(
       EventStream.Event(1L, ts("2024-01-01 10:00:00"), 1L, "click", 1.0),
       EventStream.Event(2L, ts("2024-01-01 10:01:00"), 2L, "view", 2.0),
@@ -436,7 +436,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
   test("streaming: stateful sessionizer emits closed sessions") {
     import graft.testkit.SparkTestKit.spark.implicits._
     val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream2").toString
+    val dir = tempDir("graft-stream2")
     Seq(
       EventStream.Event(1L, ts("2024-01-01 10:00:00"), 1L, "click", 1.0),
       EventStream.Event(2L, ts("2024-01-01 10:05:00"), 1L, "click", 2.0),
@@ -485,7 +485,7 @@ class AsOfStreamConfigSpec extends AnyFunSuite {
 
   test("config: LoggingConfig creates timestamped file + console handlers (config.py:225-304)") {
     import graft.config.LoggingConfig
-    val tmp = java.nio.file.Files.createTempDirectory("graft_logs")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_logs"))
     val fixed = java.time.LocalDateTime.of(2026, 8, 12, 10, 30, 0)
     val lc = new LoggingConfig(baseDir = Some(tmp), clock = () => fixed)
     assert(lc.logId == "log_260812_103000")

@@ -111,8 +111,7 @@ class ByteBpeSpec extends AnyFunSuite {
     val docs = table("text string",
       (1 to 5).map(_ => row("übung übung macht den meister")))
     val mergesDf = Corpus.byteBpeMerges(docs, "text", 4)
-    val dir = java.nio.file.Files
-      .createTempDirectory("byte_bpe_merges").toString + "/m"
+    val dir = tempDir("byte_bpe_merges") + "/m"
     Corpus.saveMerges(mergesDf, dir)
     val loaded = Corpus.loadMerges(docs.sparkSession, dir)
     val direct = mergesDf.orderBy("merge_rank").collect()

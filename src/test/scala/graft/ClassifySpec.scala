@@ -68,7 +68,7 @@ class ClassifySpec extends AnyFunSuite {
 
   test("save/load roundtrips bit-identically; corrupted meta fails loudly") {
     val m = trained()
-    val dir = java.nio.file.Files.createTempDirectory("graft-nb").toString
+    val dir = tempDir("graft-nb")
     Classify.save(m, dir)
     val spark = m.vocab.sparkSession
     val loaded = Classify.load(spark, dir)
@@ -235,14 +235,12 @@ class ClassifySpec extends AnyFunSuite {
     val df = table("x double, y boolean", Seq(
       row(1.0, true), row(-1.0, false), row(2.0, true), row(-2.0, false)))
     val model = Classify.trainLogistic(df, Seq("x"), "y", iters = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("logistic_model").toString + "/m"
+    val dir = tempDir("logistic_model") + "/m"
     Classify.saveLogistic(df.sparkSession, model, dir)
     val loaded = Classify.loadLogistic(df.sparkSession, dir)
     assert(loaded.beta == model.beta)
     // a gap in the index space fails loudly
-    val broken = java.nio.file.Files
-      .createTempDirectory("logistic_broken").toString + "/m"
+    val broken = tempDir("logistic_broken") + "/m"
     Classify.saveLogistic(df.sparkSession,
       Classify.LogisticModel(Vector(1.0, 2.0, 3.0)), broken)
     val spark = df.sparkSession

@@ -36,7 +36,7 @@ class FunnelStreamSpec extends AnyFunSuite {
         rows.map(r => row(r._1, r._2, r._3, r._4)))
       .select(col("event_id"), timestamp_micros(col("ts_us")).as("ts"),
         col("user_id"), col("event_type"), lit(0.0).as("value"))
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-funnel-$name").toString
+    val dir = tempDir(s"graft-funnel-$name")
     ev.filter(col("ts").isNull || unix_micros(col("ts")) <= splitUs)
       .coalesce(1).write.mode("append").parquet(dir)
     val later = ev.filter(unix_micros(col("ts")) > splitUs)

@@ -268,7 +268,7 @@ class GeneralSpec extends AnyFunSuite {
 
   test("partitioned parquet write: reads back with partition pruning") {
     import graft.sources.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/t"
+    val dir = tempDir("graft-part") + "/t"
     val df = table("id bigint, lang string, v bigint",
       (1L to 30L).map(i => row(i, if (i % 3 == 0) "en" else "fr", i * 2)))
     Sinks.writePartitioned(df, dir, Seq("lang"))

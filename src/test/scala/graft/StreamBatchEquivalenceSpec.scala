@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Sessionize
+import graft.operators.{Blocks, Sessionize}
 import graft.sources.Tables
 import graft.streaming.{EventStream, StreamGate}
 import graft.testkit.SparkTestKit._
@@ -39,7 +39,7 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       .select(lit(-1L).as("event_id"),
         timestamp_micros(lit(maxUs + 2 * gapUs)).as("ts"),
         col("user_id"), lit("__sentinel").as("event_type"), lit(0.0).as("value"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess-eq").toString
+    val dir = tempDir("graft-sess-eq")
     // two time-ordered files written sequentially: the file source
     // processes oldest-modified first, so with maxFilesPerTrigger=1
     // the replay is a genuine two-batch stream in event-time order
@@ -93,7 +93,7 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     val base = 1700000000000000L
     def ev(id: Long, offsetMin: Long) = row(id,
       new java.sql.Timestamp(base / 1000 + offsetMin * 60000), id, "e", 1.0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-late").toString
+    val dir = tempDir("graft-late")
     def listFiles() = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).toSet
     def writeBatch(rows: Seq[org.apache.spark.sql.Row], mtimeBumpMs: Long): Unit = {
@@ -688,65 +688,143 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       .as("rater"),
     col("event_type").as("label"))
 
-  test("replay gates keep at most one checkpointed result generation live") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    // a fold monitor whose readout checkpoints the final state: the
-    // returned frame's own checkpoint is the only block left behind
-    val fleiss = StreamGate.replayFleissMonitor(ratingsPanel.repartition(8),
-      "item", "rater", "label", filesPerTrigger = 1)
-    assert(fleiss.count() == 1L)
-    val own = fleiss.queryExecution.analyzed.collect {
+  private def ownRdds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }.toSet
-    val afterFleiss = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(afterFleiss == own, s"fleiss monitor left $afterFleiss, own $own")
-    StreamGate.replayDedup(events, Seq("user_id"), "1 hour").count()
-    StreamGate.replayDedup(events, Seq("event_type"), "1 hour").count()
-    // one fold monitor and one foreachBatch gate ride the same contract
-    StreamGate.replayQuantileMonitor(events.repartition(4), "value",
-      Seq(0.5), filesPerTrigger = 1).count()
-    StreamGate.replayFingerprintMonitor(events.repartition(4),
-      Seq("event_id", "event_type"), filesPerTrigger = 1).count()
-    val out = StreamGate.replayDedup(events, Seq("user_id", "event_type"), "1 hour")
+
+  test("replay gates keep at most one checkpointed result generation live") {
+    // replay results follow the Blocks rule: inside a caller scope,
+    // every result but the one the scope returns is freed on return
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Blocks.scoped { _ =>
+      // a fold monitor whose readout checkpoints the final state: the
+      // returned frame's own checkpoint is the only block left behind
+      val fleiss = StreamGate.replayFleissMonitor(ratingsPanel.repartition(8),
+        "item", "rater", "label", filesPerTrigger = 1)
+      assert(fleiss.count() == 1L)
+      val afterFleiss = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(afterFleiss == ownRdds(fleiss),
+        s"fleiss monitor left $afterFleiss, own ${ownRdds(fleiss)}")
+      StreamGate.replayDedup(events, Seq("user_id"), "1 hour").count()
+      StreamGate.replayDedup(events, Seq("event_type"), "1 hour").count()
+      // one fold monitor and one foreachBatch gate ride the same rule
+      StreamGate.replayQuantileMonitor(events.repartition(4), "value",
+        Seq(0.5), filesPerTrigger = 1).count()
+      StreamGate.replayFingerprintMonitor(events.repartition(4),
+        Seq("event_id", "event_type"), filesPerTrigger = 1).count()
+      StreamGate.replayDedup(events, Seq("user_id", "event_type"), "1 hour")
+    }
     assert(out.count() > 0)
-    // each replay releases the previous one's checkpoint, so three
-    // replays leave exactly the LAST result's blocks, not three sets
+    // six replays leave exactly the returned result's blocks
     val live = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(live.size <= 1,
-      s"replays accumulated ${live.size} checkpointed result generations")
+    assert(live == ownRdds(out),
+      s"replays left $live, the returned result's own ${ownRdds(out)}")
+    Blocks.release(out)
   }
 
   test("nested readout primitives leave only the last replay result's blocks") {
     // the per-group Wasserstein readout chains two running totals into
-    // two lags; the replay's scope owns all four checkpoints
+    // two lags; the replay's scope owns all four checkpoints, and the
+    // caller's scope owns the two earlier results
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val split = events.filter(col("event_id") % 2 === 0)
     val rest = events.filter(col("event_id") % 2 === 1)
-    val out = (1 to 3).map(_ => StreamGate.replayGroupWassersteinDrift(
-      split, rest, "event_type", "value", filesPerTrigger = 1)).last
+    val out = Blocks.scoped { _ =>
+      (1 to 3).map(_ => StreamGate.replayGroupWassersteinDrift(
+        split, rest, "event_type", "value", filesPerTrigger = 1)).last
+    }
     assert(out.count() > 0)
-    val own = out.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
     val live = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(live == own, s"three replays left $live, the last result's own $own")
+    assert(live == ownRdds(out),
+      s"three replays left $live, the last result's own ${ownRdds(out)}")
+    Blocks.release(out)
   }
 
-  test("negative path: a superseded replay result fails LOUDLY, never silently") {
-    // One-generation contract (StreamGate object doc): replay N's frame
-    // is valid only until replay N+1 runs. Supersession unpersists the
-    // frame's checkpoint blocks synchronously, and its lineage is
-    // truncated (localCheckpoint) with the sink files already deleted —
-    // so a stale frame must THROW on its next action, not recompute and
-    // not return partial data. A caller holding two replay results at
-    // once is a bug this pins as a loud, immediate failure.
-    val stale = StreamGate.replayDedup(events, Seq("user_id"), "1 hour")
-    assert(stale.count() > 0) // valid while current
-    StreamGate.replayDedup(events, Seq("event_type"), "1 hour").count()
-    val thrown = intercept[Exception] { stale.count() }
-    val msg = Option(thrown.getMessage).getOrElse("") + thrown.getClass.getName
-    assert(msg.toLowerCase.contains("block") || msg.toLowerCase.contains("checkpoint"),
-      s"expected a block/checkpoint-loss failure, got: $thrown")
+  test("an earlier replay result stays readable after a later one") {
+    val early = StreamGate.replayDedup(events, Seq("user_id"), "1 hour")
+    val n = early.count()
+    assert(n > 0)
+    val later = StreamGate.replayDedup(events, Seq("event_type"), "1 hour")
+    assert(later.count() > 0)
+    assert(early.count() == n)
+    Seq(early, later).foreach(Blocks.release)
+  }
+
+  test("two replays at once in one session: each equals its batch twin") {
+    import graft.operators.Profile
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val ps = Seq(0.25, 0.5, 0.9)
+    val start = new java.util.concurrent.CountDownLatch(2)
+    def atOnce[T](body: => T): Future[T] = Future {
+      start.countDown()
+      start.await()
+      body
+    }
+    val dedup = atOnce(StreamGate.replayDedup(events,
+      Seq("user_id", "event_type"), "10 minutes"))
+    val quantiles = atOnce(StreamGate.replayQuantileMonitor(
+      events.repartition(8), "value", ps, filesPerTrigger = 1))
+    val (d, q) = (Await.result(dedup, 5.minutes), Await.result(quantiles, 5.minutes))
+    // both results are read only after both replays returned
+    assert(d.select("user_id", "event_type").collect().map(_.toSeq).toSet ==
+      events.select("user_id", "event_type").distinct()
+        .collect().map(_.toSeq).toSet)
+    assert(q.collect().map(_.toSeq).toSeq ==
+      Profile.exactQuantiles(events, "value", ps).collect().map(_.toSeq).toSeq)
+    assert(d.count() > 0 && q.count() == ps.size)
+    Seq(d, q).foreach(Blocks.release)
+  }
+
+  test("a replay never changes the caller's conf, not even while it runs") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try {
+      val before = spark.conf.getAll
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val sampler = new Thread(() =>
+        while (!done.get()) { seen.add(spark.conf.get(key)); Thread.sleep(1) })
+      sampler.start()
+      val out = try StreamGate.replayDedup(events, Seq("user_id"), "1 hour")
+      finally { done.set(true); sampler.join() }
+      assert(out.count() > 0)
+      Blocks.release(out)
+      assert(seen.size() == 1 && seen.contains("7"), s"sampled $seen")
+      assert(spark.conf.getAll == before)
+    } finally spark.conf.set(key, prior)
+  }
+
+  test("a caller's stream listener sees every replay's stream") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val started, progress, terminated =
+      new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.incrementAndGet()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.incrementAndGet()
+    }
+    spark.streams.addListener(listener)
+    try {
+      (1 to 2).foreach { i =>
+        val out = StreamGate.replayDedup(events, Seq("user_id"), "1 hour")
+        Blocks.release(out)
+        // delivery is asynchronous: wait (bounded) for the terminated event
+        val deadline = System.nanoTime + 30L * 1000000000L
+        while (terminated.get() < i && System.nanoTime < deadline)
+          Thread.sleep(10)
+        assert((started.get(), terminated.get()) == ((i, i)),
+          s"replay $i: started $started, terminated $terminated")
+        assert(progress.get() >= i, s"replay $i: progress $progress")
+      }
+    } finally spark.streams.removeListener(listener)
   }
 
   private def replayDirs(): Set[String] = {
@@ -900,7 +978,7 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     // a file-less source fires no micro-batch at all: an inferred-schema
     // append names the gate instead of failing schema inference
     val fileless = StreamGate.Source(spark, _ => (),
-      src => spark.readStream.schema(docs.schema).parquet(src))
+      (session, src) => session.readStream.schema(docs.schema).parquet(src))
     val e = intercept[IllegalArgumentException](
       StreamGate.replay("probeGate", fileless)(
         StreamGate.AppendSink(identity, None)))
@@ -1149,7 +1227,7 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
         row(4L, 10L * gapUs, 2L, "b", 7.0)))
       .select(col("event_id"), timestamp_micros(col("t_us")).as("ts"),
         col("user_id"), col("event_type"), col("value"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess-idle").toString
+    val dir = tempDir("graft-sess-idle")
     ev.coalesce(1).write.mode("append").parquet(dir)
     val schema = implicitly[org.apache.spark.sql.Encoder[EventStream.Event]].schema
     val stream = s.readStream.schema(schema).parquet(dir).as[EventStream.Event]

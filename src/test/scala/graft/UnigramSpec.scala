@@ -114,8 +114,7 @@ class UnigramSpec extends AnyFunSuite {
     val df = table("text string", Seq(row("ab ab ab"), row("abab abab")))
     val model = Corpus.unigramTrainModel(df, "text",
       vocabSize = 5, maxTokenLen = 4, seedSize = 10, iters = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("unigram_model").toString + "/m"
+    val dir = tempDir("unigram_model") + "/m"
     Corpus.unigramSave(df.sparkSession, model, dir)
     val loaded = Corpus.unigramLoad(df.sparkSession, dir)
     assert(loaded.entries == model.entries)
