@@ -400,8 +400,11 @@ object SparkEntry {
   /** Generic within-fiscal-year apply (`shifted_within_year_apply` with
     * an arbitrary method, `pandas.py:121-133`): mean-imputation of
     * missing values per (user, Feb..Jan+1 fiscal year) group. The group
-    * mean is accumulated in exact decimals (order-independent) and
-    * divided once in double, so the oracle reproduces it bit-for-bit. */
+    * mean is exact decimal arithmetic: the cent sum divided by the count
+    * and rounded HALF_UP to cents, as the oracle does in integer cents.
+    * A mean divided in binary double can sit just below a half-cent the
+    * decimal mean sits on (user 1209 at sf0.1: 58.214999999999996), and
+    * the engines round that double apart. */
   private def q23WithinYearImpute(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StructField, StructType}
@@ -411,7 +414,7 @@ object SparkEntry {
         .cast(DecimalType(18, 2)).as("v"))
     val vIdx = base.schema.fieldIndex("v") // fiscal-year col is appended AFTER v
     val imputed = Reshape.shiftedWithinYearApply(base, "ts",
-        StructType(Seq(StructField("vi", DoubleType))),
+        StructType(Seq(StructField("vi", DecimalType(18, 2)))),
         keys = Seq("user_id")) { rows =>
       val buf = rows.toVector
       var n = 0L
@@ -419,9 +422,12 @@ object SparkEntry {
       buf.foreach { r =>
         if (!r.isNullAt(vIdx)) { n += 1; sum = sum.add(r.getDecimal(vIdx)) }
       }
-      val mean: Any = if (n == 0) null else sum.doubleValue() / n
+      val mean =
+        if (n == 0) null
+        else sum.divide(java.math.BigDecimal.valueOf(n), 2,
+          java.math.RoundingMode.HALF_UP)
       buf.iterator.map { r =>
-        Row(if (r.isNullAt(vIdx)) mean else r.getDecimal(vIdx).doubleValue())
+        Row(if (r.isNullAt(vIdx)) mean else r.getDecimal(vIdx))
       }
     }
     imputed.groupBy("user_id")
@@ -9528,12 +9534,17 @@ object SparkEntry {
         |         THEN CAST(value AS DECIMAL(18,2)) END AS v,
         |    year(ts - INTERVAL 1 MONTH) AS fy
         |  FROM events
+        |), c AS (
+        |  SELECT user_id, fy, SUM(CAST(v * 100 AS BIGINT)) AS s,
+        |    NULLIF(COUNT(v), 0) AS n
+        |  FROM base GROUP BY user_id, fy
         |), m AS (
         |  SELECT user_id, fy,
-        |    CAST(SUM(v) AS DOUBLE) / COUNT(v) AS mean_v
-        |  FROM base GROUP BY user_id, fy
+        |    CAST(sign(s) * ((2 * abs(s) + n) // (2 * n)) AS DECIMAL(18,0))
+        |      * CAST(0.01 AS DECIMAL(3,2)) AS mean_v
+        |  FROM c
         |), imp AS (
-        |  SELECT b.user_id, COALESCE(CAST(b.v AS DOUBLE), m.mean_v) AS vi
+        |  SELECT b.user_id, COALESCE(b.v, CAST(m.mean_v AS DECIMAL(18,2))) AS vi
         |  FROM base b JOIN m ON b.user_id = m.user_id AND b.fy = m.fy
         |)
         |SELECT user_id,

@@ -55,11 +55,14 @@ import graft.operators.{Annotate, AsOfJoin, Blocks, Components, Corpus, Dedup,
   * that is deleted when the replay returns, and no query ever restarts
   * from it. So the replay runs without the durability a restart needs
   * (FileContext renames, checksum files, and, where no flush sentinel
-  * needs it, the no-data micro-batch; see [[replayConf]]). Without
-  * libhadoop that durability made a KB-scale replay fork about 400
-  * processes (four `readlink` per FileContext rename, one `chmod` per
-  * created file) of the 476 it forked in all, and wait on them for
-  * most of its wall time.
+  * needs it, the no-data micro-batch; see [[replayConf]]). Every file a
+  * replay writes, its source files included, goes through
+  * [[ScratchFileSystem]], which sets file modes with `java.nio`. So a
+  * replay forks no process. Without libhadoop, Hadoop's own local
+  * filesystem forks `readlink` per FileContext rename and `chmod` per
+  * created file or dir, about 4 ms each; a KB-scale replay on it
+  * forked about 77 `chmod` and waited on them for much of its wall
+  * time.
   *
   * ==Replay results follow the [[Blocks]] rule==
   * A replay result is a checkpoint like any other: it belongs to the
@@ -129,14 +132,27 @@ object StreamGate {
     *  - no checksum file next to each state and log file;
     *  - the no-data micro-batch only where a flush sentinel's rows emit
     *    in it ([[Source]]), and there even under a session that turned
-    *    it off. */
+    *    it off;
+    *  - `fs.file.impl`: [[ScratchFileSystem]] for every `file://` path
+    *    of the child, so the offset and commit logs, the state stores
+    *    and the sinks set file modes without forking `chmod`. Spark
+    *    copies the child's SQL conf into each Hadoop conf it builds,
+    *    the ones shipped with tasks included;
+    *  - `fs.file.impl.disable.cache`: `true`. Hadoop caches a
+    *    `FileSystem` by scheme, authority and user, not by conf, so
+    *    without it the child gets the JVM's cached `file://`
+    *    filesystem and the setting above does nothing. The JVM's cached instance
+    *    and the caller's confs stay as they were.
+    * The source write runs on the caller's session, so it passes the
+    * same two keys as writer options instead. */
   private[graft] def replayConf(
       partitions: Int, flushBatch: Boolean): Map[String, String] = Map(
     partitionsKey -> partitions.toString,
     "spark.sql.streaming.checkpointFileManagerClass" ->
       classOf[FileSystemBasedCheckpointFileManager].getName,
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-    "spark.sql.streaming.noDataMicroBatches.enabled" -> flushBatch.toString)
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> flushBatch.toString) ++
+    ScratchFileSystem.conf
 
   /** Best-effort recursive delete (replay hygiene must never turn a
     * green query into a failure — a locked file just stays behind).
@@ -497,12 +513,13 @@ object StreamGate {
     val spark = events.sparkSession
     val proj = events.select("event_id", "ts", "user_id", "event_type", "value")
     def write(src: String): Unit = flush match {
-      case None => proj.coalesce(16).write.mode("overwrite").parquet(src)
+      case None => proj.coalesce(16).write.options(ScratchFileSystem.conf)
+        .mode("overwrite").parquet(src)
       case Some((horizonUs, perKey)) =>
         val obs = org.apache.spark.sql.Observation()
         proj.observe(obs, max(unix_micros(col("ts"))).as("__max"))
           .coalesce(16)
-          .write.mode("overwrite").parquet(src)
+          .write.options(ScratchFileSystem.conf).mode("overwrite").parquet(src)
         // Late metrics delivery degrades to a rescan of the files just
         // written (already on local disk), never a TimeoutException.
         val maxRow = Observed.row(obs) {
@@ -521,7 +538,8 @@ object StreamGate {
               .select(lit(-1L).as("event_id"), sentinelTs.as("ts"),
                 lit(-1L).as("user_id"), lit("__sentinel").as("event_type"),
                 lit(0.0).as("value"))
-        sentinels.coalesce(1).write.mode("append").parquet(src)
+        sentinels.coalesce(1).write.options(ScratchFileSystem.conf)
+          .mode("append").parquet(src)
     }
     val open = (session: SparkSession, src: String) =>
       op(EventStream.readEventStream(session, src, eventSchema))
@@ -536,7 +554,8 @@ object StreamGate {
   private def fileFeed(feed: DataFrame, filesPerTrigger: Int): Source = {
     val spark = feed.sparkSession
     Source(spark,
-      src => feed.coalesce(8).write.mode("overwrite").parquet(src),
+      src => feed.coalesce(8).write.options(ScratchFileSystem.conf)
+        .mode("overwrite").parquet(src),
       (session, src) => session.readStream.schema(feed.schema)
         .option("maxFilesPerTrigger", filesPerTrigger)
         .parquet(src))

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Blocks, Sessionize}
 import graft.sources.Tables
-import graft.streaming.{EventStream, StreamGate}
+import graft.streaming.{EventStream, ScratchFileSystem, StreamGate}
 import graft.testkit.SparkTestKit._
 
 /** Batch-vs-stream equivalence over the real events table: the
@@ -898,6 +898,7 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     // ... and every other replay-scoped key: set ones keep their value,
     // unset ones stay unset
     val keys = StreamGate.replayConf(1, flushBatch = false).keySet
+    assert(ScratchFileSystem.conf.keySet.subsetOf(keys))
     val key = "spark.sql.shuffle.partitions"
     val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
     val fileManager = "spark.sql.streaming.checkpointFileManagerClass"
@@ -924,6 +925,36 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       }
     } finally Seq(key, noData).foreach(k =>
       prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+  }
+
+  test("replay I/O goes through ScratchFileSystem; the JVM's file system stays") {
+    import java.net.URI
+    import org.apache.hadoop.fs.FileSystem
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val impl = Option(hadoop.get("fs.file.impl"))
+    // Hadoop's LocalFileSystem, or a proxy of it such as Hive's
+    val local = FileSystem.get(URI.create("file:///"), hadoop)
+    assert(!local.isInstanceOf[ScratchFileSystem])
+    // the replay dir kind a mode was set under: graft_<gate>_<kind><digits>
+    val kind = """/graft_[^/]*_(src|out|ck)\d+(/|$)""".r
+    val kinds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def routed(label: String)(replay: => org.apache.spark.sql.DataFrame): Unit = {
+      kinds.clear()
+      val out = replay
+      assert(out.count() > 0, label)
+      Blocks.release(out)
+      // the source write, the checkpoint (logs and state) and the sink
+      assert(kinds == java.util.Set.of("src", "ck", "out"), label)
+      assert(FileSystem.get(URI.create("file:///"), hadoop) eq local, label)
+      assert(Option(hadoop.get("fs.file.impl")) == impl, label)
+    }
+    ScratchFileSystem.onModeSet = p =>
+      kind.findFirstMatchIn(p.toUri.getPath).foreach(m => kinds.add(m.group(1)))
+    try {
+      routed("dedup")(StreamGate.replayDedup(events, Seq("user_id"), "1 hour"))
+      routed("fold monitor")(StreamGate.replayQuantileMonitor(
+        events.repartition(8), "value", Seq(0.5), filesPerTrigger = 1))
+    } finally ScratchFileSystem.onModeSet = _ => ()
   }
 
   test("the no-data micro-batch runs only where a flush sentinel needs it") {
