@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.functions.{ArrayFunctions, TextFunctions}
-import graft.operators.{AsOfJoin, Blocks, Concat, Dedup, Events, Fuzzy, General, Grouped, Multimodal, Profile, Reshape, Sessionize, Similarity, Stats}
+import graft.operators.{Annotate, AsOfJoin, Blocks, Concat, Corpus, Dedup, Eval, Events, Experiment, Fuzzy, General, Grouped, Maintain, Moments, Multimodal, Preference, Profile, Reshape, Sessionize, Similarity, Stats}
 import graft.sources.{Sinks, Tables}
 
 /** Driver contract — one `queries` entry (+ DuckDB `oracleSql`) per
@@ -2540,7 +2540,7 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- q133
   /** Streaming incremental rollup
-    * ([[graft.streaming.StreamGate.replayIncrementalRollup]]): the
+    * ([[graft.operators.Maintain.rollupMonitor]]): the
     * SAME monthly lineitem summary as q131, maintained by a file
     * stream folding each micro-batch's summary into a versioned
     * parquet state table inside `foreachBatch` — and held to q131's
@@ -2562,7 +2562,7 @@ object SparkEntry {
       col("l_extendedprice").cast("decimal(18,2)").as("price_d"),
       col("l_discount"))
     val keys = Seq("l_returnflag", "l_linestatus", "ship_month")
-    graft.streaming.StreamGate.replayIncrementalRollup(li, keys, spec)
+    graft.streaming.StreamGate.monitor(Maintain.rollupMonitor(keys, spec), li)
       .select(col("l_returnflag"), col("l_linestatus"), col("ship_month"),
         col("n"),
         col("qty_d_sum").cast("double").as("sum_qty"),
@@ -3333,8 +3333,8 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q169
-  /** Streaming drift monitor ([[graft.streaming.StreamGate
-    * .replayStreamingDrift]]): q128's PSI with the monitored slice
+  /** Streaming drift monitor ([[graft.operators.Profile
+    * .driftMonitor]]): q128's PSI with the monitored slice
     * arriving as a FILE STREAM — per-micro-batch histograms folded
     * into a versioned bins-bounded state table (counts merge by sum,
     * associative + commutative, so micro-batch partitioning provably
@@ -3350,8 +3350,10 @@ object SparkEntry {
     val Array(b) = ref.agg(
       min(col("o_totalprice")).as("lo"), max(col("o_totalprice")).as("hi"))
       .collect()
-    graft.streaming.StreamGate.replayStreamingDrift(ref, cur,
-        "o_totalprice", 20, b.getDouble(0), b.getDouble(1))
+    graft.streaming.StreamGate.monitor(
+        Profile.driftMonitor(ref, "o_totalprice", 20, b.getDouble(0),
+          b.getDouble(1)),
+        cur)
       .select(col("bucket"), col("n_ref"), col("n_cur"),
         round(col("psi"), 6).as("psi6"))
       .orderBy("bucket")
@@ -3657,8 +3659,8 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q183
-  /** Streaming categorical drift ([[graft.streaming.StreamGate
-    * .replayCategoricalDrift]]): q180's order-priority mix with the
+  /** Streaming categorical drift ([[graft.operators.Profile
+    * .categoricalDriftMonitor]]): q180's order-priority mix with the
     * monitored slice arriving as a FILE STREAM — per-micro-batch
     * category counts fold into a versioned vocabulary-bounded state
     * table (counts merge by SUM, so the micro-batch split provably
@@ -3669,10 +3671,10 @@ object SparkEntry {
   private def q183StreamCatDrift(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(s, dir)
     val split = lit("1996-01-01").cast("timestamp_ntz")
-    graft.streaming.StreamGate.replayCategoricalDrift(
-        orders.filter(col("o_orderdate") < split),
-        orders.filter(col("o_orderdate") >= split),
-        "o_orderpriority")
+    graft.streaming.StreamGate.monitor(
+        Profile.categoricalDriftMonitor(
+          orders.filter(col("o_orderdate") < split), "o_orderpriority"),
+        orders.filter(col("o_orderdate") >= split))
       .select(col("category"), col("n_ref"), col("n_cur"),
         round(col("psi"), 6).as("psi6"))
       .orderBy("category")
@@ -3851,8 +3853,8 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q191
-  /** Streaming distinct-users rollup ([[graft.streaming.StreamGate
-    * .replayDistinctRollup]]): q190's HLL maintenance with the fact
+  /** Streaming distinct-users rollup ([[graft.operators.Maintain
+    * .distinctRollupMonitor]]): q190's HLL maintenance with the fact
     * feed as a file stream — per-micro-batch sketches fold into a
     * versioned binary-column parquet state; register-wise max is
     * associative, commutative, and idempotent, so the micro-batch
@@ -3863,9 +3865,9 @@ object SparkEntry {
     * batch q190 / distinct stream. */
   private def q191StreamDistinctRollup(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
-    val est = graft.streaming.StreamGate.replayDistinctRollup(
-      ev.select("event_id", "ts", "user_id", "event_type", "value"),
-      Seq("event_type"), "user_id")
+    val est = graft.streaming.StreamGate.monitor(
+        Maintain.distinctRollupMonitor(Seq("event_type"), "user_id"),
+        ev.select("event_id", "ts", "user_id", "event_type", "value"))
     val exact = ev.groupBy("event_type")
       .agg(count_distinct(col("user_id")).as("n_exact"))
     est.join(exact, Seq("event_type"))
@@ -4000,8 +4002,8 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q198
-  /** Streaming exact-KS drift ([[graft.streaming.StreamGate
-    * .replayKsDrift]]): q196's statistic with the monitored slice
+  /** Streaming exact-KS drift ([[graft.operators.Profile
+    * .ksDriftMonitor]]): q196's statistic with the monitored slice
     * arriving as a file stream — per-micro-batch distinct-value
     * counts fold by SUM into versioned parquet state (the accumulated
     * empirical CDF is provably split-invariant), final gap via the
@@ -4012,9 +4014,10 @@ object SparkEntry {
   private def q198StreamKsDrift(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayKsDrift(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs), "value")
+    graft.streaming.StreamGate.monitor(
+        Profile.ksDriftMonitor(ev.filter(unix_micros(col("ts")) < splitUs),
+          "value"),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q199
@@ -4165,8 +4168,8 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q205
-  /** Streaming experiment monitor ([[graft.streaming.StreamGate
-    * .replayAbMonitor]]): q199's experiment with the per-user
+  /** Streaming experiment monitor ([[graft.operators.Experiment
+    * .abMonitor]]): q199's experiment with the per-user
     * outcomes arriving as a file stream — per-arm counts fold by SUM
     * into versioned state and the final readout runs the SHARED
     * Wilson + pooled-z arithmetic, so the live dashboard provably
@@ -4180,8 +4183,9 @@ object SparkEntry {
         >= 14L).as("converted"))
     val assigned = Experiment.assignArms(users, "user_id", salt = "exp1",
       arms = Seq(("control", 0.5), ("treat_a", 0.25), ("treat_b", 0.25)))
-    graft.streaming.StreamGate.replayAbMonitor(assigned, "arm",
-        "converted", controlArm = "control")
+    graft.streaming.StreamGate.monitor(
+        Experiment.abMonitor("arm", "converted", controlArm = "control"),
+        assigned)
       .orderBy("arm")
   }
 
@@ -4503,15 +4507,16 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q223
-  /** Streaming quantile monitor ([[graft.streaming.StreamGate
-    * .replayQuantileMonitor]]): the events value feed micro-batched,
+  /** Streaming quantile monitor ([[graft.operators.Profile
+    * .quantileMonitor]]): the events value feed micro-batched,
     * each batch's distinct-value counts folded by SUM into versioned
     * parquet ECDF state, readout = the SHARED discrete-rank
     * arithmetic — held to q221's verbatim oracle, closing the
     * quantile matrix batch/incremental/stream. */
   private def q223StreamQuantiles(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayQuantileMonitor(
-      Tables.events(s, dir), "value", quantilePs)
+    graft.streaming.StreamGate.monitor(
+        Profile.quantileMonitor("value", quantilePs),
+        Tables.events(s, dir))
 
   // ---------------------------------------------------------------- q224
   /** Streaming SCD-2 enrichment ([[graft.streaming.StreamGate
@@ -4531,17 +4536,18 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q225
-  /** Streaming bootstrap-CI monitor ([[graft.streaming.StreamGate
-    * .replayBootstrapMonitor]]): q217's outcome feed micro-batched,
+  /** Streaming bootstrap-CI monitor ([[graft.operators.Stats
+    * .bootstrapMonitor]]): q217's outcome feed micro-batched,
     * each batch's per-replicate (Σ, count) partials folded by exact
     * decimal SUM into versioned state, readout = the SHARED
     * percentile arithmetic — held to q217's verbatim oracle, closing
     * the CI matrix whole-corpus (q217) / per-group (q220) / stream
     * (this). */
   private def q225StreamBootstrapCI(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayBootstrapMonitor(
-      Tables.events(s, dir), "value", "event_id",
-      nBoot = 100, alpha = 0.05, salt = "boot1")
+    graft.streaming.StreamGate.monitor(
+        Stats.bootstrapMonitor("value", "event_id", nBoot = 100, alpha = 0.05,
+          salt = "boot1"),
+        Tables.events(s, dir))
 
   // ---------------------------------------------------------------- q226
   /** Categorical association audit ([[graft.operators.Profile
@@ -4657,16 +4663,16 @@ object SparkEntry {
       "n_tokens", "doc_id")
 
   // ---------------------------------------------------------------- q232
-  /** Streaming association monitor ([[graft.streaming.StreamGate
-    * .replayAssociationMonitor]]): q226's (event type, user bucket)
+  /** Streaming association monitor ([[graft.operators.Profile
+    * .associationMonitor]]): q226's (event type, user bucket)
     * feed micro-batched, joint counts folded by SUM into versioned
     * contingency state, readout = the shared chi-square/V/MI
     * arithmetic — held to q226's verbatim oracle. */
   private def q232StreamAssociation(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayAssociationMonitor(
-      Tables.events(s, dir).select(col("event_type"),
-        (col("user_id") % 7).cast("string").as("user_bucket")),
-      "event_type", "user_bucket")
+    graft.streaming.StreamGate.monitor(
+        Profile.associationMonitor("event_type", "user_bucket"),
+        Tables.events(s, dir).select(col("event_type"),
+          (col("user_id") % 7).cast("string").as("user_bucket")))
 
   // ---------------------------------------------------------------- q233
   /** End-to-end entity resolution ([[graft.operators.Linkage
@@ -4802,15 +4808,16 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q239
-  /** Streaming Gini monitor ([[graft.streaming.StreamGate
-    * .replayGiniMonitor]]): the token-mass feed micro-batched, each
+  /** Streaming Gini monitor ([[graft.operators.Stats
+    * .giniMonitor]]): the token-mass feed micro-batched, each
     * batch's distinct-mass counts folded by SUM into versioned
     * parquet ECDF state (the q223 quantile state's twin), readout =
     * the shared rank-sum identity — held to q230's verbatim oracle,
     * completing Gini batch / incremental / stream. */
   private def q239StreamGini(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGiniMonitor(
-      docTokenMasses(s, dir).select(col("n_tokens")), "n_tokens")
+    graft.streaming.StreamGate.monitor(
+        Stats.giniMonitor("n_tokens"),
+        docTokenMasses(s, dir).select(col("n_tokens")))
 
   // ---------------------------------------------------------------- q240
   /** Per-language token-mass-weighted length quantiles ([[graft
@@ -4902,17 +4909,17 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q245
-  /** Streaming per-group quantile monitor ([[graft.streaming
-    * .StreamGate.replayGroupQuantileMonitor]]): the (event type,
+  /** Streaming per-group quantile monitor ([[graft.operators.Profile
+    * .groupQuantileMonitor]]): the (event type,
     * value) feed micro-batched, per-group counts folded by SUM into
     * versioned parquet state, readout = the shared global-prefix-sum
     * rank arithmetic — held to q228's verbatim oracle, closing the
     * per-group quantile matrix batch/incremental/stream. */
   private def q245StreamGroupQuantiles(
       s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupQuantileMonitor(
-      Tables.events(s, dir).select(col("event_type"), col("value")),
-      "event_type", "value", quantilePs)
+    graft.streaming.StreamGate.monitor(
+        Profile.groupQuantileMonitor("event_type", "value", quantilePs),
+        Tables.events(s, dir).select(col("event_type"), col("value")))
 
   // ---------------------------------------------------------------- q246
   /** FUZZY-agreement Fellegi–Sunter ([[graft.operators.Linkage
@@ -4993,15 +5000,16 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q249
-  /** Streaming per-source Gini monitor ([[graft.streaming.StreamGate
-    * .replayGroupGiniMonitor]]): the (source, mass) feed
+  /** Streaming per-source Gini monitor ([[graft.operators.Stats
+    * .groupGiniMonitor]]): the (source, mass) feed
     * micro-batched, per-group counts folded by SUM into versioned
     * state, readout = the group-local rank-sum identity — held to
     * q234's verbatim oracle, closing per-group Gini batch /
     * incremental / stream. */
   private def q249StreamGroupGini(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupGiniMonitor(
-      sourceTokenMasses(s, dir), "source", "n_tokens")
+    graft.streaming.StreamGate.monitor(
+        Stats.groupGiniMonitor("source", "n_tokens"),
+        sourceTokenMasses(s, dir))
 
   // ---------------------------------------------------------------- q250
   /** Incremental bootstrap-CI maintenance ([[graft.operators.Stats
@@ -5046,19 +5054,19 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q252
-  /** Streaming per-group bootstrap-CI monitor ([[graft.streaming
-    * .StreamGate.replayGroupBootstrapMonitor]]): q220's (event type,
+  /** Streaming per-group bootstrap-CI monitor ([[graft.operators.Stats
+    * .groupBootstrapMonitor]]): q220's (event type,
     * value, id) feed micro-batched, per-(group, replicate) partials
     * folded by exact decimal SUM into versioned state, readout = the
     * shared per-group percentile arithmetic — held to q220's verbatim
     * oracle, closing the CI matrix's last cell: whole-corpus AND
     * per-group now each have batch / incremental / stream. */
   private def q252StreamGroupCI(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupBootstrapMonitor(
-      Tables.events(s, dir).select(col("event_type"), col("value"),
-        col("event_id")),
-      "event_type", "value", "event_id",
-      nBoot = 100, alpha = 0.05, salt = "boot2")
+    graft.streaming.StreamGate.monitor(
+        Stats.groupBootstrapMonitor("event_type", "value", "event_id",
+          nBoot = 100, alpha = 0.05, salt = "boot2"),
+        Tables.events(s, dir).select(col("event_type"), col("value"),
+          col("event_id")))
 
   /** The multi-rater annotation fixture shared by q253–q255: five
     * raters label every document's language; rater r corrupts its
@@ -5250,15 +5258,16 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q265
-  /** Streaming HHI monitor ([[graft.streaming.StreamGate
-    * .replayHhiMonitor]]): the mass feed micro-batched into the SAME
+  /** Streaming HHI monitor ([[graft.operators.Stats
+    * .hhiMonitor]]): the mass feed micro-batched into the SAME
     * versioned value-count state, readout = [[graft.operators.Stats
     * .hhiFromCounts]] — held to q260's verbatim oracle (the q239
     * pattern); one maintained grid now serves quantiles, KS, Gini,
     * and HHI. */
   private def q265StreamHhi(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayHhiMonitor(
-      docTokenMasses(s, dir).select(col("n_tokens")), "n_tokens")
+    graft.streaming.StreamGate.monitor(
+        Stats.hhiMonitor("n_tokens"),
+        docTokenMasses(s, dir).select(col("n_tokens")))
 
   /** The (snapshot, type, bucket) frame q241's per-group association
     * audits — shared by the q266/q267 maintenance twins (ONE
@@ -5297,8 +5306,8 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q267
-  /** Streaming per-group association monitor ([[graft.streaming
-    * .StreamGate.replayGroupAssociationMonitor]]): q241's row feed
+  /** Streaming per-group association monitor ([[graft.operators.Profile
+    * .groupAssociationMonitor]]): q241's row feed
     * micro-batched, group-keyed joint counts folded by SUM into
     * versioned state, readout = the shared per-group chi²/V/MI
     * arithmetic — held to q241's verbatim oracle, closing the
@@ -5306,9 +5315,10 @@ object SparkEntry {
     * each have batch / incremental / stream). */
   private def q267StreamGroupAssociation(
       s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupAssociationMonitor(
-      snapshotAssociationRows(s, dir),
-      "snapshot", "event_type", "user_bucket")
+    graft.streaming.StreamGate.monitor(
+        Profile.groupAssociationMonitor("snapshot", "event_type",
+          "user_bucket"),
+        snapshotAssociationRows(s, dir))
 
   // ---------------------------------------------------------------- q268
   /** Per-source Theil T ([[graft.operators.Stats.theilIndexByGroup]]):
@@ -5356,14 +5366,15 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q272
-  /** Streaming Theil monitor ([[graft.streaming.StreamGate
-    * .replayTheilMonitor]]): the mass feed micro-batched into the
+  /** Streaming Theil monitor ([[graft.operators.Stats
+    * .theilMonitor]]): the mass feed micro-batched into the
     * shared versioned value-count state — held to q262's verbatim
     * oracle; the one maintained grid now serves quantiles, KS, Gini,
     * HHI, and Theil. */
   private def q272StreamTheil(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayTheilMonitor(
-      docTokenMasses(s, dir).select(col("n_tokens")), "n_tokens")
+    graft.streaming.StreamGate.monitor(
+        Stats.theilMonitor("n_tokens"),
+        docTokenMasses(s, dir).select(col("n_tokens")))
 
   // ---------------------------------------------------------------- q273
   /** Brier score + expected calibration error ([[graft.operators.Eval
@@ -5413,12 +5424,13 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q276
-  /** Streaming per-source HHI monitor ([[graft.streaming.StreamGate
-    * .replayGroupHhiMonitor]]) — held to q261's verbatim oracle;
+  /** Streaming per-source HHI monitor ([[graft.operators.Stats
+    * .groupHhiMonitor]]) — held to q261's verbatim oracle;
     * the per-group grid now serves quantiles, Gini, and HHI. */
   private def q276StreamGroupHhi(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupHhiMonitor(
-      sourceTokenMasses(s, dir), "source", "n_tokens")
+    graft.streaming.StreamGate.monitor(
+        Stats.groupHhiMonitor("source", "n_tokens"),
+        sourceTokenMasses(s, dir))
 
   // ---------------------------------------------------------------- q277
   /** Per-source Theil off the maintained per-group count state
@@ -5450,13 +5462,14 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q279
-  /** Streaming per-source Theil monitor ([[graft.streaming.StreamGate
-    * .replayGroupTheilMonitor]]) — held to q268's verbatim oracle;
+  /** Streaming per-source Theil monitor ([[graft.operators.Stats
+    * .groupTheilMonitor]]) — held to q268's verbatim oracle;
     * closes the concentration matrix completely: Gini/HHI/Theil ×
     * corpus/per-group × batch/counts/incremental/stream. */
   private def q279StreamGroupTheil(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupTheilMonitor(
-      sourceTokenMasses(s, dir), "source", "n_tokens")
+    graft.streaming.StreamGate.monitor(
+        Stats.groupTheilMonitor("source", "n_tokens"),
+        sourceTokenMasses(s, dir))
 
   // ---------------------------------------------------------------- q280
   /** Incremental Fleiss-kappa maintenance ([[graft.operators.Annotate
@@ -5476,13 +5489,14 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q281
-  /** Streaming inter-rater agreement monitor ([[graft.streaming
-    * .StreamGate.replayFleissMonitor]]): the ratings feed
+  /** Streaming inter-rater agreement monitor ([[graft.operators.Annotate
+    * .fleissMonitor]]): the ratings feed
     * micro-batched, cells folded by SUM, kappa read off the completed
     * panel — held to q253's verbatim oracle. */
   private def q281StreamFleiss(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayFleissMonitor(
-      annotationRatings(s, dir), "doc_id", "rater", "label")
+    graft.streaming.StreamGate.monitor(
+        Annotate.fleissMonitor("doc_id", "rater", "label"),
+        annotationRatings(s, dir))
 
   /** The q256/q282/q283 varying-participation predicate. */
   private def krParticipates: Column = {
@@ -5509,15 +5523,15 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q283
-  /** Streaming Krippendorff-alpha monitor ([[graft.streaming
-    * .StreamGate.replayAlphaMonitor]]): the participation-filtered
+  /** Streaming Krippendorff-alpha monitor ([[graft.operators.Annotate
+    * .alphaMonitor]]): the participation-filtered
     * feed micro-batched — alpha tolerates varying participation, so
     * the live readout is meaningful mid-panel; held to q256's
     * verbatim oracle. */
   private def q283StreamAlpha(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayAlphaMonitor(
-      annotationRatings(s, dir).filter(krParticipates),
-      "doc_id", "rater", "label")
+    graft.streaming.StreamGate.monitor(
+        Annotate.alphaMonitor("doc_id", "rater", "label"),
+        annotationRatings(s, dir).filter(krParticipates))
 
   // ---------------------------------------------------------------- q284
   /** Incremental Bradley–Terry maintenance ([[graft.operators
@@ -5537,14 +5551,15 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q285
-  /** Streaming Bradley–Terry leaderboard ([[graft.streaming
-    * .StreamGate.replayLeaderboardMonitor]]): the comparison feed
+  /** Streaming Bradley–Terry leaderboard ([[graft.operators.Preference
+    * .leaderboardMonitor]]): the comparison feed
     * micro-batched, win counts folded by SUM, the deterministic MM
     * re-fit off the accumulated state — held to q258's verbatim
     * oracle. */
   private def q285StreamBt(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayLeaderboardMonitor(
-      preferencePairs(s, dir), "winner", "loser")
+    graft.streaming.StreamGate.monitor(
+        Preference.leaderboardMonitor("winner", "loser"),
+        preferencePairs(s, dir))
 
   // ---------------------------------------------------------------- q286
   /** Incremental calibration maintenance ([[graft.operators.Eval
@@ -5564,13 +5579,14 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q287
-  /** Streaming calibration monitor ([[graft.streaming.StreamGate
-    * .replayCalibrationMonitor]]): the scored feed micro-batched into
+  /** Streaming calibration monitor ([[graft.operators.Eval
+    * .calibrationMonitor]]): the scored feed micro-batched into
     * bins-bounded versioned state — the live confidence-honesty
     * dashboard, held to q273's verbatim oracle. */
   private def q287StreamCalibration(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayCalibrationMonitor(
-      brierScoredDocs(s, dir).select(col("label"), col("s")), "label", "s")
+    graft.streaming.StreamGate.monitor(
+        Eval.calibrationMonitor("label", "s"),
+        brierScoredDocs(s, dir).select(col("label"), col("s")))
 
   // ---------------------------------------------------------------- q288
   /** Incremental label-consolidation maintenance ([[graft.operators
@@ -5593,13 +5609,14 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q289
-  /** Streaming label-consolidation monitor ([[graft.streaming
-    * .StreamGate.replayConsensusMonitor]]): the ratings feed
+  /** Streaming label-consolidation monitor ([[graft.operators.Annotate
+    * .consensusMonitor]]): the ratings feed
     * micro-batched, the consensus table read off the accumulated
     * cells — held to q254's verbatim oracle. */
   private def q289StreamConsensus(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayConsensusMonitor(
-        annotationRatings(s, dir), "doc_id", "rater", "label")
+    graft.streaming.StreamGate.monitor(
+        Annotate.consensusMonitor("doc_id", "rater", "label"),
+        annotationRatings(s, dir))
       .orderBy("doc_id")
 
   /** q290–q292's sliced scored corpus: [[brierScoredDocs]] keyed by
@@ -5646,16 +5663,16 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q292
-  /** Streaming per-group calibration monitor ([[graft.streaming
-    * .StreamGate.replayGroupCalibrationMonitor]]): the sliced scored
+  /** Streaming per-group calibration monitor ([[graft.operators.Eval
+    * .groupCalibrationMonitor]]): the sliced scored
     * feed micro-batched into group-keyed bins-bounded state — held to
     * q290's verbatim oracle. */
   private def q292StreamGroupCalibration(
       s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupCalibrationMonitor(
-      brierScoredDocsBySource(s, dir)
-        .select(col("source"), col("label"), col("s")),
-      "source", "label", "s")
+    graft.streaming.StreamGate.monitor(
+        Eval.groupCalibrationMonitor("source", "label", "s"),
+        brierScoredDocsBySource(s, dir)
+          .select(col("source"), col("label"), col("s")))
 
   // ---------------------------------------------------------------- q293
   /** Weighted Cohen's kappa ([[graft.operators.Eval.weightedKappa]]):
@@ -5728,13 +5745,14 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q297
-  /** Streaming vocabulary-saturation monitor ([[graft.streaming
-    * .StreamGate.replayVocabRichnessMonitor]]): the document feed
+  /** Streaming vocabulary-saturation monitor ([[graft.operators.Corpus
+    * .vocabRichnessMonitor]]): the document feed
     * micro-batched into vocabulary-bounded versioned state — held to
     * q295's verbatim oracle. */
   private def q297StreamVocab(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayVocabRichnessMonitor(
-      Tables.documents(s, dir).select(col("text")), "text")
+    graft.streaming.StreamGate.monitor(
+        Corpus.vocabRichnessMonitor("text"),
+        Tables.documents(s, dir).select(col("text")))
 
   // ---------------------------------------------------------------- q298
   /** Rank-biased overlap ([[graft.operators.Eval.rankBiasedOverlap]]):
@@ -5803,13 +5821,13 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q302
-  /** Streaming per-language saturation monitor ([[graft.streaming
-    * .StreamGate.replayGroupVocabMonitor]]) — held to q300's verbatim
+  /** Streaming per-language saturation monitor ([[graft.operators.Corpus
+    * .groupVocabMonitor]]) — held to q300's verbatim
     * oracle. */
   private def q302StreamGroupVocab(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupVocabMonitor(
-      Tables.documents(s, dir).select(col("lang"), col("text")),
-      "lang", "text")
+    graft.streaming.StreamGate.monitor(
+        Corpus.groupVocabMonitor("lang", "text"),
+        Tables.documents(s, dir).select(col("lang"), col("text")))
 
   // ---------------------------------------------------------------- q303
   /** Incremental win-matrix maintenance ([[graft.operators.Preference
@@ -5829,14 +5847,15 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q304
-  /** Streaming win-matrix monitor ([[graft.streaming.StreamGate
-    * .replayWinMatrixMonitor]]): the comparison feed micro-batched,
+  /** Streaming win-matrix monitor ([[graft.operators.Preference
+    * .winMatrixMonitor]]): the comparison feed micro-batched,
     * the live head-to-head table read off the accumulated win counts
     * — held to q257's verbatim oracle; one maintained state now
     * serves the leaderboard AND the matrix. */
   private def q304StreamWins(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayWinMatrixMonitor(
-      preferencePairs(s, dir), "winner", "loser")
+    graft.streaming.StreamGate.monitor(
+        Preference.winMatrixMonitor("winner", "loser"),
+        preferencePairs(s, dir))
 
   /** Shared fixture of the Pearson/OLS family (q305–q310): character
     * count vs whitespace token count per document — the q192 signal
@@ -5878,13 +5897,14 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q307
-  /** Streaming Pearson/OLS monitor ([[graft.streaming.StreamGate
-    * .replayMomentsMonitor]]): the (x, y) feed micro-batched into a
+  /** Streaming Pearson/OLS monitor ([[graft.operators.Moments
+    * .momentsMonitor]]): the (x, y) feed micro-batched into a
     * versioned ONE-ROW moment state — held to q305's verbatim
     * oracle. */
   private def q307StreamMoments(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayMomentsMonitor(
-      momentDocs(s, dir).select(col("x"), col("y")), "x", "y")
+    graft.streaming.StreamGate.monitor(
+        Moments.momentsMonitor("x", "y"),
+        momentDocs(s, dir).select(col("x"), col("y")))
 
   // ---------------------------------------------------------------- q308
   /** Per-language Pearson/OLS ([[graft.operators.Moments
@@ -5916,14 +5936,14 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q310
-  /** Streaming per-language Pearson/OLS monitor ([[graft.streaming
-    * .StreamGate.replayGroupMomentsMonitor]]): the (lang, x, y) feed
+  /** Streaming per-language Pearson/OLS monitor ([[graft.operators.Moments
+    * .groupMomentsMonitor]]): the (lang, x, y) feed
     * micro-batched into group-keyed moment state — held to q308's
     * verbatim oracle. */
   private def q310StreamGroupMoments(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupMomentsMonitor(
-      momentDocs(s, dir).select(col("lang"), col("x"), col("y")),
-      "lang", "x", "y")
+    graft.streaming.StreamGate.monitor(
+        Moments.groupMomentsMonitor("lang", "x", "y"),
+        momentDocs(s, dir).select(col("lang"), col("x"), col("y")))
 
   // ---------------------------------------------------------------- q311
   /** Exact 1-Wasserstein drift ([[graft.operators.Profile
@@ -5941,8 +5961,8 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q312
-  /** Streaming 1-Wasserstein drift ([[graft.streaming.StreamGate
-    * .replayWassersteinDrift]]): q311's statistic with the monitored
+  /** Streaming 1-Wasserstein drift ([[graft.operators.Profile
+    * .wassersteinDriftMonitor]]): q311's statistic with the monitored
     * slice as a file stream folding the SAME maintained ECDF count
     * state as the KS/quantile monitors — held to q311's VERBATIM
     * oracle. The drift matrix now closes PSI / categorical / KS / W1,
@@ -5950,9 +5970,10 @@ object SparkEntry {
   private def q312StreamWasserstein(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayWassersteinDrift(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs), "value")
+    graft.streaming.StreamGate.monitor(
+        Profile.wassersteinDriftMonitor(
+          ev.filter(unix_micros(col("ts")) < splitUs), "value"),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q313
@@ -5972,17 +5993,17 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q314
-  /** Streaming Jensen–Shannon drift ([[graft.streaming.StreamGate
-    * .replayJsDivergence]]): q313's divergence with the monitored
+  /** Streaming Jensen–Shannon drift ([[graft.operators.Profile
+    * .jsDivergenceMonitor]]): q313's divergence with the monitored
     * slice as a file stream folding vocabulary-bounded category
     * counts — held to q313's VERBATIM oracle. */
   private def q314StreamJsd(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(s, dir)
     val split = lit("1996-01-01").cast("timestamp_ntz")
-    graft.streaming.StreamGate.replayJsDivergence(
-      orders.filter(col("o_orderdate") < split),
-      orders.filter(col("o_orderdate") >= split),
-      "o_orderpriority")
+    graft.streaming.StreamGate.monitor(
+        Profile.jsDivergenceMonitor(orders.filter(col("o_orderdate") < split),
+          "o_orderpriority"),
+        orders.filter(col("o_orderdate") >= split))
   }
 
   // ---------------------------------------------------------------- q315
@@ -6013,16 +6034,17 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q317
-  /** Streaming Mann–Whitney monitor ([[graft.streaming.StreamGate
-    * .replayMannWhitney]]): q316's test with the monitored slice
+  /** Streaming Mann–Whitney monitor ([[graft.operators.Profile
+    * .mannWhitneyMonitor]]): q316's test with the monitored slice
     * folding the shared ECDF count state — held to q316's VERBATIM
     * oracle. */
   private def q317StreamMannWhitney(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayMannWhitney(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs), "value")
+    graft.streaming.StreamGate.monitor(
+        Profile.mannWhitneyMonitor(ev.filter(unix_micros(col("ts")) < splitUs),
+          "value"),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q318
@@ -6039,17 +6061,18 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q319
-  /** Streaming Cramér–von Mises monitor ([[graft.streaming.StreamGate
-    * .replayCvmDrift]]): q318 with the monitored slice folding the
+  /** Streaming Cramér–von Mises monitor ([[graft.operators.Profile
+    * .cvmDriftMonitor]]): q318 with the monitored slice folding the
     * shared ECDF count state — held to q318's VERBATIM oracle. One
     * maintained grid now serves KS/W1/CvM/Mann–Whitney/quantiles/
     * Gini/HHI, batch + stream. */
   private def q319StreamCvm(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayCvmDrift(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs), "value")
+    graft.streaming.StreamGate.monitor(
+        Profile.cvmDriftMonitor(ev.filter(unix_micros(col("ts")) < splitUs),
+          "value"),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q320
@@ -6079,16 +6102,16 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q322
-  /** Streaming per-group KS monitor ([[graft.streaming.StreamGate
-    * .replayGroupKsDrift]]): q321 with the monitored slice folding
+  /** Streaming per-group KS monitor ([[graft.operators.Profile
+    * .groupKsDriftMonitor]]): q321 with the monitored slice folding
     * group-keyed value counts — held to q321's VERBATIM oracle. */
   private def q322StreamGroupKs(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayGroupKsDrift(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs),
-      "event_type", "value")
+    graft.streaming.StreamGate.monitor(
+        Profile.groupKsDriftMonitor(
+          ev.filter(unix_micros(col("ts")) < splitUs), "event_type", "value"),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q323
@@ -6125,18 +6148,18 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q325
-  /** Streaming per-group 1-Wasserstein monitor ([[graft.streaming
-    * .StreamGate.replayGroupWassersteinDrift]]): q324 with the
+  /** Streaming per-group 1-Wasserstein monitor ([[graft.operators.Profile
+    * .groupWassersteinDriftMonitor]]): q324 with the
     * monitored slice folding the shared group-keyed count state —
     * held to q324's VERBATIM oracle. */
   private def q325StreamGroupWasserstein(
       s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayGroupWassersteinDrift(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs),
-      "event_type", "value")
+    graft.streaming.StreamGate.monitor(
+        Profile.groupWassersteinDriftMonitor(
+          ev.filter(unix_micros(col("ts")) < splitUs), "event_type", "value"),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q326
@@ -6192,17 +6215,17 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q329
-  /** Streaming CUSUM change-point monitor ([[graft.streaming
-    * .StreamGate.replayChangePointMonitor]]): q326's scan with the
+  /** Streaming CUSUM change-point monitor ([[graft.operators.Stats
+    * .changePointMonitor]]): q326's scan with the
     * event feed micro-batched into per-day exact-decimal sum state —
     * held to q326's VERBATIM oracle (daily sums fold by SUM; the
     * double cast happens once at readout). */
   private def q329StreamChangePoint(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayChangePointMonitor(
-      Tables.events(s, dir).select(
-        date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
-        col("value")),
-      "day", "value")
+    graft.streaming.StreamGate.monitor(
+        Stats.changePointMonitor("day", "value"),
+        Tables.events(s, dir).select(
+          date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
+          col("value")))
 
   // ---------------------------------------------------------------- q330
   /** Benford first-digit audit ([[graft.operators.Profile
@@ -6232,17 +6255,18 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q332
-  /** Streaming per-group JSD monitor ([[graft.streaming.StreamGate
-    * .replayGroupJsDivergence]]): q331 with the monitored slice
+  /** Streaming per-group JSD monitor ([[graft.operators.Profile
+    * .groupJsDivergenceMonitor]]): q331 with the monitored slice
     * folding group-keyed category counts — held to q331's VERBATIM
     * oracle. */
   private def q332StreamGroupJsd(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(s, dir)
     val split = lit("1996-01-01").cast("timestamp_ntz")
-    graft.streaming.StreamGate.replayGroupJsDivergence(
-      orders.filter(col("o_orderdate") < split),
-      orders.filter(col("o_orderdate") >= split),
-      "o_orderstatus", "o_orderpriority")
+    graft.streaming.StreamGate.monitor(
+        Profile.groupJsDivergenceMonitor(
+          orders.filter(col("o_orderdate") < split), "o_orderstatus",
+          "o_orderpriority"),
+        orders.filter(col("o_orderdate") >= split))
   }
 
   // ---------------------------------------------------------------- q333
@@ -6261,17 +6285,17 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q334
-  /** Streaming Hellinger monitor ([[graft.streaming.StreamGate
-    * .replayHellinger]]): q333 over the same folded category-count
+  /** Streaming Hellinger monitor ([[graft.operators.Profile
+    * .hellingerMonitor]]): q333 over the same folded category-count
     * state the JSD monitor maintains — held to q333's VERBATIM
     * oracle. */
   private def q334StreamHellinger(s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(s, dir)
     val split = lit("1996-01-01").cast("timestamp_ntz")
-    graft.streaming.StreamGate.replayHellinger(
-      orders.filter(col("o_orderdate") < split),
-      orders.filter(col("o_orderdate") >= split),
-      "o_orderpriority")
+    graft.streaming.StreamGate.monitor(
+        Profile.hellingerMonitor(orders.filter(col("o_orderdate") < split),
+          "o_orderpriority"),
+        orders.filter(col("o_orderdate") >= split))
   }
 
   // ---------------------------------------------------------------- q335
@@ -6291,17 +6315,18 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q336
-  /** Streaming quantile-shift monitor ([[graft.streaming.StreamGate
-    * .replayQuantileShift]]): q335 with the monitored slice folding
+  /** Streaming quantile-shift monitor ([[graft.operators.Profile
+    * .quantileShiftMonitor]]): q335 with the monitored slice folding
     * the shared ECDF count state — held to q335's VERBATIM oracle. */
   private def q336StreamQuantileShift(
       s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayQuantileShift(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs),
-      "value", Seq(0.25, 0.5, 0.75, 0.9, 0.99))
+    graft.streaming.StreamGate.monitor(
+        Profile.quantileShiftMonitor(
+          ev.filter(unix_micros(col("ts")) < splitUs), "value",
+          Seq(0.25, 0.5, 0.75, 0.9, 0.99)),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q337
@@ -6341,16 +6366,16 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q339
-  /** Streaming per-group Mann–Whitney monitor ([[graft.streaming
-    * .StreamGate.replayGroupMannWhitney]]): q338 folding the shared
+  /** Streaming per-group Mann–Whitney monitor ([[graft.operators.Profile
+    * .groupMannWhitneyMonitor]]): q338 folding the shared
     * group count state — held to q338's VERBATIM oracle. */
   private def q339StreamGroupMwu(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayGroupMannWhitney(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs),
-      "event_type", "value")
+    graft.streaming.StreamGate.monitor(
+        Profile.groupMannWhitneyMonitor(
+          ev.filter(unix_micros(col("ts")) < splitUs), "event_type", "value"),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q340
@@ -6368,17 +6393,17 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q341
-  /** Streaming per-group CvM monitor ([[graft.streaming.StreamGate
-    * .replayGroupCvmDrift]]): q340 folding the shared group count
+  /** Streaming per-group CvM monitor ([[graft.operators.Profile
+    * .groupCvmDriftMonitor]]): q340 folding the shared group count
     * state — held to q340's VERBATIM oracle. The per-slice drift
     * matrix closes batch + stream on ONE maintained group grid. */
   private def q341StreamGroupCvm(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayGroupCvmDrift(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs),
-      "event_type", "value")
+    graft.streaming.StreamGate.monitor(
+        Profile.groupCvmDriftMonitor(
+          ev.filter(unix_micros(col("ts")) < splitUs), "event_type", "value"),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q342
@@ -6415,17 +6440,18 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q344
-  /** Streaming per-group Hellinger monitor ([[graft.streaming
-    * .StreamGate.replayGroupHellinger]]): q343 folding the shared
+  /** Streaming per-group Hellinger monitor ([[graft.operators.Profile
+    * .groupHellingerMonitor]]): q343 folding the shared
     * group category-count state — held to q343's VERBATIM oracle. */
   private def q344StreamGroupHellinger(
       s: SparkSession, dir: String): DataFrame = {
     val orders = Tables.orders(s, dir)
     val split = lit("1996-01-01").cast("timestamp_ntz")
-    graft.streaming.StreamGate.replayGroupHellinger(
-      orders.filter(col("o_orderdate") < split),
-      orders.filter(col("o_orderdate") >= split),
-      "o_orderstatus", "o_orderpriority")
+    graft.streaming.StreamGate.monitor(
+        Profile.groupHellingerMonitor(
+          orders.filter(col("o_orderdate") < split), "o_orderstatus",
+          "o_orderpriority"),
+        orders.filter(col("o_orderdate") >= split))
   }
 
   // ---------------------------------------------------------------- q345
@@ -6475,17 +6501,18 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q348
-  /** Streaming per-type quantile-shift monitor ([[graft.streaming
-    * .StreamGate.replayGroupQuantileShift]]): q347 folding the shared
+  /** Streaming per-type quantile-shift monitor ([[graft.operators.Profile
+    * .groupQuantileShiftMonitor]]): q347 folding the shared
     * group count state — held to q347's VERBATIM oracle. */
   private def q348StreamGroupQuantileShift(
       s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val splitUs = 1705363200000000L
-    graft.streaming.StreamGate.replayGroupQuantileShift(
-      ev.filter(unix_micros(col("ts")) < splitUs),
-      ev.filter(unix_micros(col("ts")) >= splitUs),
-      "event_type", "value", Seq(0.5, 0.9, 0.99))
+    graft.streaming.StreamGate.monitor(
+        Profile.groupQuantileShiftMonitor(
+          ev.filter(unix_micros(col("ts")) < splitUs), "event_type", "value",
+          Seq(0.5, 0.9, 0.99)),
+        ev.filter(unix_micros(col("ts")) >= splitUs))
   }
 
   // ---------------------------------------------------------------- q351
@@ -6710,15 +6737,16 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q361
-  /** Streaming Kaplan–Meier monitor ([[graft.streaming.StreamGate
-    * .replayKaplanMeierMonitor]]): q355's subjects micro-batched,
+  /** Streaming Kaplan–Meier monitor ([[graft.operators.Events
+    * .kaplanMeierMonitor]]): q355's subjects micro-batched,
     * duration-grid cells folding by SUM into versioned state,
     * readout = the shared prefix/fixed-point arithmetic — held to
     * q355's VERBATIM oracle, completing the survival family's
     * batch / incremental / stream matrix. */
   private def q361StreamKm(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayKaplanMeierMonitor(
-      survivalSubjects(s, dir), "dur_days", "observed")
+    graft.streaming.StreamGate.monitor(
+        Events.kaplanMeierMonitor("dur_days", "observed"),
+        survivalSubjects(s, dir))
 
   // ---------------------------------------------------------------- q362
   /** Nelson–Aalen cumulative hazard ([[graft.operators.Events
@@ -6777,8 +6805,8 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- q366
-  /** Streaming URL-dedup monitor ([[graft.streaming.StreamGate
-    * .replayKeyDedupMonitor]]): q349's normalized URLs micro-batched,
+  /** Streaming URL-dedup monitor ([[graft.operators.Dedup
+    * .keyDedupMonitor]]): q349's normalized URLs micro-batched,
     * per-key min-id winners folding by re-min into versioned state —
     * arrival order provably cannot change a winner, so the stream
     * registry is held to q349's VERBATIM oracle; completes the URL
@@ -6788,7 +6816,8 @@ object SparkEntry {
     import graft.functions.UrlFunctions
     val all = q349UrlCorpus(s, dir).select(col("doc_id"),
       UrlFunctions.urlNormalize(col("url")).as("url"))
-    graft.streaming.StreamGate.replayKeyDedupMonitor(all, "url", "doc_id")
+    graft.streaming.StreamGate.monitor(
+        Dedup.keyDedupMonitor("url", "doc_id"), all)
       .select(col("url"), col("doc_id").as("first_doc_id"))
   }
 
@@ -7007,8 +7036,8 @@ object SparkEntry {
       ps = Seq(0.25, 0.5, 0.9), k = 1024)
 
   // ---------------------------------------------------------------- q379
-  /** Streaming sketch-quantile monitor ([[graft.streaming.StreamGate
-    * .replaySketchQuantileMonitor]]): the same events arriving as a
+  /** Streaming sketch-quantile monitor ([[graft.operators.Profile
+    * .sketchQuantileMonitor]]): the same events arriving as a
     * file stream, each micro-batch's own bottom-k folding into the
     * k-row state by min-k — associative, commutative, idempotent, so
     * the final state provably equals q378's batch sketch whatever the
@@ -7016,10 +7045,11 @@ object SparkEntry {
     * family's exact batch/incremental/stream (q221-q223) with a
     * sketch-tier batch/stream pair. */
   private def q379StreamSketchQuantiles(
-      s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replaySketchQuantileMonitor(
-      Tables.events(s, dir), "value", "event_id",
-      ps = Seq(0.25, 0.5, 0.9), k = 1024)
+      s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    graft.streaming.StreamGate.monitor(Profile.sketchQuantileMonitor(ev,
+      "value", "event_id", ps = Seq(0.25, 0.5, 0.9), k = 1024), ev)
+  }
 
   // ---------------------------------------------------------------- q381
   /** Unigram-aware sequence packing (the q108 analogue — the unigram
@@ -7058,17 +7088,18 @@ object SparkEntry {
       ps = Seq(0.5, 0.9), k = 256)
 
   // ---------------------------------------------------------------- q383
-  /** Streaming per-group sketch monitor ([[graft.streaming.StreamGate
-    * .replayGroupSketchQuantileMonitor]]): q382's state maintained
+  /** Streaming per-group sketch monitor ([[graft.operators.Profile
+    * .groupSketchQuantileMonitor]]): q382's state maintained
     * over a file stream, micro-batch samples folding by keyed min-k —
     * associative, commutative, idempotent per group — so the final
     * state provably equals the batch state whatever the split. Held
     * to q382's VERBATIM oracle. */
   private def q383StreamGroupSketchQuantiles(
-      s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamGate.replayGroupSketchQuantileMonitor(
-      Tables.events(s, dir), "event_type", "value", "event_id",
-      ps = Seq(0.5, 0.9), k = 256)
+      s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    graft.streaming.StreamGate.monitor(Profile.groupSketchQuantileMonitor(ev,
+      "event_type", "value", "event_id", ps = Seq(0.5, 0.9), k = 256), ev)
+  }
 
   /** The q384/q385 corpus: documents.text plus a deterministic
     * doc_id-keyed non-ASCII suffix — byte-level BPE must prove itself

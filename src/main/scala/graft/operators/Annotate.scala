@@ -101,6 +101,38 @@ object Annotate {
     base.unionByName(delta).groupBy("__it", "__l")
       .agg(sum(col("__c")).as("__c"))
 
+  /** A [[FoldMonitor]] over the ratings feed's (item, label) cell
+    * state, read out by `readout`. */
+  private def cellMonitor(name: String, itemCol: String, raterCol: String,
+      labelCol: String)(readout: DataFrame => DataFrame): FoldMonitor =
+    FoldMonitor(name, _.select(itemCol, raterCol, labelCol),
+      annotationCellsOf(_, itemCol, raterCol, labelCol, name),
+      foldAnnotationCells, readout)
+
+  /** [[fleissKappa]] as a monitor. Fleiss' constant-panel
+    * precondition applies to the ACCUMULATED cells: the replay reads
+    * out at the end, once the full panel has landed. */
+  def fleissMonitor(
+      itemCol: String, raterCol: String, labelCol: String): FoldMonitor =
+    cellMonitor("fleissMonitor", itemCol, raterCol, labelCol)(state =>
+      fleissKappaFromCells(Blocks.checkpoint(state)))
+
+  /** [[krippendorffAlpha]] as a monitor. Alpha tolerates varying
+    * participation, so its readout is meaningful at any point of the
+    * feed, not only at panel completion. */
+  def alphaMonitor(
+      itemCol: String, raterCol: String, labelCol: String): FoldMonitor =
+    cellMonitor("alphaMonitor", itemCol, raterCol, labelCol)(state =>
+      krippendorffAlphaFromCells(Blocks.checkpoint(state)))
+
+  /** [[consolidateLabels]] as a monitor: the consensus training-label
+    * table stays current as annotations land (ties stay
+    * deterministic: the argmin reads the accumulated cells). */
+  def consensusMonitor(
+      itemCol: String, raterCol: String, labelCol: String): FoldMonitor =
+    cellMonitor("consensusMonitor", itemCol, raterCol, labelCol)(
+      consolidateLabelsFromCells(_, itemCol))
+
   /** [[fleissKappa]]'s readout over accumulated `(__it, __l, __c)`
     * state — shared verbatim by the batch operator, the incremental
     * fold, and the streaming monitor (the caller owns

@@ -70,6 +70,14 @@ object Corpus {
   def foldTokenFrequencies(base: DataFrame, delta: DataFrame): DataFrame =
     base.unionByName(delta).groupBy("token").agg(sum(col("freq")).as("freq"))
 
+  /** [[vocabRichness]] as a [[FoldMonitor]] over the (token, freq)
+    * state: the live "is more crawl still buying new vocabulary?"
+    * dashboard. */
+  def vocabRichnessMonitor(textCol: String): FoldMonitor =
+    FoldMonitor("vocabRichnessMonitor", _.select(textCol),
+      tokenFrequencies(_, textCol), foldTokenFrequencies,
+      vocabRichnessFromFrequencies)
+
   /** Per-group [[vocabRichness]] — saturation PER SLICE ("is the
     * German crawl saturated while Chinese still buys new types?"):
     * the whole Chao1/Good–Turing readout runs IN the plan over the
@@ -95,6 +103,13 @@ object Corpus {
       base: DataFrame, delta: DataFrame): DataFrame =
     base.unionByName(delta).groupBy("__g", "token")
       .agg(sum(col("freq")).as("freq"))
+
+  /** [[vocabRichnessByGroup]] as a [[FoldMonitor]] over the
+    * `(__g, token, freq)` state: per-language saturation, live. */
+  def groupVocabMonitor(groupCol: String, textCol: String): FoldMonitor =
+    FoldMonitor("groupVocabMonitor", _.select(groupCol, textCol),
+      groupTokenFrequencies(_, groupCol, textCol), foldGroupTokenFrequencies,
+      vocabRichnessByGroupFromFrequencies(_, groupCol))
 
   /** [[vocabRichnessByGroup]]'s readout over accumulated
     * `(__g, token, freq)` state — shared verbatim by the batch

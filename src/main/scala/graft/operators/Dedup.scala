@@ -47,6 +47,20 @@ object Dedup {
   def exactDedupIds(df: DataFrame, keys: Seq[String], orderCol: String): DataFrame =
     df.groupBy(keys.map(col): _*).agg(min(col(orderCol)).as(orderCol))
 
+  /** [[exactDedupIds]] as a [[FoldMonitor]] over the (key, id) feed:
+    * the per-key min-id winners fold by RE-MINNING. Min is associative
+    * and commutative, so arrival order cannot change a winner, which
+    * is strictly stronger than a first-shard-wins ledger. The
+    * canonical-URL registry that stays current as the crawl lands:
+    * state is one (key, id) row per distinct key. Returns the winner
+    * table ordered by key. */
+  def keyDedupMonitor(keyCol: String, idCol: String): FoldMonitor =
+    FoldMonitor("keyDedupMonitor", _.select(keyCol, idCol),
+      exactDedupIds(_, Seq(keyCol), idCol),
+      (base, delta) =>
+        exactDedupIds(base.unionByName(delta), Seq(keyCol), idCol),
+      _.orderBy(keyCol))
+
   /** Window-sort formulation of [[exactDedup]] — same result, one
     * per-key sorted pass. Prefer the algebraic form; this exists for
     * rank-dependent generalizations (keep top-N per key). */

@@ -710,6 +710,15 @@ object Eval {
       .agg(sum(col("n")).as("n"), sum(col("n_pos")).as("n_pos"),
         sum(col("__ssum")).as("__ssum"), sum(col("__bsum")).as("__bsum"))
 
+  /** [[brierEce]] as a [[FoldMonitor]] over the bins-bounded
+    * calibration state: the live "is the model's confidence still
+    * honest?" dashboard. */
+  def calibrationMonitor(labelCol: String, scoreCol: String, bins: Int = 10,
+      lo: Double = 0.0, hi: Double = 1.0): FoldMonitor =
+    FoldMonitor("calibrationMonitor", _.select(labelCol, scoreCol),
+      calibStateOf(_, labelCol, scoreCol, bins, lo, hi), foldCalibState,
+      brierEceFromState)
+
   /** Per-group [[brierEce]] — calibration PER SLICE (language, source,
     * time bucket): the per-slice evaluation that catches a model
     * calibrated overall while confidently wrong on one language (the
@@ -769,6 +778,17 @@ object Eval {
     base.unionByName(delta).groupBy("__g", "bucket")
       .agg(sum(col("n")).as("n"), sum(col("n_pos")).as("n_pos"),
         sum(col("__ssum")).as("__ssum"), sum(col("__bsum")).as("__bsum"))
+
+  /** [[brierEceByGroup]] as a [[FoldMonitor]] over the group-keyed
+    * calibration state: the live per-slice confidence dashboard. */
+  def groupCalibrationMonitor(groupCol: String, labelCol: String,
+      scoreCol: String, bins: Int = 10, lo: Double = 0.0,
+      hi: Double = 1.0): FoldMonitor =
+    FoldMonitor("groupCalibrationMonitor",
+      _.select(groupCol, labelCol, scoreCol),
+      groupCalibStateOf(_, groupCol, labelCol, scoreCol, bins, lo, hi),
+      foldGroupCalibState,
+      state => brierEceByGroupFromState(Blocks.checkpoint(state), groupCol))
 
   /** [[brierEceByGroup]]'s readout over accumulated group-keyed
     * state — shared verbatim by the batch operator, the incremental

@@ -189,6 +189,15 @@ object Events {
     base.unionByName(delta).groupBy("__t")
       .agg(sum(col("__d")).as("__d"), sum(col("__c")).as("__c"))
 
+  /** [[kaplanMeier]] as a [[FoldMonitor]] over the duration-grid cells
+    * (grid-bounded, never the subjects): the retention curve that
+    * stays current as cohorts mature. */
+  def kaplanMeierMonitor(
+      durationCol: String, observedCol: String): FoldMonitor =
+    FoldMonitor("kaplanMeierMonitor", _.select(durationCol, observedCol),
+      survivalCellsOf(_, durationCol, observedCol), foldSurvivalCells,
+      kaplanMeierFromCells)
+
   /** [[kaplanMeier]]'s readout over accumulated `(__t, __d, __c)`
     * state — shared verbatim by the batch operator, the incremental
     * fold, and the streaming monitor (the guards run here, over the

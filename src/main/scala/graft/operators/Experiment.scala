@@ -387,6 +387,43 @@ object Experiment {
     out.toSeq.toDF("arm", "n", "n_pass", "rate6", "av_p6", "significant")
   }
 
+  /** (arm, flag) feed of the A/B monitors: NULL arms and flags are
+    * excluded as the batch operators exclude them, and the arm is cast
+    * to string so a typed arm column cannot break stream==batch
+    * parity. */
+  private[graft] def armFeed(
+      outcomes: DataFrame, armCol: String, flagCol: String): DataFrame =
+    outcomes
+      .filter(col(armCol).isNotNull && col(flagCol).isNotNull)
+      .select(col(armCol).cast("string").as("arm"),
+        col(flagCol).cast("boolean").as("flag"))
+
+  /** Per-arm (n, n_pass) counts of an [[armFeed]] batch. */
+  private[graft] def armCounts(batch: DataFrame): DataFrame =
+    batch.groupBy("arm")
+      .agg(count(col("flag")).as("n"),
+        sum(when(col("flag") === true, 1L).otherwise(0L)).as("n_pass"))
+
+  /** The per-arm count fold: counts merge by SUM. */
+  private[graft] def foldArmCounts(
+      base: DataFrame, delta: DataFrame): DataFrame =
+    base.unionByName(delta)
+      .groupBy("arm")
+      .agg(sum(col("n")).cast("long").as("n"),
+        sum(col("n_pass")).cast("long").as("n_pass"))
+
+  /** [[abReport]] as a [[FoldMonitor]] over the per-arm counts: the
+    * live dashboard a running experiment is watched on. Rows must
+    * arrive already assigned (`armCol`) with a boolean outcome; NULL
+    * outcomes are excluded per the batch rule, at the batch where they
+    * arrive. */
+  def abMonitor(armCol: String, flagCol: String, controlArm: String,
+      zThreshold: Double = 1.96): FoldMonitor =
+    FoldMonitor("abMonitor", armFeed(_, armCol, flagCol), armCounts,
+      foldArmCounts, state => abReportFromCI(
+        Quality.passRateCIFromCounts(state, Seq("arm"), zThreshold),
+        controlArm, zThreshold))
+
   /** [[abReport]]'s readout arithmetic over a prepared per-arm CI
     * table (`arm`, `n`, `n_pass`, `rate6`, `lo6`, `hi6`) — shared
     * verbatim by the batch operator and the streaming monitor (the

@@ -86,6 +86,14 @@ object Maintain {
     u.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** [[summarize]]/[[merge]] as a [[FoldMonitor]] over the fact feed:
+    * the summary table is the state, and the readout is the final
+    * summary itself. */
+  def rollupMonitor(keys: Seq[String], spec: SummarySpec): FoldMonitor =
+    FoldMonitor("rollupMonitor", _.select(
+        (keys ++ spec.sums ++ spec.mins ++ spec.maxs).distinct.map(col): _*),
+      summarize(_, keys, spec), merge(_, _, keys, spec), identity)
+
   /** Aggregate a fact batch into a mergeable DISTINCT-COUNT summary:
     * one HLL sketch (Apache DataSketches, Spark's `hll_sketch_agg`)
     * per key over `valueCol`, plus the exact row count. This closes
@@ -147,6 +155,17 @@ object Maintain {
       .withColumn(s"${valueCol}_distinct",
         hll_sketch_estimate(col(s"${valueCol}_hll")).cast("long"))
       .drop(s"${valueCol}_hll")
+
+  /** [[distinctSummarize]]/[[distinctMerge]] as a [[FoldMonitor]]:
+    * register-wise max is also idempotent, so the stream's estimates
+    * equal the batch recompute's register-exact. State is
+    * keys-bounded (~4 KB per key). Returns the [[distinctEstimate]]
+    * frame. */
+  def distinctRollupMonitor(keys: Seq[String], valueCol: String): FoldMonitor =
+    FoldMonitor("distinctRollupMonitor",
+      _.select((keys :+ valueCol).map(col): _*),
+      distinctSummarize(_, keys, valueCol),
+      distinctMerge(_, _, keys, valueCol), distinctEstimate(_, valueCol))
 
   /** Keyed snapshot diff — the change-feed PRODUCER whose output
     * [[AsOfJoin.applyChanges]] consumes: compare two snapshots of a

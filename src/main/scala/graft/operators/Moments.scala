@@ -102,6 +102,12 @@ object Moments {
       sum(col("syy")).cast(Dec).as("syy"),
       sum(col("sxy")).cast(Dec).as("sxy"))
 
+  /** [[pearsonOls]] as a [[FoldMonitor]] over the one-row moment state:
+    * "is the chars-per-token line drifting as the crawl lands?" */
+  def momentsMonitor(xCol: String, yCol: String): FoldMonitor =
+    FoldMonitor("momentsMonitor", _.select(xCol, yCol),
+      momentState(_, xCol, yCol), foldMomentState, bivariateFromMoments)
+
   /** [[pearsonOls]]'s readout over a prepared moment state — shared
     * VERBATIM by the batch operator, the incremental fold, and the
     * streaming monitor (the ksFromCounts discipline). Collects the
@@ -181,6 +187,14 @@ object Moments {
       sum(col("sxx")).cast(Dec).as("sxx"),
       sum(col("syy")).cast(Dec).as("syy"),
       sum(col("sxy")).cast(Dec).as("sxy"))
+
+  /** [[pearsonOlsByGroup]] as a [[FoldMonitor]] over the group-keyed
+    * moment state (one row per group). */
+  def groupMomentsMonitor(
+      groupCol: String, xCol: String, yCol: String): FoldMonitor =
+    FoldMonitor("groupMomentsMonitor", _.select(groupCol, xCol, yCol),
+      groupMomentState(_, groupCol, xCol, yCol), foldGroupMomentState,
+      bivariateByGroupFromMoments)
 
   /** Per-group readout over a prepared group-keyed state — the batch
     * arithmetic VERBATIM per group, entirely IN-PLAN (group

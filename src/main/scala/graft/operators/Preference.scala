@@ -122,6 +122,26 @@ object Preference {
     base.unionByName(delta).groupBy("__w", "__l")
       .agg(sum(col("__c")).as("__c"))
 
+  /** A [[FoldMonitor]] over the comparison feed's directed win-count
+    * state, read out by `readout`. */
+  private def winMonitor(name: String, winnerCol: String, loserCol: String)(
+      readout: DataFrame => DataFrame): FoldMonitor =
+    FoldMonitor(name, _.select(winnerCol, loserCol),
+      winCountsOf(_, winnerCol, loserCol, name), foldWinCounts, readout)
+
+  /** [[pairwiseWinMatrix]] as a monitor: the live head-to-head table
+    * with Wilson intervals. */
+  def winMatrixMonitor(
+      winnerCol: String, loserCol: String, z: Double = 1.96): FoldMonitor =
+    winMonitor("winMatrixMonitor", winnerCol, loserCol)(
+      pairwiseWinMatrixFromCounts(_, z))
+
+  /** [[bradleyTerry]] as a monitor: the live arena leaderboard. */
+  def leaderboardMonitor(
+      winnerCol: String, loserCol: String, iters: Int = 25): FoldMonitor =
+    winMonitor("leaderboardMonitor", winnerCol, loserCol)(state =>
+      bradleyTerryFromCounts(Blocks.checkpoint(state), iters))
+
   /** [[pairwiseWinMatrix]]'s readout over accumulated `(__w, __l,
     * __c)` state — the SECOND reader of the maintained win counts
     * (after the BT leaderboard): per canonical pair, `n` and a's wins

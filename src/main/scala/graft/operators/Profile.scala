@@ -183,9 +183,8 @@ object Profile {
 
   /** The PSI arithmetic over pre-joined per-bucket counts (`bucket`,
     * `n_ref`, `n_cur`) — the shared back half of [[drift]] and the
-    * stream-maintained variant
-    * ([[graft.streaming.StreamGate.replayStreamingDrift]]), extracted
-    * so both formulations provably share one definition. */
+    * stream-maintained variant ([[driftMonitor]]), extracted so both
+    * formulations provably share one definition. */
   private[graft] def psiFromCounts(joined: DataFrame, eps: Double): DataFrame = {
     require(eps > 0, s"eps ($eps) must be positive")
     val tot = joined.agg(sum(col("n_ref")).as("tr"), sum(col("n_cur")).as("tc"))
@@ -200,6 +199,28 @@ object Profile {
     joined.select(col("bucket"), col("n_ref"), col("n_cur"),
       ((pr - pc) * log(pr / pc)).as("psi"))
   }
+
+  /** The fold of a count table keyed by one column: `c` summed per
+    * `key`. Counts merge by SUM, associative and commutative. */
+  private def sumCounts(key: String, c: String)(
+      base: DataFrame, delta: DataFrame): DataFrame =
+    base.unionByName(delta).groupBy(key).agg(sum(col(c)).as(c))
+
+  /** [[drift]] as a [[FoldMonitor]]: the monitored slice's
+    * [[histogram]] counts, bucketed with the same bounds as the
+    * reference, fold by SUM per bucket (bins-bounded state), and the
+    * readout runs [[psiFromCounts]] against the reference histogram.
+    * Returns the per-bucket (`bucket`, `n_ref`, `n_cur`, `psi`) frame. */
+  def driftMonitor(reference: DataFrame, c: String, bins: Int, lo: Double,
+      hi: Double, eps: Double = 1e-6): FoldMonitor =
+    FoldMonitor("driftMonitor", _.select(c),
+      histogram(_, c, bins, lo, hi).select(col("bucket"), col("n")),
+      sumCounts("bucket", "n"),
+      state => psiFromCounts(
+        histogram(reference, c, bins, lo, hi)
+          .select(col("bucket"), col("n").as("n_ref"))
+          .join(state.select(col("bucket"), col("n").as("n_cur")), "bucket"),
+        eps))
 
   /** PSI drift over a CATEGORICAL column — [[drift]] without the
     * binning: the reference and current category frequency tables are
@@ -234,8 +255,8 @@ object Profile {
   /** The categorical-PSI back half over PRE-AGGREGATED per-category
     * counts (`category`, `n_ref`) x (`category`, `n_cur`) — the shared
     * machinery of [[categoricalDrift]] and the stream-maintained
-    * variant ([[graft.streaming.StreamGate.replayCategoricalDrift]],
-    * whose accumulated state table IS a counts frame), so both
+    * variant ([[categoricalDriftMonitor]], whose accumulated state
+    * table IS a counts frame), so both
     * formulations provably share one definition. The join key is
     * null-SAFE: a plain full-outer equi join would emit the NULL
     * category twice (one unmatched row per side) instead of grouping
@@ -280,8 +301,7 @@ object Profile {
       ksSideCounts(cur, valueCol, "cb"))
 
   /** One side's distinct-value count table (`v`, `out`) — the foldable
-    * state the streaming KS gate accumulates (counts merge by SUM, so
-    * micro-batch partitioning provably cannot change the CDF). */
+    * state of [[valueCountMonitor]]. */
   private[graft] def ksSideCounts(
       df: DataFrame, valueCol: String, out: String): DataFrame = df
     .select(col(valueCol).cast("double").as("v"))
@@ -290,7 +310,8 @@ object Profile {
 
   /** [[ksStatistic]]'s arithmetic over two prepared count tables
     * (`(v, ca)` / `(v, cb)`) — shared verbatim by the batch operator
-    * and the streaming replay gate, the psiFromCounts discipline. */
+    * and the streaming monitor ([[ksDriftMonitor]]), the
+    * psiFromCounts discipline. */
   private[graft] def ksFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -347,8 +368,8 @@ object Profile {
   /** [[wassersteinDistance]]'s arithmetic over two prepared
     * distinct-value count tables (`(v, ca)` / `(v, cb)`) — the SAME
     * foldable ECDF state the KS/quantile/Gini family maintains, shared
-    * verbatim by the batch operator and the streaming replay gate
-    * ([[graft.streaming.StreamGate.replayWassersteinDrift]]). */
+    * verbatim by the batch operator and the streaming monitor
+    * ([[wassersteinDriftMonitor]]). */
   private[graft] def wassersteinFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -402,16 +423,45 @@ object Profile {
       catSideCounts(current, c, "cb"))
 
   /** One side's category count table (`category`, `out`) — the
-    * foldable state the streaming JSD gate accumulates (counts merge
-    * by SUM; the [[categoricalDriftFromCounts]] state shape). */
+    * foldable state of the category monitors (the
+    * [[categoricalDriftFromCounts]] state shape). */
   private[graft] def catSideCounts(
       df: DataFrame, c: String, out: String): DataFrame =
     df.groupBy(col(c).cast("string").as("category"))
       .agg(count(lit(1)).as(out))
 
+  /** A [[FoldMonitor]] over the (`category`, `cnt`) counts of column
+    * `c`, vocabulary-bounded: counts merge by SUM, and NULL categories
+    * carry through the fold as the NULL key. `readout` gets the
+    * reference counts and the folded state. */
+  private def categoryMonitor(name: String, reference: DataFrame, c: String,
+      refCol: String, curCol: String)(
+      readout: (DataFrame, DataFrame) => DataFrame): FoldMonitor =
+    FoldMonitor(name, _.select(c), catSideCounts(_, c, "cnt"),
+      sumCounts("category", "cnt"), state => readout(
+        catSideCounts(reference, c, refCol),
+        state.withColumnRenamed("cnt", curCol)))
+
+  /** [[categoricalDrift]] as a monitor. Returns the (`category`,
+    * `n_ref`, `n_cur`, `psi`) frame. */
+  def categoricalDriftMonitor(
+      reference: DataFrame, c: String, eps: Double = 1e-6): FoldMonitor =
+    categoryMonitor("categoricalDriftMonitor", reference, c, "n_ref", "n_cur")(
+      categoricalDriftFromCounts(_, _, eps))
+
+  /** [[jsDivergence]] as a monitor. */
+  def jsDivergenceMonitor(reference: DataFrame, c: String): FoldMonitor =
+    categoryMonitor("jsDivergenceMonitor", reference, c, "ca", "cb")(
+      jsDivergenceFromCounts)
+
+  /** [[hellingerDistance]] as a monitor. */
+  def hellingerMonitor(reference: DataFrame, c: String): FoldMonitor =
+    categoryMonitor("hellingerMonitor", reference, c, "ca", "cb")(
+      hellingerFromCounts)
+
   /** [[jsDivergence]]'s arithmetic over two prepared category count
     * tables — shared verbatim by the batch operator and the streaming
-    * replay gate ([[graft.streaming.StreamGate.replayJsDivergence]]),
+    * monitor ([[jsDivergenceMonitor]]),
     * the psiFromCounts discipline. */
   private[graft] def jsDivergenceFromCounts(
       refCounts: DataFrame,
@@ -482,8 +532,7 @@ object Profile {
 
   /** [[mannWhitney]]'s arithmetic over two prepared distinct-value
     * count tables — shared verbatim by the batch operator and the
-    * streaming replay gate ([[graft.streaming.StreamGate
-    * .replayMannWhitney]]). */
+    * streaming monitor ([[mannWhitneyMonitor]]). */
   private[graft] def mannWhitneyFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -542,8 +591,8 @@ object Profile {
       ksSideCounts(cur, valueCol, "cb"))
 
   /** [[cramerVonMises]]'s arithmetic over two prepared count tables —
-    * shared verbatim by the batch operator and the streaming replay
-    * gate ([[graft.streaming.StreamGate.replayCvmDrift]]). */
+    * shared verbatim by the batch operator and the streaming
+    * monitor ([[cvmDriftMonitor]]). */
   private[graft] def cvmFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -594,8 +643,8 @@ object Profile {
       ksSideCounts(cur, valueCol, "cnt"), ps)
 
   /** [[quantileShift]]'s arithmetic over two prepared count tables —
-    * shared verbatim by the batch operator and the streaming replay
-    * gate ([[graft.streaming.StreamGate.replayQuantileShift]]). */
+    * shared verbatim by the batch operator and the streaming
+    * monitor ([[quantileShiftMonitor]]). */
   private[graft] def quantileShiftFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame,
@@ -635,8 +684,7 @@ object Profile {
 
   /** [[quantileShiftByGroup]]'s arithmetic over two prepared
     * group-keyed count tables — shared verbatim by the batch operator
-    * and the streaming replay gate ([[graft.streaming.StreamGate
-    * .replayGroupQuantileShift]]). */
+    * and the streaming monitor ([[groupQuantileShiftMonitor]]). */
   private[graft] def quantileShiftByGroupFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame,
@@ -780,8 +828,8 @@ object Profile {
       groupCatCounts(current, groupCol, c, "cb"))
 
   /** One side's GROUP-KEYED category count table
-    * (`__g`, `category`, `out`) — the foldable state the streaming
-    * per-group JSD gate accumulates. */
+    * (`__g`, `category`, `out`) — the foldable state of the per-group
+    * category monitors. */
   private[graft] def groupCatCounts(
       df: DataFrame, groupCol: String, c: String, out: String): DataFrame =
     df.select(col(groupCol).cast("string").as("__g"),
@@ -794,10 +842,32 @@ object Profile {
     base.unionByName(delta).groupBy("__g", "category")
       .agg(sum(col("cnt")).as("cnt"))
 
+  /** A [[FoldMonitor]] over the group-keyed category counts
+    * (cells-bounded: groups × categories), read out against the
+    * reference's counts by `fromCounts`. */
+  private def groupCategoryMonitor(name: String, reference: DataFrame,
+      groupCol: String, c: String)(
+      fromCounts: (DataFrame, DataFrame) => DataFrame): FoldMonitor =
+    FoldMonitor(name, _.select(groupCol, c),
+      groupCatCounts(_, groupCol, c, "cnt"), foldGroupCatCounts,
+      state => fromCounts(groupCatCounts(reference, groupCol, c, "ca"),
+        state.withColumnRenamed("cnt", "cb")))
+
+  /** [[jsDivergenceByGroup]] as a monitor. */
+  def groupJsDivergenceMonitor(
+      reference: DataFrame, groupCol: String, c: String): FoldMonitor =
+    groupCategoryMonitor("groupJsDivergenceMonitor", reference, groupCol, c)(
+      jsDivergenceByGroupFromCounts)
+
+  /** [[hellingerByGroup]] as a monitor. */
+  def groupHellingerMonitor(
+      reference: DataFrame, groupCol: String, c: String): FoldMonitor =
+    groupCategoryMonitor("groupHellingerMonitor", reference, groupCol, c)(
+      hellingerByGroupFromCounts)
+
   /** [[jsDivergenceByGroup]]'s arithmetic over two prepared
     * group-keyed count tables — shared verbatim by the batch operator
-    * and the streaming replay gate ([[graft.streaming.StreamGate
-    * .replayGroupJsDivergence]]). */
+    * and the streaming monitor ([[groupJsDivergenceMonitor]]). */
   private[graft] def jsDivergenceByGroupFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -856,8 +926,7 @@ object Profile {
 
   /** [[hellingerDistance]]'s arithmetic over two prepared category
     * count tables — shared verbatim by the batch operator and the
-    * streaming replay gate ([[graft.streaming.StreamGate
-    * .replayHellinger]]). */
+    * streaming monitor ([[hellingerMonitor]]). */
   private[graft] def hellingerFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -908,8 +977,7 @@ object Profile {
 
   /** [[hellingerByGroup]]'s arithmetic over two prepared group-keyed
     * count tables — shared verbatim by the batch operator and the
-    * streaming replay gate ([[graft.streaming.StreamGate
-    * .replayGroupHellinger]]). */
+    * streaming monitor ([[groupHellingerMonitor]]). */
   private[graft] def hellingerByGroupFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -1130,6 +1198,20 @@ object Profile {
     sketchQuantileReport(sketchStateOf(df, valueCol, idCol, k, salt),
       df, valueCol, ps, k)
 
+  /** [[sketchQuantiles]] as a [[FoldMonitor]]: each micro-batch's own
+    * bottom-k sample folds into the state by [[foldSketchState]]
+    * (associative, commutative and idempotent), so the final state
+    * equals the batch sketch whatever the split. State is k rows, ever.
+    * `data` is the frame the readout gates the estimates against, the
+    * frame the monitor replays. */
+  def sketchQuantileMonitor(data: DataFrame, valueCol: String, idCol: String,
+      ps: Seq[Double], k: Int = 1024, salt: String = "qsk"): FoldMonitor =
+    FoldMonitor("sketchQuantileMonitor",
+      _.select(col(idCol).cast("long").as("id"),
+        col(valueCol).cast("double").as("v")),
+      sketchStateOf(_, "v", "id", k, salt), foldSketchState(_, _, k),
+      sketchQuantileReport(_, data, valueCol, ps, k))
+
   /** PER-GROUP mergeable quantile sketch state — [[sketchStateOf]]
     * keyed by a group column ("the sketched p90 per language") with
     * the same identity contract (bottom-k rows by portable
@@ -1280,6 +1362,22 @@ object Profile {
       sketchStateByGroup(df, groupCol, valueCol, idCol, k, salt),
       df, groupCol, valueCol, ps, k)
 
+  /** [[sketchQuantilesByGroup]] as a [[FoldMonitor]]: the keyed min-k
+    * fold ([[foldSketchStateByGroup]]) is associative, commutative and
+    * idempotent per group. Ids ride as strings end to end (the hashed
+    * form), so a micro-batch's hash equals the batch hash byte for
+    * byte. `data` as in [[sketchQuantileMonitor]]. */
+  def groupSketchQuantileMonitor(data: DataFrame, groupCol: String,
+      valueCol: String, idCol: String, ps: Seq[Double], k: Int = 1024,
+      salt: String = "qsk"): FoldMonitor =
+    FoldMonitor("groupSketchQuantileMonitor",
+      _.select(col(groupCol).cast("string").as("g"),
+        col(idCol).cast("string").as("id"),
+        col(valueCol).cast("double").as("v")),
+      sketchStateByGroup(_, "g", "v", "id", k, salt),
+      foldSketchStateByGroup(_, _, k),
+      sketchQuantileReportByGroup(_, data, groupCol, valueCol, ps, k))
+
   /** PER-GROUP exact discrete quantiles — [[exactQuantiles]] keyed by
     * a group ("the p90 document length per language") WITHOUT a
     * group-partitioned window over the value grid: for a continuous
@@ -1330,8 +1428,8 @@ object Profile {
 
   /** [[ksByGroup]]'s arithmetic over two prepared group-keyed count
     * tables (`(__g, v, ca)` / `(__g, v, cb)`) — shared verbatim by the
-    * batch operator and the streaming replay gate ([[graft.streaming
-    * .StreamGate.replayGroupKsDrift]]). The two-sided merge is a
+    * batch operator and the streaming monitor
+    * ([[groupKsDriftMonitor]]). The two-sided merge is a
     * UNION + re-aggregation (never a null-unsafe join — a NULL group
     * must meet itself). */
   private[graft] def ksByGroupFromCounts(
@@ -1396,8 +1494,7 @@ object Profile {
 
   /** [[wassersteinByGroup]]'s arithmetic over two prepared group-keyed
     * count tables — shared verbatim by the batch operator and the
-    * streaming replay gate ([[graft.streaming.StreamGate
-    * .replayGroupWassersteinDrift]]). */
+    * streaming monitor ([[groupWassersteinDriftMonitor]]). */
   private[graft] def wassersteinByGroupFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -1463,8 +1560,7 @@ object Profile {
 
   /** [[mannWhitneyByGroup]]'s arithmetic over two prepared group-keyed
     * count tables — shared verbatim by the batch operator and the
-    * streaming replay gate ([[graft.streaming.StreamGate
-    * .replayGroupMannWhitney]]). */
+    * streaming monitor ([[groupMannWhitneyMonitor]]). */
   private[graft] def mannWhitneyByGroupFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -1532,8 +1628,7 @@ object Profile {
 
   /** [[cramerVonMisesByGroup]]'s arithmetic over two prepared
     * group-keyed count tables — shared verbatim by the batch operator
-    * and the streaming replay gate ([[graft.streaming.StreamGate
-    * .replayGroupCvmDrift]]). */
+    * and the streaming monitor ([[groupCvmDriftMonitor]]). */
   private[graft] def cvmByGroupFromCounts(
       refCounts: DataFrame,
       curCounts: DataFrame): DataFrame = {
@@ -1593,6 +1688,63 @@ object Profile {
   def foldGroupValueCounts(base: DataFrame, delta: DataFrame): DataFrame =
     base.unionByName(delta).groupBy("__g", "v")
       .agg(sum(col("cnt")).as("cnt"))
+
+  /** A [[FoldMonitor]] over the `(__g, v, cnt)` state of `valueCol` per
+    * `groupCol`: one maintained group grid serves the whole per-group
+    * drift, quantile and concentration family. */
+  private[graft] def groupValueCountMonitor(
+      name: String, groupCol: String, valueCol: String)(
+      readout: DataFrame => DataFrame): FoldMonitor =
+    FoldMonitor(name, _.select(groupCol, valueCol),
+      groupSideCounts(_, groupCol, valueCol), foldGroupValueCounts, readout)
+
+  /** A per-group two-sample monitor: `fromCounts` over the reference's
+    * `(__g, v, ca)` counts and the folded state as `(__g, v, cb)`. */
+  private def groupTwoSampleMonitor(name: String, reference: DataFrame,
+      groupCol: String, valueCol: String)(
+      fromCounts: (DataFrame, DataFrame) => DataFrame): FoldMonitor =
+    groupValueCountMonitor(name, groupCol, valueCol)(state => fromCounts(
+      groupSideCounts(reference, groupCol, valueCol)
+        .withColumnRenamed("cnt", "ca"),
+      state.withColumnRenamed("cnt", "cb")))
+
+  /** [[ksByGroup]] as a monitor. */
+  def groupKsDriftMonitor(reference: DataFrame, groupCol: String,
+      valueCol: String): FoldMonitor =
+    groupTwoSampleMonitor("groupKsDriftMonitor", reference, groupCol,
+      valueCol)(ksByGroupFromCounts)
+
+  /** [[wassersteinByGroup]] as a monitor. */
+  def groupWassersteinDriftMonitor(reference: DataFrame, groupCol: String,
+      valueCol: String): FoldMonitor =
+    groupTwoSampleMonitor("groupWassersteinDriftMonitor", reference,
+      groupCol, valueCol)(wassersteinByGroupFromCounts)
+
+  /** [[mannWhitneyByGroup]] as a monitor. */
+  def groupMannWhitneyMonitor(reference: DataFrame, groupCol: String,
+      valueCol: String): FoldMonitor =
+    groupTwoSampleMonitor("groupMannWhitneyMonitor", reference, groupCol,
+      valueCol)(mannWhitneyByGroupFromCounts)
+
+  /** [[cramerVonMisesByGroup]] as a monitor. */
+  def groupCvmDriftMonitor(reference: DataFrame, groupCol: String,
+      valueCol: String): FoldMonitor =
+    groupTwoSampleMonitor("groupCvmDriftMonitor", reference, groupCol,
+      valueCol)(cvmByGroupFromCounts)
+
+  /** [[quantileShiftByGroup]] as a monitor. */
+  def groupQuantileShiftMonitor(reference: DataFrame, groupCol: String,
+      valueCol: String, ps: Seq[Double]): FoldMonitor =
+    groupValueCountMonitor("groupQuantileShiftMonitor", groupCol, valueCol)(
+      state => quantileShiftByGroupFromCounts(
+        groupSideCounts(reference, groupCol, valueCol), state, groupCol, ps))
+
+  /** [[exactQuantilesByGroup]] as a monitor: per-language percentiles
+    * that stay current as the crawl lands. */
+  def groupQuantileMonitor(
+      groupCol: String, valueCol: String, ps: Seq[Double]): FoldMonitor =
+    groupValueCountMonitor("groupQuantileMonitor", groupCol, valueCol)(
+      groupQuantilesFromCounts(_, groupCol, ps))
 
   /** PER-GROUP WEIGHT-MASS quantiles — the composite of
     * [[weightedExactQuantiles]]'s mass semantics and
@@ -1744,8 +1896,8 @@ object Profile {
 
   /** [[categoricalAssociation]]'s readout over a prepared joint count
     * table `(__a, __b, __c)` — shared VERBATIM by the batch operator
-    * and the streaming monitor ([[graft.streaming.StreamGate
-    * .replayAssociationMonitor]]), the ksFromCounts discipline: joint
+    * and the streaming monitor ([[associationMonitor]]), the
+    * ksFromCounts discipline: joint
     * counts fold by SUM, so whoever accumulated the table reads the
     * identical statistics off it. Checkpoints the (cells-bounded)
     * input so the marginal/grid/term passes never recompute it. */
@@ -1862,6 +2014,15 @@ object Profile {
     base.unionByName(delta).groupBy("__g", "__a", "__b")
       .agg(sum(col("__c")).as("__c"))
 
+  /** [[categoricalAssociationByGroup]] as a [[FoldMonitor]] over the
+    * cells-bounded `(__g, __a, __b, __c)` state: is language ⊥ source
+    * within each crawl snapshot, live? */
+  def groupAssociationMonitor(
+      groupCol: String, colA: String, colB: String): FoldMonitor =
+    FoldMonitor("groupAssociationMonitor", _.select(groupCol, colA, colB),
+      groupJointCountsOf(_, groupCol, colA, colB), foldGroupJointCounts,
+      state => associationByGroupFromJoint(Blocks.checkpoint(state), groupCol))
+
   /** [[categoricalAssociationByGroup]]'s readout over accumulated
     * `(__g, __a, __b, __c)` state — shared verbatim by the batch
     * operator, the incremental fold, and the streaming monitor (the
@@ -1939,4 +2100,59 @@ object Profile {
     * truth. */
   def foldValueCounts(base: DataFrame, delta: DataFrame): DataFrame =
     base.unionByName(delta).groupBy("v").agg(sum(col("cnt")).as("cnt"))
+
+  /** [[categoricalAssociation]] as a [[FoldMonitor]] over the joint
+    * contingency counts (cells-bounded): the ingest-time
+    * composition-dependence dashboard. */
+  def associationMonitor(colA: String, colB: String): FoldMonitor =
+    FoldMonitor("associationMonitor", _.select(colA, colB),
+      jointCountsOf(_, colA, colB), foldJointCounts, associationFromJoint)
+
+  /** A [[FoldMonitor]] over the (`v`, `cnt`) value counts of `valueCol`
+    * (distinct-value-bounded): one maintained ECDF serves the whole
+    * drift, quantile and concentration family. */
+  private[graft] def valueCountMonitor(name: String, valueCol: String)(
+      readout: DataFrame => DataFrame): FoldMonitor =
+    FoldMonitor(name, _.select(valueCol), ksSideCounts(_, valueCol, "cnt"),
+      foldValueCounts, readout)
+
+  /** A two-sample monitor: `fromCounts` over the reference's (`v`,
+    * `ca`) counts and the folded state as (`v`, `cb`). */
+  private def twoSampleMonitor(name: String, reference: DataFrame,
+      valueCol: String)(
+      fromCounts: (DataFrame, DataFrame) => DataFrame): FoldMonitor =
+    valueCountMonitor(name, valueCol)(state => fromCounts(
+      ksSideCounts(reference, valueCol, "ca"),
+      state.withColumnRenamed("cnt", "cb")))
+
+  /** [[ksStatistic]] as a monitor. */
+  def ksDriftMonitor(reference: DataFrame, valueCol: String): FoldMonitor =
+    twoSampleMonitor("ksDriftMonitor", reference, valueCol)(ksFromCounts)
+
+  /** [[wassersteinDistance]] as a monitor. */
+  def wassersteinDriftMonitor(
+      reference: DataFrame, valueCol: String): FoldMonitor =
+    twoSampleMonitor("wassersteinDriftMonitor", reference, valueCol)(
+      wassersteinFromCounts)
+
+  /** [[mannWhitney]] as a monitor. */
+  def mannWhitneyMonitor(reference: DataFrame, valueCol: String): FoldMonitor =
+    twoSampleMonitor("mannWhitneyMonitor", reference, valueCol)(
+      mannWhitneyFromCounts)
+
+  /** [[cramerVonMises]] as a monitor. */
+  def cvmDriftMonitor(reference: DataFrame, valueCol: String): FoldMonitor =
+    twoSampleMonitor("cvmDriftMonitor", reference, valueCol)(cvmFromCounts)
+
+  /** [[quantileShift]] as a monitor. */
+  def quantileShiftMonitor(
+      reference: DataFrame, valueCol: String, ps: Seq[Double]): FoldMonitor =
+    valueCountMonitor("quantileShiftMonitor", valueCol)(state =>
+      quantileShiftFromCounts(ksSideCounts(reference, valueCol, "cnt"),
+        state, ps))
+
+  /** [[exactQuantiles]] as a monitor. */
+  def quantileMonitor(valueCol: String, ps: Seq[Double]): FoldMonitor =
+    valueCountMonitor("quantileMonitor", valueCol)(
+      exactQuantilesFromCounts(_, ps))
 }

@@ -275,10 +275,10 @@ object Stats {
 
   /** The one-row CI readout over an accumulated (ungrouped)
     * [[bootPartials]] state frame — shared VERBATIM by
-    * [[bootstrapMeanCI]] and the streaming monitor ([[graft.streaming
-    * .StreamGate.replayBootstrapMonitor]]): partials merge by exact
-    * decimal/long SUM, so whoever accumulated the state (one scan, a
-    * delta fold, or a file stream) reads the identical CI off it. */
+    * [[bootstrapMeanCI]] and the streaming monitor
+    * ([[bootstrapMonitor]]): partials merge by exact decimal/long SUM,
+    * so whoever accumulated the state (one scan, a delta fold, or a
+    * file stream) reads the identical CI off it. */
   private[graft] def ciFromBootPartials(
       agg: DataFrame, alpha: Double): DataFrame = {
     val means = agg.filter(col("__b") >= 0 && col("__cnt") > 0)
@@ -328,6 +328,16 @@ object Stats {
       base: DataFrame, delta: DataFrame): DataFrame =
     base.unionByName(delta).groupBy("__g", "__b")
       .agg(sum(col("__s")).as("__s"), sum(col("__cnt")).as("__cnt"))
+
+  /** [[bootstrapMeanCI]] as a [[FoldMonitor]] over the (nBoot+1)-row
+    * partial state. Each row's replicate weights are a pure function
+    * of (salt, b, id) and the partials are exact decimals, so the live
+    * CI equals the batch CI of the same feed. */
+  def bootstrapMonitor(valueCol: String, idCol: String, nBoot: Int = 100,
+      alpha: Double = 0.05, salt: String = "boot"): FoldMonitor =
+    FoldMonitor("bootstrapMonitor", _.select(valueCol, idCol),
+      bootPartialsOf(_, valueCol, idCol, nBoot, salt), foldBootPartials,
+      ciFromBootPartials(_, alpha))
 
   /** Per-group [[bootstrapMeanCI]] — the continuous-outcome twin of
     * the per-arm Wilson readout ([[graft.operators.Experiment
@@ -403,6 +413,15 @@ object Stats {
       df: DataFrame, groupCol: String, valueCol: String, idCol: String,
       nBoot: Int, salt: String): DataFrame =
     bootPartials(df, Some(groupCol), valueCol, idCol, nBoot, salt)
+
+  /** [[bootstrapMeanCIByGroup]] as a [[FoldMonitor]] over the
+    * groups × (nBoot+1) partial state: one live mean CI per segment. */
+  def groupBootstrapMonitor(groupCol: String, valueCol: String,
+      idCol: String, nBoot: Int = 100, alpha: Double = 0.05,
+      salt: String = "boot"): FoldMonitor =
+    FoldMonitor("groupBootstrapMonitor", _.select(groupCol, valueCol, idCol),
+      groupBootPartialsOf(_, groupCol, valueCol, idCol, nBoot, salt),
+      foldBootPartials, groupCiFromBootPartials(_, groupCol, alpha))
 
   /** The shared one-scan fold under both bootstrap CIs: per input
     * partition, per group (the ungrouped form uses one constant
@@ -632,6 +651,23 @@ object Stats {
         orderCols.filterNot(_ == valueCol).map(col)) :+
         round(col("__num").cast("double") /
           (lit(n.toDouble) * lit(pow.toDouble)), 6).as("cusum6"): _*)
+  }
+
+  /** [[changePointScan]] as a [[FoldMonitor]] over a bucketed feed:
+    * "WHEN did the level shift?" kept current as events land. The state
+    * is one exact-decimal value sum per bucket (12dp-rounded terms),
+    * folded by SUM; the double cast happens once, at readout. Returns
+    * the one-row (`n`, `k`, `bucketCol`, `cusum6`) frame. */
+  def changePointMonitor(bucketCol: String, valueCol: String): FoldMonitor = {
+    def sums(df: DataFrame, term: org.apache.spark.sql.Column) =
+      df.groupBy(bucketCol).agg(sum(term).cast("decimal(38,12)").as("__cps"))
+    FoldMonitor("changePointMonitor", _.select(bucketCol, valueCol),
+      batch => sums(batch.filter(col(valueCol).isNotNull),
+        round(col(valueCol), 12).cast("decimal(38,12)")),
+      (base, delta) => sums(base.unionByName(delta), col("__cps")),
+      state => changePointScan(
+        state.select(col(bucketCol), col("__cps").cast("double").as("__cpv")),
+        Seq(bucketCol), "__cpv"))
   }
 
   /** PER-GROUP CUSUM change-point scan — [[changePointScan]] keyed by
@@ -1470,4 +1506,29 @@ object Stats {
         .toDF("n", "total", "theil6", "theil_norm6")
     }
   }
+
+  /** The concentration indices as monitors over the masses' value-count
+    * state ([[Profile.valueCountMonitor]]) and its group-keyed twin
+    * ([[Profile.groupValueCountMonitor]]); each readout is the
+    * `…FromCounts` arithmetic above. */
+  def giniMonitor(valueCol: String): FoldMonitor =
+    Profile.valueCountMonitor("giniMonitor", valueCol)(giniFromCounts)
+
+  def hhiMonitor(valueCol: String): FoldMonitor =
+    Profile.valueCountMonitor("hhiMonitor", valueCol)(hhiFromCounts)
+
+  def theilMonitor(valueCol: String): FoldMonitor =
+    Profile.valueCountMonitor("theilMonitor", valueCol)(theilFromCounts)
+
+  def groupGiniMonitor(groupCol: String, valueCol: String): FoldMonitor =
+    Profile.groupValueCountMonitor("groupGiniMonitor", groupCol, valueCol)(
+      giniByGroupFromCounts(_, groupCol))
+
+  def groupHhiMonitor(groupCol: String, valueCol: String): FoldMonitor =
+    Profile.groupValueCountMonitor("groupHhiMonitor", groupCol, valueCol)(
+      hhiByGroupFromCounts(_, groupCol))
+
+  def groupTheilMonitor(groupCol: String, valueCol: String): FoldMonitor =
+    Profile.groupValueCountMonitor("groupTheilMonitor", groupCol, valueCol)(
+      theilByGroupFromCounts(_, groupCol))
 }

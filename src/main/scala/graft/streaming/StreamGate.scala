@@ -11,9 +11,8 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.slf4j.LoggerFactory
 
-import graft.operators.{Annotate, AsOfJoin, Blocks, Components, Corpus, Dedup,
-  Eval, Events, Experiment, Maintain, Moments, Multimodal, Observed,
-  Preference, Profile, Quality, Similarity, Stats}
+import graft.operators.{AsOfJoin, Blocks, Components, Corpus, Dedup,
+  Experiment, FoldMonitor, Multimodal, Observed, Quality, Similarity}
 
 /** Batch-vs-stream correctness gates: replay a batch frame through the
   * Structured Streaming operators (file source -> AvailableNow trigger
@@ -35,21 +34,24 @@ import graft.operators.{Annotate, AsOfJoin, Blocks, Components, Corpus, Dedup,
   * stream must reproduce the batch answer over the REAL events.
   *
   * ==Replay lifecycle==
-  * Every public `replay*` runs through ONE harness, [[replay]], which
-  * writes the input to a per-run temp source dir, runs the stream in a
-  * child session of the caller's under replay-scoped settings
-  * ([[replayConf]]), publishes [[lastReplayObservability]], and
-  * materializes the result (`localCheckpoint`) before deleting every
-  * temp dir — so replays are rerunnable, never share state, and leave
-  * nothing on the temp volume (a bench session would otherwise pile up
-  * runs x replays x 3 dirs of parquet and state-store files, and disk
-  * pressure is what amplifies host-load noise into 10-50x in-suite
-  * timing swings). Everything stays distributed: sinks are parquet or
-  * `foreachBatch` writes, never a driver collect. A gate only supplies
-  * its source shape and its sink: the stream's own parquet sink (the
-  * event replays), a `foreachBatch` append (per-row-independent batch
+  * Every public `replay*` and [[monitor]] runs through ONE harness,
+  * [[replay]], which writes the input to a per-run temp source dir,
+  * runs the stream in a child session of the caller's under
+  * replay-scoped settings ([[replayConf]]), publishes
+  * [[lastReplayObservability]], and materializes the result
+  * (`localCheckpoint`) before deleting every temp dir — so replays
+  * are rerunnable, never share state, and leave nothing on the temp
+  * volume (a bench session would otherwise pile up runs x replays x 3
+  * dirs of parquet and state-store files, and disk pressure is what
+  * amplifies host-load noise into 10-50x in-suite timing swings).
+  * Everything stays distributed: sinks are parquet or `foreachBatch`
+  * writes, never a driver collect. A gate only supplies its source
+  * shape and its sink: the stream's own parquet sink (the event
+  * replays), a `foreachBatch` append (per-row-independent batch
   * operators run per micro-batch), or a `foreachBatch` fold into
-  * versioned state (the monitors).
+  * versioned state. The fold monitors are values
+  * ([[graft.operators.FoldMonitor]], defined next to the batch
+  * operator each one mirrors), and [[monitor]] replays any of them.
   *
   * A replay's checkpoint is scratch: it lives in a fresh local temp dir
   * that is deleted when the replay returns, and no query ever restarts
@@ -572,35 +574,17 @@ object StreamGate {
       prior.map(fold(_, delta)).getOrElse(delta)
     }
 
-  /** Versioned fold-state monitor over `feed`: each micro-batch reduced
-    * with `seed` and merged into the prior state with `fold`, then
-    * `readout` over the final state. Correctness burden on the caller:
-    * `fold` must be associative and commutative over `seed` outputs, so
-    * the micro-batch split cannot change the final state (every monitor
-    * built on this proves it by being held to its batch twin's verbatim
-    * oracle). */
-  private def replayFoldState(
-      gate: String,
-      feed: DataFrame,
-      filesPerTrigger: Int)(
-      seed: DataFrame => DataFrame,
-      fold: (DataFrame, DataFrame) => DataFrame,
-      readout: DataFrame => DataFrame): DataFrame =
-    replay(gate, fileFeed(feed, filesPerTrigger))(
-      FoldSink(foldStep(seed, fold), readout))
-
-  /** [[replayFoldState]] for a readout that scans the final state more
-    * than once: the readout gets the state checkpointed, and the
-    * replay frees that checkpoint once its result is read back. */
-  private def replayFoldStateCheckpointed(
-      gate: String,
-      feed: DataFrame,
-      filesPerTrigger: Int)(
-      seed: DataFrame => DataFrame,
-      fold: (DataFrame, DataFrame) => DataFrame,
-      readout: DataFrame => DataFrame): DataFrame =
-    replay(gate, fileFeed(feed, filesPerTrigger))(FoldSink(
-      foldStep(seed, fold), state => readout(Blocks.checkpoint(state))))
+  /** Replay `df` through the fold monitor `m`: `m.feed(df)` arrives as a
+    * file stream at `filesPerTrigger` files per micro-batch, each
+    * micro-batch is folded into versioned parquet state
+    * ([[FoldSink]]), and `m.readout` maps the final state to the
+    * result. A readout that checkpoints the state does it under this
+    * replay's scope, which frees the checkpoint once the result is read
+    * back. */
+  def monitor(
+      m: FoldMonitor, df: DataFrame, filesPerTrigger: Int = 2): DataFrame =
+    replay(m.name, fileFeed(m.feed(df), filesPerTrigger))(
+      FoldSink(foldStep(m.seed, m.fold), m.readout))
 
   /** Replay through [[EventStream.sessionizeStream]]: every real
     * session closes (per-key sentinels) and comes back as a batch
@@ -898,932 +882,6 @@ object StreamGate {
             lit(0).cast("decimal(38,0)")).cast("decimal(38,0)")
             .as("fingerprint"))))
 
-  /** Streaming incremental aggregate maintenance: the fact feed
-    * micro-batched into shards (`maxFilesPerTrigger`), each batch
-    * summarized by [[graft.operators.Maintain.summarize]] and FOLDED
-    * into the persisted summary by [[graft.operators.Maintain.merge]]
-    * — the q113 bridge again: the summary table IS the state, owned
-    * outside the query as a versioned parquet artifact. Because
-    * count/sum/min/max merge associatively AND commutatively
-    * (`MaintainSpec`'s generative contract), the micro-batch
-    * partitioning provably cannot change the final summary — which is
-    * exactly what the replay gate holds it to: q133's oracle is the
-    * batch full recompute (q131's formulation, third pattern of the
-    * q92/q101/q102 family). Returns the final summary frame. */
-  def replayIncrementalRollup(
-      facts: DataFrame,
-      keys: Seq[String],
-      spec: graft.operators.Maintain.SummarySpec,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayIncrementalRollup", facts, filesPerTrigger)(
-      Maintain.summarize(_, keys, spec),
-      Maintain.merge(_, _, keys, spec),
-      identity)
-
-  /** Streaming distinct-count maintenance — [[graft.operators
-    * .Maintain.distinctSummarize]]'s HLL rollup with the fact feed as
-    * a FILE STREAM: each micro-batch summarizes to per-key sketches
-    * and [[graft.operators.Maintain.distinctMerge]] folds them into a
-    * versioned parquet state table (the sketch column is BINARY in
-    * parquet, the q133 version-N → N+1 bridge). Register-wise max is
-    * associative, commutative, AND idempotent, so the micro-batch
-    * partitioning provably cannot change the final registers — the
-    * stream's estimates equal the batch full-recompute's
-    * REGISTER-EXACT, which is what lets q191 hold this replay to
-    * q190's verbatim gate. State is keys-bounded (~4 KB per key),
-    * never value-cardinality.
-    *
-    * Returns the final estimated frame (keys, `n`,
-    * `<valueCol>_distinct`). */
-  def replayDistinctRollup(
-      facts: DataFrame,
-      keys: Seq[String],
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayDistinctRollup", facts, filesPerTrigger)(
-      Maintain.distinctSummarize(_, keys, valueCol),
-      Maintain.distinctMerge(_, _, keys, valueCol),
-      Maintain.distinctEstimate(_, valueCol))
-
-  /** Streaming exact-KS drift — [[graft.operators.Profile
-    * .ksStatistic]] with the monitored slice as a FILE STREAM: each
-    * micro-batch's distinct-value counts fold into a versioned
-    * parquet state table (counts merge by SUM — the q133 bridge — so
-    * the micro-batch split provably cannot change the accumulated
-    * empirical CDF), and the final statistic runs [[graft.operators
-    * .Profile.ksFromCounts]] against the batch-computed reference
-    * counts — the SAME arithmetic as the batch operator, which is
-    * what lets q198 hold this replay to q196's verbatim oracle.
-    * State is distinct-value-bounded. Returns the one-row
-    * (`n_ref`, `n_cur`, `ks6`) frame. */
-  def replayKsDrift(
-      reference: DataFrame,
-      monitored: DataFrame,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayKsDrift",
-        monitored.select(valueCol), filesPerTrigger)(
-      batch => Profile.ksSideCounts(batch, valueCol, "cb"),
-      sumBy("v", "cb"),
-      state => Profile.ksFromCounts(
-        Profile.ksSideCounts(reference, valueCol, "ca"),
-        state))
-
-  /** Streaming 1-Wasserstein drift — [[graft.operators.Profile
-    * .wassersteinDistance]] with the monitored slice as a FILE
-    * STREAM: the SAME maintained distinct-value count state as
-    * [[replayKsDrift]] (one ECDF state serves KS, W1, quantiles, and
-    * Gini alike), with the final integral running [[graft.operators
-    * .Profile.wassersteinFromCounts]] against the batch-computed
-    * reference counts — identical arithmetic to the batch operator,
-    * so the replay is held to its verbatim oracle. State is
-    * distinct-value-bounded. Returns the one-row
-    * (`n_ref`, `n_cur`, `w1_6`) frame. */
-  def replayWassersteinDrift(
-      reference: DataFrame,
-      monitored: DataFrame,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayWassersteinDrift", monitored.select(valueCol),
-        filesPerTrigger)(
-      batch => Profile.ksSideCounts(batch, valueCol, "cb"),
-      sumBy("v", "cb"),
-      state => Profile.wassersteinFromCounts(
-        Profile.ksSideCounts(reference, valueCol, "ca"),
-        state))
-
-  /** Streaming quantile-shift drift — [[graft.operators.Profile
-    * .quantileShift]] with the monitored slice as a FILE STREAM over
-    * the SAME maintained distinct-value count state as the
-    * KS/W1/CvM/Mann–Whitney monitors, the final per-probability
-    * shifts running [[graft.operators.Profile
-    * .quantileShiftFromCounts]] against the batch-computed reference
-    * counts — held to the batch operator's verbatim oracle. Returns
-    * the (`p`, `n_ref`, `n_cur`, `q_ref`, `q_cur`, `shift6`) frame
-    * ordered by p. */
-  def replayQuantileShift(
-      reference: DataFrame,
-      monitored: DataFrame,
-      valueCol: String,
-      ps: Seq[Double],
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayQuantileShift", monitored.select(valueCol),
-        filesPerTrigger)(
-      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
-      Profile.foldValueCounts,
-      state => Profile.quantileShiftFromCounts(
-        Profile.ksSideCounts(reference, valueCol, "cnt"),
-        state, ps))
-
-  /** Streaming PER-GROUP quantile-shift drift — [[graft.operators
-    * .Profile.quantileShiftByGroup]] with the monitored slice as a
-    * FILE STREAM folding the SAME group-keyed value-count state the
-    * per-group KS/W1/CvM/MWU/quantile monitors maintain, the final
-    * per-(group, probability) shifts running [[graft.operators
-    * .Profile.quantileShiftByGroupFromCounts]] against the
-    * batch-computed reference counts — held to the batch operator's
-    * verbatim oracle. Returns the (`g`, `p`, `n_ref`, `n_cur`,
-    * `q_ref`, `q_cur`, `shift6`) frame ordered by (g, p). */
-  def replayGroupQuantileShift(
-      reference: DataFrame,
-      monitored: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      ps: Seq[Double],
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupQuantileShift",
-        monitored.select(groupCol, valueCol), filesPerTrigger)(
-      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
-      Profile.foldGroupValueCounts,
-      state => Profile.quantileShiftByGroupFromCounts(
-        Profile.groupSideCounts(reference, groupCol, valueCol),
-        state, groupCol, ps))
-
-  /** Streaming KEY-keyed dedup monitor — [[graft.operators.Dedup
-    * .exactDedupIds]] with the (key, id) feed as a FILE STREAM: each
-    * micro-batch's per-key min-id winners fold into versioned state
-    * by RE-MINNING (min is associative and commutative, so ARRIVAL
-    * ORDER cannot change a winner — strictly stronger than the
-    * first-shard-wins ledger, and exactly the batch dedup whatever
-    * the split). The canonical-URL registry that stays current as the
-    * crawl lands: state is one (key, id) row per distinct key, never
-    * the raw rows. Held to the batch operator's verbatim oracle.
-    * Returns the (key, id) winner table ordered by key. */
-  def replayKeyDedupMonitor(
-      monitored: DataFrame,
-      keyCol: String,
-      idCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayKeyDedupMonitor", monitored.select(keyCol, idCol),
-        filesPerTrigger)(
-      batch => Dedup.exactDedupIds(batch, Seq(keyCol), idCol),
-      (base, delta) => Dedup.exactDedupIds(
-        base.unionByName(delta), Seq(keyCol), idCol),
-      state => state.orderBy(keyCol))
-
-  /** Streaming Kaplan–Meier monitor — [[graft.operators.Events
-    * .kaplanMeier]] with the (duration, observed) subject feed as a
-    * FILE STREAM: each micro-batch's duration-grid cells (per
-    * duration, event/censor counts) fold by SUM into versioned
-    * parquet state (grid-bounded, never the subjects), and the final
-    * readout runs the SHARED prefix-sum/fixed-point-ln arithmetic
-    * over the accumulated grid — the retention curve that stays
-    * current as cohorts mature. Counts merge associatively and
-    * commutatively per duration cell, so the micro-batch split
-    * provably cannot move any risk set or survival value — held to
-    * the batch operator's verbatim oracle. Returns the (`t`,
-    * `n_risk`, `n_events`, `n_censored`, `survival6`) frame. */
-  def replayKaplanMeierMonitor(
-      monitored: DataFrame,
-      durationCol: String,
-      observedCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayKaplanMeierMonitor",
-        monitored.select(durationCol, observedCol), filesPerTrigger)(
-      batch => Events.survivalCellsOf(batch, durationCol, observedCol),
-      Events.foldSurvivalCells,
-      state => Events.kaplanMeierFromCells(state))
-
-  /** Streaming PER-GROUP Jensen–Shannon drift — [[graft.operators
-    * .Profile.jsDivergenceByGroup]] with the monitored slice as a
-    * FILE STREAM folding group-keyed category counts (cells-bounded:
-    * groups × categories), the final per-group divergence running
-    * [[graft.operators.Profile.jsDivergenceByGroupFromCounts]]
-    * against the batch-computed reference counts — held to the batch
-    * operator's verbatim oracle. Returns the (`g`, `n_ref`, `n_cur`,
-    * `n_categories`, `jsd6`) frame ordered by group. */
-  def replayGroupJsDivergence(
-      reference: DataFrame,
-      monitored: DataFrame,
-      groupCol: String,
-      c: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupJsDivergence", monitored.select(groupCol, c),
-        filesPerTrigger)(
-      batch => Profile.groupCatCounts(batch, groupCol, c, "cnt"),
-      Profile.foldGroupCatCounts,
-      state => Profile.jsDivergenceByGroupFromCounts(
-        Profile.groupCatCounts(reference, groupCol, c, "ca"),
-        state.withColumnRenamed("cnt", "cb")))
-
-  /** Streaming PER-GROUP Hellinger drift — [[graft.operators.Profile
-    * .hellingerByGroup]] with the monitored slice as a FILE STREAM
-    * over the SAME folded group-keyed category counts as the
-    * per-group JSD monitor (one cells-bounded state, two metric
-    * readouts), via [[graft.operators.Profile
-    * .hellingerByGroupFromCounts]] against the batch-computed
-    * reference — held to the batch operator's verbatim oracle.
-    * Returns the (`g`, `n_ref`, `n_cur`, `n_categories`, `bc6`,
-    * `hellinger6`) frame ordered by group. */
-  def replayGroupHellinger(
-      reference: DataFrame,
-      monitored: DataFrame,
-      groupCol: String,
-      c: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupHellinger", monitored.select(groupCol, c),
-        filesPerTrigger)(
-      batch => Profile.groupCatCounts(batch, groupCol, c, "cnt"),
-      Profile.foldGroupCatCounts,
-      state => Profile.hellingerByGroupFromCounts(
-        Profile.groupCatCounts(reference, groupCol, c, "ca"),
-        state.withColumnRenamed("cnt", "cb")))
-
-  /** Streaming Hellinger drift — [[graft.operators.Profile
-    * .hellingerDistance]] with the monitored slice as a FILE STREAM
-    * over the SAME vocabulary-bounded category-count state the JSD
-    * monitor folds, readout via [[graft.operators.Profile
-    * .hellingerFromCounts]] against the batch-computed reference
-    * counts — held to the batch operator's verbatim oracle. Returns
-    * the one-row (`n_ref`, `n_cur`, `n_categories`, `bc6`,
-    * `hellinger6`) frame. */
-  def replayHellinger(
-      reference: DataFrame,
-      monitored: DataFrame,
-      c: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayHellinger", monitored.select(c), filesPerTrigger)(
-      batch => Profile.catSideCounts(batch, c, "cb"),
-      sumBy("category", "cb"),
-      state => Profile.hellingerFromCounts(
-        Profile.catSideCounts(reference, c, "ca"),
-        state))
-
-  /** Streaming CUSUM change-point monitor — [[graft.operators.Stats
-    * .changePointScan]] with the raw feed as a FILE STREAM: each
-    * micro-batch's per-bucket exact-decimal value sums (12dp-rounded
-    * terms — the q133 rollup discipline) fold by SUM into a versioned
-    * bucket-bounded state table, and the final scan runs the batch
-    * operator's fixed-point excursion argmax over the accumulated
-    * series — "WHEN did the level shift?" kept current as events
-    * land. Decimal sums merge associatively and commutatively and the
-    * double cast happens once at readout, so the micro-batch split
-    * provably cannot move the series — held to the batch operator's
-    * verbatim oracle. Returns the one-row (`n`, `k`, `bucketCol`,
-    * `cusum6`) frame. */
-  def replayChangePointMonitor(
-      monitored: DataFrame,
-      bucketCol: String,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayChangePointMonitor",
-        monitored.select(bucketCol, valueCol), filesPerTrigger)(
-      batch => batch.filter(col(valueCol).isNotNull)
-        .groupBy(bucketCol)
-        .agg(sum(round(col(valueCol), 12).cast("decimal(38,12)"))
-          .cast("decimal(38,12)").as("__cps")),
-      (base, delta) => base.unionByName(delta)
-        .groupBy(bucketCol)
-        .agg(sum(col("__cps")).cast("decimal(38,12)").as("__cps")),
-      state => Stats.changePointScan(
-        state.select(col(bucketCol), col("__cps").cast("double").as("__cpv")),
-        Seq(bucketCol), "__cpv"))
-
-  /** Streaming PER-GROUP KS drift — [[graft.operators.Profile
-    * .ksByGroup]] with the monitored slice as a FILE STREAM folding
-    * group-keyed distinct-value counts (the per-group quantile/Gini
-    * monitors' state shape — one maintained group grid serves all
-    * three), the final per-group sup-gap running [[graft.operators
-    * .Profile.ksByGroupFromCounts]] against the batch-computed
-    * reference counts — held to the batch operator's verbatim oracle.
-    * Returns the (`g`, `n_ref`, `n_cur`, `ks6`) frame ordered by
-    * group. */
-  def replayGroupKsDrift(
-      reference: DataFrame,
-      monitored: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupKsDrift", monitored.select(groupCol, valueCol),
-        filesPerTrigger)(
-      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
-      Profile.foldGroupValueCounts,
-      state => Profile.ksByGroupFromCounts(
-        Profile.groupSideCounts(
-          reference, groupCol, valueCol).withColumnRenamed("cnt", "ca"),
-        state.withColumnRenamed("cnt", "cb")))
-
-  /** Streaming PER-GROUP 1-Wasserstein drift — [[graft.operators
-    * .Profile.wassersteinByGroup]] with the monitored slice as a FILE
-    * STREAM folding the SAME group-keyed value-count state the
-    * per-group KS/quantile/Gini monitors maintain, the final
-    * per-group transport integral running [[graft.operators.Profile
-    * .wassersteinByGroupFromCounts]] against the batch-computed
-    * reference counts — held to the batch operator's verbatim oracle.
-    * Returns the (`g`, `n_ref`, `n_cur`, `w1_6`) frame ordered by
-    * group. */
-  def replayGroupWassersteinDrift(
-      reference: DataFrame,
-      monitored: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupWassersteinDrift",
-        monitored.select(groupCol, valueCol), filesPerTrigger)(
-      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
-      Profile.foldGroupValueCounts,
-      state => Profile.wassersteinByGroupFromCounts(
-        Profile.groupSideCounts(
-          reference, groupCol, valueCol).withColumnRenamed("cnt", "ca"),
-        state.withColumnRenamed("cnt", "cb")))
-
-  /** Streaming PER-GROUP Mann–Whitney monitor — [[graft.operators
-    * .Profile.mannWhitneyByGroup]] with the monitored slice as a FILE
-    * STREAM folding the shared group-keyed value-count state, readout
-    * via [[graft.operators.Profile.mannWhitneyByGroupFromCounts]]
-    * against the batch-computed reference counts — held to the batch
-    * operator's verbatim oracle. Returns the (`g`, `n_ref`, `n_cur`,
-    * `u_x2`, `cliffs_delta6`, `z6`) frame ordered by group. */
-  def replayGroupMannWhitney(
-      reference: DataFrame,
-      monitored: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupMannWhitney",
-        monitored.select(groupCol, valueCol), filesPerTrigger)(
-      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
-      Profile.foldGroupValueCounts,
-      state => Profile.mannWhitneyByGroupFromCounts(
-        Profile.groupSideCounts(
-          reference, groupCol, valueCol).withColumnRenamed("cnt", "ca"),
-        state.withColumnRenamed("cnt", "cb")))
-
-  /** Streaming PER-GROUP Cramér–von Mises monitor — [[graft.operators
-    * .Profile.cramerVonMisesByGroup]] over the same folded group
-    * count state, readout via [[graft.operators.Profile
-    * .cvmByGroupFromCounts]] against the batch-computed reference —
-    * held to the batch operator's verbatim oracle. The per-slice
-    * drift matrix (KS / W1 / CvM / MWU, each per group) now closes
-    * batch + stream on ONE maintained group grid. Returns the (`g`,
-    * `n_ref`, `n_cur`, `cvm6`) frame ordered by group. */
-  def replayGroupCvmDrift(
-      reference: DataFrame,
-      monitored: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupCvmDrift", monitored.select(groupCol, valueCol),
-        filesPerTrigger)(
-      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
-      Profile.foldGroupValueCounts,
-      state => Profile.cvmByGroupFromCounts(
-        Profile.groupSideCounts(
-          reference, groupCol, valueCol).withColumnRenamed("cnt", "ca"),
-        state.withColumnRenamed("cnt", "cb")))
-
-  /** Streaming Mann–Whitney location monitor — [[graft.operators
-    * .Profile.mannWhitney]] with the monitored slice as a FILE
-    * STREAM folding the SAME maintained distinct-value count state as
-    * the KS/W1/quantile monitors, the final rank-sum arithmetic
-    * running [[graft.operators.Profile.mannWhitneyFromCounts]]
-    * against the batch-computed reference counts — held to the batch
-    * operator's verbatim oracle. Returns the one-row (`n_ref`,
-    * `n_cur`, `u_x2`, `cliffs_delta6`, `z6`) frame. */
-  def replayMannWhitney(
-      reference: DataFrame,
-      monitored: DataFrame,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayMannWhitney", monitored.select(valueCol),
-        filesPerTrigger)(
-      batch => Profile.ksSideCounts(batch, valueCol, "cb"),
-      sumBy("v", "cb"),
-      state => Profile.mannWhitneyFromCounts(
-        Profile.ksSideCounts(reference, valueCol, "ca"),
-        state))
-
-  /** Streaming Cramér–von Mises drift — [[graft.operators.Profile
-    * .cramerVonMises]] with the monitored slice as a FILE STREAM over
-    * the same maintained ECDF count state, readout via
-    * [[graft.operators.Profile.cvmFromCounts]] against the
-    * batch-computed reference counts — held to the batch operator's
-    * verbatim oracle. One foldable grid now serves KS (sup), W1
-    * (∫|gap|), CvM (∫gap²), Mann–Whitney, quantiles, Gini, and HHI.
-    * Returns the one-row (`n_ref`, `n_cur`, `cvm6`) frame. */
-  def replayCvmDrift(
-      reference: DataFrame,
-      monitored: DataFrame,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayCvmDrift",
-        monitored.select(valueCol), filesPerTrigger)(
-      batch => Profile.ksSideCounts(batch, valueCol, "cb"),
-      sumBy("v", "cb"),
-      state => Profile.cvmFromCounts(
-        Profile.ksSideCounts(reference, valueCol, "ca"),
-        state))
-
-  /** Streaming Jensen–Shannon drift — [[graft.operators.Profile
-    * .jsDivergence]] with the monitored slice as a FILE STREAM: each
-    * micro-batch's category counts fold by null-safe SUM into
-    * versioned parquet state (the [[replayCategoricalDrift]] state
-    * shape — vocabulary-bounded), and the final divergence runs
-    * [[graft.operators.Profile.jsDivergenceFromCounts]] against the
-    * batch-computed reference counts — the batch operator's verbatim
-    * arithmetic. Returns the one-row (`n_ref`, `n_cur`,
-    * `n_categories`, `jsd6`) frame. */
-  def replayJsDivergence(
-      reference: DataFrame,
-      monitored: DataFrame,
-      c: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayJsDivergence", monitored.select(c), filesPerTrigger)(
-      batch => Profile.catSideCounts(batch, c, "cb"),
-      sumBy("category", "cb"),
-      state => Profile.jsDivergenceFromCounts(
-        Profile.catSideCounts(reference, c, "ca"),
-        state))
-
-  /** Streaming exact quantiles — [[graft.operators.Profile
-    * .exactQuantilesFromCounts]] with the monitored column as a FILE
-    * STREAM: each micro-batch's distinct-value counts fold by SUM
-    * into a versioned parquet state table (the replayKsDrift state —
-    * one maintained ECDF serves the whole quantile/KS family), and
-    * the final readout runs the SHARED discrete-rank arithmetic over
-    * the accumulated grid. Counts merge associatively and
-    * commutatively, so the micro-batch split provably cannot move any
-    * quantile — the stream readout is held to the batch operator's
-    * verbatim oracle. State is distinct-value-bounded. Returns the
-    * (`p`, `n`, `q`) frame, one row per probability. */
-  def replayQuantileMonitor(
-      monitored: DataFrame,
-      valueCol: String,
-      ps: Seq[Double],
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayQuantileMonitor", monitored.select(valueCol),
-        filesPerTrigger)(
-      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
-      Profile.foldValueCounts,
-      state => Profile.exactQuantilesFromCounts(state, ps))
-
-  /** Streaming PER-GROUP quantile monitor — [[graft.operators.Profile
-    * .exactQuantilesByGroup]] with the (group, value) feed as a FILE
-    * STREAM: each micro-batch's per-group distinct-value counts fold
-    * by SUM into versioned parquet state (the corpus-wide quantile
-    * state's group-keyed twin), and the final readout runs the SHARED
-    * global-prefix-sum discrete-rank arithmetic over the accumulated
-    * per-group grid — per-language/type percentiles that stay current
-    * as the crawl lands. Counts merge associatively and commutatively
-    * per (group, value) cell, so the micro-batch split provably
-    * cannot move any group's quantile — held to the batch operator's
-    * verbatim oracle. Returns the (`groupCol`, `p`, `n`, `q`) frame. */
-  def replayGroupQuantileMonitor(
-      monitored: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      ps: Seq[Double],
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupQuantileMonitor",
-        monitored.select(groupCol, valueCol), filesPerTrigger)(
-      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
-      Profile.foldGroupValueCounts,
-      state => Profile.groupQuantilesFromCounts(state, groupCol, ps))
-
-  /** Streaming PER-GROUP Gini monitor — [[graft.operators.Stats
-    * .giniIndexByGroup]] with the (group, mass) feed as a FILE
-    * STREAM: per-group distinct-mass counts fold by SUM into the same
-    * versioned state shape the per-group quantile monitor maintains,
-    * and the readout runs the per-group rank-sum identity over the
-    * accumulated grid — "which source is BECOMING a few giants?" as
-    * the crawl lands. Counts merge per (group, mass) cell and the
-    * identity is tie-order-invariant per group, so the split provably
-    * cannot move any group's G — held to the batch rank-path
-    * operator's verbatim oracle. Returns the (`groupCol`, `n`,
-    * `total`, `gini6`) frame. */
-  def replayGroupGiniMonitor(
-      monitored: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupGiniMonitor",
-        monitored.select(groupCol, valueCol), filesPerTrigger)(
-      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
-      Profile.foldGroupValueCounts,
-      state => Stats.giniByGroupFromCounts(state, groupCol))
-
-  /** Streaming Gini-concentration monitor — [[graft.operators.Stats
-    * .giniFromCounts]] with the mass column as a FILE STREAM: each
-    * micro-batch's distinct-mass counts fold by SUM into the SAME
-    * versioned parquet ECDF state the quantile/KS monitors maintain
-    * (one state table serves the whole value-distribution family),
-    * and the final readout runs the shared rank-sum identity over the
-    * accumulated grid — the ingest-time "is the corpus becoming a few
-    * giants?" dashboard. Counts merge associatively and commutatively
-    * and the rank identity is tie-order-invariant, so the micro-batch
-    * split provably cannot move G — the stream readout is held to the
-    * batch rank-path operator's verbatim oracle. State is
-    * distinct-mass-bounded. Returns the one-row (`n`, `total`,
-    * `gini6`) frame. */
-  def replayGiniMonitor(
-      monitored: DataFrame,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGiniMonitor", monitored.select(valueCol),
-        filesPerTrigger)(
-      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
-      Profile.foldValueCounts,
-      state => Stats.giniFromCounts(state))
-
-  /** Streaming HHI concentration monitor — [[graft.operators.Stats
-    * .hhiIndex]] with the mass feed as a FILE STREAM: each
-    * micro-batch's distinct-mass counts fold by SUM into the SAME
-    * versioned value-count ECDF state the quantile/KS/Gini monitors
-    * maintain, and the readout runs [[graft.operators.Stats
-    * .hhiFromCounts]] — every HHI sufficient statistic
-    * (Σcnt, Σv·cnt, Σv²·cnt) is a SUM over that state, so the split
-    * provably cannot move the index. One maintained grid serves the
-    * whole quantile/KS/Gini/HHI family. Returns the one-row
-    * (`n`, `total`, `hhi6`, `hhi_norm6`) frame. */
-  def replayHhiMonitor(
-      monitored: DataFrame,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayHhiMonitor", monitored.select(valueCol),
-        filesPerTrigger)(
-      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
-      Profile.foldValueCounts,
-      state => Stats.hhiFromCounts(state))
-
-  /** Streaming categorical-association monitor — [[graft.operators
-    * .Profile.categoricalAssociation]] with the row feed as a FILE
-    * STREAM: each micro-batch's joint (a, b) counts fold by SUM into
-    * a versioned parquet contingency state (cells-bounded), and the
-    * final chi-square / Cramér's V / MI readout runs the SHARED
-    * arithmetic over the accumulated table — the ingest-time
-    * composition-dependence dashboard ("is language drifting away
-    * from independent-of-source as the crawl lands?"), provably equal
-    * to the batch audit of the same feed (q232 is held to q226's
-    * verbatim oracle). Returns the one-row
-    * (`n`, `dof`, `chi2_6`, `cramers_v6`, `mi6`) frame. */
-  def replayAssociationMonitor(
-      rows: DataFrame,
-      colA: String,
-      colB: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayAssociationMonitor", rows.select(colA, colB),
-        filesPerTrigger)(
-      batch => Profile.jointCountsOf(batch, colA, colB),
-      Profile.foldJointCounts,
-      state => Profile.associationFromJoint(state))
-
-  /** Streaming Pearson/OLS monitor — [[graft.operators.Moments
-    * .pearsonOls]] with the (x, y) feed as a FILE STREAM: each
-    * micro-batch's algebraic moment state (n, Σx, Σy, Σx², Σy², Σxy —
-    * 12dp-rounded exact-decimal sums) folds by SUM into a versioned
-    * ONE-ROW parquet state, and the final correlation + trend-line
-    * readout runs the SHARED uncentered closed forms over the
-    * accumulated moments — "is the chars-per-token line drifting as
-    * the crawl lands?" All five moments merge associatively and
-    * commutatively, so the micro-batch split provably cannot move a
-    * digit of the state — held to the batch operator's verbatim
-    * oracle. State is O(1). Returns the one-row (`n`, `mean_x6`,
-    * `mean_y6`, `pearson_r6`, `slope6`, `intercept6`) frame. */
-  def replayMomentsMonitor(
-      monitored: DataFrame,
-      xCol: String,
-      yCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayMomentsMonitor", monitored.select(xCol, yCol),
-        filesPerTrigger)(
-      batch => Moments.momentState(batch, xCol, yCol),
-      Moments.foldMomentState,
-      state => Moments.bivariateFromMoments(state))
-
-  /** Streaming PER-GROUP Pearson/OLS monitor — [[graft.operators
-    * .Moments.pearsonOlsByGroup]] with the (group, x, y) feed as a
-    * FILE STREAM: per-group moment states fold by group-keyed SUM
-    * into versioned state (one row per group — group-bounded, the
-    * smallest state in the monitor family), readout = the per-group
-    * in-plan closed forms. Held to the batch operator's verbatim
-    * oracle. Returns the (`g`, `n`, `mean_x6`, `mean_y6`,
-    * `pearson_r6`, `slope6`, `intercept6`) frame ordered by group. */
-  def replayGroupMomentsMonitor(
-      monitored: DataFrame,
-      groupCol: String,
-      xCol: String,
-      yCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupMomentsMonitor",
-        monitored.select(groupCol, xCol, yCol), filesPerTrigger)(
-      batch => Moments.groupMomentState(batch, groupCol, xCol, yCol),
-      Moments.foldGroupMomentState,
-      state => Moments.bivariateByGroupFromMoments(state))
-
-  /** Streaming inter-rater agreement monitor — [[graft.operators
-    * .Annotate.fleissKappa]] with the ratings feed as a FILE STREAM:
-    * each micro-batch's (item, label) cells fold by SUM into
-    * versioned state, readout = the shared exact-integer kappa
-    * arithmetic once the full panel has landed (Fleiss' constant-
-    * panel precondition applies to the ACCUMULATED state — the
-    * AvailableNow replay reads out at the end, when it holds).
-    * Returns the one-row (`n_items`, `n_raters`, `n_labels`,
-    * `kappa6`) frame. */
-  def replayFleissMonitor(
-      ratings: DataFrame,
-      itemCol: String,
-      raterCol: String,
-      labelCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldStateCheckpointed("replayFleissMonitor",
-        ratings.select(itemCol, raterCol, labelCol), filesPerTrigger)(
-      batch => Annotate.annotationCellsOf(
-        batch, itemCol, raterCol, labelCol, "replayFleissMonitor"),
-      Annotate.foldAnnotationCells,
-      Annotate.fleissKappaFromCells)
-
-  /** Streaming Krippendorff-alpha monitor — the SAME maintained
-    * (item, label) cell state as [[replayFleissMonitor]], read out
-    * through [[graft.operators.Annotate.krippendorffAlphaFromCells]]
-    * — and because alpha TOLERATES varying participation, its
-    * readout is meaningful at any point of the feed, not only at
-    * panel completion. Returns the one-row (`n_items`, `n_ratings`,
-    * `n_labels`, `alpha6`) frame. */
-  def replayAlphaMonitor(
-      ratings: DataFrame,
-      itemCol: String,
-      raterCol: String,
-      labelCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldStateCheckpointed("replayAlphaMonitor",
-        ratings.select(itemCol, raterCol, labelCol), filesPerTrigger)(
-      batch => Annotate.annotationCellsOf(
-        batch, itemCol, raterCol, labelCol, "replayAlphaMonitor"),
-      Annotate.foldAnnotationCells,
-      Annotate.krippendorffAlphaFromCells)
-
-  /** Streaming vocabulary-saturation monitor — [[graft.operators
-    * .Corpus.vocabRichness]] with the document feed as a FILE STREAM:
-    * each micro-batch's token frequencies fold by SUM into
-    * vocabulary-bounded versioned state, readout = the shared
-    * Chao1/Good–Turing arithmetic — the live "is more crawl still
-    * buying new vocabulary?" dashboard. Returns the one-row
-    * (`n_tokens`, `vocab`, `f1`, `f2`, `chao1_6`, `unseen_mass6`)
-    * frame. */
-  def replayVocabRichnessMonitor(
-      docs: DataFrame,
-      textCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayVocabRichnessMonitor", docs.select(textCol),
-        filesPerTrigger)(
-      batch => Corpus.tokenFrequencies(batch, textCol),
-      Corpus.foldTokenFrequencies,
-      state => Corpus.vocabRichnessFromFrequencies(state))
-
-  /** Streaming PER-GROUP vocabulary-saturation monitor — [[graft
-    * .operators.Corpus.vocabRichnessByGroup]] over group-keyed
-    * versioned frequency state: the live per-language saturation
-    * dashboard. */
-  def replayGroupVocabMonitor(
-      docs: DataFrame,
-      groupCol: String,
-      textCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupVocabMonitor", docs.select(groupCol, textCol),
-        filesPerTrigger)(
-      batch => Corpus.groupTokenFrequencies(batch, groupCol, textCol),
-      Corpus.foldGroupTokenFrequencies,
-      state => Corpus.vocabRichnessByGroupFromFrequencies(state, groupCol))
-
-  /** Streaming label-consolidation monitor — [[graft.operators
-    * .Annotate.consolidateLabels]] over the SAME maintained (item,
-    * label) cell state as the agreement monitors: as annotations
-    * land, the consensus training-label table stays current without
-    * rescanning a single rating (ties stay deterministic — the
-    * argmin reads the accumulated cells). Returns the per-item
-    * (`itemCol`, `consensus_label`, `n_ratings`, `n_consensus`,
-    * `confidence6`) frame. */
-  def replayConsensusMonitor(
-      ratings: DataFrame,
-      itemCol: String,
-      raterCol: String,
-      labelCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayConsensusMonitor",
-        ratings.select(itemCol, raterCol, labelCol), filesPerTrigger)(
-      batch => Annotate.annotationCellsOf(
-        batch, itemCol, raterCol, labelCol, "replayConsensusMonitor"),
-      Annotate.foldAnnotationCells,
-      state => Annotate.consolidateLabelsFromCells(state, itemCol))
-
-  /** Streaming PER-GROUP calibration monitor — [[graft.operators.Eval
-    * .brierEceByGroup]] with the scored feed as a FILE STREAM over
-    * group-keyed bins-bounded state: the live per-slice
-    * confidence-honesty dashboard. */
-  def replayGroupCalibrationMonitor(
-      scored: DataFrame,
-      groupCol: String,
-      labelCol: String,
-      scoreCol: String,
-      bins: Int = 10,
-      lo: Double = 0.0,
-      hi: Double = 1.0,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldStateCheckpointed("replayGroupCalibrationMonitor",
-        scored.select(groupCol, labelCol, scoreCol), filesPerTrigger)(
-      batch => Eval.groupCalibStateOf(
-        batch, groupCol, labelCol, scoreCol, bins, lo, hi),
-      Eval.foldGroupCalibState,
-      Eval.brierEceByGroupFromState(_, groupCol))
-
-  /** Streaming pairwise-win-matrix monitor — [[graft.operators
-    * .Preference.pairwiseWinMatrix]] over the SAME maintained
-    * directed win-count state as the BT leaderboard: the live
-    * head-to-head table with honest Wilson intervals, kept current as
-    * judgments land. Returns the per-pair (`model_a`, `model_b`, `n`,
-    * `n_pass`, `rate6`, `lo6`, `hi6`) frame. */
-  def replayWinMatrixMonitor(
-      comparisons: DataFrame,
-      winnerCol: String,
-      loserCol: String,
-      z: Double = 1.96,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayWinMatrixMonitor",
-        comparisons.select(winnerCol, loserCol), filesPerTrigger)(
-      batch => Preference.winCountsOf(
-        batch, winnerCol, loserCol, "replayWinMatrixMonitor"),
-      Preference.foldWinCounts,
-      state => Preference.pairwiseWinMatrixFromCounts(state, z))
-
-  /** Streaming Bradley–Terry leaderboard — [[graft.operators
-    * .Preference.bradleyTerry]] with the comparison feed as a FILE
-    * STREAM: directed win counts fold by SUM into pair-bounded
-    * versioned state (the BT likelihood depends on the data only
-    * through them), readout = the shared deterministic MM — the live
-    * arena leaderboard, provably equal to the batch fit of the same
-    * feed. Returns the (`model`, `n_wins`, `n_comparisons`,
-    * `rating6`, `rnk`) frame. */
-  def replayLeaderboardMonitor(
-      comparisons: DataFrame,
-      winnerCol: String,
-      loserCol: String,
-      iters: Int = 25,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldStateCheckpointed("replayLeaderboardMonitor",
-        comparisons.select(winnerCol, loserCol), filesPerTrigger)(
-      batch => Preference.winCountsOf(
-        batch, winnerCol, loserCol, "replayLeaderboardMonitor"),
-      Preference.foldWinCounts,
-      Preference.bradleyTerryFromCounts(_, iters))
-
-  /** Streaming calibration monitor — [[graft.operators.Eval
-    * .brierEce]] with the scored feed as a FILE STREAM: per-bucket
-    * (n, n_pos, exact score sum, exact Brier-term sum) fold by SUM
-    * into bins-bounded versioned state, readout = the shared
-    * Brier/ECE arithmetic — the live "is the model's confidence still
-    * honest?" dashboard, provably equal to the batch audit. Returns
-    * the one-row (`n`, `brier6`, `ece6`) frame. */
-  def replayCalibrationMonitor(
-      scored: DataFrame,
-      labelCol: String,
-      scoreCol: String,
-      bins: Int = 10,
-      lo: Double = 0.0,
-      hi: Double = 1.0,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayCalibrationMonitor",
-        scored.select(labelCol, scoreCol), filesPerTrigger)(
-      batch => Eval.calibStateOf(batch, labelCol, scoreCol, bins, lo, hi),
-      Eval.foldCalibState,
-      state => Eval.brierEceFromState(state))
-
-  /** Streaming PER-GROUP HHI monitor — [[graft.operators.Stats
-    * .hhiIndexByGroup]] off the SAME versioned per-group value-count
-    * state as the group quantile/Gini monitors; readout =
-    * [[graft.operators.Stats.hhiByGroupFromCounts]] (every per-group
-    * sufficient statistic is a SUM over the grid). Returns the
-    * per-group (`groupCol`, `n`, `total`, `hhi6`, `hhi_norm6`) frame. */
-  def replayGroupHhiMonitor(
-      monitored: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupHhiMonitor",
-        monitored.select(groupCol, valueCol), filesPerTrigger)(
-      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
-      Profile.foldGroupValueCounts,
-      state => Stats.hhiByGroupFromCounts(state, groupCol))
-
-  /** Streaming PER-GROUP Theil monitor — [[graft.operators.Stats
-    * .theilIndexByGroup]] off the shared per-group grid; readout =
-    * [[graft.operators.Stats.theilByGroupFromCounts]] (an integer
-    * multiple of a 12dp-rounded decimal term is exact). Returns the
-    * per-group (`groupCol`, `n`, `total`, `theil6`, `theil_norm6`)
-    * frame. */
-  def replayGroupTheilMonitor(
-      monitored: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupTheilMonitor",
-        monitored.select(groupCol, valueCol), filesPerTrigger)(
-      batch => Profile.groupSideCounts(batch, groupCol, valueCol),
-      Profile.foldGroupValueCounts,
-      state => Stats.theilByGroupFromCounts(state, groupCol))
-
-  /** Streaming Theil concentration monitor — [[graft.operators.Stats
-    * .theilIndex]] with the mass feed as a FILE STREAM over the SAME
-    * versioned value-count state as the quantile/KS/Gini/HHI
-    * monitors; readout = [[graft.operators.Stats.theilFromCounts]]
-    * (an integer multiple of a 12dp-rounded decimal term is exact, so
-    * the counts readout provably equals the per-row one). Returns the
-    * one-row (`n`, `total`, `theil6`, `theil_norm6`) frame. */
-  def replayTheilMonitor(
-      monitored: DataFrame,
-      valueCol: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayTheilMonitor", monitored.select(valueCol),
-        filesPerTrigger)(
-      batch => Profile.ksSideCounts(batch, valueCol, "cnt"),
-      Profile.foldValueCounts,
-      state => Stats.theilFromCounts(state))
-
-  /** Streaming PER-GROUP association monitor — [[graft.operators
-    * .Profile.categoricalAssociationByGroup]] with the row feed as a
-    * FILE STREAM: each micro-batch's (group, a, b) joint counts fold
-    * by SUM into cells-bounded versioned state, and the readout runs
-    * the SHARED per-group chi-square / Cramér's V / MI arithmetic —
-    * the drill-down dashboard ("is language⊥source WITHIN each crawl
-    * snapshot, live?"), provably equal to the batch audit of the same
-    * feed. Closes the association matrix's per-group column: corpus
-    * AND per-group each have batch / incremental / stream. Returns
-    * the per-group (`groupCol`, `n`, `dof`, `chi2_6`, `cramers_v6`,
-    * `mi6`) frame. */
-  def replayGroupAssociationMonitor(
-      rows: DataFrame,
-      groupCol: String,
-      colA: String,
-      colB: String,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldStateCheckpointed("replayGroupAssociationMonitor",
-        rows.select(groupCol, colA, colB), filesPerTrigger)(
-      batch => Profile.groupJointCountsOf(batch, groupCol, colA, colB),
-      Profile.foldGroupJointCounts,
-      Profile.associationByGroupFromJoint(_, groupCol))
-
-  /** Streaming bootstrap-CI monitor — [[graft.operators.Stats
-    * .bootstrapMeanCI]] with the outcome feed as a FILE STREAM: each
-    * micro-batch folds its rows' `nBoot` Poisson replicate weights
-    * into per-replicate (Σ, count) partials (the batch operator's own
-    * one-scan fold), which merge by exact decimal/long SUM into a
-    * versioned parquet state table — (nBoot+1)-row state, never a
-    * rescan of earlier batches — and the final readout runs the
-    * SHARED percentile arithmetic. Because each row's replicate
-    * weights are a pure function of (salt, b, id) and the partials
-    * are exact decimals, the micro-batch split provably cannot move
-    * any replicate mean: the live CI equals the batch CI of the same
-    * feed, and q225 is held to q217's verbatim oracle — closing the
-    * CI matrix whole-corpus (q217) / per-group (q220) / stream
-    * (this). Returns the one-row (`n`, `n_boot`, `mean6`, `lo6`,
-    * `hi6`) frame. */
-  def replayBootstrapMonitor(
-      outcomes: DataFrame,
-      valueCol: String,
-      idCol: String,
-      nBoot: Int = 100,
-      alpha: Double = 0.05,
-      salt: String = "boot",
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayBootstrapMonitor", outcomes.select(valueCol, idCol),
-        filesPerTrigger)(
-      batch => Stats.bootPartialsOf(batch, valueCol, idCol, nBoot, salt),
-      Stats.foldBootPartials,
-      state => Stats.ciFromBootPartials(state, alpha))
-
-  /** Streaming PER-GROUP bootstrap-CI monitor — [[graft.operators
-    * .Stats.bootstrapMeanCIByGroup]] with the (group, outcome, id)
-    * feed as a FILE STREAM: each micro-batch folds into per-(group,
-    * replicate) exact-decimal partials that merge by SUM into
-    * versioned state (groups × (nBoot+1) rows — never a rescan), and
-    * the readout runs the SHARED per-group percentile arithmetic —
-    * one live mean CI per segment as the data lands. Weights are a
-    * pure function of (salt, b, id) and the partials are exact, so
-    * the split provably cannot move any group's CI — held to the
-    * batch operator's verbatim oracle, closing the CI matrix's last
-    * cell (per-group stream). Returns the (`groupCol`, `n`,
-    * `n_boot`, `mean6`, `lo6`, `hi6`) frame. */
-  def replayGroupBootstrapMonitor(
-      outcomes: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      idCol: String,
-      nBoot: Int = 100,
-      alpha: Double = 0.05,
-      salt: String = "boot",
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupBootstrapMonitor",
-        outcomes.select(groupCol, valueCol, idCol), filesPerTrigger)(
-      batch => Stats.groupBootPartialsOf(
-        batch, groupCol, valueCol, idCol, nBoot, salt),
-      Stats.foldBootPartials,
-      state => Stats.groupCiFromBootPartials(state, groupCol, alpha))
-
-  /** Fold of count-like state: `delta` unioned into `base`, `c` summed
-    * per `key` — associative and commutative, the q133 bridge. */
-  private def sumBy(key: String, c: String)(
-      base: DataFrame, delta: DataFrame): DataFrame =
-    base.unionByName(delta).groupBy(key).agg(sum(col(c)).as(c))
-
   /** Streaming SCD-2 enrichment — the FACT feed as a file stream,
     * each micro-batch point-in-time joined against the STATIC
     * slowly-changing dimension by the BATCH [[graft.operators
@@ -1855,64 +913,18 @@ object StreamGate {
       AppendSink(enrich, Some(enrich(facts.limit(0)).schema)))
   }
 
-  /** (arm, flag) feed of the A/B monitors: NULL arms and flags are
-    * excluded as the batch operators exclude them, and the arm is cast
-    * to string so a typed arm column cannot break stream==batch
-    * parity. */
-  private def armFeed(outcomes: DataFrame, armCol: String, flagCol: String) =
-    outcomes
-      .filter(col(armCol).isNotNull && col(flagCol).isNotNull)
-      .select(col(armCol).cast("string").as("arm"),
-        col(flagCol).cast("boolean").as("flag"))
-
-  /** Per-arm (n, n_pass) counts of an [[armFeed]] batch. */
-  private def armCounts(batch: DataFrame): DataFrame =
-    batch.groupBy("arm")
-      .agg(count(col("flag")).as("n"),
-        sum(when(col("flag") === true, 1L).otherwise(0L)).as("n_pass"))
-
-  private def foldArmCounts(base: DataFrame, delta: DataFrame): DataFrame =
-    base.unionByName(delta)
-      .groupBy("arm")
-      .agg(sum(col("n")).cast("long").as("n"),
-        sum(col("n_pass")).cast("long").as("n_pass"))
-
-  /** Streaming experiment monitor — [[graft.operators.Experiment
-    * .abReport]] with the OUTCOME feed as a file stream: each
-    * micro-batch's per-arm (n, n_pass) counts fold by SUM into
-    * versioned parquet state (split-invariant, the q133 bridge), and
-    * the final readout runs the SHARED Wilson + pooled-z arithmetic —
-    * the live dashboard a running experiment is actually watched on,
-    * provably equal to the batch readout over the same outcomes
-    * (q205 is held to q199's verbatim oracle). Rows must arrive
-    * already assigned (`armCol`) with a boolean outcome; NULL
-    * outcomes are excluded per the batch rule, AT THE BATCH where
-    * they arrive. State is arms-bounded. */
-  def replayAbMonitor(
-      outcomes: DataFrame,
-      armCol: String,
-      flagCol: String,
-      controlArm: String,
-      zThreshold: Double = 1.96,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayAbMonitor",
-        armFeed(outcomes, armCol, flagCol), filesPerTrigger)(
-      armCounts, foldArmCounts,
-      state => Experiment.abReportFromCI(
-        Quality.passRateCIFromCounts(state, Seq("arm"), zThreshold),
-        controlArm, zThreshold))
-
   /** Streaming SEQUENTIAL experiment monitor — the always-valid
     * (mSPRT) p-value LOOKED AT after every micro-batch, which is safe
     * by construction ([[graft.operators.Experiment
     * .sequentialAbReport]]'s point: a fixed-horizon z looked at each
     * batch inflates false positives — peeking bias — while the
     * always-valid p admits `min` over any number of looks). Per-arm
-    * counts fold by SUM into versioned state (the [[replayAbMonitor]]
-    * shape); after EACH batch the driver computes every arm's
-    * always-valid p from the cumulative counts and folds the running
-    * minimum — the live decision. The final-look columns are the
-    * SHARED [[graft.operators.Experiment.sequentialAbFromCounts]]
+    * counts fold by SUM into versioned state (the
+    * [[graft.operators.Experiment.abMonitor]] shape); after EACH batch
+    * the driver computes every arm's always-valid p from the cumulative
+    * counts and folds the running minimum — the live decision. The
+    * final-look columns are the SHARED
+    * [[graft.operators.Experiment.sequentialAbFromCounts]]
     * readout, so they provably equal the batch operator's (counts
     * fold; held to the batch oracle), while `min_av_p6` /
     * `ever_crossed` / `n_looks` carry the sequential decision trail
@@ -1964,64 +976,11 @@ object StreamGate {
         .orderBy("arm")
     }
     replay("replaySequentialAbMonitor",
-        fileFeed(armFeed(outcomes, armCol, flagCol), filesPerTrigger))(
-      FoldSink(foldStep(armCounts, foldArmCounts), readout,
-        (_, committed) => look(committed)))
+        fileFeed(Experiment.armFeed(outcomes, armCol, flagCol),
+          filesPerTrigger))(
+      FoldSink(foldStep(Experiment.armCounts, Experiment.foldArmCounts),
+        readout, (_, committed) => look(committed)))
   }
-
-  /** Streaming mergeable-quantile-sketch monitor — [[graft.operators
-    * .Profile.sketchStateOf]] maintained over a file stream: each
-    * micro-batch's own bottom-k sample folds into the versioned state
-    * by min-k ([[graft.operators.Profile.foldSketchState]]), which is
-    * associative, commutative, and idempotent — so the final state
-    * provably equals the batch sketch WHATEVER the micro-batch split
-    * (the mergeable-sketch property itself, spec-pinned), and the
-    * final [[graft.operators.Profile.sketchQuantileReport]] readout
-    * is held to the batch query's verbatim oracle. State is k rows,
-    * ever; the accumulated history is never rescanned. */
-  def replaySketchQuantileMonitor(
-      df: DataFrame,
-      valueCol: String,
-      idCol: String,
-      ps: Seq[Double],
-      k: Int = 1024,
-      salt: String = "qsk",
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replaySketchQuantileMonitor",
-        df.select(col(idCol).cast("long").as("id"),
-          col(valueCol).cast("double").as("v")), filesPerTrigger)(
-      Profile.sketchStateOf(_, "v", "id", k, salt),
-      Profile.foldSketchState(_, _, k),
-      Profile.sketchQuantileReport(_, df, valueCol, ps, k))
-
-  /** Streaming PER-GROUP mergeable-quantile-sketch monitor —
-    * [[graft.operators.Profile.sketchStateByGroup]] maintained over a
-    * file stream: each micro-batch's own per-group bottom-k sample
-    * folds into the versioned state by keyed min-k
-    * ([[graft.operators.Profile.foldSketchStateByGroup]]) —
-    * associative, commutative, idempotent per group, so the final
-    * state provably equals the batch state WHATEVER the split, and
-    * the final [[graft.operators.Profile.sketchQuantileReportByGroup]]
-    * readout is held to the batch query's verbatim oracle. State is
-    * ≤ k rows per group, ever; history is never rescanned. Ids ride
-    * as strings end-to-end (the hashed form), so the micro-batch
-    * hash equals the batch hash byte-for-byte. */
-  def replayGroupSketchQuantileMonitor(
-      df: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      idCol: String,
-      ps: Seq[Double],
-      k: Int = 1024,
-      salt: String = "qsk",
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayGroupSketchQuantileMonitor",
-        df.select(col(groupCol).cast("string").as("g"),
-          col(idCol).cast("string").as("id"),
-          col(valueCol).cast("double").as("v")), filesPerTrigger)(
-      Profile.sketchStateByGroup(_, "g", "v", "id", k, salt),
-      Profile.foldSketchStateByGroup(_, _, k),
-      Profile.sketchQuantileReportByGroup(_, df, groupCol, valueCol, ps, k))
 
   /** Streaming incremental connected components — [[graft.operators
     * .Components.incrementalComponents]] with the EDGE feed as a file
@@ -2053,72 +1012,6 @@ object StreamGate {
         // generation per micro-batch)
         (folded, _) => Blocks.release(folded)))
   }
-
-  /** Streaming drift monitor — [[graft.operators.Profile.drift]]'s PSI
-    * kept current by a FILE STREAM of the monitored slice: each
-    * micro-batch is bucketed with the REFERENCE-derived bounds
-    * ([[graft.operators.Profile.histogram]]'s clamping arithmetic,
-    * verbatim) and its bucket counts fold into a versioned parquet
-    * histogram state table (the q133 bridge — per-bucket counts merge
-    * by SUM, associative AND commutative, so micro-batch partitioning
-    * provably cannot change the accumulated histogram); the final PSI
-    * is [[graft.operators.Profile.psiFromCounts]] over the accumulated
-    * counts against the batch-computed reference histogram — the SAME
-    * arithmetic the batch operator runs, so the replay gate can hold
-    * this to q128's verbatim oracle (batch fold and stream fold, two
-    * formulations of one ground truth). State is bins-bounded (never
-    * key- or corpus-cardinality).
-    *
-    * Returns the per-bucket (`bucket`, `n_ref`, `n_cur`, `psi`) frame. */
-  def replayStreamingDrift(
-      reference: DataFrame,
-      current: DataFrame,
-      c: String,
-      bins: Int,
-      lo: Double,
-      hi: Double,
-      eps: Double = 1e-6,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayStreamingDrift", current, filesPerTrigger)(
-      Profile.histogram(_, c, bins, lo, hi).select(col("bucket"), col("n")),
-      sumBy("bucket", "n"),
-      state => Profile.psiFromCounts(
-        Profile.histogram(reference, c, bins, lo, hi)
-          .select(col("bucket"), col("n").as("n_ref"))
-          .join(state.select(col("bucket"), col("n").as("n_cur")), "bucket"),
-        eps))
-
-  /** Streaming CATEGORICAL drift monitor —
-    * [[graft.operators.Profile.categoricalDrift]]'s PSI kept current
-    * by a file stream of the monitored slice, completing the drift
-    * matrix (numeric batch q128 / numeric stream q169 / categorical
-    * batch q180 / categorical stream): each micro-batch's per-category
-    * counts fold into a versioned parquet state table (counts merge by
-    * SUM — associative and commutative, so micro-batch partitioning
-    * provably cannot change the accumulated frequency table; NULL
-    * categories carry through the fold as the NULL key), and the final
-    * per-category PSI is
-    * [[graft.operators.Profile.categoricalDriftFromCounts]] over the
-    * accumulated counts vs the batch-computed reference — the SAME
-    * arithmetic the batch operator runs, so the replay gate holds this
-    * to q180's verbatim oracle. State is category-vocabulary-bounded.
-    *
-    * Returns the (`category`, `n_ref`, `n_cur`, `psi`) frame. */
-  def replayCategoricalDrift(
-      reference: DataFrame,
-      current: DataFrame,
-      c: String,
-      eps: Double = 1e-6,
-      filesPerTrigger: Int = 2): DataFrame =
-    replayFoldState("replayCategoricalDrift", current, filesPerTrigger)(
-      _.groupBy(col(c).cast("string").as("category"))
-        .agg(count(lit(1)).as("n")),
-      sumBy("category", "n"),
-      state => Profile.categoricalDriftFromCounts(
-        reference.groupBy(col(c).cast("string").as("category"))
-          .agg(count(lit(1)).as("n_ref")),
-        state.select(col("category"), col("n").as("n_cur")),
-        eps))
 
   /** Streaming semantic decontamination gate —
     * [[graft.operators.Similarity.semanticDecontaminate]] with the

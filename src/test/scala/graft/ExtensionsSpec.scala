@@ -894,23 +894,42 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(left.isEmpty, s"the inner scope's result left $left registered")
   }
 
-  test("localCheckpoint is called only in Blocks") {
+  /** The source files under `root` and the `file:line` of every code
+    * line (comment lines excluded) in them that contains `needle`,
+    * files named in `skip` excepted. */
+  private def codeLinesNaming(root: String, needle: String,
+      skip: Set[String] = Set.empty): (Int, Seq[String]) = {
     import scala.jdk.CollectionConverters._
-    // every checkpoint has one owner only while Blocks makes them all
-    // (and a reliable-checkpoint mode stays a change to Blocks alone)
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"no $root under ${sys.props("user.dir")}")
-    val walk = java.nio.file.Files.walk(root)
+    val dir = java.nio.file.Paths.get(root)
+    assert(java.nio.file.Files.isDirectory(dir), s"no $dir under ${sys.props("user.dir")}")
+    val walk = java.nio.file.Files.walk(dir)
     val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
     val offenders = for {
-      f <- files if f.getFileName.toString != "Blocks.scala"
+      f <- files if !skip(f.getFileName.toString)
       (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
       code = line.trim if !code.startsWith("//") && !code.startsWith("*") &&
-        !code.startsWith("/*") && code.contains("localCheckpoint(")
+        !code.startsWith("/*") && code.contains(needle)
     } yield s"$f:${i + 1}"
-    assert(files.size > 10 && offenders.isEmpty,
+    (files.size, offenders)
+  }
+
+  test("localCheckpoint is called only in Blocks") {
+    // every checkpoint has one owner only while Blocks makes them all
+    // (and a reliable-checkpoint mode stays a change to Blocks alone)
+    val (files, offenders) = codeLinesNaming("src/main/scala",
+      "localCheckpoint(", skip = Set("Blocks.scala"))
+    assert(files > 10 && offenders.isEmpty,
       s"localCheckpoint( outside Blocks: ${offenders.mkString(", ")}")
+  }
+
+  test("no operator names graft.streaming") {
+    // streaming depends on operators, never the reverse: a monitor is a
+    // value the operators define and StreamGate.monitor replays
+    val (files, offenders) =
+      codeLinesNaming("src/main/scala/graft/operators", "graft.streaming")
+    assert(files > 10 && offenders.isEmpty,
+      s"graft.streaming named under operators: ${offenders.mkString(", ")}")
   }
 
   test("keepBestPerCluster: max-score survivor, ties by id, singletons kept") {
