@@ -64,7 +64,9 @@ import graft.operators.{AsOfJoin, Blocks, Components, Corpus, Dedup,
   * filesystem forks `readlink` per FileContext rename and `chmod` per
   * created file or dir, about 4 ms each; a KB-scale replay on it
   * forked about 77 `chmod` and waited on them for much of its wall
-  * time.
+  * time. The child runs without per-session artifact isolation, so a
+  * warm replay reuses the classes an earlier one compiled instead of
+  * compiling them again (see [[replayConf]]).
   *
   * ==Replay results follow the [[Blocks]] rule==
   * A replay result is a checkpoint like any other: it belongs to the
@@ -125,8 +127,9 @@ object StreamGate {
   /** The settings [[replay]] applies to the child session a replay's
     * stream runs in, by key, on top of the caller's own runtime
     * settings; the caller's session never sees them. They are the
-    * state partition count ([[replayPartitions]]) and the settings of a
-    * scratch checkpoint (see "Replay lifecycle" above):
+    * state partition count ([[replayPartitions]]), the settings of a
+    * scratch checkpoint (see "Replay lifecycle" above), and one that
+    * lets a warm replay reuse compiled code:
     *  - the FileSystem checkpoint manager renames with one
     *    `File.renameTo`, atomic on the local temp dir; the FileContext
     *    one first asks `getFileLinkStatus`, which the local filesystem
@@ -144,16 +147,32 @@ object StreamGate {
     *    `FileSystem` by scheme, authority and user, not by conf, so
     *    without it the child gets the JVM's cached `file://`
     *    filesystem and the setting above does nothing. The JVM's cached instance
-    *    and the caller's confs stay as they were.
+    *    and the caller's confs stay as they were;
+    *  - `spark.sql.artifact.isolation.enabled`: `false`, so a warm
+    *    replay reuses the code the previous one compiled. Spark caches
+    *    generated classes by (context class loader, source text). With
+    *    isolation on, each SQL execution's tasks carry their session's
+    *    UUID, and the executor gives each UUID a class loader of its
+    *    own; the stream runs on a clone of the child, and each clone
+    *    has a fresh UUID. So every replay's tasks ran under a new
+    *    loader, missed the cache and recompiled identical code with
+    *    Janino. With isolation off the tasks use the executor's default
+    *    loader, which is the parent of every per-session one. The
+    *    child starts from `newSession()` with no artifacts and a replay
+    *    adds none, so every class its tasks resolved before still
+    *    resolves. Spark reads the key when the session first uses it,
+    *    so it is set before anything runs on the child; the stream's
+    *    clone copies it.
     * The source write runs on the caller's session, so it passes the
-    * same two keys as writer options instead. */
+    * `fs.file.impl` keys as writer options instead. */
   private[graft] def replayConf(
       partitions: Int, flushBatch: Boolean): Map[String, String] = Map(
     partitionsKey -> partitions.toString,
     "spark.sql.streaming.checkpointFileManagerClass" ->
       classOf[FileSystemBasedCheckpointFileManager].getName,
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-    "spark.sql.streaming.noDataMicroBatches.enabled" -> flushBatch.toString) ++
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> flushBatch.toString,
+    "spark.sql.artifact.isolation.enabled" -> "false") ++
     ScratchFileSystem.conf
 
   /** Best-effort recursive delete (replay hygiene must never turn a

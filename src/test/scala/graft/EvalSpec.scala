@@ -132,13 +132,12 @@ class EvalSpec extends AnyFunSuite {
     val queries = corpus.filter(_._1 % 5 == 0)
     val qdf = vecTable(queries)
     val lit = Eval.topKAllQueries(df, "vec_id", "embedding", queries, 7)
-      .collect().map(_.toSeq).toSet
     Seq(1, 4, 32).foreach { blocks =>
       val joined = Eval.topKAllQueriesJoined(df, "vec_id", "embedding",
           qdf, "vec_id", "embedding", 7, blocks = blocks)
-        .collect().map(_.toSeq).toSet
-      assert(joined == lit, s"blocks=$blocks: " +
-        s"joined-only ${(joined -- lit).take(3)}, lit-only ${(lit -- joined).take(3)}")
+      withClue(s"blocks=$blocks: ") {
+        assertDfEquality(joined, lit, ignoreRowOrder = true)
+      }
     }
     // excludeSelf=false keeps the self row at rank 1
     val selfIn = Eval.topKAllQueriesJoined(df, "vec_id", "embedding",

@@ -52,7 +52,7 @@ class GroupedReshapeSpec extends AnyFunSuite {
     val out = Grouped.applyPerGroupTyped(ds, (t: (String, Long)) => t._1) {
       (k, it) => Iterator((k, it.map(_._2).max))
     }
-    assert(out.collect().toSet == Set(("a", 2L), ("b", 5L)))
+    assert(out.collect().toSeq.sorted == Seq(("a", 2L), ("b", 5L)))
   }
 
   test("unstack pivots to columns; stack melts back (pandas.py:21-64)") {
@@ -80,8 +80,8 @@ class GroupedReshapeSpec extends AnyFunSuite {
     val df = table("a string, b bigint, v bigint", Seq(
       row("x", 1L, 10L), row("x", 1L, 20L), row("x", 2L, 30L), row("y", 1L, 40L)))
     val got = Reshape.indexLevelValues(df, Seq("a", "b")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(got == Set(("x", 1L), ("x", 2L), ("y", 1L)))
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    assert(got == Seq(("x", 1L), ("x", 2L), ("y", 1L)))
   }
 
   test("within-year ffill carries last non-null forward per fiscal year (pandas.py:121-138)") {
@@ -159,9 +159,9 @@ class GroupedReshapeSpec extends AnyFunSuite {
       Map("a" -> Map("x" -> 1, "y" -> 2), "b" -> 3), Seq("l0", "l1"))
     assert(df.columns.toSeq == Seq("l0", "l1", "value"))
     assert(df.schema("value").dataType == IntegerType)
-    val got = df.collect().map(_.toSeq).toSet
+    val got = df.orderBy("l0", "l1").collect().map(_.toSeq).toSeq
     // ragged key 'b' ffills: trailing level null
-    assert(got == Set(Seq("a", "x", 1), Seq("a", "y", 2), Seq("b", null, 3)))
+    assert(got == Seq(Seq("a", "x", 1), Seq("a", "y", 2), Seq("b", null, 3)))
   }
 
   test("nestedDictToDf widens heterogeneous values instead of failing at encode time") {

@@ -945,6 +945,29 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
       prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
   }
 
+  test("a warm replay compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    assert(StreamGate.replayConf(1, flushBatch = false)
+      .get("spark.sql.artifact.isolation.enabled").contains("false"))
+    // each stream runs on a clone of its child session with a fresh
+    // session UUID: under artifact isolation its tasks get a new class
+    // loader, miss the codegen cache and recompile identical code
+    def compiles(replay: => Long): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(replay > 0)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    Seq[(String, () => Long)](
+      "dedup" -> (() => StreamGate.replayDedup(events, Seq("user_id"),
+        "1 hour").count()),
+      "quantile monitor" -> (() => StreamGate.monitor(
+        Profile.quantileMonitor("value", Seq(0.5)), events).count())
+    ).foreach { case (label, run) =>
+      compiles(run()) // warm
+      assert(compiles(run()) == 0, s"a warm $label replay compiled classes")
+    }
+  }
+
   test("replay I/O goes through ScratchFileSystem; the JVM's file system stays") {
     import java.net.URI
     import org.apache.hadoop.fs.FileSystem
